@@ -10,12 +10,16 @@ written by run.py to perfbench/runs/. Records are paired by workload
 and, within a workload, in seed order.
 
 For each end-to-end metric of BENCHMARK.json the verdict follows the
-pair rule: the change is a gain when it wins at least 9 of 10 pairs
-(ties count for neither side) and its median differs from the base
-median by more than the base's interquartile range; a regression when
-its median is worse than the base median by more than the metric's
-bound; unresolved when the base's own spread exceeds the bound (unless
-every new run beats every base run); otherwise unchanged.
+pair rule: the change is a gain when there are at least 10 pairs, it
+wins at least 9 of every 10 (ties count for neither side) and its
+median differs from the base median by more than the base's
+interquartile range; a regression when its median is worse than the
+base median by more than the metric's bound; unresolved when the base's
+own spread exceeds the bound (unless every new run beats every base
+run); otherwise unchanged. When the new records fail more executions
+(exceptions or wrong digests) than the base records, no metric of that
+workload counts as a gain or unchanged: the verdict is `failing`, and
+the exit code is 1 as for a regression.
 
 Traced records (--trace 1) are compared layer by layer: the median of
 each per-layer metric, self times first.
@@ -23,7 +27,7 @@ each per-layer metric, self times first.
 --spread prints, for one set of untraced records, each end-to-end
 metric's median and its interquartile range as a share of the median,
 beside the metric's bound (a steady benchmark keeps the share below a
-third of the bound; setup_s is exempt).
+third of the bound).
 """
 import json
 import os
@@ -52,7 +56,7 @@ def iqr(xs):
     return q[2] - q[0]
 
 
-def verdict(base, new, better, bound):
+def verdict(base, new, better, bound, base_failed=0, new_failed=0):
     """Pair-rule verdict for one metric on one workload."""
     pairs = list(zip(base, new))
     sign = -1.0 if better == "lower" else 1.0
@@ -61,7 +65,9 @@ def verdict(base, new, better, bound):
     mb, mn = statistics.median(base), statistics.median(new)
     spread = iqr(base) / mb if mb else 0.0
     worse = sign * (mb - mn) / mb if mb else 0.0
-    if pairs and wins >= 0.9 * len(pairs) and abs(mn - mb) > iqr(base):
+    if new_failed > base_failed:
+        v = "failing"
+    elif len(pairs) >= 10 and wins >= 0.9 * len(pairs) and abs(mn - mb) > iqr(base):
         v = "gain"
     elif worse > bound:
         v = "regression"
@@ -96,8 +102,9 @@ def main(base_path, new_path):
             n = [r["metrics"][m["name"]]["value"] for r in gn[wl] if m["name"] in r["metrics"]]
             if not b or not n:
                 continue
-            v = verdict(b, n, m["better"], m["bound"])
-            bad += v["verdict"] == "regression"
+            v = verdict(b, n, m["better"], m["bound"],
+                        sum(r["failed"] for r in gb[wl]), sum(r["failed"] for r in gn[wl]))
+            bad += v["verdict"] in ("regression", "failing")
             delta = 100.0 * (v["new_median"] - v["base_median"]) / v["base_median"]
             print(f"{wl:12s} {m['name']:24s} {v['verdict']:10s} {v['pairs']:5d} {v['wins']:4d} "
                   f"{v['base_median']:12.4f} {v['new_median']:12.4f} {delta:8.1f} {v['base_iqr']:10.4f}")
@@ -129,7 +136,7 @@ def spread(path):
                 continue
             med = statistics.median(xs)
             share = iqr(xs) / med if med else 0.0
-            ok = share < m["bound"] / 3 or m["name"] == "setup_s"
+            ok = share < m["bound"] / 3
             unsteady += not ok
             print(f"{wl:12s} {m['name']:16s} runs {len(xs):3d} median {med:12.4f} "
                   f"iqr/median {share:7.4f} bound/3 {m['bound'] / 3:7.4f} {'ok' if ok else 'UNSTEADY'}")

@@ -38,18 +38,44 @@ def union_length(intervals):
 
 
 def self_times(spans):
-    """Self time of every span: its duration minus the part of its
-    interval that its children cover. Returns {span_id: seconds}."""
-    kids = {}
+    """Self time of every span: the part of its root's interval during
+    which it is the deepest span running. Where siblings overlap
+    (adaptive execution submits independent query stages as concurrent
+    jobs) the one that started first is charged, so overlapping time
+    counts once and the self times of a tree sum to its root's
+    duration. Returns {span_id: seconds}."""
+    by_id = {s["span_id"]: s for s in spans}
+
+    def chain(s):
+        out = [s]
+        while out[-1]["parent"] in by_id:
+            out.append(by_id[out[-1]["parent"]])
+        return out
+    depth, trees = {}, {}
     for s in spans:
-        kids.setdefault(s["parent"], []).append(s)
-    out = {}
-    for s in spans:
-        lo, hi = s["start_ms"], s["end_ms"]
-        covered = union_length((max(lo, c["start_ms"]), min(hi, c["end_ms"]))
-                               for c in kids.get(s["span_id"], []))
-        out[s["span_id"]] = (hi - lo - covered) / 1e3
+        c = chain(s)
+        depth[s["span_id"]] = len(c)
+        trees.setdefault(c[-1]["span_id"], []).append(s)
+    out = {s["span_id"]: 0.0 for s in spans}
+    for root_id, members in trees.items():
+        lo, hi = by_id[root_id]["start_ms"], by_id[root_id]["end_ms"]
+        cuts = sorted({lo, hi} | {min(hi, max(lo, t)) for s in members for t in (s["start_ms"], s["end_ms"])})
+        for a, b in zip(cuts, cuts[1:]):
+            running = [s for s in members if s["start_ms"] <= a and s["end_ms"] >= b]
+            owner = max(running, key=lambda s: (depth[s["span_id"]], -s["start_ms"]))
+            out[owner["span_id"]] += (b - a) / 1e3
     return out
+
+
+def tracing_overhead(times, traced):
+    """Median over the traced warm passes of the pass time minus the mean
+    of the untraced passes either side of it, so that the warm passes'
+    steady speed-up cancels. `times` and `traced` are per pass, pass 0
+    being the cold one."""
+    diffs = [times[i] - (times[i - 1] + times[i + 1]) / 2
+             for i in range(1, len(times) - 1)
+             if traced[i] and not traced[i - 1] and not traced[i + 1]]
+    return statistics.median(diffs) if diffs else 0.0
 
 
 def execution_spans(ex, exec_id, events):

@@ -6,9 +6,8 @@
 Builds the engine from the checkout's sources together with the harness
 in perfbench/src (first run only), generates the inputs from the seed,
 and runs one JVM at local[<cores>] that calls the workload's queries as
-a single closed-loop client: a cold pass, then warm passes until the
-time budget is spent. Results of the first two passes are checked
-against perfbench/digests.json.
+a single closed-loop client: a cold pass, then warm passes for
+--seconds. Every result is checked against perfbench/digests.json.
 
 The last line of stdout is one JSON object: `correct`, `attempted`,
 `failed` and `metrics` (the end-to-end metrics of BENCHMARK.json with
@@ -41,7 +40,12 @@ ADD_OPENS = [
     "java.base/java.util.concurrent", "java.base/java.util.concurrent.atomic",
     "java.base/sun.nio.ch", "java.base/sun.nio.cs", "java.base/sun.security.action",
     "java.base/sun.util.calendar"]
-SETUP_REPS = 3
+# Warm passes keep getting faster for several passes (the JVM is still
+# warming up), so warm_pass_s takes the median of the first WARM_PASSES
+# of them: every run then reads the same stretch of that curve, and a
+# faster host, which fits more passes in --seconds, does not also pull
+# the median further down it.
+WARM_PASSES = 5
 
 
 def die(msg):
@@ -111,8 +115,10 @@ def heap_size():
 
 
 def run_jvm(cp, args, run_dir, budget_s):
+    heap = heap_size()
     cmd = ["java"] + [x for p in ADD_OPENS for x in ("--add-opens", f"{p}=ALL-UNNAMED")] + [
-        f"-Xmx{heap_size()}", f"-Djava.io.tmpdir={run_dir}/tmp", "-Dspark.ui.enabled=false",
+        # a fixed heap: a growing one drew out the warm passes' speed-up
+        f"-Xmx{heap}", f"-Xms{heap}", f"-Djava.io.tmpdir={run_dir}/tmp", "-Dspark.ui.enabled=false",
         "-cp", cp, "perfbench.Main"] + args
     with open(os.path.join(run_dir, "jvm.log"), "w") as log:
         proc = subprocess.Popen(cmd, cwd=run_dir, stdout=log, stderr=subprocess.STDOUT,
@@ -160,9 +166,9 @@ def end_to_end(record):
     lat = [metrics.latency_s(e) for p in warm for e in p["execs"]]
     tail_p, tail_v = metrics.tail(lat)
     return {
-        "setup_s": record["gen_s"] + statistics.median(record["setup_jvm_s"]),
+        "setup_s": record["setup_s"],
         "cold_pass_s": pass_s(passes[0]),
-        "warm_pass_s": statistics.median(pass_s(p) for p in warm),
+        "warm_pass_s": statistics.median(pass_s(p) for p in warm[:WARM_PASSES]),
         "query_p50_s": statistics.median(lat),
         "query_tail_s": tail_v,
         "heap_live_mb": record["heap_live_mb"],
@@ -180,7 +186,6 @@ def per_layer(record, names):
     cold = layers[0][0]
     spans = [s for p in traced for s in layers[p["pass"]][1]]
     trig_ms = [x for p in traced if p["pass"] > 0 for x in layers[p["pass"]][2]]
-    untraced = [p for p in record["passes"] if not p["traced"] and p["pass"] > 0]
     pass_s = lambda p: sum(metrics.latency_s(e) for e in p["execs"])
     out = {}
     for name in names:
@@ -190,8 +195,8 @@ def per_layer(record, names):
             out[name] = statistics.median(w[0].get(name, 0.0) for w in warm)
     out["trace.residual_frac"] = statistics.median(
         abs(w[0]["trace.residual_s"]) / w[0]["wall_s"] for w in warm)
-    out["trace.overhead_s"] = (statistics.median(pass_s(p) for p in traced if p["pass"] > 0)
-                               - statistics.median(pass_s(p) for p in untraced))
+    out["trace.overhead_s"] = metrics.tracing_overhead(
+        [pass_s(p) for p in record["passes"]], [p["traced"] for p in record["passes"]])
     out["Staging.build_s"] = sum(p["build_s"] for p in record["passes"])
     out["Staging.builds"] = sum(p["builds"] for p in record["passes"])
     out["Staging.disk_mb"] = record["staging_disk_mb"]
@@ -237,7 +242,7 @@ def main():
         rc = run_jvm(cp, [
             "--workload", args.workload, "--seed", str(args.seed), "--seconds", str(args.seconds),
             "--trace", str(args.trace), "--queries", ",".join(wl["queries"]),
-            "--data", data, "--setup-reps", str(SETUP_REPS), "--scale", str(wl.get("scale", 1)),
+            "--data", data, "--scale", str(wl.get("scale", 1)),
             "--run-dir", run_dir, "--cpus", str(len(os.sched_getaffinity(0))), "--out", out,
         ], run_dir, DEADLINE_S - (time.time() - t_start))
         if rc != 0 or not os.path.isfile(out):
@@ -253,8 +258,8 @@ def main():
         shutil.rmtree(run_dir, ignore_errors=True)
     record["gen_s"] = gen_s
     record["run_wall_s"] = time.time() - t_start
-    record["setup_jvm_s"] = [s + (record["jvm_boot_s"] if i == 0 else 0.0)
-                             for i, s in enumerate(record.pop("setup_s"))]
+    # process start (the build excluded) to the first timed query
+    record["setup_s"] = record["first_query_ms"] / 1e3 - t_start
 
     digests = load("digests.json")
     if args.write_digests:
@@ -272,6 +277,7 @@ def main():
 
     e2e, info = end_to_end(record)
     info["failed_frac"] = failed / attempted
+    record["attempted"], record["failed"] = attempted, failed
     if args.trace:
         layer, record["spans"] = per_layer(record, [m["name"] for m in bench["per_layer"]])
         shown = {m["name"]: {"value": layer[m["name"]], "unit": m["unit"]} for m in bench["per_layer"]}

@@ -17,6 +17,10 @@ import graft.functions.{TextFunctions, VectorFunctions}
   */
 object Kernels {
   private val rows = 200000L
+  // shingles costs about 60 µs a row, so the text kernels get a quarter
+  // of the rows: at 200,000 they took most of a minute, and a traced run
+  // must end within its deadline
+  private val textRows = rows / 4
   private val dim = 64
 
   def run(spark: SparkSession, seed: Long): Json.Raw = {
@@ -29,7 +33,7 @@ object Kernels {
       i => element_at(vocab, (pmod(xxhash64(col("id"), i, s), lit(15L)) + 1).cast("int"))))
 
     val vecs = spark.range(rows).select(col("id"), vec(1).as("a"), vec(2).as("b"))
-    val texts = spark.range(rows).select(col("id"), text.as("t"))
+    val texts = spark.range(textRows).select(col("id"), text.as("t"))
     val sigs = spark.range(rows).select(col("id"),
       transform(vec(3), x => x % 64L).as("a"), transform(vec(4), x => x % 64L).as("b"))
     val fps = spark.range(rows).select(md5(concat(col("id").cast("string"), s.cast("string"))).as("fp"))

@@ -11,8 +11,8 @@ import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-/** One benchmark run in one JVM: set up, then a cold pass over the
-  * workload's queries and warm passes until the time budget is spent.
+/** One benchmark run in one JVM: set up once, then a cold pass over
+  * the workload's queries and warm passes for `--seconds`.
   *
   * The client is a single caller in a closed loop: each query function
   * is called, its DataFrame is materialized in full to the `noop` sink,
@@ -38,7 +38,6 @@ object Main {
     val trace = a("trace") == "1"
     val queries = a("queries").split(",").toSeq
     val dataDir = a("data")
-    val setupReps = a("setup-reps").toInt
     val scale = a.get("scale").map(_.toInt).getOrElse(1)
     val runDir = a("run-dir")
     val cpus = a("cpus")
@@ -47,34 +46,23 @@ object Main {
     val all = graft.SparkEntry.queries
     queries.foreach(q => require(all.contains(q), s"unknown query $q"))
 
-    // Set-up: build a session, warm the JIT, derive the scaled inputs.
-    // Repeated so the caller can report a median; every repetition but
-    // the last is torn down again.
-    val jvmBootS = (System.currentTimeMillis() -
-      ManagementFactory.getRuntimeMXBean.getStartTime) / 1e3
-    var spark: SparkSession = null
-    var sfDir = ""
-    val setupS = (0 until setupReps).map { i =>
-      val t0 = System.nanoTime()
-      if (spark != null) spark.stop()
-      spark = session(cpus, runDir, i)
-      warmup(spark, dataDir, s"$runDir/warm$i")
-      sfDir = if (scale > 1) graft.ScaleRehearsal.stageScaled(spark, dataDir, scale) else dataDir
-      val s = (System.nanoTime() - t0) / 1e9
-      System.err.println(f"[perfbench] set-up $i: $s%.2f s")
-      s
-    }
+    // Set-up: build the session, warm the JIT, derive the scaled inputs.
+    val spark = session(cpus, runDir)
+    warmup(spark, dataDir, s"$runDir/warm")
+    val sfDir = if (scale > 1) graft.ScaleRehearsal.stageScaled(spark, dataDir, scale) else dataDir
 
     val tracer = if (trace) Some(new Tracer(spark)) else None
     val passes = mutable.ArrayBuffer.empty[Json.Raw]
-    val t0 = System.nanoTime()
+    val firstQueryMs = clock.ms()
+    var warmStart = 0L
     var pass = 0
     var buildsSeen = graft.Staging.sharedBuildSeconds
-    def elapsed = (System.nanoTime() - t0) / 1e9
-    // The cold pass and at least two warm passes, so every run has the
-    // same sample structure (a traced run then has one traced and one
-    // untraced warm pass); more while the time budget lasts.
-    while (pass < 3 || elapsed < seconds) {
+    def warmElapsed = (System.nanoTime() - warmStart) / 1e9
+    // The cold pass, then warm passes for `seconds`, and at least three
+    // of them, so a traced run always has a traced pass between two
+    // untraced ones.
+    while (pass < 4 || warmElapsed < seconds) {
+      if (pass == 1) warmStart = System.nanoTime()
       val traced = tracer.isDefined && pass % 2 == 0
       if (traced) tracer.get.install()
       val order = new Random(seed * 7919 + pass).shuffle(queries)
@@ -120,7 +108,7 @@ object Main {
     val stagingMb = stagingBytes(new File(sys.props("java.io.tmpdir"))) / 1048576.0
     val record = Json.obj(
       "workload" -> workload, "seed" -> seed, "trace" -> trace, "cpus" -> cpus.toInt,
-      "jvm_boot_s" -> jvmBootS, "setup_s" -> setupS,
+      "first_query_ms" -> firstQueryMs,
       "heap_live_mb" -> heapMb, "staging_disk_mb" -> stagingMb,
       "staging_build_s" -> graft.Staging.sharedBuildSeconds.values.sum,
       "staging_builds" -> graft.Staging.sharedBuildSeconds.size,
@@ -131,10 +119,10 @@ object Main {
     spark.stop()
   }
 
-  def session(cpus: String, runDir: String, rep: Int): SparkSession = {
+  def session(cpus: String, runDir: String): SparkSession = {
     val s = SparkSession.builder()
       .master(s"local[$cpus]")
-      .appName(s"perfbench-$rep")
+      .appName("perfbench")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -60,15 +60,33 @@ class SelfTimeTest(unittest.TestCase):
         self.assertAlmostEqual(st["j1"], 0.2)
         self.assertAlmostEqual(sum(st.values()), 1.0)
 
-    def test_overlapping_children_are_the_residual(self):
+    def test_overlapping_siblings_are_charged_once(self):
         spans = [span("r", "call", 0, 1000, None),
                  span("j1", "job", 0, 600, "r"),
                  span("j2", "job", 400, 1000, "r"),
                  span("j3", "job", 900, 1200, "r")]  # runs past its parent
         st = metrics.self_times(spans)
+        # the first-started job owns the overlap; time past the root is not ours
         self.assertAlmostEqual(st["r"], 0.0)
-        # children total 1.5 s inside a 1 s parent: 0.5 s of residual
-        self.assertAlmostEqual(sum(st.values()) - 1.0, 0.5)
+        self.assertAlmostEqual(st["j1"], 0.6)
+        self.assertAlmostEqual(st["j2"], 0.4)
+        self.assertAlmostEqual(st["j3"], 0.0)
+        self.assertAlmostEqual(sum(st.values()), 1.0)
+
+    def test_deeper_spans_win_and_trees_are_separate(self):
+        spans = [span("r", "query", 0, 1000, None),
+                 span("t", "trigger", 100, 700, "r"),
+                 span("j1", "job", 0, 300, "r"),      # overlaps the trigger, starts first
+                 span("j2", "job", 200, 400, "t"),    # under the trigger: deeper
+                 span("s", "query", 1000, 1500, None),
+                 span("k", "job", 1100, 1200, "s")]
+        st = metrics.self_times(spans)
+        self.assertAlmostEqual(st["j2"], 0.2)
+        self.assertAlmostEqual(st["j1"], 0.2)         # 0-200; 200-300 goes to j2
+        self.assertAlmostEqual(st["t"], 0.3)          # 100-200 is j1's, 200-400 j2's
+        self.assertAlmostEqual(st["r"], 0.3)
+        self.assertAlmostEqual(st["r"] + st["t"] + st["j1"] + st["j2"], 1.0)
+        self.assertAlmostEqual(st["s"] + st["k"], 0.5)
 
     def test_execution_spans_nest_jobs_under_triggers(self):
         ex = {"start_ms": 0, "call_end_ms": 800, "end_ms": 1000, "query": "x"}
@@ -89,23 +107,41 @@ class SelfTimeTest(unittest.TestCase):
         self.assertTrue(all(s["id"] == "0:x" for s in spans))
 
 
+class OverheadTest(unittest.TestCase):
+    def test_trend_cancels(self):
+        # passes speed up by 1 s each; traced passes cost 0.2 s more
+        times = [20.0, 9.0, 8.2, 7.0, 6.2, 5.0, 4.2]
+        traced = [True, False, True, False, True, False, True]
+        self.assertAlmostEqual(metrics.tracing_overhead(times, traced), 0.2)
+
+
 class EndToEndTest(unittest.TestCase):
     def record(self):
         def ex(q, lo, dur):
             return {"query": q, "start_ms": lo, "call_end_ms": lo + 1, "end_ms": lo + dur,
                     "error": None, "digest": None, "rows": None}
-        return {"gen_s": 1.0, "setup_jvm_s": [9.0, 2.0, 3.0], "heap_live_mb": 100.0,
+        return {"gen_s": 1.0, "setup_s": 4.0, "heap_live_mb": 100.0,
                 "passes": [{"pass": 0, "traced": False, "execs": [ex("a", 0, 4000), ex("b", 4000, 2000)]},
                            {"pass": 1, "traced": False, "execs": [ex("a", 0, 1000), ex("b", 1000, 2000)]},
                            {"pass": 2, "traced": False, "execs": [ex("a", 0, 3000), ex("b", 3000, 2000)]}]}
 
-    def test_pass_times_and_setup_median(self):
+    def test_pass_times(self):
         m, info = run.end_to_end(self.record())
         self.assertAlmostEqual(m["setup_s"], 4.0)
         self.assertAlmostEqual(m["cold_pass_s"], 6.0)
         self.assertAlmostEqual(m["warm_pass_s"], 4.0)
         self.assertAlmostEqual(m["query_p50_s"], 2.0)
         self.assertEqual(info["warm_samples"], 4)
+
+    def test_warm_pass_is_the_median_of_the_first_five(self):
+        r = self.record()
+        ex = r["passes"][1]["execs"][0]
+        for i, ms in enumerate([9000, 8000, 7000, 6000, 5000, 1000, 1000, 1000]):
+            r["passes"].append({"pass": 3 + i, "traced": False, "execs": [dict(ex, end_ms=ms)]})
+        m, info = run.end_to_end(r)
+        # warm passes 3, 5, 9, 8, 7, 6, 5, 1, 1, 1 s: the first five have median 7 s
+        self.assertAlmostEqual(m["warm_pass_s"], 7.0)
+        self.assertEqual(info["warm_passes"], 10)
 
     def test_digest_check_counts_mismatches(self):
         r = self.record()
@@ -133,6 +169,16 @@ class PairRuleTest(unittest.TestCase):
         new = [x * 1.2 for x in self.base]
         self.assertEqual(compare.verdict(self.base, new, "lower", 0.1)["verdict"], "regression")
         self.assertEqual(compare.verdict(self.base, new, "lower", 0.25)["verdict"], "unchanged")
+
+    def test_gain_needs_ten_pairs(self):
+        base, new = self.base[:3], [x - 1.0 for x in self.base[:3]]
+        self.assertNotEqual(compare.verdict(base, new, "lower", 0.1)["verdict"], "gain")
+
+    def test_more_failures_refuse_gain_and_unchanged(self):
+        new = [x - 1.0 for x in self.base]
+        self.assertEqual(compare.verdict(self.base, new, "lower", 0.1, 0, 1)["verdict"], "failing")
+        self.assertEqual(compare.verdict(self.base, self.base, "lower", 0.1, 0, 2)["verdict"], "failing")
+        self.assertEqual(compare.verdict(self.base, new, "lower", 0.1, 2, 2)["verdict"], "gain")
 
     def test_unresolved_when_the_base_spreads_past_the_bound(self):
         base = [5.0, 15.0, 6.0, 14.0, 10.0, 7.0, 13.0, 9.0, 11.0, 10.0]
