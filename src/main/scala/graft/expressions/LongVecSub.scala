@@ -1,7 +1,7 @@
 package graft.expressions
 
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnsafeArrayData}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
@@ -15,8 +15,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
   * null or past its end (zip_with's null padding). The higher-order
   * form is CodegenFallback and interprets the lambda per element with
   * boxed variable binding; this expression runs one tight loop inside
-  * whole-stage codegen (the LongDotProduct pattern — the output array
-  * still allocates, but per-element interpretation is gone).
+  * whole-stage codegen (the LongDotProduct pattern). When both sides
+  * have the same length and no null element — every residual the
+  * encode passes compute — the result is a primitive `long[]` wrapped
+  * as UnsafeArrayData; otherwise it falls back to boxed elements with
+  * zip_with's null padding.
   */
 case class LongVecSub(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -38,11 +41,30 @@ case class LongVecSub(left: Expression, right: Expression)
 
   override def prettyName: String = "qsub_native"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    LongVecSubKernel.sub(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = graft.expressions.LongVecSubKernel.sub($a, $b);")
+
+  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
+    copy(left = newLeft, right = newRight)
+}
+
+object LongVecSubKernel {
+  def sub(x: ArrayData, y: ArrayData): ArrayData = {
     val nx = x.numElements()
     val ny = y.numElements()
+    if (nx == ny) {
+      val out = new Array[Long](nx)
+      var i = 0
+      while (i < nx && !x.isNullAt(i) && !y.isNullAt(i)) {
+        out(i) = x.getLong(i) - y.getLong(i)
+        i += 1
+      }
+      if (i == nx) return UnsafeArrayData.fromPrimitiveArray(out)
+    }
     val n = math.max(nx, ny)
     val out = new Array[Any](n)
     var i = 0
@@ -54,28 +76,4 @@ case class LongVecSub(left: Expression, right: Expression)
     }
     new GenericArrayData(out)
   }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val nx = ctx.freshName("nx")
-      val ny = ctx.freshName("ny")
-      val n = ctx.freshName("n")
-      val out = ctx.freshName("out")
-      s"""
-         |int $nx = $a.numElements();
-         |int $ny = $b.numElements();
-         |int $n = java.lang.Math.max($nx, $ny);
-         |Object[] $out = new Object[$n];
-         |for (int $i = 0; $i < $n; $i++) {
-         |  if ($i < $nx && $i < $ny && !$a.isNullAt($i) && !$b.isNullAt($i)) {
-         |    $out[$i] = $a.getLong($i) - $b.getLong($i);
-         |  }
-         |}
-         |${ev.value} = new org.apache.spark.sql.catalyst.util.GenericArrayData($out);
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
 }

@@ -16,8 +16,15 @@ import org.apache.spark.sql.functions._
 object VectorFunctions {
 
   /** float array → int64 array at scale 1e6 (via double, exactly as the
-    * oracle's CAST(embedding AS DOUBLE[]) → round → BIGINT). */
+    * oracle's CAST(embedding AS DOUBLE[]) → round → BIGINT) — the native
+    * codegen'd expression (see [[graft.expressions.QuantizeE6]]). */
   def quantize(vec: Column): Column =
+    org.apache.spark.sql.GraftBridge.column(graft.expressions.QuantizeE6(
+      org.apache.spark.sql.GraftBridge.expression(vec)))
+
+  /** The higher-order-function twin of [[quantize]] — differential-test
+    * reference. */
+  def quantizeHof(vec: Column): Column =
     transform(vec, x => round(x.cast("double") * 1000000, 0).cast("long"))
 
   /** Exact int64 dot product of two quantized vectors — the native
@@ -27,10 +34,11 @@ object VectorFunctions {
       org.apache.spark.sql.GraftBridge.expression(a),
       org.apache.spark.sql.GraftBridge.expression(b)))
 
-  /** Hash-aggregable two-level argmax with a primitive buffer — the
-    * native aggregate behind the argmax-by-window replacements (see
-    * [[graft.expressions.ArgMaxBy]]; round 19). DESC/ASC encode by
-    * negation: argmax(csim DESC, id ASC) = argMaxBy(v, csim, -id). */
+  /** Hash-aggregable two-level argmax with a primitive buffer (see
+    * [[graft.expressions.ArgMaxBy]]). DESC/ASC encode by negation:
+    * argmax(csim DESC, id ASC) = argMaxBy(v, csim, -id). Over a
+    * crossJoin against the codebook rows it is the relational twin that
+    * [[nearestCentroid]] is tested against. */
   def argMaxBy(value: Column, ord1: Column, ord2: Column): Column =
     org.apache.spark.sql.GraftBridge.column(graft.expressions.ArgMaxBy(
       org.apache.spark.sql.GraftBridge.expression(value),
@@ -56,6 +64,17 @@ object VectorFunctions {
     * reference. */
   def qsubHof(a: Column, b: Column): Column =
     zip_with(a, b, (x, y) => x - y)
+
+  /** `c_id` of the codebook entry nearest to the quantized vector `vec`
+    * (exact squared norm `n2`): max cosine, or min exact squared L2 when
+    * `l2`, ties → lowest c_id. `codebook` is
+    * `array<struct<c_id, vec, n2>>`, one row per codebook broadcast into
+    * the corpus pass (see [[graft.expressions.NearestCentroid]]). */
+  def nearestCentroid(vec: Column, n2: Column, codebook: Column, l2: Boolean): Column =
+    org.apache.spark.sql.GraftBridge.column(graft.expressions.NearestCentroid(
+      org.apache.spark.sql.GraftBridge.expression(vec),
+      org.apache.spark.sql.GraftBridge.expression(n2),
+      org.apache.spark.sql.GraftBridge.expression(codebook), l2))
 
   /** Cosine similarity from quantized vectors (norms precomputed as
     * qdot(v,v) for reuse across pairs). */

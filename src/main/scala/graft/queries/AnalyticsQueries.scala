@@ -338,8 +338,7 @@ object AnalyticsQueries {
         // argmax as a struct MIN over (-wt, lab) — identical pick to
         // the former (wt DESC, lab ASC) row_number window (wt is an
         // exact long; negation is lossless), but map-side combined
-        // with no sort (round-19, guide §2.4 — the same rewrite as
-        // VectorQueries.lloydRound)
+        // with no sort
         labels = edges.join(labels.withColumnRenamed("node", "u"), "u")
           .groupBy(col("v").as("node"), col("lab"))
           .agg(sum(col("w")).cast("long").as("wt"))

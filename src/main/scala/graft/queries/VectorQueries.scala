@@ -183,9 +183,7 @@ object VectorQueries {
             FROM capped a JOIN capped b
               ON a.band = b.band AND a.bucket = b.bucket AND a.vec_id < b.vec_id)"""
 
-  /** Lloyd iterations for the coarse quantizers — round-8's verdict
-    * stretch item: `sim_ann_ivf`/`dedup_semantic` previously used the
-    * seed vectors (vec_id < k) AS the codebook; now the seeds only
+  /** Lloyd iterations for the coarse quantizers: the seeds (vec_id < k)
     * INITIALIZE k-means and `kmeansIters` Lloyd rounds refine them.
     * Spherical k-means: assignment by max cosine (ties → lowest c_id),
     * update = per-dimension integer mean of the assigned vectors —
@@ -194,61 +192,141 @@ object VectorQueries {
     * loop bit-identical to the DuckDB oracle ([[lloydSql]] mirrors
     * every round). Cross-engine floor division `(sv - ((sv % cnt + cnt)
     * % cnt)) div cnt` avoids the truncate-vs-floor divergence on
-    * negative sums (both engines' `%` truncates toward zero).
+    * negative sums (both engines' `%` truncates toward zero). An empty
+    * cluster drops out of the codebook identically in both engines
+    * (deterministic, no re-seeding).
     *
-    * Scale shape: centroids stay a k-row broadcast at every round;
-    * assignment is one broadcast nested-loop per round (corpus never
-    * shuffles on anything but the k-row update aggregate), and the
-    * update is a map-side-combinable (cluster, pos) hash aggregate —
-    * the same shape per extra iteration, so iteration count is a cost
-    * dial, not a plan change. An empty cluster drops out of the
-    * codebook identically in both engines (deterministic, no
-    * re-seeding). */
+    * Scale shape: the codebook is k·d longs held on the driver, and
+    * each round is ONE job — a per-partition fold (see [[lloydFold]])
+    * that assigns every vector with the same nearest-centroid kernel
+    * serving uses and adds it into k count and k·d sum cells; the
+    * driver merges the per-partition cells and takes the floor-mean.
+    * Nothing shuffles and no corpus row is multiplied by k (the MLlib
+    * KMeans shape). It is exact because assignment is a pure function
+    * of (vector, codebook) and int64 addition is associative and
+    * commutative (with overflow raising, as ANSI `sum` does), so the
+    * partitioning cannot change a cell. Iteration count is a cost dial,
+    * not a plan change. */
   val kmeansIters = 2
 
-  /** One Lloyd round over `(vec_id, q, n2)`: returns refined centroids
-    * `(c_id, cq, cn2)`. */
-  private def lloydRound(v: DataFrame, cents: DataFrame, dims: Int = 64): DataFrame = {
-    // Round-19 optimization (guide §2.3/§2.4): the assignment argmax is
-    // a lexicographic struct MAX — field-by-field struct ordering is
-    // exactly ORDER BY csim DESC, c_id ASC (Spark compares doubles with
-    // java.lang.Double semantics in BOTH the window sort and the struct
-    // ordering, so NaN/±0.0 corners pick identically), but the map-side
-    // partial aggregate reduces the k candidate rows per vector BEFORE
-    // the exchange and nothing sorts — the old row_number() window
-    // shuffled all k rows per vector and sorted every partition. The
-    // centroid update is ONE map-side-combined aggregate with `dims`
-    // per-dimension sum columns (exchange carries one partial row per
-    // cluster per map task) instead of posexplode (n·d rows through an
-    // exchange) + a second collect_list re-assembly shuffle. Per-dim
-    // arithmetic is unchanged: exact integer sums, floor division
-    // (sv - ((sv % cnt + cnt) % cnt)) div cnt, array assembled in
-    // dimension order — bit-identical centroids, same oracle.
-    val asg = v.crossJoin(broadcast(cents))
-      .withColumn("csim", cosineFromQ(qdot(col("q"), col("cq")), col("n2"), col("cn2")))
-      // q rides the GROUP KEY (constant per vec_id; var-length key
-      // fields hash-aggregate fine — it is var-length BUFFERS that
-      // force the SortAggregate fallback, see ArgMaxBy)
-      .groupBy(col("vec_id"), col("q"))
-      .agg(argMaxBy(col("c_id"), col("csim"), -col("c_id")).as("cluster"))
-      .select(col("cluster"), col("q"))
-    val sums = (0 until dims).map(i => sum(element_at(col("q"), i + 1)).as(s"sv$i"))
-    asg.groupBy(col("cluster"))
-      .agg(count(lit(1)).as("cnt"), sums: _*)
-      .select(col("cluster").as("c_id"),
-        array((0 until dims).map(i =>
-          expr(s"(sv$i - ((sv$i % cnt + cnt) % cnt)) div cnt")): _*).as("cq"))
-      .withColumn("cn2", qdot(col("cq"), col("cq")))
+  /** A driver-held codebook entry: centroid id, vector, exact squared norm. */
+  private[queries] final case class Centroid(id: Long, v: Array[Long], n2: Long)
+
+  /** A centroid with its squared norm summed as [[qdot]] sums it. */
+  private[queries] def centroid(id: Long, v: Array[Long]): Centroid =
+    Centroid(id, v, v.foldLeft(0L)((n2, x) => n2 + x * x))
+
+  private[queries] def floorMean(sv: Long, cnt: Long): Long =
+    Math.subtractExact(sv, Math.addExact(sv % cnt, cnt) % cnt) / cnt
+
+  /** Lloyd training over `in(key: int, vec_id, vec, n2)`, one codebook per
+    * key (the PQ subspace; a single key for the coarse quantizers):
+    * seeds = vec_id < k, then [[kmeansIters]] fold rounds. Returns each
+    * key's centroids in c_id order. */
+  private def lloydTrain(in: DataFrame, k: Int, l2: Boolean): Map[Int, Array[Centroid]] = {
+    var books = in.filter(col("vec_id") < k).collect().toSeq
+      .map { r =>
+        require(!r.isNullAt(0) && !r.isNullAt(2) && !r.isNullAt(3),
+          s"Lloyd seed ${r.get(1)}: null key, vector or norm")
+        r.getInt(0) -> Centroid(r.getLong(1), r.getSeq[Long](2).toArray, r.getLong(3))
+      }
+      .groupBy(_._1).map { case (key, cs) => key -> cs.map(_._2).sortBy(_.id).toArray }
+    val rows = in.select(col("key"), col("vec"), col("n2"))
+    val ansi = in.sparkSession.sessionState.conf.ansiEnabled
+    for (_ <- 0 until kmeansIters) books = lloydFold(rows, books, l2, ansi)
+    books
   }
 
-  /** k-means codebook over `(vec_id, q, n2)`: seeds = vec_id < k,
-    * refined by [[kmeansIters]] Lloyd rounds. */
-  private[queries] def lloydCentroids(v: DataFrame, k: Int): DataFrame = {
-    var cents = v.filter(col("vec_id") < k)
-      .select(col("vec_id").as("c_id"), col("q").as("cq"), col("n2").as("cn2"))
-    for (_ <- 0 until kmeansIters) cents = lloydRound(v, cents)
-    cents
+  /** One Lloyd round as one job: each partition assigns its rows of
+    * `rows(key, vec, n2)` against the driver-held `books` (rows of a key
+    * without a codebook drop out, as the oracle's join on the key drops
+    * them) and adds them into per-(key, cluster) counts and exact
+    * per-dimension sums; the driver merges the folds and floor-means.
+    * The vector width is each codebook's; a vector of another width or
+    * with a null element fails the job. */
+  private def lloydFold(rows: DataFrame, books: Map[Int, Array[Centroid]], l2: Boolean,
+      ansi: Boolean): Map[Int, Array[Centroid]] = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, UnsafeArrayData}
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    val keys = books.keys.toArray.sorted
+    val cents = keys.map(books)
+    val widths = cents.map { cs =>
+      val d = cs.head.v.length
+      require(cs.forall(_.v.length == d),
+        s"Lloyd codebook with mixed widths: ${cs.map(_.v.length).distinct.mkString(", ")}")
+      d
+    }
+    val folds = rows.queryExecution.toRdd.mapPartitions { it =>
+      val slot = keys.zipWithIndex.toMap
+      val cbs = cents.map(cs => new GenericArrayData(cs.map(c =>
+        new GenericInternalRow(Array[Any](c.id, UnsafeArrayData.fromPrimitiveArray(c.v), c.n2))): Array[Any]))
+      val cnt = cents.map(cs => new Array[Long](cs.length))
+      val sum = cents.indices.map(b => new Array[Long](cents(b).length * widths(b))).toArray
+      it.foreach { r: InternalRow =>
+        if (!r.isNullAt(0)) slot.get(r.getInt(0)).foreach { b =>
+          require(!r.isNullAt(1) && !r.isNullAt(2), "Lloyd fold: null vector or norm")
+          val v = r.getArray(1)
+          val c = graft.expressions.NearestCentroidKernel.pick(v, r.getLong(2), cbs(b), l2, ansi)
+          require(c >= 0, "Lloyd fold: a vector scored against no centroid")
+          cnt(b)(c) += 1
+          val d = widths(b)
+          val sb = sum(b)
+          var i = 0
+          while (i < d) {
+            require(!v.isNullAt(i), "Lloyd fold: null vector element")
+            sb(c * d + i) = Math.addExact(sb(c * d + i), v.getLong(i))
+            i += 1
+          }
+        }
+      }
+      Iterator.single((cnt, sum))
+    }.collect()
+    keys.indices.map { b =>
+      val d = widths(b)
+      val cs = cents(b).indices.flatMap { c =>
+        val n = folds.map(_._1(b)(c)).sum
+        if (n == 0) None
+        else Some(centroid(cents(b)(c).id, Array.tabulate(d) { i =>
+          floorMean(folds.map(_._2(b)(c * d + i)).reduce(Math.addExact(_, _)), n)
+        }))
+      }
+      keys(b) -> cs.toArray
+    }.filter(_._2.nonEmpty).toMap
   }
+
+  /** A driver-held codebook as a local relation of `key` columns +
+    * `(c_id, vec, n2)` under the given names. */
+  private[queries] def codebookFrame(s: SparkSession, books: Map[Int, Array[Centroid]],
+      keyCol: Option[String], vecCol: String, n2Col: String): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val schema = StructType(keyCol.map(StructField(_, IntegerType)).toSeq ++ Seq(
+      StructField("c_id", LongType), StructField(vecCol, ArrayType(LongType)),
+      StructField(n2Col, LongType)))
+    val rows = books.toSeq.sortBy(_._1).flatMap { case (key, cs) =>
+      cs.map(c => Row.fromSeq(keyCol.map(_ => key).toSeq ++ Seq(c.id, c.v.toSeq, c.n2)))
+    }
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
+
+  /** k-means codebook `(c_id, cq, cn2)` over `(vec_id, q, n2)`: seeds =
+    * vec_id < k, refined by [[kmeansIters]] Lloyd rounds; a driver-held
+    * local relation. */
+  private[queries] def lloydCentroids(v: DataFrame, k: Int): DataFrame =
+    codebookFrame(v.sparkSession,
+      lloydTrain(v.select(lit(0).as("key"), col("vec_id"), col("q").as("vec"), col("n2")), k, l2 = false),
+      None, "cq", "cn2")
+
+  /** One row `cb` holding the codebook `cents(c_id, <vec>, <n2>)` as the
+    * `array<struct<c_id, vec, n2>>` the nearest-centroid kernel reads,
+    * per `keys` group (none: a single row; an empty codebook: no row, so
+    * a cross join against it is empty, as against the codebook rows). */
+  private[queries] def codebookRows(cents: DataFrame, keys: Seq[String],
+      vec: String, n2: String): DataFrame =
+    cents.groupBy(keys.map(col): _*)
+      .agg(collect_list(struct(col("c_id"), col(vec).as("vec"), col(n2).as("n2"))).as("cb"))
+      .filter(size(col("cb")) > 0)
 
   /** DuckDB twin of [[lloydCentroids]]: CTE chain over an existing
     * `n(vec_id, q, n2)` CTE, ending in `c(c_id, cq, cn2)`. `dims` is
@@ -294,7 +372,7 @@ object VectorQueries {
     * lifecycle: one training job, many serving surfaces. */
   private[queries] def sharedCoarse(s: SparkSession, d: String): DataFrame =
     graft.Staging.frame(s, "ivf_coarse", d) {
-      lloydCentroids(ivfCorpus(s, d), 8).localCheckpoint()
+      lloydCentroids(ivfCorpus(s, d), 8)
     }
 
   /** The FULL-corpus partition assignment off [[sharedCoarse]] —
@@ -310,7 +388,7 @@ object VectorQueries {
     * per JVM for `sim_ann_pq` + its persisted twin. */
   private[queries] def sharedPqFine(s: SparkSession, d: String): DataFrame =
     graft.Staging.frame(s, "pq_fine", d) {
-      lloydSubCentroids(pqCorpus(s, d)._2, 16).localCheckpoint()
+      lloydSubCentroids(pqCorpus(s, d)._2, 16)
     }
 
   /** The DAY-1 (base-slice, vec_id % 10 != 9) plain-PQ codebook,
@@ -323,25 +401,19 @@ object VectorQueries {
     graft.Staging.frame(s, "pq_b_fine", d) {
       lloydSubCentroids(
         pqCorpus(s, d)._2.filter(pmod(col("vec_id"), lit(10L)) =!= 9),
-        16).localCheckpoint()
+        16)
     }
 
-  /** Nearest-centroid partition assignment `(vec_id, cluster)`: one
-    * broadcast of the k-row codebook against the corpus, argmin by
-    * max cosine (ties → lowest c_id). At 100 TB this is the offline
-    * index build — one corpus pass, no corpus shuffle (the per-vector
-    * argmin window partitions on vec_id, which AQE keeps co-located
-    * with the scan after the broadcast join). */
+  /** Nearest-centroid partition assignment `(vec_id, cluster)`: max
+    * cosine, ties → lowest c_id. One corpus pass, no shuffle: the
+    * codebook crosses the corpus as ONE broadcast row (see
+    * [[codebookRows]]) and the native nearest-centroid expression scans
+    * its k entries per vector — the kernel the Lloyd fold trains with.
+    * At 100 TB this is the offline index build. */
   private[queries] def ivfAssign(v: DataFrame, cents: DataFrame): DataFrame =
-    // argmax as a struct MAX (same pick as the former row_number
-    // window — see lloydRound): the exchange carries one
-    // partially-aggregated row per vector instead of k window rows,
-    // and no partition ever sorts (guide §2.3/§2.4).
-    v.crossJoin(broadcast(cents))
-      .withColumn("csim", cosineFromQ(qdot(col("q"), col("cq")), col("n2"), col("cn2")))
-      .groupBy(col("vec_id"))
-      .agg(argMaxBy(col("c_id"), col("csim"), -col("c_id")).as("cluster"))
-      .select(col("vec_id"), col("cluster"))
+    v.crossJoin(broadcast(codebookRows(cents, Nil, "cq", "cn2")))
+      .select(col("vec_id"),
+        nearestCentroid(col("q"), col("n2"), col("cb"), l2 = false).as("cluster"))
 
   /** Probe list `(q_id, cluster, probe_rank)`: top-`maxProbe` centroids
     * per query vector (vec_id < 5) by cosine — only the tiny query side
@@ -410,44 +482,17 @@ object VectorQueries {
       SELECT q_id, vec_id, CAST(rnk AS BIGINT) AS rnk, round(cosine, 6) AS cosine
       FROM r WHERE rnk <= 5 ORDER BY q_id, rnk"""
 
-  /** Per-subspace Lloyd round for the PQ codebook — same contract as
-    * [[lloydRound]] but keyed by subspace `s` and assigning by exact
-    * int64 squared-L2 (`d2 = |a|² + |c|² − 2⟨a,c⟩`, ties → lowest
-    * c_id); PQ's reconstruction metric is L2, so means are the exact
-    * update (no normalization subtlety). `subs`: `(vec_id, s, sub,
-    * sn2)`; centroids: `(s, c_id, csub, cn2)`. */
-  private def lloydSubRound(subs: DataFrame, cents: DataFrame): DataFrame = {
-    // Same round-19 rewrite as lloydRound, keyed by subspace: argmin =
-    // struct MIN over exact int64 (d2, c_id) — identical pick to the
-    // old (d2 ASC, c_id ASC) window, no sort, map-side combine — and
-    // the update is one aggregate with 8 per-dim sum columns instead
-    // of posexplode + collect_list (guide §2.3/§2.4). Arithmetic
-    // unchanged: bit-identical centroids, same oracle.
-    val asg = subs.join(broadcast(cents), Seq("s"))
-      .withColumn("d2", col("sn2") + col("cn2") - lit(2L) * qdot(col("sub"), col("csub")))
-      // sub rides the group key (see lloydRound); argmin = argmax of
-      // the negated exact-int64 ordering
-      .groupBy(col("vec_id"), col("s"), col("sub"))
-      .agg(argMaxBy(col("c_id"), -col("d2"), -col("c_id")).as("cluster"))
-      .select(col("s"), col("cluster"), col("sub"))
-    val sums = (0 until 8).map(i => sum(element_at(col("sub"), i + 1)).as(s"sv$i"))
-    asg.groupBy(col("s"), col("cluster"))
-      .agg(count(lit(1)).as("cnt"), sums: _*)
-      .select(col("s"), col("cluster").as("c_id"),
-        array((0 until 8).map(i =>
-          expr(s"(sv$i - ((sv$i % cnt + cnt) % cnt)) div cnt")): _*).as("csub"))
-      .withColumn("cn2", qdot(col("csub"), col("csub")))
-  }
-
-  /** PQ codebook: per-subspace k-means seeded from vec_id < k,
-    * [[kmeansIters]] Lloyd rounds ([[lloydSubSql]] is the oracle
-    * twin). */
-  private[queries] def lloydSubCentroids(subs: DataFrame, k: Int): DataFrame = {
-    var cents = subs.filter(col("vec_id") < k)
-      .select(col("s"), col("vec_id").as("c_id"), col("sub").as("csub"), col("sn2").as("cn2"))
-    for (_ <- 0 until kmeansIters) cents = lloydSubRound(subs, cents)
-    cents
-  }
+  /** PQ codebook `(s, c_id, csub, cn2)` over `subs(vec_id, s, sub,
+    * sn2)`: per-subspace k-means seeded from vec_id < k, assigning by
+    * exact int64 squared-L2 (`d2 = |a|² + |c|² − 2⟨a,c⟩`, ties → lowest
+    * c_id) — PQ's reconstruction metric is L2, so means are the exact
+    * update. The same one-job-per-round fold as [[lloydCentroids]],
+    * keyed by subspace; [[lloydSubSql]] is the oracle twin. */
+  private[queries] def lloydSubCentroids(subs: DataFrame, k: Int): DataFrame =
+    codebookFrame(subs.sparkSession,
+      lloydTrain(subs.select(col("s").as("key"), col("vec_id"), col("sub").as("vec"), col("sn2").as("n2")),
+        k, l2 = true),
+      Some("s"), "csub", "cn2")
 
   /** DuckDB twin of [[lloydSubCentroids]] over a `subs(vec_id, s, sub)`
     * CTE, ending in `cents(s, c_id, csub)` (the oracle recomputes d2
@@ -559,16 +604,14 @@ object VectorQueries {
 
   /** PQ encode: code table `codes(vec_id, s, code)` — nearest centroid
     * per (vector, subspace) by exact int64 squared-L2 (d2 = sn2 + cn2
-    * − 2·dot, no (a−b) expansion). One narrow corpus pass: broadcast
-    * codebook join, per-(vec, s) argmin. */
+    * − 2·dot, no (a−b) expansion, ties → lowest c_id). One narrow
+    * corpus pass: each subspace's codebook is one broadcast row joined
+    * on `s`, scanned per sub-vector by the native nearest-centroid
+    * expression. */
   private[queries] def pqEncode(subs: DataFrame, cents: DataFrame): DataFrame =
-    // argmin as a struct MIN over exact int64 (d2, c_id) — identical
-    // pick to the old window, map-side combined, no sort (guide §2.4).
-    subs.join(broadcast(cents), Seq("s"))
-      .withColumn("d2", col("sn2") + col("cn2") - lit(2L) * qdot(col("sub"), col("csub")))
-      .groupBy(col("vec_id"), col("s"))
-      .agg(argMaxBy(col("c_id"), -col("d2"), -col("c_id")).as("code"))
-      .select(col("vec_id"), col("s"), col("code"))
+    subs.join(broadcast(codebookRows(cents, Seq("s"), "csub", "cn2")), Seq("s"))
+      .select(col("vec_id"), col("s"),
+        nearestCentroid(col("sub"), col("sn2"), col("cb"), l2 = true).as("code"))
 
   /** PQ offline build for the in-lineage variant: corpus frames +
     * the shared Lloyd-trained codebook `cents(s, c_id, csub, cn2)`
@@ -831,13 +874,13 @@ object VectorQueries {
       * are bit-identical to the oracle's direct (a-b)^2 sums; the
       * re-rank divides identical integers.
       *
-      * Scale shape: the codebook is 128 tiny rows → broadcast both
-      * into encode and into the per-query LUT; encoding is one narrow
-      * pass over the corpus (no shuffle before the per-(vec,s) argmin,
-      * which AQE keeps map-side after the broadcast join); ADC is a
-      * broadcast-LUT equi-join on (s, code) + one partial-aggregated
-      * sum — the corpus shuffles only the 8-row-per-vector code
-      * stream, never embeddings. */
+      * Scale shape: the codebook is 128 tiny rows, trained on the
+      * driver-held fold (one job per Lloyd round) → broadcast into
+      * encode as one row per subspace and into the per-query LUT;
+      * encoding is one narrow pass over the corpus with no shuffle;
+      * ADC is a broadcast-LUT equi-join on (s, code) + one
+      * partial-aggregated sum — the corpus shuffles only the
+      * 8-row-per-vector code stream, never embeddings. */
     QueryDef("sim_ann_pq", Some(pqOracle)) { (s, d) =>
       val (v, subs, cents, codes) = pqBuild(s, d)
       // LUT from the in-lineage codebook (the persisted twin
@@ -1026,9 +1069,9 @@ object VectorQueries {
       ORDER BY m.vec_id""")) { (s, d) =>
       import org.apache.spark.sql.expressions.Window
       // the assignment IS sharedAsg's (identical corpus, codebook and
-      // argmax tie order — the ArgMaxBy pick equals the old row_number
-      // window's, see ivfAssign); riding the JVM-shared frame removes
-      // the per-sample centroid-cross + two windows (round 19)
+      // tie order — max cosine, lowest c_id, as the oracle's row_number
+      // window; see ivfAssign); riding the JVM-shared frame removes the
+      // per-sample centroid cross + two windows
       val v = ivfCorpus(s, d)
       val asg = sharedAsg(s, d).join(v, Seq("vec_id"))
         .select(col("vec_id"), col("cluster"), col("q"), col("n2"))

@@ -25,12 +25,19 @@ import org.apache.spark.sql.functions._
   * codes, LUTs, and ADC sums are bit-identical to the oracle's direct
   * `(a−b)²` sums; only the final re-rank divides (identical) doubles.
   *
-  * Scale shape: ONE corpus pass for assignment (k-row broadcast),
-  * one narrow pass for residual encode (128-row broadcast codebook),
-  * and a serve path that touches only the PROBED partitions of the
+  * Scale shape: both codebooks train on the driver-held fold (one job
+  * per Lloyd round, k·d longs per partition back to the driver — see
+  * [[VectorQueries.lloydCentroids]]), so they are local relations, not
+  * checkpoints. Assignment is ONE corpus pass (the coarse codebook is
+  * one broadcast row read by the native nearest-centroid expression),
+  * residual encode one narrow pass (one broadcast row per subspace),
+  * and the serve path touches only the PROBED partitions of the
   * cluster-partitioned code table (the persisted variant's plan shows
   * the dynamic-partition-pruning filter) plus top-50 raw-vector
-  * fetches. Nothing all-pairs, nothing corpus-shuffling.
+  * fetches. Nothing all-pairs, nothing corpus-shuffling. The training
+  * and assignment kernels are one function, in exact int64 except for
+  * the cosine's IEEE division of identical integers, so the driver
+  * fold, the serve-time expression and the oracle agree bit for bit.
   *
   * Reference tie-in: the reference delegates all analysis to BigQuery
   * (README.md:3) and has no vector surface; this family belongs to the
@@ -53,7 +60,7 @@ object VectorQueries2 {
     graft.Staging.frame(s, "ivfpq_fine", d) {
       lloydSubCentroids(
         ivfpqResiduals(ivfCorpus(s, d), sharedCoarse(s, d), sharedAsg(s, d)),
-        16).localCheckpoint()
+        16)
     }
 
   /** The FULL-corpus cluster-keyed IVFADC code table
@@ -116,7 +123,7 @@ object VectorQueries2 {
 
   private def sharedBaseCoarse(s: SparkSession, d: String): DataFrame =
     graft.Staging.frame(s, "ivfpq_b_coarse", d) {
-      lloydCentroids(vBaseOf(s, d), 8).localCheckpoint()
+      lloydCentroids(vBaseOf(s, d), 8)
     }
 
   private def sharedBaseAsg(s: SparkSession, d: String): DataFrame =
@@ -128,7 +135,7 @@ object VectorQueries2 {
     graft.Staging.frame(s, "ivfpq_b_fine", d) {
       lloydSubCentroids(
         ivfpqResiduals(vBaseOf(s, d), sharedBaseCoarse(s, d), sharedBaseAsg(s, d)),
-        16).localCheckpoint()
+        16)
     }
 
   /** Day-1 cluster-keyed code table `(vec_id, s, code, cluster)` off

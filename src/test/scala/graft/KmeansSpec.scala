@@ -18,8 +18,9 @@ class KmeansSpec extends AnyFunSuite {
   private val K = 16
   private val Iters = 2 // VectorQueries.kmeansIters
 
-  /** Quantized corpus collected THROUGH the engine's own quantize
-    * expression (quantization parity is judged elsewhere; this spec
+  /** Quantized corpus collected through the higher-order-function form
+    * of the quantization (`quantizeHof`'s lambda, not the engine's
+    * native expression — their parity is ExpressionsSpec's; this spec
     * isolates the Lloyd loop). */
   private lazy val corpus: Array[(Long, Array[Long])] = {
     import org.apache.spark.sql.functions._

@@ -106,8 +106,8 @@ class PlanShapeSpec extends AnyFunSuite {
   }
 
   test("vec_kmeans_assign: codebook broadcasts; corpus never sort-merge-joins") {
-    // the k-row centroid frame must enter every Lloyd/serve pass as a
-    // broadcast (BroadcastNestedLoopJoin under the crossJoin form) —
+    // the codebook must enter the serve pass as a broadcast
+    // (BroadcastNestedLoopJoin under the crossJoin form) —
     // a SortMergeJoin would mean the CORPUS shuffled on a join key,
     // the one plan shape that breaks the family's 100 TB story. The
     // judged query serves from the checkpointed km16_asg artifact, so
@@ -120,17 +120,42 @@ class PlanShapeSpec extends AnyFunSuite {
       "corpus must not shuffle-join or cartesian against the codebook: " + p.take(2000))
   }
 
-  test("vec_kmeans_train: the update aggregate map-side combines to k*d rows") {
-    // the judged query serves from a checkpointed artifact (its plan is
-    // a Scan ExistingRDD) — inspect the actual training lineage instead
-    val p = graft.queries.KmeansQueries.trainLineage(spark, sf)
-      .queryExecution.executedPlan.toString
-    assert("HashAggregate".r.findAllIn(p).size >= 2,
-      "the (cluster, pos) update must be a partial+final HashAggregate: " + p.take(2000))
-    assert(p.contains("BroadcastNestedLoopJoin"),
-      "every Lloyd round's centroids must broadcast: " + p.take(2000))
-    assert(!p.contains("SortMergeJoin") && !p.contains("CartesianProduct"),
-      "training must never shuffle-join the corpus: " + p.take(2000))
+  test("vec_kmeans_train: one job per Lloyd round, no training stage writes shuffle") {
+    // training is a driver-held fold (the judged query serves the
+    // memoized artifact), so its shape is measured, not read off a
+    // plan: around one unmemoized training run, the seed pick is one
+    // job and each Lloyd round exactly one more (beyond the jobs the
+    // parquet read itself starts), and no stage shuffles
+    import java.util.concurrent.atomic.AtomicLong
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted}
+    val sc = spark.sparkContext
+    val jobs = new AtomicLong
+    val shuffleBytes = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        Option(e.stageInfo.taskMetrics).foreach(m =>
+          shuffleBytes.addAndGet(m.shuffleWriteMetrics.bytesWritten))
+    }
+    def measured[T](f: => T): (T, Long) = {
+      org.apache.spark.graftbus.ListenerBusDrain.drain(sc)
+      jobs.set(0)
+      val out = f
+      org.apache.spark.graftbus.ListenerBusDrain.drain(sc)
+      (out, jobs.get)
+    }
+    sc.addSparkListener(listener)
+    val ((cents, trainJobs), readJobs) = try {
+      val (_, r) = measured(Tables.embeddings(spark, sf))
+      (measured(graft.queries.KmeansQueries.trainLineage(spark, sf)), r)
+    } finally sc.removeSparkListener(listener)
+    assert(trainJobs - readJobs === graft.queries.VectorQueries.kmeansIters + 1,
+      s"training must be the seed pick plus one job per Lloyd round ($trainJobs jobs, $readJobs for the read)")
+    assert(shuffleBytes.get === 0L, "a training stage wrote shuffle bytes")
+    // the trained codebook is a driver-held local relation: serving it
+    // starts no training job
+    assert(cents.queryExecution.executedPlan.toString.contains("LocalTableScan"),
+      cents.queryExecution.executedPlan.toString)
   }
 
   test("join_bucketed: co-located SMJ with no Exchange on the join key") {
