@@ -111,8 +111,7 @@ object CurationQueries {
       .filter(col("quality") > 0.3)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") === 1).drop("rn")
-    val idx = b.sparkSession.read.schema("fp STRING")
-      .parquet(s"$root/fpindex/b*")
+    val idx = graft.streaming.OnlineFold.readLogs(b.sparkSession, s"$root/fpindex/b*", "fp STRING")
       .withColumn("src", input_file_name())
       .filter(!col("src").contains(s"/b$id/")).drop("src")
     val fresh = firstInBatch.join(idx, Seq("fp"), "left_anti")
@@ -918,18 +917,15 @@ object CurationQueries {
       k AS (SELECT * FROM scored WHERE quality > 0.3),
       r AS (SELECT doc_id, fp, quality, row_number() OVER (PARTITION BY fp ORDER BY doc_id) AS rn FROM k)
       SELECT doc_id, fp, quality FROM r WHERE rn = 1 ORDER BY doc_id""")) { (s, d) =>
-      import graft.functions.TextFunctions.{fingerprint, qualityScore}
-      import graft.streaming.EventStreams
+      import graft.functions.TextFunctions.fingerprint
+      import graft.streaming.OnlineFold
       import org.apache.hadoop.fs.{FileUtil, Path}
-      import org.apache.spark.sql.streaming.Trigger
-      val root = graft.Staging.dir("scurate", d)
+      val root = OnlineFold.freshRoot(s, "scurate", d)
       val conf = s.sparkContext.hadoopConfiguration
       val fs = new Path(root).getFileSystem(conf)
-      fs.delete(new Path(root), true)
       val docs = Tables.documents(s, d)
       // READ-ONLY arrival files (three mtime-ordered micro-batches with
-      // planted replays), staged once per JVM (round-19; the fresh
-      // checkpoint replays all three identically)
+      // planted replays), staged once per JVM
       val inTmpl = graft.Staging.onceDir(s, "scurate_in", d) { p =>
         // wipe stale content from a previous JVM before re-copying
         fs.delete(new Path(p), true)
@@ -949,25 +945,12 @@ object CurationQueries {
           fs.setTimes(dst, t0 + i * 60000L, -1)
         }
       }
-      // standing index starts empty but PRESENT (schema'd read of b*
-      // must always match at least one footer-bearing dir)
+      // standing index starts empty but PRESENT (the index read must
+      // always match at least one dir)
       docs.limit(0).select(fingerprint(col("text")).as("fp"))
         .write.mode("overwrite").parquet(s"$root/fpindex/binit")
-      val inSchema = graft.Staging.schemaOf(s, s"$inTmpl/in")
-      EventStreams.withStreamConf(s) {
-        EventStreams.awaitOrKill(
-          s.readStream.schema(inSchema).option("maxFilesPerTrigger", 1)
-            .parquet(s"$inTmpl/in")
-            .writeStream.foreachBatch { (b: DataFrame, id: Long) =>
-              CurationQueries.curateBatch(root, b, id)
-            }
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start(),
-          "stream_curate_append")
-      }
-      s.read.schema("doc_id LONG, fp STRING, quality DOUBLE")
-        .parquet(s"$root/curated/b*")
+      OnlineFold.drain(s, root, s"$inTmpl/in")(CurationQueries.curateBatch(root, _, _))
+      OnlineFold.readLogs(s, s"$root/curated/b*", "doc_id LONG, fp STRING, quality DOUBLE")
         .orderBy(col("doc_id"))
     }
   )

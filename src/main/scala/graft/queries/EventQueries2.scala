@@ -564,29 +564,19 @@ object EventQueries2 {
              lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS valid_to,
              lead(ts) OVER (PARTITION BY user_id ORDER BY ts, event_id) IS NULL AS is_current
       FROM e ORDER BY user_id, valid_from, event_id""")) { (s, d) =>
-      import org.apache.hadoop.fs.Path
-      import org.apache.spark.sql.streaming.Trigger
-      import graft.streaming.EventStreams
-      val root = graft.Staging.dir("scd2s", d)
-      val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
+      import graft.streaming.OnlineFold
+      val root = OnlineFold.freshRoot(s, "scd2s", d)
       val ev = Tables.events(s, d)
         .select(col("user_id"), col("event_id"),
           col("event_type").as("state"), col("ts").as("valid_from"))
       // strict time split: no per-user (ts, event_id) tie can straddle
-      // the boundary, so batch order fully determines the chain —
-      // READ-ONLY input files staged once per JVM (round-19; the fresh
-      // checkpoint replays both micro-batches identically)
-      val inTmpl = graft.Staging.onceDir(s, "scd2s_in", d) { p =>
+      // the boundary, so batch order fully determines the chain
+      val inTmpl = OnlineFold.stage(s, "scd2s_in", d) {
         val mm = ev.agg(min(col("valid_from")), max(col("valid_from"))).head
         val mid = new java.sql.Timestamp(
           (mm.getTimestamp(0).getTime + mm.getTimestamp(1).getTime) / 2)
-        ev.filter(col("valid_from") < lit(mid))
-          .coalesce(1).write.mode("overwrite").parquet(p)
-        ev.filter(col("valid_from") >= lit(mid))
-          .coalesce(1).write.mode("append").parquet(p)
+        Seq(ev.filter(col("valid_from") < lit(mid)), ev.filter(col("valid_from") >= lit(mid)))
       }
-      val inSchema = graft.Staging.schemaOf(s, inTmpl)
       val dim = s"$root/dim"
       val dimSchema = "bkt LONG, user_id LONG, event_id LONG, " +
         "state STRING, valid_from TIMESTAMP, valid_to TIMESTAMP"
@@ -594,41 +584,31 @@ object EventQueries2 {
       ev.limit(0).withColumn("bkt", pmod(col("user_id"), lit(8L)))
         .withColumn("valid_to", lit(null).cast("timestamp"))
         .write.partitionBy("bkt").parquet(dim)
-      EventStreams.withStreamConf(s) {
-        EventStreams.awaitOrKill(
-          s.readStream.schema(inSchema).option("maxFilesPerTrigger", 1)
-            .parquet(inTmpl)
-            .writeStream.foreachBatch { (b: DataFrame, _: Long) =>
-              val batch = b.localCheckpoint(true)
-              val standing = s.read.schema(dimSchema).parquet(dim)
-              val touched = batch.select(col("user_id")).distinct()
-              val inTouchedBkt = standing
-                .join(broadcast(touched.select(pmod(col("user_id"), lit(8L)).as("bkt")).distinct()), Seq("bkt"))
-              // full chain rebuild for touched users only: standing
-              // history + batch, deduped by event_id (replay-safe)
-              val hist = inTouchedBkt.join(broadcast(touched), Seq("user_id"), "left_semi")
-                .select(col("user_id"), col("event_id"), col("state"), col("valid_from"))
-              val all = hist.union(
-                  batch.select(col("user_id"), col("event_id"), col("state"), col("valid_from")))
-                .dropDuplicates("user_id", "event_id")
-              val w = Window.partitionBy(col("user_id"))
-                .orderBy(col("valid_from"), col("event_id"))
-              val chain = all.withColumn("valid_to", lead(col("valid_from"), 1).over(w))
-                .withColumn("bkt", pmod(col("user_id"), lit(8L)))
-              // untouched users sharing a touched bucket must ride along
-              val keep = inTouchedBkt.join(broadcast(touched), Seq("user_id"), "left_anti")
-              val out = keep.select(chain.columns.map(col): _*)
-                .union(chain.select(chain.columns.map(col): _*))
-                .localCheckpoint(true)
-              out.write.mode("overwrite")
-                .option("partitionOverwriteMode", "dynamic")
-                .partitionBy("bkt").parquet(dim)
-              ()
-            }
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start(),
-          "stream_scd2_apply")
+      OnlineFold.drain(s, root, inTmpl) { (b, _) =>
+        val batch = b.localCheckpoint(true)
+        val standing = s.read.schema(dimSchema).parquet(dim)
+        val touched = batch.select(col("user_id")).distinct()
+        val inTouchedBkt = standing
+          .join(broadcast(touched.select(pmod(col("user_id"), lit(8L)).as("bkt")).distinct()), Seq("bkt"))
+        // full chain rebuild for touched users only: standing
+        // history + batch, deduped by event_id (replay-safe)
+        val hist = inTouchedBkt.join(broadcast(touched), Seq("user_id"), "left_semi")
+          .select(col("user_id"), col("event_id"), col("state"), col("valid_from"))
+        val all = hist.union(
+            batch.select(col("user_id"), col("event_id"), col("state"), col("valid_from")))
+          .dropDuplicates("user_id", "event_id")
+        val w = Window.partitionBy(col("user_id"))
+          .orderBy(col("valid_from"), col("event_id"))
+        val chain = all.withColumn("valid_to", lead(col("valid_from"), 1).over(w))
+          .withColumn("bkt", pmod(col("user_id"), lit(8L)))
+        // untouched users sharing a touched bucket must ride along
+        val keep = inTouchedBkt.join(broadcast(touched), Seq("user_id"), "left_anti")
+        val out = keep.select(chain.columns.map(col): _*)
+          .union(chain.select(chain.columns.map(col): _*))
+          .localCheckpoint(true)
+        out.write.mode("overwrite")
+          .option("partitionOverwriteMode", "dynamic")
+          .partitionBy("bkt").parquet(dim)
       }
       s.read.schema(dimSchema).parquet(dim)
         .select(col("user_id"), col("event_id"), col("state"), col("valid_from"),

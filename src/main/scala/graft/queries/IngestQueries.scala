@@ -460,32 +460,18 @@ object IngestQueries {
       SELECT CAST(b AS BIGINT) AS batch_id,
              (SELECT count(*) FROM events) AS n
       FROM (SELECT unnest([0, 1, 2]) AS b) ORDER BY batch_id""")) { (s, d) =>
-      import graft.streaming.EventStreams
-      import org.apache.spark.sql.streaming.Trigger
+      import graft.streaming.{EventStreams, OnlineFold}
       val base = EventStreams.stageEventsInput(s, d, "pc", copies = 3)
-      // mutable per-sample root (sink + checkpoint) — the staged input
-      // is a shared read-only template since round 19, so the wipe
-      // that used to ride stageEventsInput happens here
-      val root = graft.Staging.dir("pc", d)
-      val fsRoot = new org.apache.hadoop.fs.Path(root)
-        .getFileSystem(s.sparkContext.hadoopConfiguration)
-      fsRoot.delete(new org.apache.hadoop.fs.Path(root), true)
-      val out = s"$root/batches"
-      EventStreams.withStreamConf(s) {
-        EventStreams.awaitOrKill(
-          EventStreams.readEvents(s, s"$base/in")
-            .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              b.groupBy().agg(count(lit(1)).as("n"))
-                .select(lit(id).as("batch_id"), col("n"))
-                .write.mode("overwrite").parquet(s"$out/b$id")
-              ()
-            }
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start(),
-          "a20_pacing")
+      // mutable per-sample root (sink + checkpoint) beside the shared
+      // read-only staged copies
+      val root = OnlineFold.freshRoot(s, "pc", d)
+      OnlineFold.drain(s, root, s"$base/in") { (b, id) =>
+        b.groupBy().agg(count(lit(1)).as("n"))
+          .select(lit(id).as("batch_id"), col("n"))
+          .write.mode("overwrite").parquet(s"$root/batches/b$id")
       }
-      s.read.parquet(s"$out/b*").select(col("batch_id"), col("n")).orderBy(col("batch_id"))
+      OnlineFold.readLogs(s, s"$root/batches/b*", "batch_id LONG, n LONG")
+        .orderBy(col("batch_id"))
     },
 
     // A18 — recursive {name,type,mode,fields} schema translation under

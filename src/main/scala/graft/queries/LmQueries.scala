@@ -87,6 +87,16 @@ object LmQueries {
     ()
   }
 
+  /** `stream_lm_score`'s per-trigger serve body: the batch's docs
+    * scored against the frozen persisted model, written to a
+    * batch-id-keyed sink (overwrite = replay idempotent). */
+  private[graft] def lmScoreServeBatch(d: String, b: DataFrame, id: Long): Unit = {
+    val model = b.sparkSession.read.parquet(sharedLmModel(b.sparkSession, d))
+    val tok = b.select(col("doc_id"), tokens(col("text")).as("w"))
+    score(tok, model)
+      .write.mode("overwrite").parquet(s"${graft.Staging.dir("lmserve", d)}/out/b$id")
+  }
+
   private def lmCounts(t: DataFrame): (DataFrame, DataFrame) = (
     t.select(explode(col("w")).as("w1")).groupBy("w1").agg(count(lit(1)).as("c1")),
     bigrams(t).groupBy("w1", "w2").agg(count(lit(1)).as("c2")))
@@ -334,43 +344,24 @@ object LmQueries {
       * append to a log and compact at serve, same algebra. */
     QueryDef("stream_lm_forget", Some(serveOracleTrainedOn(
       s"doc_id % 5 <> 0 AND doc_id % $ForgetMod <> $ForgetRes"))) { (s, d) =>
-      import org.apache.hadoop.fs.Path
-      import org.apache.spark.sql.streaming.Trigger
-      import graft.streaming.EventStreams
+      import graft.streaming.OnlineFold
       val statsRoot = sharedLmStats(s, d, day1Only = false)
-      val root = graft.Staging.dir("lmforget", d)
-      val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
+      val root = OnlineFold.freshRoot(s, "lmforget", d)
       // v0: the standing count artifact is this roll's base version —
-      // a straight FILE copy of the day-1 parquet (round-19: identical
-      // bytes; the old read-then-write re-ran two Spark jobs/sample)
+      // a straight FILE copy of the day-1 parquet (identical bytes, no
+      // Spark job)
       graft.Staging.copyTree(s, s"$statsRoot/uni", s"$root/v0/uni")
       graft.Staging.copyTree(s, s"$statsRoot/bi", s"$root/v0/bi")
       // the deletion-request stream: the tombstone docs, two files →
-      // two micro-batches under maxFilesPerTrigger=1 — READ-ONLY input
-      // staged once per JVM (round-19)
-      val inTmpl = graft.Staging.onceDir(s, "lmforget_in", d) { p =>
+      // two micro-batches
+      val inTmpl = OnlineFold.stage(s, "lmforget_in", d) {
         val tomb = Tables.documents(s, d).select(col("doc_id"), col("text"))
           .filter(pmod(col("doc_id"), lit(5L)) =!= 0 &&
             pmod(col("doc_id"), lit(ForgetMod)) === ForgetRes)
-        tomb.filter(pmod(col("doc_id"), lit(2L * ForgetMod)) === ForgetRes)
-          .coalesce(1).write.mode("overwrite").parquet(p)
-        tomb.filter(pmod(col("doc_id"), lit(2L * ForgetMod)) === (ForgetMod + ForgetRes))
-          .coalesce(1).write.mode("append").parquet(p)
+        Seq(tomb.filter(pmod(col("doc_id"), lit(2L * ForgetMod)) === ForgetRes),
+            tomb.filter(pmod(col("doc_id"), lit(2L * ForgetMod)) === (ForgetMod + ForgetRes)))
       }
-      val schema = graft.Staging.schemaOf(s, inTmpl)
-      EventStreams.withStreamConf(s) {
-        EventStreams.awaitOrKill(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(inTmpl)
-            .writeStream.foreachBatch { (b: DataFrame, id: Long) =>
-              lmForgetRollBatch(d, b, id)
-            }
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start(),
-          "stream_lm_forget")
-      }
+      OnlineFold.drain(s, root, inTmpl)(lmForgetRollBatch(d, _, _))
       val model = modelFromCounts(
         s.read.parquet(s"$root/v2/uni"), s.read.parquet(s"$root/v2/bi"))
       val batch = SharedText.tokenized(s, d)
@@ -399,44 +390,24 @@ object LmQueries {
       * mechanically different rolls, one exact answer). */
     QueryDef("stream_lm_compact", Some(serveOracleTrainedOn(
       s"doc_id % 5 <> 0 AND doc_id % $ForgetMod <> $ForgetRes"))) { (s, d) =>
-      import org.apache.hadoop.fs.Path
-      import org.apache.spark.sql.streaming.Trigger
-      import graft.streaming.EventStreams
+      import graft.streaming.OnlineFold
       val statsRoot = sharedLmStats(s, d, day1Only = false)
-      val root = graft.Staging.dir("lmslog", d)
-      val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
-      // READ-ONLY tombstone delta files staged once per JVM (round-19;
-      // the fresh checkpoint replays all four micro-batches)
-      val inTmpl = graft.Staging.onceDir(s, "lmslog_in", d) { p =>
+      val root = OnlineFold.freshRoot(s, "lmslog", d)
+      // the four tombstone delta files
+      val inTmpl = OnlineFold.stage(s, "lmslog_in", d) {
         val tomb = Tables.documents(s, d).select(col("doc_id"), col("text"))
           .filter(pmod(col("doc_id"), lit(5L)) =!= 0 &&
             pmod(col("doc_id"), lit(ForgetMod)) === ForgetRes)
-        Seq(1L, 11L, 21L, 31L).zipWithIndex.foreach { case (res, i) =>
-          tomb.filter(pmod(col("doc_id"), lit(4L * ForgetMod)) === res)
-            .coalesce(1).write.mode(if (i == 0) "overwrite" else "append")
-            .parquet(p)
-        }
+        Seq(1L, 11L, 21L, 31L).map(res =>
+          tomb.filter(pmod(col("doc_id"), lit(4L * ForgetMod)) === res))
       }
-      val schema = graft.Staging.schemaOf(s, inTmpl)
-      EventStreams.withStreamConf(s) {
-        EventStreams.awaitOrKill(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(inTmpl)
-            .writeStream.foreachBatch { (b: DataFrame, id: Long) =>
-              lmCompactLogBatch(d, b, id)
-            }
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start(),
-          "stream_lm_compact")
-      }
+      OnlineFold.drain(s, root, inTmpl)(lmCompactLogBatch(d, _, _))
       // the one compaction: base ∪ every logged delta, re-aggregated
       modelFromCounts(
-        s.read.parquet(s"$statsRoot/uni")
-          .unionByName(s.read.parquet(s"$root/log/b*/uni")),
-        s.read.parquet(s"$statsRoot/bi")
-          .unionByName(s.read.parquet(s"$root/log/b*/bi")))
+        s.read.parquet(s"$statsRoot/uni").unionByName(
+          OnlineFold.readLogs(s, s"$root/log/b*/uni", "w1 STRING, c1 LONG")),
+        s.read.parquet(s"$statsRoot/bi").unionByName(
+          OnlineFold.readLogs(s, s"$root/log/b*/bi", "w1 STRING, w2 STRING, c2 LONG")))
         .write.mode("overwrite").parquet(s"$root/model")
       val batch = SharedText.tokenized(s, d)
         .filter(pmod(col("doc_id"), lit(5L)) === 0)
@@ -455,43 +426,18 @@ object LmQueries {
       * At 100 TB: perplexity-filtering at ingest, O(batch) per
       * trigger, model cost zero after the one-time train. */
     QueryDef("stream_lm_score", Some(serveOracle)) { (s, d) =>
-      import org.apache.hadoop.fs.Path
-      import org.apache.spark.sql.streaming.Trigger
-      import graft.streaming.EventStreams
-      val modelPath = sharedLmModel(s, d)
-      val root = graft.Staging.dir("lmserve", d)
-      val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
-      // READ-ONLY input files staged once per JVM (round-19; the fresh
-      // checkpoint replays both micro-batches identically)
-      val inTmpl = graft.Staging.onceDir(s, "lmserve_in", d) { p =>
+      import graft.streaming.OnlineFold
+      // the frozen model exists before the stream runs
+      sharedLmModel(s, d)
+      val root = OnlineFold.freshRoot(s, "lmserve", d)
+      val inTmpl = OnlineFold.stage(s, "lmserve_in", d) {
         val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        docs.filter(pmod(col("doc_id"), lit(10L)) === 0)
-          .coalesce(1).write.mode("overwrite").parquet(p)
-        docs.filter(pmod(col("doc_id"), lit(10L)) === 5)
-          .coalesce(1).write.mode("append").parquet(p)
+        Seq(docs.filter(pmod(col("doc_id"), lit(10L)) === 0),
+            docs.filter(pmod(col("doc_id"), lit(10L)) === 5))
       }
-      val schema = graft.Staging.schemaOf(s, inTmpl)
-      val sink = s"$root/out"
-      EventStreams.withStreamConf(s) {
-        EventStreams.awaitOrKill(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(inTmpl)
-            .writeStream.foreachBatch { (b: DataFrame, id: Long) =>
-              val model = b.sparkSession.read.parquet(modelPath)
-              val tok = b.select(col("doc_id"), tokens(col("text")).as("w"))
-              score(tok, model)
-                .write.mode("overwrite").parquet(s"$sink/b$id")
-              ()
-            }
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start(),
-          "stream_lm_score")
-      }
-      // declared schema: a sink dir of an empty batch has no footers
-      s.read.schema("doc_id LONG, n_bigrams LONG, n_scored LONG, lm_ppm LONG")
-        .parquet(s"$sink/b*")
+      OnlineFold.drain(s, root, inTmpl)(lmScoreServeBatch(d, _, _))
+      OnlineFold.readLogs(s, s"$root/out/b*",
+          "doc_id LONG, n_bigrams LONG, n_scored LONG, lm_ppm LONG")
         .orderBy(col("doc_id"))
     }
   )

@@ -330,21 +330,15 @@ object PhashQueries {
       * and PhashSpec additionally gates the two rolled ARTIFACTS
       * frame-equal. */
     QueryDef("stream_phash_index_roll", Some(phashRollOracle)) { (s, d) =>
-      import org.apache.hadoop.fs.Path
-      import org.apache.spark.sql.streaming.Trigger
-      import graft.streaming.EventStreams
+      import graft.streaming.OnlineFold
       val spark = s
       import spark.implicits._
       // standing artifact exists BEFORE the stream runs (a production
       // night starts from a standing index, not a lazy build)
       sharedPhashIndex(s, d)
-      val root = graft.Staging.dir("phsroll", d)
-      val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
-      // READ-ONLY input files staged once per JVM (round-19; the fresh
-      // checkpoint replays all four micro-batches identically — the
-      // in-stream PNG decodes still run per sample, per trigger)
-      val inTmpl = graft.Staging.onceDir(s, "phsroll_in", d) { p =>
+      val root = OnlineFold.freshRoot(s, "phsroll", d)
+      // the in-stream PNG decodes still run per sample, per trigger
+      val inTmpl = OnlineFold.stage(s, "phsroll_in", d) {
         val docs = Tables.documents(s, d).select(col("doc_id").cast("long").as("id"))
         val tombIn = docs.filter(pmod(col("id"), lit(40L)) === 10)
           .select(lit("tomb").as("kind"), col("id").as("img_id"),
@@ -358,29 +352,11 @@ object PhashQueries {
             tombIn.filter(pmod(col("img_id"), lit(80L)) === 50),
             arrIn.filter(pmod(col("img_id") - 1000000000L, lit(40L)) === 0),
             arrIn.filter(pmod(col("img_id") - 1000000000L, lit(40L)) === 20))
-          .zipWithIndex.foreach { case (b, i) =>
-            b.coalesce(1).write.mode(if (i == 0) "overwrite" else "append")
-              .parquet(p)
-          }
       }
-      val schema = graft.Staging.schemaOf(s, inTmpl)
-      EventStreams.withStreamConf(s) {
-        EventStreams.awaitOrKill(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(inTmpl)
-            .writeStream.foreachBatch { (b: DataFrame, id: Long) =>
-              phashRollLogBatch(d, b, id)
-            }
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start(),
-          "stream_phash_index_roll")
-      }
+      OnlineFold.drain(s, root, inTmpl)(phashRollLogBatch(d, _, _))
       // the one roll: fold every logged delta into the persisted index
-      // (declared schemas: an empty batch's log dir has no footers)
-      val tomb = s.read.schema("img_id LONG").parquet(s"$root/log/t*")
-      val arrivals = s.read.schema("img_id LONG, lo LONG, hi LONG")
-        .parquet(s"$root/log/a*")
+      val tomb = OnlineFold.readLogs(s, s"$root/log/t*", "img_id LONG")
+      val arrivals = OnlineFold.readLogs(s, s"$root/log/a*", "img_id LONG, lo LONG, hi LONG")
       phashRollFold(s, d, tomb, arrivals)
         .write.mode("overwrite").parquet(s"$root/rolled")
       serveRoster(

@@ -327,17 +327,15 @@ object Relational3 {
       FROM base WHERE dt >= '19980715' AND o_orderkey % 5 = 0
       ORDER BY o_orderkey""")) { (s, d) =>
       import graft.operators.IngestOps
+      import graft.streaming.OnlineFold
       import org.apache.hadoop.fs.Path
-      import org.apache.spark.sql.streaming.Trigger
-      val root = graft.Staging.dir("scdc", d)
+      val root = OnlineFold.freshRoot(s, "scdc", d)   // fresh checkpoint + sink per run
       val sink = s"$root/table"
-      val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)   // fresh checkpoint + sink per run
       stageJulyOrders(s, d, sink)
       // READ-ONLY change batches, a pure function of the July layout —
-      // staged once per JVM from the shared template (round-19; the
-      // fresh checkpoint replays both micro-batches identically)
+      // staged once per JVM from the shared template as named files
       val inTmpl = graft.Staging.onceDir(s, "scdc_in", d) { p =>
+        val fs = new Path(p).getFileSystem(s.sparkContext.hadoopConfiguration)
         // wipe stale content from a previous JVM first — the rename
         // below fails onto an existing destination
         fs.delete(new Path(p), true)
@@ -362,25 +360,12 @@ object Relational3 {
             .select((col("o_orderkey") + 30000000).as("o_orderkey"), col("o_custkey"),
               lit(1.0).as("o_totalprice"), col("dt"), lit("upsert").as("op"))))
       }
-      import graft.streaming.EventStreams
-      EventStreams.withStreamConf(s) {
-        EventStreams.awaitOrKill(
-          s.readStream
-            .schema("o_orderkey LONG, o_custkey LONG, o_totalprice DOUBLE, dt STRING, op STRING")
-            .option("maxFilesPerTrigger", 1)
-            .parquet(s"$inTmpl/in")
-            .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
-              // a replayed/empty micro-batch must not trip the
-              // empty-batch contract guard — skip it, the sink state
-              // already reflects the batch
-              if (!b.isEmpty)
-                IngestOps.mergePartitioned(s, sink, b, Seq("o_orderkey"), opCol = Some("op"))
-              ()
-            }
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start(),
-          "stream_cdc_apply")
+      OnlineFold.drain(s, root, s"$inTmpl/in") { (b, _) =>
+        // a replayed/empty micro-batch must not trip the
+        // empty-batch contract guard — skip it, the sink state
+        // already reflects the batch
+        if (!b.isEmpty)
+          IngestOps.mergePartitioned(s, sink, b, Seq("o_orderkey"), opCol = Some("op"))
       }
       IngestOps.readPartitioned(s, sink)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"), col("dt"))

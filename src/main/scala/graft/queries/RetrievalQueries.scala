@@ -331,45 +331,27 @@ object RetrievalQueries {
       SELECT CAST(query_id AS BIGINT) AS query_id, doc_id,
              CAST(score_ppm AS BIGINT) AS score_ppm, CAST(rnk AS BIGINT) AS rnk
       FROM r WHERE rnk <= 10 ORDER BY query_id, rnk""")) { (s, d) =>
-      import org.apache.hadoop.fs.Path
-      import org.apache.spark.sql.streaming.Trigger
-      import graft.streaming.EventStreams
+      import graft.streaming.OnlineFold
       val day1 = sharedBm25Index(s, d, "day1")
-      val root = graft.Staging.dir("bm25app", d)
-      val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
+      val root = OnlineFold.freshRoot(s, "bm25app", d)
       // v0: the day-1 statistics are this roll's base version — a
-      // straight FILE copy of the day-1 parquet (round-19: identical
-      // bytes; the old read-then-write re-ran two Spark jobs/sample)
+      // straight FILE copy of the day-1 parquet (identical bytes,
+      // no Spark job)
       graft.Staging.copyTree(s, s"$day1/df", s"$root/v0/df")
       graft.Staging.copyTree(s, s"$day1/stats", s"$root/v0/stats")
-      // the arrival stream: day-2 (odd doc_id) docs, two files → two
-      // micro-batches under maxFilesPerTrigger=1 — READ-ONLY input
-      // staged once per JVM (round-19)
-      val inTmpl = graft.Staging.onceDir(s, "bm25app_in", d) { p =>
+      // the arrival stream: day-2 (odd doc_id) docs, two micro-batches
+      val inTmpl = OnlineFold.stage(s, "bm25app_in", d) {
         val arrivals = Tables.documents(s, d)
           .filter(pmod(col("doc_id"), lit(2L)) === 1)
           .select(col("doc_id"), col("text"))
-        arrivals.filter(pmod(col("doc_id"), lit(4L)) === 1)
-          .coalesce(1).write.mode("overwrite").parquet(p)
-        arrivals.filter(pmod(col("doc_id"), lit(4L)) === 3)
-          .coalesce(1).write.mode("append").parquet(p)
+        Seq(arrivals.filter(pmod(col("doc_id"), lit(4L)) === 1),
+            arrivals.filter(pmod(col("doc_id"), lit(4L)) === 3))
       }
-      val schema = graft.Staging.schemaOf(s, inTmpl)
-      EventStreams.withStreamConf(s) {
-        EventStreams.awaitOrKill(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(inTmpl)
-            .writeStream.foreachBatch { (b: DataFrame, id: Long) =>
-              bm25AppendLogBatch(d, b, id)
-            }
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start(),
-          "stream_bm25_index_append")
-      }
-      val tfAll = s.read.parquet(s"$day1/tf").unionByName(s.read.parquet(s"$root/tf_b*"))
-      val dlAll = s.read.parquet(s"$day1/dl").unionByName(s.read.parquet(s"$root/dl_b*"))
+      OnlineFold.drain(s, root, inTmpl)(bm25AppendLogBatch(d, _, _))
+      val tfAll = s.read.parquet(s"$day1/tf").unionByName(
+        OnlineFold.readLogs(s, s"$root/tf_b*", "doc_id LONG, term STRING, tf LONG"))
+      val dlAll = s.read.parquet(s"$day1/dl").unionByName(
+        OnlineFold.readLogs(s, s"$root/dl_b*", "doc_id LONG, dl LONG"))
       serveFromComponents(s, tfAll, dlAll,
         s.read.parquet(s"$root/v2/df"), s.read.parquet(s"$root/v2/stats"))
         .orderBy(col("query_id"), col("rnk"))

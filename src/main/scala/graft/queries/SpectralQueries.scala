@@ -388,43 +388,21 @@ v0 AS (SELECT DISTINCT i AS j, CAST($Q AS BIGINT) AS v FROM cf),${(1 to Iters).m
     QueryDef("stream_pca_update", Some(chainSql + s"""
       SELECT CAST(mm.i AS BIGINT) AS dim, mm.m AS mean_q, v$Iters.v AS v_ppm
       FROM mm JOIN v$Iters ON v$Iters.j = mm.i ORDER BY dim""")) { (s, d) =>
-      import org.apache.hadoop.fs.Path
-      import org.apache.spark.sql.streaming.Trigger
-      import graft.streaming.EventStreams
+      import graft.streaming.OnlineFold
       val day1Root = pcaMomentsDir(s, d, "day1")
-      val root = Staging.dir("pcasupd", d)
-      val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
-      // READ-ONLY day-2 arrival files, staged once per JVM (round-19;
-      // the fresh checkpoint replays both micro-batches identically)
-      val inTmpl = Staging.onceDir(s, "pcasupd_in", d) { p =>
+      val root = OnlineFold.freshRoot(s, "pcasupd", d)
+      val inTmpl = OnlineFold.stage(s, "pcasupd_in", d) {
         val day2 = Tables.embeddings(s, d)
           .filter(pmod(col("vec_id"), lit(2L)) === 1)
         Seq(day2.filter(pmod(col("vec_id"), lit(4L)) === 1),
             day2.filter(pmod(col("vec_id"), lit(4L)) === 3))
-          .zipWithIndex.foreach { case (b, i) =>
-            b.coalesce(1).write.mode(if (i == 0) "overwrite" else "append")
-              .parquet(p)
-          }
       }
-      val schema = graft.Staging.schemaOf(s, inTmpl)
-      EventStreams.withStreamConf(s) {
-        EventStreams.awaitOrKill(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(inTmpl)
-            .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              pcaUpdateLogBatch(d, b, id)
-            }
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start(),
-          "stream_pca_update")
-      }
+      OnlineFold.drain(s, root, inTmpl)(pcaUpdateLogBatch(d, _, _))
       // the one fold: moment addition + the shared exact finish
       val s1A = s.read.parquet(s"$day1Root/s1")
-      val s1B = s.read.schema("i INT, s1 LONG, ma LONG").parquet(s"$root/log/s1_b*")
+      val s1B = OnlineFold.readLogs(s, s"$root/log/s1_b*", "i INT, s1 LONG, ma LONG")
       val n = s.read.parquet(s"$day1Root/cnt").head.getLong(0) +
-        s.read.schema("n LONG").parquet(s"$root/log/cnt_b*")
+        OnlineFold.readLogs(s, s"$root/log/cnt_b*", "n LONG")
           .agg(sum(col("n"))).head.getLong(0)
       val ma = math.max(maxAbsOf(s1A), maxAbsOf(s1B))
       require(n <= Long.MaxValue / ma / ma,
@@ -433,7 +411,7 @@ v0 AS (SELECT DISTINCT i AS j, CAST($Q AS BIGINT) AS v FROM cf),${(1 to Iters).m
         .unionByName(s1B.select(col("i"), col("s1")))
         .groupBy("i").agg(sum("s1").as("s1"))
       val s2 = s.read.parquet(s"$day1Root/s2")
-        .unionByName(s.read.schema("i INT, j INT, s2 LONG").parquet(s"$root/log/s2_b*"))
+        .unionByName(OnlineFold.readLogs(s, s"$root/log/s2_b*", "i INT, j INT, s2 LONG"))
         .groupBy("i", "j").agg(sum("s2").as("s2"))
       artifactFromMoments(s1, s2, n, ma).orderBy(col("dim"))
     },

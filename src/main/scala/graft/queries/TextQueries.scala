@@ -1021,56 +1021,31 @@ object TextQueries {
       * (dropped batch, double-applied batch, batch-local capping
       * sneaking in) breaks rows or hash. */
     QueryDef("stream_dedup_index", Some(minhashIncrementalOracle)) { (s, d) =>
-      import org.apache.hadoop.fs.Path
-      import org.apache.spark.sql.streaming.Trigger
-      import graft.streaming.EventStreams
-      // private root for the mutable parts (inputs/checkpoint/sink —
-      // wiped per run); the READ-ONLY persisted index is the shared
+      import graft.streaming.OnlineFold
+      // private root for the mutable parts (checkpoint/sink — wiped
+      // per run); the READ-ONLY persisted index is the shared
       // once-per-JVM artifact, same bytes the batch incremental reads
-      val root = graft.Staging.dir("sdix", d)
-      val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
+      val root = OnlineFold.freshRoot(s, "sdix", d)
       val docs = Tables.documents(s, d)
       // the persisted index is built before the stream runs (the log
       // body re-resolves it per trigger — an onceDir memo, free)
       sharedMinhashIndex(s, d)
-      // stage the new docs as TWO files → two micro-batches under
-      // maxFilesPerTrigger=1 — READ-ONLY input staged once per JVM
-      // (round-19; the fresh checkpoint replays both batches)
-      val inTmpl = graft.Staging.onceDir(s, "sdix_in", d) { p =>
+      // the new docs as TWO files → two micro-batches
+      val inTmpl = OnlineFold.stage(s, "sdix_in", d) {
         val nd = docs.filter(pmod(col("doc_id"), lit(5L)) === 0)
-        nd.filter(pmod(col("doc_id"), lit(10L)) === 0)
-          .coalesce(1).write.mode("overwrite").parquet(p)
-        nd.filter(pmod(col("doc_id"), lit(10L)) === 5)
-          .coalesce(1).write.mode("append").parquet(p)
+        Seq(nd.filter(pmod(col("doc_id"), lit(10L)) === 0),
+            nd.filter(pmod(col("doc_id"), lit(10L)) === 5))
       }
       val newDocs = docs.filter(pmod(col("doc_id"), lit(5L)) === 0)
-      val schema = graft.Staging.schemaOf(s, inTmpl)
-      val sink = s"$root/hits"
-      EventStreams.withStreamConf(s) {
-        // named + metrics-attached so StreamingSpec can assert the
-        // fold family's residency story: stateless by construction
-        graft.streaming.StreamMetrics.attach(s)
-        EventStreams.awaitOrKill(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(inTmpl)
-            .writeStream.foreachBatch { (b: DataFrame, id: Long) =>
-              dedupIndexLogBatch(s, d, b, id)
-            }
-            .queryName(s"graft_q_sdix_${graft.Staging.suffix(d)}")
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start(),
-          "stream_dedup_index")
-      }
+      // the stream is named after its root, so StreamingSpec can
+      // assert the fold family's residency story: stateless by
+      // construction
+      OnlineFold.drain(s, root, inTmpl)(dedupIndexLogBatch(s, d, _, _))
       // per-doc rollups from different micro-batches are disjoint by
       // doc_id (each doc arrives exactly once), so the union IS the
-      // full aggregate. Schema is DECLARED, not inferred: a batch with
-      // zero index hits writes no part files, and inference over
-      // footer-less b* dirs would crash a query whose correct answer
-      // is all-is_dup=false (round-8 ADVICE)
-      s.read.schema("doc_id LONG, n_index_dups LONG, first_dup LONG")
-        .parquet(s"$sink/b*")
+      // full aggregate. A batch with zero index hits writes no part
+      // files, and the correct answer is then all-is_dup=false
+      OnlineFold.readLogs(s, s"$root/hits/b*", "doc_id LONG, n_index_dups LONG, first_dup LONG")
         .join(newDocs.select(col("doc_id")), Seq("doc_id"), "right")
         .select(col("doc_id"),
           coalesce(col("n_index_dups"), lit(0L)).as("n_index_dups"),
@@ -1255,22 +1230,16 @@ object TextQueries {
       * fold — the ×100 row expects the batch roll's 0.66 class plus
       * the arrival signature pass. */
     QueryDef("stream_minhash_index_roll", Some(minhashRollOracle)) { (s, d) =>
-      import org.apache.hadoop.fs.Path
-      import org.apache.spark.sql.streaming.Trigger
-      import graft.streaming.EventStreams
+      import graft.streaming.OnlineFold
       // build the standing artifact BEFORE the stream runs — the roll
       // reads it only in the post-drain fold, but a production night
       // starts from a standing index, not a lazy build
       sharedMinhashIndex(s, d)
-      val root = graft.Staging.dir("mhsroll", d)
-      val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
+      val root = OnlineFold.freshRoot(s, "mhsroll", d)
       // the night's traffic: tombstones carry ids only, arrivals carry
       // their text (the ingest reality — a deletion request has no
-      // payload; a new doc must be signed from its content) —
-      // READ-ONLY input files staged once per JVM (round-19; the
-      // fresh checkpoint replays all four micro-batches identically)
-      val inTmpl = graft.Staging.onceDir(s, "mhsroll_in", d) { p =>
+      // payload; a new doc must be signed from its content)
+      val inTmpl = OnlineFold.stage(s, "mhsroll_in", d) {
         val docs = Tables.documents(s, d)
         val tombIn = docs
           .filter(pmod(col("doc_id"), lit(20L)) === 3)
@@ -1282,30 +1251,12 @@ object TextQueries {
             tombIn.filter(pmod(col("doc_id"), lit(40L)) === 23),
             arrIn.filter(pmod(col("doc_id"), lit(20L)) === 0),
             arrIn.filter(pmod(col("doc_id"), lit(20L)) === 10))
-          .zipWithIndex.foreach { case (b, i) =>
-            b.coalesce(1).write.mode(if (i == 0) "overwrite" else "append")
-              .parquet(p)
-          }
       }
-      val schema = graft.Staging.schemaOf(s, inTmpl)
-      EventStreams.withStreamConf(s) {
-        EventStreams.awaitOrKill(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(inTmpl)
-            .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              minhashRollLogBatch(d, b, id)
-            }
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start(),
-          "stream_minhash_index_roll")
-      }
+      OnlineFold.drain(s, root, inTmpl)(minhashRollLogBatch(d, _, _))
       // the one roll: fold every logged delta into the persisted index
-      // (declared schemas: an empty batch's log dir has no footers)
-      val tomb = s.read.schema("doc_id LONG").parquet(s"$root/log/t*")
-      val arrivals = s.read
-        .schema("doc_id LONG, sig ARRAY<LONG>, band INT, bk1 LONG, bk2 LONG")
-        .parquet(s"$root/log/a*")
+      val tomb = OnlineFold.readLogs(s, s"$root/log/t*", "doc_id LONG")
+      val arrivals = OnlineFold.readLogs(s, s"$root/log/a*",
+        "doc_id LONG, sig ARRAY<LONG>, band INT, bk1 LONG, bk2 LONG")
       minhashRollFold(s, d, tomb, arrivals)
         .write.mode("overwrite").parquet(s"$root/rolled")
       val probes = bandsOf(fixtureSigs(s, d))
@@ -1556,16 +1507,10 @@ object TextQueries {
       * — stream == batch exactly, the roll algebra being a pure
       * function of the delta sets. */
     QueryDef("stream_simhash_index_roll", Some(simhashRollOracle)) { (s, d) =>
-      import org.apache.hadoop.fs.Path
-      import org.apache.spark.sql.streaming.Trigger
-      import graft.streaming.EventStreams
+      import graft.streaming.OnlineFold
       sharedSimhashIndex(s, d, "shared")
-      val root = graft.Staging.dir("shsroll", d)
-      val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
-      // READ-ONLY input files staged once per JVM (round-19; the fresh
-      // checkpoint replays all four micro-batches identically)
-      val inTmpl = graft.Staging.onceDir(s, "shsroll_in", d) { p =>
+      val root = OnlineFold.freshRoot(s, "shsroll", d)
+      val inTmpl = OnlineFold.stage(s, "shsroll_in", d) {
         val docs = Tables.documents(s, d)
         val tombIn = docs
           .filter(pmod(col("doc_id"), lit(20L)) === 6)
@@ -1577,28 +1522,11 @@ object TextQueries {
             tombIn.filter(pmod(col("doc_id"), lit(40L)) === 26),
             arrIn.filter(pmod(col("doc_id"), lit(20L)) === 0),
             arrIn.filter(pmod(col("doc_id"), lit(20L)) === 10))
-          .zipWithIndex.foreach { case (b, i) =>
-            b.coalesce(1).write.mode(if (i == 0) "overwrite" else "append")
-              .parquet(p)
-          }
       }
-      val schema = graft.Staging.schemaOf(s, inTmpl)
-      EventStreams.withStreamConf(s) {
-        EventStreams.awaitOrKill(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(inTmpl)
-            .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              simhashRollLogBatch(d, b, id)
-            }
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start(),
-          "stream_simhash_index_roll")
-      }
-      val tomb = s.read.schema("doc_id LONG").parquet(s"$root/log/t*")
-      val arrivals = s.read
-        .schema("doc_id LONG, sh64 LONG, band INT, bkey INT")
-        .parquet(s"$root/log/a*")
+      OnlineFold.drain(s, root, inTmpl)(simhashRollLogBatch(d, _, _))
+      val tomb = OnlineFold.readLogs(s, s"$root/log/t*", "doc_id LONG")
+      val arrivals = OnlineFold.readLogs(s, s"$root/log/a*",
+        "doc_id LONG, sh64 LONG, band INT, bkey INT")
       simhashRollFold(s, d, tomb, arrivals)
         .write.mode("overwrite").parquet(s"$root/rolled")
       simhashServe(s, d, s.read.parquet(s"$root/rolled"), mod = 10L, res = 5L)

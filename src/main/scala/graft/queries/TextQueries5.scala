@@ -150,6 +150,28 @@ object TextQueries5 {
     ()
   }
 
+  /** `stream_bloom_seen`'s per-trigger serve body: bloom-probe the
+    * batch against the frozen merged bloom artifact, confirm the
+    * bloom-positive rows by an exact fingerprint join against the
+    * standing docs, and write every batch doc's is_seen to a
+    * batch-id-keyed sink (overwrite = replay idempotent). */
+  private[graft] def bloomSeenServeBatch(s: org.apache.spark.sql.SparkSession,
+      d: String, b: org.apache.spark.sql.DataFrame, id: Long): Unit = {
+    val root = graft.Staging.dir("blserve", d)
+    val bc = s.sparkContext.broadcast[graft.operators.BloomProbe](
+      new graft.operators.SparkBloomProbe(
+        readBloom(sharedBloomIndex(s, d), "current.bloom")))
+    val standingFps = Tables.documents(s, d)
+      .filter(pmod(col("doc_id"), lit(5L)) =!= 0)
+      .select(fingerprint(col("text")).as("fp")).distinct()
+    val confirmed = b.filter(graftMightContain(bc, col("fp")))
+      .join(standingFps, Seq("fp"), "left_semi")
+      .select(col("doc_id")).withColumn("hit", lit(true))
+    b.join(confirmed, Seq("doc_id"), "left")
+      .select(col("doc_id"), coalesce(col("hit"), lit(false)).as("is_seen"))
+      .write.mode("overwrite").parquet(s"$root/out/b$id")
+  }
+
   val defs: Seq[QueryDef] = Seq(
 
     /** CONTAINMENT near-dup detection (Broder's containment coefficient
@@ -298,46 +320,24 @@ object TextQueries5 {
       * QueriesSpec additionally gates the folded posting set
       * frame-equal to the from-scratch standing index artifact. */
     QueryDef("stream_containment_index_append", Some(containmentIncrementalOracle)) { (s, d) =>
-      import org.apache.hadoop.fs.Path
-      import org.apache.spark.sql.streaming.Trigger
-      import graft.streaming.EventStreams
+      import graft.streaming.OnlineFold
       // build the day-1 artifact BEFORE the stream runs (read only in
       // the post-drain fold, but the production night starts from it)
       sharedContainmentDay1Index(s, d)
-      val root = graft.Staging.dir("ctsapp", d)
-      val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
-      // READ-ONLY day-2 arrival files, staged once per JVM (round-19;
-      // the fresh checkpoint replays both micro-batches identically)
-      val inTmpl = graft.Staging.onceDir(s, "ctsapp_in", d) { p =>
+      val root = OnlineFold.freshRoot(s, "ctsapp", d)
+      val inTmpl = OnlineFold.stage(s, "ctsapp_in", d) {
         val day2 = Tables.documents(s, d)
           .filter(pmod(col("doc_id"), lit(5L)) =!= 0 &&
             pmod(col("doc_id"), lit(2L)) === 1)
           .select(col("doc_id"), col("text"))
         Seq(day2.filter(pmod(col("doc_id"), lit(4L)) === 1),
             day2.filter(pmod(col("doc_id"), lit(4L)) === 3))
-          .zipWithIndex.foreach { case (b, i) =>
-            b.coalesce(1).write.mode(if (i == 0) "overwrite" else "append")
-              .parquet(p)
-          }
       }
-      val schema = graft.Staging.schemaOf(s, inTmpl)
-      EventStreams.withStreamConf(s) {
-        EventStreams.awaitOrKill(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(inTmpl)
-            .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              containmentAppendLogBatch(d, b, id)
-            }
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start(),
-          "stream_containment_index_append")
-      }
+      OnlineFold.drain(s, root, inTmpl)(containmentAppendLogBatch(d, _, _))
       // the one fold: vocab-sized df merge + re-pruned posting union
       probeContainment(s, d, containmentAppendFold(s, d,
-        s.read.schema("idx_id LONG, g STRING").parquet(s"$root/log/p*"),
-        s.read.schema("g STRING, df LONG").parquet(s"$root/log/df*")))
+        OnlineFold.readLogs(s, s"$root/log/p*", "idx_id LONG, g STRING"),
+        OnlineFold.readLogs(s, s"$root/log/df*", "g STRING, df LONG")))
     },
 
     /** Containment-index DELETION (round 16) — the posting index's
@@ -789,58 +789,27 @@ object TextQueries5 {
       * actually deploys: O(batch) bloom probes per trigger, the exact
       * join only on the tiny bloom-positive remainder. */
     QueryDef("stream_bloom_seen", Some(BloomSeenSql)) { (s, d) =>
-      import org.apache.hadoop.fs.Path
-      import org.apache.spark.sql.streaming.Trigger
-      import graft.streaming.EventStreams
+      import graft.streaming.OnlineFold
       require(SharedText.maxDocId(s, d) < 10000000000L,
         "documents doc_id >= 1e10 collides with the re-crawl id offset")
-      val root = graft.Staging.dir("blserve", d)
-      val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
-      val t = Tables.documents(s, d)
-        .select(col("doc_id"), fingerprint(col("text")).as("fp"))
-      val standing = t.filter(pmod(col("doc_id"), lit(5L)) =!= 0)
-      val batch = t.filter(pmod(col("doc_id"), lit(5L)) === 0)
-        .unionByName(standing.filter(pmod(col("doc_id"), lit(25L)) === 1)
-          .select((col("doc_id") + 10000000000L).as("doc_id"), col("fp")))
-      // stage the crawl stream: even then odd doc_ids → two
-      // micro-batches (the planted re-crawls are all odd, so batch 2
-      // carries hits batch 1 cannot — boundaries are load-bearing) —
-      // READ-ONLY input staged once per JVM (round-19)
-      val inTmpl = graft.Staging.onceDir(s, "blserve_in", d) { p =>
-        batch.filter(pmod(col("doc_id"), lit(2L)) === 0)
-          .coalesce(1).write.mode("overwrite").parquet(p)
-        batch.filter(pmod(col("doc_id"), lit(2L)) === 1)
-          .coalesce(1).write.mode("append").parquet(p)
+      // the frozen bloom artifact exists before the stream runs
+      sharedBloomIndex(s, d)
+      val root = OnlineFold.freshRoot(s, "blserve", d)
+      // the crawl stream: even then odd doc_ids → two micro-batches
+      // (the planted re-crawls are all odd, so batch 2 carries hits
+      // batch 1 cannot — boundaries are load-bearing)
+      val inTmpl = OnlineFold.stage(s, "blserve_in", d) {
+        val t = Tables.documents(s, d)
+          .select(col("doc_id"), fingerprint(col("text")).as("fp"))
+        val standing = t.filter(pmod(col("doc_id"), lit(5L)) =!= 0)
+        val batch = t.filter(pmod(col("doc_id"), lit(5L)) === 0)
+          .unionByName(standing.filter(pmod(col("doc_id"), lit(25L)) === 1)
+            .select((col("doc_id") + 10000000000L).as("doc_id"), col("fp")))
+        Seq(batch.filter(pmod(col("doc_id"), lit(2L)) === 0),
+            batch.filter(pmod(col("doc_id"), lit(2L)) === 1))
       }
-      val schema = graft.Staging.schemaOf(s, inTmpl)
-      val bc = s.sparkContext.broadcast[graft.operators.BloomProbe](
-        new graft.operators.SparkBloomProbe(
-          readBloom(sharedBloomIndex(s, d), "current.bloom")))
-      def mightContain(c: org.apache.spark.sql.Column) = graftMightContain(bc, c)
-      val standingFps = standing.select(col("fp")).distinct().localCheckpoint()
-      val sink = s"$root/out"
-      EventStreams.withStreamConf(s) {
-        EventStreams.awaitOrKill(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(inTmpl)
-            .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              val confirmed = b.filter(mightContain(col("fp")))
-                .join(standingFps, Seq("fp"), "left_semi")
-                .select(col("doc_id")).withColumn("hit", lit(true))
-              b.join(confirmed, Seq("doc_id"), "left")
-                .select(col("doc_id"),
-                  coalesce(col("hit"), lit(false)).as("is_seen"))
-                .write.mode("overwrite").parquet(s"$sink/b$id")
-              ()
-            }
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start(),
-          "stream_bloom_seen")
-      }
-      // declared schema: an empty batch's sink dir has no footers
-      s.read.schema("doc_id LONG, is_seen BOOLEAN").parquet(s"$sink/b*")
+      OnlineFold.drain(s, root, inTmpl)(bloomSeenServeBatch(s, d, _, _))
+      OnlineFold.readLogs(s, s"$root/out/b*", "doc_id LONG, is_seen BOOLEAN")
         .orderBy(col("doc_id"))
     },
 
@@ -915,48 +884,26 @@ object TextQueries5 {
       * bloom BYTE-equal to the one-shot cb_live.bin — stream == batch
       * at the artifact level, by the multiset group identity. */
     QueryDef("stream_bloom_forget", Some(BloomSeenDeleteSql)) { (s, d) =>
-      import org.apache.hadoop.fs.Path
-      import org.apache.spark.sql.streaming.Trigger
-      import graft.streaming.EventStreams
+      import graft.streaming.OnlineFold
       import graft.operators.CountingBloom
       require(SharedText.maxDocId(s, d) < 10000000000L,
         "documents doc_id >= 1e10 collides with the re-crawl id offset")
       val idxDir = sharedCountingBloomIndex(s, d)
-      val root = graft.Staging.dir("cbsforget", d)
-      val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
+      val root = OnlineFold.freshRoot(s, "cbsforget", d)
       val t = Tables.documents(s, d)
         .select(col("doc_id"), fingerprint(col("text")).as("fp"))
       val standing = t.filter(pmod(col("doc_id"), lit(5L)) =!= 0)
       // the deletion-request stream: the %50==1 tombstones split into
       // two micro-batches (both halves non-empty at every fixture —
-      // the roll must genuinely cross a batch boundary) — READ-ONLY
-      // input staged once per JVM (round-19; fresh checkpoint replays
-      // both micro-batches identically)
-      val inTmpl = graft.Staging.onceDir(s, "cbsforget_in", d) { p =>
+      // the roll must genuinely cross a batch boundary)
+      val inTmpl = OnlineFold.stage(s, "cbsforget_in", d) {
         val tombIn = standing.filter(pmod(col("doc_id"), lit(50L)) === 1)
           .select(col("doc_id"), col("fp"))
         Seq(tombIn.filter(pmod(col("doc_id"), lit(100L)) === 1),
             tombIn.filter(pmod(col("doc_id"), lit(100L)) === 51))
-          .zipWithIndex.foreach { case (b, i) =>
-            b.coalesce(1).write.mode(if (i == 0) "overwrite" else "append")
-              .parquet(p)
-          }
       }
       new java.io.File(s"$root/log").mkdirs()
-      val schema = graft.Staging.schemaOf(s, inTmpl)
-      EventStreams.withStreamConf(s) {
-        EventStreams.awaitOrKill(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(inTmpl)
-            .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              bloomForgetLogBatch(s, d, b, id)
-            }
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start(),
-          "stream_bloom_forget")
-      }
+      OnlineFold.drain(s, root, inTmpl)(bloomForgetLogBatch(s, d, _, _))
       // the one roll: merge the logged tombstone blooms, subtract from
       // the re-read full artifact, persist the stream-rolled live bloom
       val logs = new java.io.File(s"$root/log").listFiles()

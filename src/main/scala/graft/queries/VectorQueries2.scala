@@ -105,6 +105,22 @@ object VectorQueries2 {
     ()
   }
 
+  /** `stream_ann_serve`'s per-trigger serve body: the batch's query
+    * vectors probe the persisted IVF index (the once-per-JVM
+    * `annserve_idx` template the query builds before the stream
+    * starts) and their top-5 write to a batch-id-keyed sink
+    * (overwrite = replay idempotent). */
+  private[graft] def annServeBatch(s: SparkSession, d: String,
+      b: DataFrame, id: Long): Unit = {
+    val idxDir = graft.Staging.dir("annserve_idx", d)
+    val asg = s.read.parquet(s"$idxDir/assign")
+      .withColumn("cluster", col("cluster").cast("long"))
+    val qv = b.select(col("vec_id"), quantize(col("embedding")).as("q"))
+      .withColumn("n2", qdot(col("q"), col("q")))
+    ivfServe(ivfCorpus(s, d), ivfProbes(qv, s.read.parquet(s"$idxDir/centroids"), 2), asg)
+      .write.mode("overwrite").parquet(s"${graft.Staging.dir("annserve", d)}/out/b$id")
+  }
+
   /** The DAY-1 (base-slice, vec_id % 10 != 9) IVFADC artifacts, trained
     * ONCE per JVM and shared by `sim_ann_ivfpq_incremental` and
     * `stream_ann_ivfpq_append` — round-19 optimization: each consumer
@@ -757,56 +773,32 @@ object VectorQueries2 {
       * any code row — the gate is the incremental twin's
       * full-rebuild oracle VERBATIM. */
     QueryDef("stream_ann_ivfpq_append", Some(ivfpqIncrOracle)) { (s, d) =>
-      import org.apache.hadoop.fs.Path
-      import org.apache.spark.sql.streaming.Trigger
-      import graft.streaming.EventStreams
+      import graft.streaming.OnlineFold
       val v = ivfCorpus(s, d)
-      val root = graft.Staging.dir("ivfpqsapp", d)
-      val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
+      val root = OnlineFold.freshRoot(s, "ivfpqsapp", d)
       // day-1 offline build — the once-per-JVM persisted base artifacts
       // ([[ivfpqBaseIdxDir]]). ALL THREE are read-only for this query:
       // the stream's appends land in batch-id-keyed log dirs under this
       // run's own (wiped) root, never in the base table — so the
-      // persisted template shares across samples (round-19, guide §1.2;
-      // the foreachBatch body reads the frozen codebooks from the same
-      // template path)
+      // persisted template shares across samples (the foreachBatch
+      // body reads the frozen codebooks from the same template path)
       val tmpl = ivfpqBaseIdxDir(s, d)
       val coarse = s.read.parquet(s"$tmpl/coarse")
       val fine = s.read.parquet(s"$tmpl/fine")
-      // the arrival stream: raw day-2 embeddings, two micro-batches —
-      // READ-ONLY input staged once per JVM (round-19; the per-sample
-      // fresh checkpoint replays both batches identically)
-      val inTmpl = graft.Staging.onceDir(s, "ivfpqsapp_in", d) { p =>
+      // the arrival stream: raw day-2 embeddings, two micro-batches
+      val inTmpl = OnlineFold.stage(s, "ivfpqsapp_in", d) {
         val arr = Tables.embeddings(s, d)
           .filter(pmod(col("vec_id"), lit(10L)) === 9)
         Seq(arr.filter(pmod(col("vec_id"), lit(20L)) === 9),
             arr.filter(pmod(col("vec_id"), lit(20L)) === 19))
-          .zipWithIndex.foreach { case (b, i) =>
-            b.coalesce(1).write.mode(if (i == 0) "overwrite" else "append")
-              .parquet(p)
-          }
       }
-      val schema = graft.Staging.schemaOf(s, inTmpl)
-      EventStreams.withStreamConf(s) {
-        EventStreams.awaitOrKill(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(inTmpl)
-            .writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
-              ivfpqAppendLogBatch(d, b, id)
-            }
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start(),
-          "stream_ann_ivfpq_append")
-      }
+      OnlineFold.drain(s, root, inTmpl)(ivfpqAppendLogBatch(d, _, _))
       // serve from base ∪ logged appends (old + new inverted lists)
       val codesC = s.read.parquet(s"$tmpl/codes")
         .withColumn("cluster", col("cluster").cast("long"))
         .select(col("vec_id"), col("s"), col("code"), col("cluster"))
-        .unionByName(s.read
-          .schema("vec_id LONG, s INT, code LONG, cluster LONG")
-          .parquet(s"$root/log/b*"))
+        .unionByName(OnlineFold.readLogs(s, s"$root/log/b*",
+          "vec_id LONG, s INT, code LONG, cluster LONG"))
       ivfpqServe(v, coarse, ivfProbes(v, coarse, 2), fine, codesC)
     },
 
@@ -878,57 +870,25 @@ object VectorQueries2 {
       * index is a standing artifact, queries are a stream, per-batch
       * cost is O(batch × probed lists). */
     QueryDef("stream_ann_serve", Some(ivfOracle)) { (s, d) =>
-      import org.apache.hadoop.fs.Path
-      import org.apache.spark.sql.streaming.Trigger
-      import graft.streaming.EventStreams
-      val root = graft.Staging.dir("annserve", d)
-      val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
+      import graft.streaming.OnlineFold
+      val root = OnlineFold.freshRoot(s, "annserve", d)
       // offline: persist the index ONCE per JVM from the shared
       // training frames (same artifacts as sim_ann_ivf_persisted:
       // tiny codebook + partitioned assignment) — the stream only
       // READS them, so the persisted copy shares across samples
-      // (round-19; the per-query serve logs/ckpt stay in `root`)
-      val v = ivfCorpus(s, d)
-      val idxDir = graft.Staging.onceDir(s, "annserve_idx", d) { p =>
+      graft.Staging.onceDir(s, "annserve_idx", d) { p =>
         sharedCoarse(s, d).write.mode("overwrite").parquet(s"$p/centroids")
         sharedAsg(s, d).write.mode("overwrite")
           .partitionBy("cluster").parquet(s"$p/assign")
       }
-      val cb = s.read.parquet(s"$idxDir/centroids")
-      val asg = s.read.parquet(s"$idxDir/assign")
-        .withColumn("cluster", col("cluster").cast("long"))
-      // stage the query stream: ids {0,1} then {2,3,4} → two
-      // micro-batches under maxFilesPerTrigger=1 — READ-ONLY input
-      // staged once per JVM (round-19)
-      val inTmpl = graft.Staging.onceDir(s, "annserve_in", d) { p =>
+      // the query stream: ids {0,1} then {2,3,4} → two micro-batches
+      val inTmpl = OnlineFold.stage(s, "annserve_in", d) {
         val qdocs = Tables.embeddings(s, d).filter(col("vec_id") < 5)
-        qdocs.filter(col("vec_id") < 2)
-          .coalesce(1).write.mode("overwrite").parquet(p)
-        qdocs.filter(col("vec_id") >= 2)
-          .coalesce(1).write.mode("append").parquet(p)
+        Seq(qdocs.filter(col("vec_id") < 2), qdocs.filter(col("vec_id") >= 2))
       }
-      val schema = graft.Staging.schemaOf(s, inTmpl)
-      val sink = s"$root/out"
-      EventStreams.withStreamConf(s) {
-        EventStreams.awaitOrKill(
-          s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(inTmpl)
-            .writeStream.foreachBatch { (b: DataFrame, id: Long) =>
-              val qv = b.select(col("vec_id"), quantize(col("embedding")).as("q"))
-                .withColumn("n2", qdot(col("q"), col("q")))
-              ivfServe(v, ivfProbes(qv, cb, 2), asg)
-                .write.mode("overwrite").parquet(s"$sink/b$id")
-              ()
-            }
-            .option("checkpointLocation", s"$root/ckpt")
-            .trigger(Trigger.AvailableNow())
-            .start(),
-          "stream_ann_serve")
-      }
-      // declared schema: a sink dir of an empty batch has no footers
-      s.read.schema("q_id LONG, vec_id LONG, rnk LONG, cosine DOUBLE")
-        .parquet(s"$sink/b*")
+      OnlineFold.drain(s, root, inTmpl)(annServeBatch(s, d, _, _))
+      OnlineFold.readLogs(s, s"$root/out/b*",
+          "q_id LONG, vec_id LONG, rnk LONG, cosine DOUBLE")
         .orderBy(col("q_id"), col("rnk"))
     },
 

@@ -99,13 +99,7 @@ object EventStreams {
     // a failed stream surfaces via q.exception (processAllAvailable's
     // throw died with the drain thread) — capture it BEFORE stopping
     val failure = q.exception
-    // stop() itself can block forever on a non-interruptible stream
-    // (stopTimeout=0 default): bound it on a side thread
-    val stopper = new Thread(() => try q.stop() catch { case _: Throwable => () },
-      s"runToBatch-stop-$name")
-    stopper.setDaemon(true)
-    stopper.start()
-    stopper.join(15000L)
+    stopBounded(q, s"runToBatch-stop-$name")
     // a failure raised DURING stop (e.g. a commit error on the final
     // batch) only appears on q.exception after the stop attempt —
     // re-check so it isn't swallowed
@@ -119,16 +113,26 @@ object EventStreams {
 
   /** Bound a started streaming query: await its (Trigger.AvailableNow)
     * completion, kill + throw on timeout. awaitTermination rethrows a
-    * stream failure itself; stop() is bounded on a side thread because
-    * it can block forever on a non-interruptible stream. */
+    * stream failure itself. */
   def awaitOrKill(q: org.apache.spark.sql.streaming.StreamingQuery, label: String,
       timeoutMs: Long = 300000L): Unit = {
     if (!q.awaitTermination(timeoutMs)) {
-      val stopper = new Thread(() => try q.stop() catch { case _: Throwable => () },
-        s"awaitOrKill-$label")
-      stopper.setDaemon(true); stopper.start(); stopper.join(15000L)
+      stopBounded(q, s"awaitOrKill-$label")
       throw new RuntimeException(s"$label: stream did not finish within $timeoutMs ms")
     }
+  }
+
+  /** Stop `q` on a daemon side thread and wait at most 15 s for it:
+    * stop() can block forever on a non-interruptible stream
+    * (stopTimeout=0 default). Errors raised by the stop are left on
+    * `q.exception` for the caller to read. */
+  private def stopBounded(q: org.apache.spark.sql.streaming.StreamingQuery,
+      threadName: String): Unit = {
+    val stopper = new Thread(() => try q.stop() catch { case _: Throwable => () },
+      threadName)
+    stopper.setDaemon(true)
+    stopper.start()
+    stopper.join(15000L)
   }
 
   /** Fresh per-(prefix, sfDir) staging root with an empty `in/` dir —
@@ -209,12 +213,6 @@ object EventStreams {
         ++ extra)(body)
   }
 
-  /** Stage the events fixture file into a per-(prefix, sfDir) temp
-    * directory for the file-source streaming queries (the source wants
-    * a directory it can list). Idempotent: wiped and recopied per run.
-    * `copies` > 1 stages the SAME file under several names — with
-    * maxFilesPerTrigger=1 each copy arrives as its own micro-batch, a
-    * controlled replay for dedup/idempotence tests. */
   /** Stage the events fixture as `groups` mtime-ASCENDING files of
     * consecutive days under `<base>/in` — the reference's daily-arrival
     * pattern; ascending day order keeps every event above the
@@ -270,6 +268,12 @@ object EventStreams {
     }
   }
 
+  /** Stage the events fixture file into a per-(sfDir, copies) temp
+    * directory for the file-source streaming queries (the source wants
+    * a directory it can list). `copies` > 1 stages the SAME file under
+    * several names — with maxFilesPerTrigger=1 each copy arrives as
+    * its own micro-batch, a controlled replay for dedup/idempotence
+    * tests. */
   def stageEventsInput(spark: SparkSession, sfDir: String, prefix: String,
       copies: Int = 1): String =
     // READ-ONLY staged input — a pure function of (fixture, copies);

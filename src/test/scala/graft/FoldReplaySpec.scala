@@ -13,8 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   *
   * Mechanism: after the judged query drains, every committed batch is
   * re-executed through the query's OWN per-trigger body (the named
-  * `*LogBatch` functions the streams call), with the batch's EXACT
-  * input reconstructed from the checkpoint's file-source commit log
+  * `*LogBatch` / `*ServeBatch` functions the streams call), with the
+  * batch's EXACT input reconstructed from the checkpoint's file-source
+  * commit log
   * (`ckpt/sources/0/<id>` records each batch's file set). The fold
   * inputs (logs / versions / sinks) must be frame- or byte-identical
   * afterwards. A fold whose log write becomes append-mode, loses its
@@ -124,7 +125,21 @@ class FoldReplaySpec extends AnyFunSuite {
     FoldCase("stream_phash_index_roll", "phsroll",
       Logs("log/t*" -> "img_id LONG",
         "log/a*" -> "img_id LONG, lo LONG, hi LONG"),
-      (b, id) => queries.PhashQueries.phashRollLogBatch(sf, b, id)))
+      (b, id) => queries.PhashQueries.phashRollLogBatch(sf, b, id)),
+    // the per-batch serve sinks: each batch's answer is a pure function
+    // of its input and a frozen artifact, written OVERWRITE to out/b<id>
+    FoldCase("stream_ann_serve", "annserve",
+      Logs("out/b*" -> "q_id LONG, vec_id LONG, rnk LONG, cosine DOUBLE"),
+      (b, id) => queries.VectorQueries2.annServeBatch(spark, sf, b, id)),
+    FoldCase("stream_kmeans_assign", "kmserve",
+      Logs("out/b*" -> "vec_id LONG, cluster LONG"),
+      (b, id) => queries.KmeansQueries.kmeansAssignServeBatch(spark, sf, b, id)),
+    FoldCase("stream_bloom_seen", "blserve",
+      Logs("out/b*" -> "doc_id LONG, is_seen BOOLEAN"),
+      (b, id) => queries.TextQueries5.bloomSeenServeBatch(spark, sf, b, id)),
+    FoldCase("stream_lm_score", "lmserve",
+      Logs("out/b*" -> "doc_id LONG, n_bigrams LONG, n_scored LONG, lm_ppm LONG"),
+      (b, id) => queries.LmQueries.lmScoreServeBatch(sf, b, id)))
 
   cases.foreach { c =>
     test(s"${c.query}: re-executing every committed batch is a no-op on the fold inputs") {
