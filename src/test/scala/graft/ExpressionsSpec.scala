@@ -67,6 +67,14 @@ class ExpressionsSpec extends AnyFunSuite {
     }
   }
 
+  test("qsub codegen and interpreted paths agree") {
+    val schema = StructType(Seq(StructField("a", ArrayType(LongType)), StructField("b", ArrayType(LongType))))
+    val df = rddFrame(schema, Row(Seq(5L, 7L), Seq(1L, 2L)))
+    inBothCodegenModes { mode =>
+      assert(df.select(V.qsub(col("a"), col("b"))).as[Seq[Long]].head() === Seq(4L, 5L), mode)
+    }
+  }
+
   test("char_shingles native == HOF twin on fixture documents (differential)") {
     import graft.functions.{TextFunctions => T}
     val docs = Tables.documents(spark, TestSpark.sf0001)
