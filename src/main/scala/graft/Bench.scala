@@ -3,16 +3,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      // measured: splitting scans below the 128 MB default (e.g. 8m) is
-      // ~12% SLOWER here - at ~10 MB files, task-scheduling overhead
-      // outweighs scan parallelism; the default split size stands
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = LocalSession()
     // Untimed warmup: JIT/codegen-compile the scan/shuffle/window/sort
     // paths once so per-query timings measure the queries.
     try {

@@ -1,8 +1,7 @@
 package graft
-import org.apache.spark.sql.SparkSession
-/** Plan evidence dumper for PLANS.md / plans/<round>/ — defaults to the
-  * JUDGED bench configuration (local[32], shuffle=32, sf0.1) so the
-  * recorded plans are the plans the bench actually runs; override via
+/** Plan evidence dumper for PLANS.md / plans/<round>/ — runs on the
+  * same [[LocalSession]] as Bench (sf0.1 by default) so the recorded
+  * plans are the plans the bench actually runs; override via
   * SPARK_GRAFT_CPUS / SPARK_GRAFT_SF_DIR for ad-hoc inspection.
   *
   * Output: stdout (truncated to 60 lines per query, the PLANS.md
@@ -12,15 +11,10 @@ import org.apache.spark.sql.SparkSession
   * (plans/r19/<query>_before.txt / _after.txt). */
 object Explain {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val sf = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val outDir = sys.env.get("SPARK_GRAFT_EXPLAIN_DIR")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_SUFFIX", "")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = LocalSession()
     outDir.foreach(d => new java.io.File(d).mkdirs())
     for (name <- args) {
       println(s"================ $name")

@@ -48,9 +48,10 @@ object ScaleOps {
     * `salt` times, so those fail loudly instead. Spark's join-type
     * aliases ("leftouter", "left_semi", ...) are accepted.
     *
-    * LAST RESORT, measured (round-14 A/B, queries/SkewProbe.scala +
-    * PLANS.md): on a ×100 workload with a realistic (non-pathological)
-    * key distribution, the plain equi-join under stock AQE ran 5×
+    * LAST RESORT, measured (PLANS.md round 14, "Task 4:
+    * join_skew_salted vs stock AQE at ×100"): on a ×100 workload
+    * with a realistic (non-pathological) key distribution, the plain
+    * equi-join under stock AQE ran 5×
     * FASTER than this salt — the `salt`-fold right-side replication
     * and wider shuffle are paid UNCONDITIONALLY, while AQE's skew
     * split costs nothing until a partition actually exceeds the skew

@@ -296,8 +296,9 @@ object LmQueries {
     },
 
     /** LOG-AND-COMPACT — the high-cadence deletion path the eager
-      * rolls' cost model argues for (MaintScaleProbe: each eager roll
-      * pays an O(batch) tombstone pass PLUS a vocab-sized artifact
+      * rolls' cost model argues for (PLANS.md round 16, "the third
+      * streaming curve": each eager roll pays an O(batch) tombstone
+      * pass PLUS a vocab-sized artifact
       * read-modify-write, and at high cadence the vocab floor
       * dominates), now JUDGED rather than argued: the four tombstone
       * delta batches (doc_id % 10 = 1 split by % 40 into 1/11/21/31)

@@ -85,8 +85,9 @@ object Relational4 {
       * on the fact side, dimension exploded 8×); its ×10→×100 marginal
       * exponent of 0.91 — the roster's closest to linear — prompted a
       * round-14 A/B on the identical ×100 workload
-      * (queries/SkewProbe.scala, PLANS.md round 14): stock AQE's plain
-      * equi-join ran **5× FASTER** than the manual salt (medians
+      * (PLANS.md round 14, "Task 4: join_skew_salted vs stock AQE at
+      * ×100"): stock AQE's plain equi-join ran **5× FASTER** than the
+      * manual salt (medians
       * 2.0 s vs 10.3 s; even with broadcast disabled the plain
       * SortMergeJoin won at 2.3 s, with ZERO AQE skew-splits firing —
       * the fixture's realistic key distribution never stalls a

@@ -473,19 +473,14 @@ object TextQueries4 {
       * order-invariance itself. */
     QueryDef("stream_heavy_hitters", Some(heavyHittersOracle)) { (s, d) =>
       import s.implicits._
-      import org.apache.hadoop.fs.Path
-      import graft.streaming.{EventStreams, TransformStateOps}
-      val root = graft.Staging.dir("shh", d)
-      val fs = new Path(root).getFileSystem(s.sparkContext.hadoopConfiguration)
-      fs.delete(new Path(root), true)
-      // READ-ONLY input files staged once per JVM (round-19; the fresh
+      import graft.streaming.{EventStreams, OnlineFold, TransformStateOps}
+      OnlineFold.freshRoot(s, "shh", d)
+      // READ-ONLY input files staged once per JVM (the fresh
       // checkpoint replays both micro-batches identically)
-      val inTmpl = graft.Staging.onceDir(s, "shh_in", d) { p =>
+      val inTmpl = OnlineFold.stage(s, "shh_in", d) {
         val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        docs.filter(pmod(col("doc_id"), lit(2L)) === 0)
-          .coalesce(1).write.mode("overwrite").parquet(p)
-        docs.filter(pmod(col("doc_id"), lit(2L)) === 1)
-          .coalesce(1).write.mode("append").parquet(p)
+        Seq(docs.filter(pmod(col("doc_id"), lit(2L)) === 0),
+          docs.filter(pmod(col("doc_id"), lit(2L)) === 1))
       }
       val schema = graft.Staging.schemaOf(s, inTmpl)
       val in = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)

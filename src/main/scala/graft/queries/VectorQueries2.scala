@@ -184,7 +184,7 @@ object VectorQueries2 {
         .write.mode("overwrite").partitionBy("cluster").parquet(s"$p/codes")
     }
 
-  private def ivfpqResiduals(v: DataFrame, coarse: DataFrame, asg: DataFrame): DataFrame = {
+  private[queries] def ivfpqResiduals(v: DataFrame, coarse: DataFrame, asg: DataFrame): DataFrame = {
     val resid = v.join(asg, Seq("vec_id"))
       .join(broadcast(coarse.select(col("c_id").as("cluster"), col("cq"))), Seq("cluster"))
       .select(col("vec_id"), qsub(col("q"), col("cq")).as("r"))

@@ -25,9 +25,10 @@ object StreamMetrics {
     * execution wall time; `inputRows` the batch's source rows;
     * `stateRows` the total buffered state rows across the batch's
     * stateful operators (−1 when the query is stateless) — the
-    * streaming join family's TRUE scaling axis (JoinScaleProbe fitted
-    * per-trigger wall ~linear in state residency at exponent 0.75
-    * once eviction lags), so it is recorded per batch and spec-gated
+    * streaming join family's TRUE scaling axis (per-trigger wall
+    * fitted ~linear in state residency at exponent 0.75 once eviction
+    * lags: PLANS.md round 17, "Fourth curve, follow-up: the retention
+    * axis re-staged"), so it is recorded per batch and spec-gated
     * against the watermark-implied bound (round-18 verdict task 6). */
   final case class BatchMetric(query: String, batchId: Long, inputRows: Long,
       triggerMs: Long, rowsPerSec: Double, stateRows: Long)

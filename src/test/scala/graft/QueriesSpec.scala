@@ -138,9 +138,9 @@ class QueriesSpec extends AnyFunSuite {
   }
 
   test("ANN maintenance staleness floor: frozen-codebook serve survives 25%+25% churn") {
-    // Round-18 verdict task 4's gate. The measured dial (AnnChurnProbe,
-    // PLANS.md round 18) shows codebook staleness through 50% total
-    // churn moves recall@5 less than Lloyd seed-to-seed variance
+    // The measured dial (AnnChurnDial, PLANS.md round 18, "ANN
+    // quality-after-maintenance dial") shows codebook staleness through
+    // 50% total churn moves recall@5 less than Lloyd seed-to-seed variance
     // (dividend −0.03…+0.07 across 2–50% churn at both sfs; sf0.001
     // @25%+25%: stale 0.680 vs fresh 0.750) — no retrain cliff exists
     // on this corpus, so the retrain cadence is artifact hygiene, not
@@ -151,7 +151,7 @@ class QueriesSpec extends AnyFunSuite {
     // staleness band of the fresh retrain. A broken frozen-encode path
     // (mismatched codebooks, stale assignment join) craters the stale
     // side and fails here long before any judged hash notices.
-    val (stale, fresh, nS) = graft.queries.AnnChurnProbe.recallPair(spark, sf, 25)
+    val (stale, fresh, nS) = graft.queries.AnnChurnDial.recallPair(spark, sf, 25)
     info(f"churned corpus $nS rows: recall@5 stale $stale%.3f vs fresh $fresh%.3f")
     assert(fresh >= 0.5,
       f"fresh retrain recall $fresh%.3f below 0.5 - the dial's baseline broke")

@@ -257,11 +257,12 @@ class StreamingSpec extends AnyFunSuite {
   }
 
   test("stream-stream joins: final buffered state obeys the watermark-implied bound (residency gate)") {
-    // Round-18 verdict task 6: JoinScaleProbe measured per-trigger wall
-    // ~linear in buffered-state rows (exponent 0.75) once eviction
-    // lags — state RESIDENCY, not row throughput, is the streaming
-    // join's true scaling axis. This gate asserts the three judged
-    // stream-stream joins actually BOUND it: after the final no-data
+    // PLANS.md round 17 ("Fourth curve, follow-up: the retention axis
+    // re-staged") measured per-trigger wall ~linear in buffered-state
+    // rows (exponent 0.75) once eviction lags — state RESIDENCY, not
+    // row throughput, is the streaming join's true scaling axis. This
+    // gate asserts the three judged stream-stream joins actually
+    // BOUND it: after the final no-data
     // batch, the symmetric hash join may hold only (a) purchases with
     // p_ts >= w and (b) clicks with c_ts >= w − 1h, where
     // w = least(max p_ts, max c_ts) − 2h is the final global watermark

@@ -4,14 +4,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.VectorFunctions._
 
-/** Diagnostics main (round-18 verdict task 4; NOT part of the judged
-  * surface): the ANN QUALITY-AFTER-MAINTENANCE dial. The IVFPQ
-  * append/delete rolls are exact w.r.t. the tombstone-serve
-  * (sim_ann_ivfpq_incremental / _delete gates), but their codebooks
-  * stay FROZEN — after sustained append+delete churn the coarse
-  * centroids and PQ codebooks describe a corpus that partly departed.
-  * This probe measures what that staleness actually costs, the way the
-  * recap-cadence dial priced the directional-delete gap:
+/** The ANN quality-after-maintenance dial behind QueriesSpec's
+  * staleness-floor gate (findings: PLANS.md round 18, "ANN
+  * quality-after-maintenance dial"). The IVFPQ append/delete rolls keep
+  * their codebooks FROZEN; this measures what that staleness costs.
   *
   * For churn fraction c (appends c% + deletes c% of the corpus):
   *   base    B = vec_id%100 ∉ [50, 50+c)      (what the codebooks saw)
@@ -21,36 +17,18 @@ import graft.functions.VectorFunctions._
   *     off the frozen codebooks (exactly the maintained artifact the
   *     judged rolls produce);
   *   FRESH index: coarse+fine retrained on S (the scheduled rebuild).
-  * Both serve the same 20 query vectors (vec_id < 20 ⊂ B ∖ D — stable
-  * across cells so only INDEX quality moves) at nprobe=2, ADC
-  * shortlist 50, exact re-rank top-5; recall@5 against the brute-force
-  * exact top-5 over S. recall(fresh) − recall(stale) at each c is the
-  * retrain dividend; where it rises is the retrain cadence.
+  * Both serve the same 20 query vectors (vec_id < 20 ⊂ B ∖ D, so only
+  * INDEX quality moves) at nprobe=2, ADC shortlist 50, exact re-rank
+  * top-5; recall@5 against the brute-force exact top-5 over S.
+  * Deterministic (Lloyd from fixed seeds, integer arithmetic).
   *
-  * Everything is deterministic (Lloyd from fixed seeds, integer
-  * arithmetic), so this is a QUALITY dial, not a timing — reps are
-  * unnecessary. Results → PLANS.md.
-  *
-  * Usage: `sbt "runMain graft.queries.AnnChurnProbe"` (env
-  * SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CHURNS="5,10,25").
-  */
-object AnnChurnProbe {
+  * The probe, serve and exact helpers take the query set as a
+  * parameter: the engine's versions pin vec_id < 5, and 20 queries give
+  * the dial 100 neighbor slots. */
+object AnnChurnDial {
 
   private val NQueries = 20
 
-  /** Residual sub-vector frame (vec_id, s, sub, sn2) — the
-    * VectorQueries2.ivfpqResiduals shape (private there). */
-  private def residuals(v: DataFrame, coarse: DataFrame, asg: DataFrame): DataFrame = {
-    val resid = v.join(asg, Seq("vec_id"))
-      .join(broadcast(coarse.select(col("c_id").as("cluster"), col("cq"))), Seq("cluster"))
-      .select(col("vec_id"), qsub(col("q"), col("cq")).as("r"))
-    resid.select(col("vec_id"), posexplode(array(
-        (0 until 8).map(t => slice(col("r"), t * 8 + 1, 8)): _*)).as(Seq("s", "sub")))
-      .withColumn("sn2", qdot(col("sub"), col("sub")))
-  }
-
-  /** ivfProbes with a parameterized query set (the shared one pins
-    * vec_id < 5; 20 queries give the dial 100 neighbor slots). */
   private def probesOf(queries: DataFrame, cents: DataFrame, nprobe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val w = Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_id"))
@@ -60,9 +38,9 @@ object AnnChurnProbe {
       .select(col("vec_id").as("q_id"), col("c_id").as("cluster"))
   }
 
-  /** IVFADC serve (the VectorQueries2.ivfpqServe shape, query set
-    * parameterized): per-(query, probed-cell) residual LUT, ADC sum,
-    * top-50 shortlist, exact re-rank, top-5 ids per query. */
+  /** IVFADC serve (the VectorQueries2.ivfpqServe shape): per-(query,
+    * probed-cell) residual LUT, ADC sum, top-50 shortlist, exact
+    * re-rank, top-5 ids per query. */
   private def serve(vS: DataFrame, queries: DataFrame, coarse: DataFrame,
       fine: DataFrame, codes: DataFrame, nprobe: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -109,10 +87,8 @@ object AnnChurnProbe {
   }
 
   /** One dial cell: (recall@5 of the STALE maintained index, recall@5
-    * of the FRESH retrain, |S|) at churn percent `c` per side. Also
-    * the AnnChurnSpec entry point — the spec gates the frozen-encode
-    * maintenance mechanism's quality floor at the 25%+25% cell. */
-  private[graft] def recallPair(spark: SparkSession, sfDir: String,
+    * of the FRESH retrain, |S|) at churn percent `c` per side. */
+  def recallPair(spark: SparkSession, sfDir: String,
       c: Int): (Double, Double, Long) = {
     require(c > 0 && c <= 25,
       "churn percent must be in (0, 25] so deletes/arrivals stay disjoint " +
@@ -128,35 +104,17 @@ object AnnChurnProbe {
       val coarse = VectorQueries.lloydCentroids(train, 8).localCheckpoint()
       val asgTrain = VectorQueries.ivfAssign(train, coarse)
       val fine = VectorQueries.lloydSubCentroids(
-        residuals(train, coarse, asgTrain), 16).localCheckpoint()
+        VectorQueries2.ivfpqResiduals(train, coarse, asgTrain), 16).localCheckpoint()
       // the maintained artifact: the FULL standing corpus encoded off
       // these codebooks (per-vector pure — exactly what the judged
       // append/delete rolls leave on disk)
       val asgS = VectorQueries.ivfAssign(vS, coarse)
-      val codes = VectorQueries.pqEncode(residuals(vS, coarse, asgS), fine)
+      val codes = VectorQueries.pqEncode(
+          VectorQueries2.ivfpqResiduals(vS, coarse, asgS), fine)
         .join(asgS, Seq("vec_id")).localCheckpoint()
       recallAt5(serve(vS, queries, coarse, fine, codes, nprobe = 2), ex)
     }
 
     (buildAndServe(vB), buildAndServe(vS), vS.count())
-  }
-
-  def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val churns = sys.env.getOrElse("SPARK_GRAFT_CHURNS", "5,10,25")
-      .split(",").map(_.trim.toInt).toSeq
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    println(f"${"churn%"}%7s ${"appends+deletes"}%16s ${"|S|"}%8s ${"recall_stale"}%13s ${"recall_fresh"}%13s ${"dividend"}%9s")
-    churns.foreach { c =>
-      val (stale, fresh, nS) = recallPair(spark, sfDir, c)
-      println(f"${c * 2}%7d ${s"$c% + $c%"}%16s $nS%8d $stale%13.3f $fresh%13.3f ${fresh - stale}%+9.3f")
-    }
-    spark.stop()
   }
 }

@@ -1,9 +1,15 @@
 #!/usr/bin/env python3
 """Regenerate the judged-surface counts quoted in SURVEY.md/README.md
-(dev tool only). Parses the QueryDef registrations from the query
-sources — the same definitions SparkEntry.allDefs concatenates — so the
-docs can quote a derived number instead of a hand-edited one (round-8
-verdict item 7: SURVEY said 163 while the judged surface was 164).
+and the code-size counts quoted in ROADMAP.md (dev tool only). Parses
+the QueryDef registrations from the query sources — the same
+definitions SparkEntry.allDefs concatenates — so the docs can quote a
+derived number instead of a hand-edited one (round-8 verdict item 7:
+SURVEY said 163 while the judged surface was 164).
+
+The code-size counts cover the Scala sources under src/main: lines
+(as `wc -l` counts them), `SparkSession.builder` sites, `def main(`
+entry points, and lines citing "round N" history (case-insensitive
+`round 12` / `round-12`).
 
 Usage: python3 tools/counts.py [verify_outDir]
        python3 tools/counts.py --stamp
@@ -33,6 +39,16 @@ print(f"queries: {len(names)}")
 print(f"with DuckDB oracle (from source): {len(oracled)}")
 rows_only = sorted(set(names) - set(oracled))
 print(f"rows-only (no oracle): {rows_only if rows_only else 'none'}")
+
+main_lines = [line
+              for f in sorted(glob.glob("src/main/**/*.scala", recursive=True))
+              for line in open(f).read().split("\n")[:-1]]
+history = re.compile(r"\bround[- ]\d", re.IGNORECASE)
+print(f"src/main Scala lines: {len(main_lines)}")
+print(f"SparkSession.builder sites: "
+      f"{sum('SparkSession.builder' in l for l in main_lines)}")
+print(f"def main( objects: {sum('def main(' in l for l in main_lines)}")
+print(f'"round N" history lines: {sum(bool(history.search(l)) for l in main_lines)}')
 
 if "--stamp" in sys.argv:
     rounds = [int(m.group(1)) for p in glob.glob("CORRECTNESS_r*.json")
