@@ -40,18 +40,8 @@ case class LongDotProduct(left: Expression, right: Expression)
 
   override def prettyName: String = "qdot_native"
 
-  override protected def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var s = 0L
-    var i = 0
-    while (i < n) {
-      if (!x.isNullAt(i) && !y.isNullAt(i)) s += x.getLong(i) * y.getLong(i)
-      i += 1
-    }
-    s
-  }
+  override protected def nullSafeEval(a: Any, b: Any): Any =
+    LongDotKernel.dot(a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     nullSafeCodeGen(ctx, ev, (a, b) => {
@@ -72,4 +62,20 @@ case class LongDotProduct(left: Expression, right: Expression)
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
+}
+
+/** The interpreted dot-product loop, shared with the nearest-centroid
+  * kernel and the driver-side IVFADC serve so they sum as [[LongDotProduct]]
+  * does: over the shorter side, null elements contributing 0. */
+object LongDotKernel {
+  def dot(x: ArrayData, y: ArrayData): Long = {
+    val n = math.min(x.numElements(), y.numElements())
+    var s = 0L
+    var i = 0
+    while (i < n) {
+      if (!x.isNullAt(i) && !y.isNullAt(i)) s += x.getLong(i) * y.getLong(i)
+      i += 1
+    }
+    s
+  }
 }

@@ -91,19 +91,26 @@ case class NearestCentroid(vec: Expression, n2: Expression, codebook: Expression
     copy(vec = newFirst, n2 = newSecond, codebook = newThird)
 }
 
-/** The one nearest-centroid loop, shared by [[NearestCentroid]] and the
-  * Lloyd fold (`VectorQueries.lloydFold`), so assignment during
-  * training and assignment at serve time cannot disagree. */
+/** The one nearest-centroid loop, shared by [[NearestCentroid]], the
+  * Lloyd fold (`VectorQueries.lloydFold`) and the driver-side IVFADC
+  * probe pick (`VectorQueries2.ivfpqServe`), so assignment during
+  * training, assignment at serve time and probing cannot disagree. */
 object NearestCentroidKernel {
 
   /** Index into `cb` of the nearest entry (see [[NearestCentroid]]), or
-    * −1 when no entry scores. */
+    * −1 when no entry scores: [[topK]] with k = 1. */
   def pick(v: ArrayData, n2: Long, cb: ArrayData, l2: Boolean, failOnError: Boolean): Int = {
+    val top = topK(v, n2, cb, l2, failOnError, 1)
+    if (top.size == 0) -1 else top.slot(0)
+  }
+
+  /** The `k` nearest entries of `cb`, nearest first, each entry's slot
+    * its index into `cb`. Scoring, null and ANSI rules are
+    * [[NearestCentroid]]'s; fewer than k entries score → all of them. */
+  def topK(v: ArrayData, n2: Long, cb: ArrayData, l2: Boolean, failOnError: Boolean,
+      k: Int): TopK = {
+    val top = new TopK(k, l2)
     val n = v.numElements()
-    var best = -1
-    var bestId = 0L
-    var bestCos = 0.0
-    var bestD2 = 0L
     var j = 0
     while (j < cb.numElements()) {
       if (!cb.isNullAt(j)) {
@@ -114,35 +121,90 @@ object NearestCentroidKernel {
           val cn2 = c.getLong(2)
           if (cv.numElements() != n) throw new IllegalArgumentException(
             s"nearest_centroid: vector width $n differs from centroid $id's width ${cv.numElements()}")
-          var dot = 0L
-          var i = 0
-          while (i < n) {
-            if (!v.isNullAt(i) && !cv.isNullAt(i)) dot += v.getLong(i) * cv.getLong(i)
-            i += 1
-          }
-          if (l2) {
-            val d2 =
-              if (failOnError) Math.subtractExact(Math.addExact(n2, cn2), Math.multiplyExact(2L, dot))
-              else n2 + cn2 - 2L * dot
-            if (best < 0 || d2 < bestD2 || (d2 == bestD2 && id < bestId)) {
-              best = j; bestId = id; bestD2 = d2
-            }
-          } else {
-            val den = Math.sqrt(n2.toDouble) * Math.sqrt(cn2.toDouble)
-            if (den == 0.0) {
-              if (failOnError) throw org.apache.spark.sql.GraftBridge.divideByZero()
-            } else {
-              val cos = dot.toDouble / den
-              val cmp = if (best < 0) 1 else SQLOrderingUtil.compareDoubles(cos, bestCos)
-              if (cmp > 0 || (cmp == 0 && id < bestId)) {
-                best = j; bestId = id; bestCos = cos
-              }
-            }
-          }
+          val dot = LongDotKernel.dot(v, cv)
+          if (l2) top.offerD2(j, id, TopK.d2(n2, cn2, dot, failOnError))
+          else top.offerCosine(j, id, dot, n2, cn2, failOnError)
         }
       }
       j += 1
     }
-    best
+    top
   }
+}
+
+/** A bounded top-k: the `k` best candidates offered, best first, in
+  * O(k) memory. Squared-L2 mode (`l2`) keeps the smallest int64 d2;
+  * cosine mode keeps the largest cosine, compared as Spark SQL compares
+  * doubles (NaN largest, −0.0 = 0.0). Ties go to the lowest id, so the
+  * result does not depend on the order of the offers. A candidate's
+  * `slot` is the caller's handle on it (an index into its codebook or
+  * candidate rows). */
+final class TopK(val k: Int, l2: Boolean) {
+  require(k >= 0, s"top-k: negative k $k")
+  private val slots = new Array[Int](k)
+  private val ids = new Array[Long](k)
+  private val d2s = if (l2) new Array[Long](k) else null
+  private val coss = if (l2) null else new Array[Double](k)
+  private var n = 0
+
+  def size: Int = n
+  def slot(i: Int): Int = slots(i)
+  def id(i: Int): Long = ids(i)
+  def d2(i: Int): Long = d2s(i)
+  def cosine(i: Int): Double = coss(i)
+
+  /** Offers a squared-L2 candidate. */
+  def offerD2(slot: Int, id: Long, d2: Long): Unit = {
+    var i = n
+    while (i > 0 && (d2 < d2s(i - 1) || (d2 == d2s(i - 1) && id < ids(i - 1)))) i -= 1
+    if (open(i, slot, id)) d2s(i) = d2
+  }
+
+  /** Offers a cosine candidate as `dot / (sqrt(n2a) · sqrt(n2b))` in IEEE
+    * doubles. A zero denominator raises DIVIDE_BY_ZERO under
+    * `failOnError` (ANSI), as the SQL division does; otherwise the
+    * candidate has no score and is skipped. */
+  def offerCosine(slot: Int, id: Long, dot: Long, n2a: Long, n2b: Long,
+      failOnError: Boolean): Unit = {
+    val den = Math.sqrt(n2a.toDouble) * Math.sqrt(n2b.toDouble)
+    if (den == 0.0) {
+      if (failOnError) throw org.apache.spark.sql.GraftBridge.divideByZero()
+    } else offerCos(slot, id, dot.toDouble / den)
+  }
+
+  /** Offers a candidate scored by a cosine already computed. */
+  def offerCos(slot: Int, id: Long, cos: Double): Unit = {
+    var i = n
+    while (i > 0 && {
+      val cmp = SQLOrderingUtil.compareDoubles(cos, coss(i - 1))
+      cmp > 0 || (cmp == 0 && id < ids(i - 1))
+    }) i -= 1
+    if (open(i, slot, id)) coss(i) = cos
+  }
+
+  /** Makes room at rank `i` (dropping the k-th entry when full) and
+    * fills its slot and id; false when `i` is past the bound. */
+  private def open(i: Int, slot: Int, id: Long): Boolean = {
+    if (i >= k) return false
+    val moved = math.min(n, k - 1) - i
+    if (moved > 0) {
+      System.arraycopy(slots, i, slots, i + 1, moved)
+      System.arraycopy(ids, i, ids, i + 1, moved)
+      if (l2) System.arraycopy(d2s, i, d2s, i + 1, moved)
+      else System.arraycopy(coss, i, coss, i + 1, moved)
+    }
+    slots(i) = slot
+    ids(i) = id
+    if (n < k) n += 1
+    true
+  }
+}
+
+object TopK {
+  /** Exact squared L2 `n2a + n2b − 2·dot` from the norms and the dot
+    * product, with the `*Exact` arithmetic under `failOnError` (ANSI),
+    * as Spark's `+`, `−` and `*` raise on int64 overflow there. */
+  def d2(n2a: Long, n2b: Long, dot: Long, failOnError: Boolean): Long =
+    if (failOnError) Math.subtractExact(Math.addExact(n2a, n2b), Math.multiplyExact(2L, dot))
+    else n2a + n2b - 2L * dot
 }

@@ -474,7 +474,6 @@ object TextQueries4 {
     QueryDef("stream_heavy_hitters", Some(heavyHittersOracle)) { (s, d) =>
       import s.implicits._
       import graft.streaming.{EventStreams, OnlineFold, TransformStateOps}
-      OnlineFold.freshRoot(s, "shh", d)
       // READ-ONLY input files staged once per JVM (the fresh
       // checkpoint replays both micro-batches identically)
       val inTmpl = OnlineFold.stage(s, "shh_in", d) {

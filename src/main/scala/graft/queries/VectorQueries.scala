@@ -321,12 +321,22 @@ object VectorQueries {
   /** One row `cb` holding the codebook `cents(c_id, <vec>, <n2>)` as the
     * `array<struct<c_id, vec, n2>>` the nearest-centroid kernel reads,
     * per `keys` group (none: a single row; an empty codebook: no row, so
-    * a cross join against it is empty, as against the codebook rows). */
+    * a cross join against it is empty, as against the codebook rows).
+    * Entries keep the codebook's row order. A codebook has k rows, so
+    * the rows are grouped on the driver and returned as a local relation:
+    * a driver-held codebook costs no job, a stored one one scan. */
   private[queries] def codebookRows(cents: DataFrame, keys: Seq[String],
-      vec: String, n2: String): DataFrame =
-    cents.groupBy(keys.map(col): _*)
-      .agg(collect_list(struct(col("c_id"), col(vec).as("vec"), col(n2).as("n2"))).as("cb"))
-      .filter(size(col("cb")) > 0)
+      vec: String, n2: String): DataFrame = {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{ArrayType, StructField, StructType}
+    val entries = cents.select(keys.map(col) :+
+      struct(col("c_id"), col(vec).as("vec"), col(n2).as("n2")).as("e"): _*)
+    val rows = entries.collect().toSeq.groupBy(r => keys.indices.map(r.get)).toSeq
+      .map { case (key, es) => Row.fromSeq(key :+ es.map(_.getStruct(keys.length))) }
+    val schema = StructType(entries.schema.fields.take(keys.length) :+
+      StructField("cb", ArrayType(entries.schema("e").dataType, containsNull = false)))
+    cents.sparkSession.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
+  }
 
   /** DuckDB twin of [[lloydCentroids]]: CTE chain over an existing
     * `n(vec_id, q, n2)` CTE, ending in `c(c_id, cq, cn2)`. `dims` is

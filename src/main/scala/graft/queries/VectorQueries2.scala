@@ -3,6 +3,7 @@ package graft.queries
 import graft.Tables
 import graft.functions.VectorFunctions._
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.functions._
 
 /** IVFADC — the composed coarse+fine index (Jégou et al., "Product
@@ -30,14 +31,17 @@ import org.apache.spark.sql.functions._
   * [[VectorQueries.lloydCentroids]]), so they are local relations, not
   * checkpoints. Assignment is ONE corpus pass (the coarse codebook is
   * one broadcast row read by the native nearest-centroid expression),
-  * residual encode one narrow pass (one broadcast row per subspace),
-  * and the serve path touches only the PROBED partitions of the
-  * cluster-partitioned code table (the persisted variant's plan shows
-  * the dynamic-partition-pruning filter) plus top-50 raw-vector
-  * fetches. Nothing all-pairs, nothing corpus-shuffling. The training
-  * and assignment kernels are one function, in exact int64 except for
-  * the cosine's IEEE division of identical integers, so the driver
-  * fold, the serve-time expression and the oracle agree bit for bit.
+  * residual encode one narrow pass (one broadcast row per subspace).
+  * The serve ([[ivfpqServe]]) is three jobs: the query side (probes and
+  * residual LUTs) is computed on the driver, one per-partition ADC fold
+  * reads only the PROBED partitions of the cluster-partitioned code
+  * table (a static partition filter in the persisted variant's scan),
+  * and one fetch reads the top-50 shortlisted raw vectors for the exact
+  * re-rank. Nothing all-pairs, nothing corpus-shuffling. Assignment,
+  * training and probing share one bounded top-k kernel, in exact int64
+  * except for the cosine's IEEE division of identical integers, so the
+  * driver fold, the serve-time expression and the oracle agree bit for
+  * bit.
   *
   * Reference tie-in: the reference delegates all analysis to BigQuery
   * (README.md:3) and has no vector surface; this family belongs to the
@@ -193,46 +197,205 @@ object VectorQueries2 {
       .withColumn("sn2", qdot(col("sub"), col("sub")))
   }
 
-  /** IVFADC online serve. `codesC` is the cluster-keyed code table
-    * `(cluster, vec_id, s, code)` — the inverted-list layout: the probe
-    * equi-join on `cluster` restricts the scan to probed lists, so
-    * serving cost is (nprobe/k)·|codes| + 50 raw fetches per query,
-    * independent of corpus size. The per-(query, probed-cell) LUT is
-    * built against the QUERY's residual in that cell (IVFADC's defining
-    * detail — distances are between residuals in the same cell frame)
-    * and broadcasts at 5 queries × 2 probes × 8 subspaces × 16 codes =
-    * 1280 rows. */
-  private def ivfpqServe(v: DataFrame, coarse: DataFrame, probes: DataFrame,
-      fine: DataFrame, codesC: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val qv = v.filter(col("vec_id") < 5).select(col("vec_id").as("q_id"), col("q"))
-    val qres = probes.select(col("q_id"), col("cluster"))
-      .join(qv, Seq("q_id"))
-      .join(broadcast(coarse.select(col("c_id").as("cluster"), col("cq"))), Seq("cluster"))
-      .select(col("q_id"), col("cluster"),
-        qsub(col("q"), col("cq")).as("r"))
-    val qsubs = qres.select(col("q_id"), col("cluster"), posexplode(array(
-        (0 until 8).map(t => slice(col("r"), t * 8 + 1, 8)): _*)).as(Seq("s", "sub")))
-      .withColumn("sn2", qdot(col("sub"), col("sub")))
-    val lut = qsubs.join(broadcast(fine), Seq("s"))
-      .withColumn("d2", col("sn2") + col("cn2") - lit(2L) * qdot(col("sub"), col("csub")))
-      .select(col("q_id"), col("cluster"), col("s"), col("c_id").as("code"), col("d2"))
-    val cand = probes.select(col("q_id"), col("cluster")).join(codesC, Seq("cluster"))
-      .filter(col("vec_id") =!= col("q_id"))
-    val adc = cand.join(broadcast(lut), Seq("q_id", "cluster", "s", "code"))
-      .groupBy(col("q_id"), col("vec_id")).agg(sum(col("d2")).as("adc"))
-    val wShort = Window.partitionBy(col("q_id")).orderBy(col("adc"), col("vec_id"))
-    val short = adc.withColumn("srn", row_number().over(wShort)).filter(col("srn") <= 50)
-      .select(col("q_id"), col("vec_id"))
-    val qa = v.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("q").as("qq"), col("n2").as("qn2"))
-    val scored = short.join(broadcast(qa), Seq("q_id")).join(v, Seq("vec_id"))
-      .withColumn("cosine", cosineFromQ(qdot(col("qq"), col("q")), col("qn2"), col("n2")))
-    val wR = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(wR).cast("long"))
-      .filter(col("rnk") <= 5)
+  /** Probed coarse cells per query, ADC shortlist length and served
+    * neighbours per query of the IVFADC serve. */
+  private val IvfpqProbes = 2
+  private val IvfpqShortlist = 50
+  private val IvfpqTop = 5
+
+  /** IVFADC online serve of the query vectors (vec_id < 5) over
+    * `codesC`, the cluster-keyed code table `(cluster, vec_id, s, code)`
+    * — the inverted-list layout. Three Spark jobs whatever the corpus
+    * size, one per step:
+    *  1. Collect the query rows. Each picks its [[IvfpqProbes]] nearest
+    *     coarse cells with the bounded top-k kernel that assigns the
+    *     corpus, and gets per probed cell a residual LUT of
+    *     8 × |fine codebook| exact int64 `d2` values against its
+    *     residual in that cell (IVFADC's defining detail: distances are
+    *     between residuals in one cell frame). The codebooks are
+    *     driver-held local relations, so reading them starts no job (a
+    *     parquet codebook costs one).
+    *  2. One per-partition fold over the code table cut to the probed
+    *     clusters (a static partition filter when the table is
+    *     partitioned by cluster) sums each (query, vector)'s LUT `d2`
+    *     values; the driver merges the partial sums and keeps the top
+    *     [[IvfpqShortlist]] per query by (adc, vec_id). Partitions do
+    *     not prune: a vector's 8 code rows may sit in different ones.
+    *  3. Fetch the shortlisted raw vectors by id; the exact cosine
+    *     re-rank keeps the top [[IvfpqTop]] per query by
+    *     (cosine desc, vec_id).
+    * The rows come back as a local relation under Spark's own `round`
+    * and sort. The arithmetic is the relational form's (kept in the
+    * tests as the twin): wrapping dot products and residuals, `d2` and
+    * ADC sums with the `*Exact` arithmetic under ANSI, IEEE cosines. A
+    * code row with a null key, vec_id = q_id or no LUT entry adds
+    * nothing, as under the relational inner joins. A null query,
+    * codebook or shortlisted vector fails the serve; with ANSI off, a
+    * zero-norm vector scores no cosine and is skipped (the relational
+    * form would rank its null last). */
+  private[graft] def ivfpqServe(v: DataFrame, coarse: DataFrame, fine: DataFrame,
+      codesC: DataFrame): DataFrame = {
+    import graft.expressions.{LongDotKernel, TopK}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val s = v.sparkSession
+    val ansi = s.sessionState.conf.ansiEnabled
+    val (queries, luts) = ivfpqQuerySide(v, coarse, fine, ansi)
+    // step 2: partial ADC sums per partition, merged on the driver
+    val adc = scala.collection.mutable.HashMap[(Long, Long), Long]()
+    if (luts.nonEmpty) {
+      val folds = ivfpqCandidates(codesC, luts.keys).queryExecution.toRdd.mapPartitions { it =>
+        val acc = scala.collection.mutable.HashMap[(Long, Long), Long]()
+        it.foreach { r =>
+          if (!r.isNullAt(0) && !r.isNullAt(1) && !r.isNullAt(2) && !r.isNullAt(3))
+            luts.get(r.getLong(0)).foreach { probes =>
+              val vec = r.getLong(1)
+              val code = (r.getInt(2), r.getLong(3))
+              probes.foreach { case (qId, lut) =>
+                if (vec != qId) lut.get(code).foreach { d2 =>
+                  acc((qId, vec)) = acc.get((qId, vec)).fold(d2)(addL(_, d2, ansi))
+                }
+              }
+            }
+        }
+        val sums = acc.toArray
+        Iterator.single((sums.map(_._1._1), sums.map(_._1._2), sums.map(_._2)))
+      }.collect()
+      for ((qIds, vecs, d2s) <- folds; i <- qIds.indices) {
+        val k = (qIds(i), vecs(i))
+        adc(k) = adc.get(k).fold(d2s(i))(addL(_, d2s(i), ansi))
+      }
+    }
+    val shortlists = scala.collection.mutable.HashMap[Long, TopK]()
+    adc.foreach { case ((qId, vec), sum) =>
+      shortlists.getOrElseUpdate(qId, new TopK(IvfpqShortlist, l2 = true)).offerD2(0, vec, sum)
+    }
+    // step 3: fetch the shortlisted vectors, exact cosine re-rank
+    val ids = shortlists.values.flatMap(t => (0 until t.size).map(t.id)).toSeq.distinct.sorted
+    val fetched =
+      if (ids.isEmpty) Array.empty[Row]
+      else v.filter(col("vec_id").isin(ids: _*)).select(col("vec_id"), col("q"), col("n2")).collect()
+    fetched.foreach(r => require(!r.anyNull,
+      s"IVFADC serve: shortlisted vector ${r.get(0)} has a null id, vector or norm"))
+    val fetchedVecs = fetched.map(r => arrayOf(r, 1))
+    val byId = fetched.indices.groupBy(j => fetched(j).getLong(0))
+    val rows = queries.toSeq.flatMap { case (qId, qv, qn2) =>
+      shortlists.get(qId).toSeq.flatMap { short =>
+        val top = new TopK(IvfpqTop, l2 = false)
+        for (i <- 0 until short.size; j <- byId.getOrElse(short.id(i), Nil))
+          top.offerCosine(j, short.id(i), LongDotKernel.dot(qv, fetchedVecs(j)), qn2,
+            fetched(j).getLong(2), ansi)
+        (0 until top.size).map(i => Row(qId, top.id(i), (i + 1).toLong, top.cosine(i)))
+      }
+    }
+    val schema = StructType(Seq("q_id", "vec_id", "rnk").map(StructField(_, LongType)) :+
+      StructField("cosine", DoubleType))
+    // at most 5 rows per query: one partition, so the sort needs no exchange
+    s.createDataFrame(java.util.Arrays.asList(rows: _*), schema).coalesce(1)
       .select(col("q_id"), col("vec_id"), col("rnk"), round(col("cosine"), 6).as("cosine"))
       .orderBy(col("q_id"), col("rnk"))
+  }
+
+  /** A residual LUT of the IVFADC serve: (subspace, code) → d2. */
+  private type Lut = Map[(Int, Long), Long]
+
+  /** Step 1 of [[ivfpqServe]], on the driver: the query rows
+    * `(q_id, q, n2)` and, per probed cluster, each probing query's LUT
+    * `(s, code) → d2` (duplicate codebook keys add up, as their joined
+    * rows would). */
+  private def ivfpqQuerySide(v: DataFrame, coarse: DataFrame, fine: DataFrame, ansi: Boolean)
+      : (Array[(Long, ArrayData, Long)], Map[Long, Seq[(Long, Lut)]]) = {
+    import graft.expressions.{LongDotKernel, LongVecSubKernel, NearestCentroidKernel, TopK}
+    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
+    val queries = v.filter(col("vec_id") < 5).select(col("vec_id"), col("q"), col("n2")).collect()
+      .map { r =>
+        require(!r.anyNull, s"IVFADC serve: query ${r.get(0)} has a null id, vector or norm")
+        (r.getLong(0), arrayOf(r, 1), r.getLong(2))
+      }
+    val cells = coarse.select(col("c_id"), col("cq"), col("cn2")).collect()
+    val cb = new GenericArrayData(cells.map(r => new GenericInternalRow(Array[Any](
+      r.get(0), if (r.isNullAt(1)) null else arrayOf(r, 1), r.get(2))): Any))
+    val subBooks = fine.select(col("s"), col("c_id"), col("csub"), col("cn2")).collect()
+      .map { r =>
+        require(!r.anyNull, s"IVFADC serve: fine codebook entry ${r.get(1)} has a null field")
+        (r.getInt(0), r.getLong(1), arrayOf(r, 2), r.getLong(3))
+      }
+    val probes = for {
+      (qId, q, n2) <- queries.toSeq
+      top = NearestCentroidKernel.topK(q, n2, cb, l2 = false, ansi, IvfpqProbes)
+      i <- 0 until top.size
+    } yield {
+      val r = LongVecSubKernel.sub(q, arrayOf(cells(top.slot(i)), 1))
+      val lut = scala.collection.mutable.HashMap[(Int, Long), Long]()
+      for (t <- 0 until 8) {
+        val sub = new GenericArrayData((t * 8 until math.min(t * 8 + 8, r.numElements()))
+          .map(e => if (r.isNullAt(e)) null else r.getLong(e)).toArray[Any])
+        val sn2 = LongDotKernel.dot(sub, sub)
+        for ((st, code, csub, cn2) <- subBooks if st == t) {
+          val d2 = TopK.d2(sn2, cn2, LongDotKernel.dot(sub, csub), ansi)
+          lut((t, code)) = lut.get((t, code)).fold(d2)(addL(_, d2, ansi))
+        }
+      }
+      top.id(i) -> (qId, lut.toMap)
+    }
+    (queries, probes.groupBy(_._1).map { case (c, ps) => c -> ps.map(_._2) })
+  }
+
+  /** The code-table rows [[ivfpqServe]] folds: `codesC` cut to the
+    * `probed` clusters, as `(cluster, vec_id, s, code)`. */
+  private def ivfpqCandidates(codesC: DataFrame, probed: Iterable[Long]): DataFrame =
+    codesC.filter(col("cluster").isin(probed.toSeq.sorted: _*))
+      .select(col("cluster").cast("long"), col("vec_id").cast("long"),
+        col("s").cast("int"), col("code").cast("long"))
+
+  /** int64 `+` as Spark's `sum` does it: raising on overflow under ANSI. */
+  private def addL(a: Long, b: Long, exact: Boolean): Long =
+    if (exact) Math.addExact(a, b) else a + b
+
+  /** A collected `array<bigint>` column as the ArrayData the kernels
+    * read (null elements kept). */
+  private def arrayOf(r: org.apache.spark.sql.Row, i: Int): ArrayData =
+    new GenericArrayData(r.getSeq[Any](i).toArray)
+
+  /** A stored IVFADC index under `dir` as the serve reads it: the coarse
+    * and fine codebooks, and the cluster-partitioned code table with its
+    * key restored to long (partition read-back infers int). */
+  private def ivfpqStored(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
+    (s.read.parquet(s"$dir/coarse"), s.read.parquet(s"$dir/fine"),
+      s.read.parquet(s"$dir/codes").withColumn("cluster", col("cluster").cast("long")))
+
+  /** `sim_ann_ivfpq_delete`'s index: the shared read-only artifacts
+    * (persisted once per JVM — the roll never rewrites them), with the
+    * tombstoned vectors (vec_id % 10 = 7) removed from the code table
+    * by one broadcast anti-join at serve time. */
+  private def ivfpqDeleteIndex(s: SparkSession, d: String): (DataFrame, DataFrame, DataFrame) = {
+    val idxDir = graft.Staging.onceDir(s, "ivfpq_ro_idx", d) { p =>
+      sharedCoarse(s, d).write.mode("overwrite").parquet(s"$p/coarse")
+      sharedIvfpqFine(s, d).write.mode("overwrite").parquet(s"$p/fine")
+      sharedIvfpqCodes(s, d)
+        .write.mode("overwrite").partitionBy("cluster").parquet(s"$p/codes")
+    }
+    val (coarse, fine, codes) = ivfpqStored(s, idxDir)
+    val tomb = Tables.embeddings(s, d)
+      .filter(pmod(col("vec_id"), lit(10L)) === 7)
+      .select(col("vec_id"))
+    (coarse, fine, codes.join(broadcast(tomb), Seq("vec_id"), "left_anti"))
+  }
+
+  /** The frames the serve of `sim_ann_ivfpq_persisted` or
+    * `sim_ann_ivfpq_delete` scans: coarse codebook, fine codebook, and
+    * the code table cut to the probed clusters (this runs the query
+    * side's job). The judged result is a driver-built local relation,
+    * so plan guards read the scan shapes here — the
+    * `KmeansQueries.assignLineage` precedent. The persisted query must
+    * have run first: it writes the index this reads. */
+  private[graft] def ivfpqServeScans(s: SparkSession, d: String, name: String): Seq[DataFrame] = {
+    val (coarse, fine, codesC) = name match {
+      case "sim_ann_ivfpq_persisted" => ivfpqStored(s, graft.Staging.dir("ivfpqidx", d))
+      case "sim_ann_ivfpq_delete" => ivfpqDeleteIndex(s, d)
+    }
+    val (_, luts) = ivfpqQuerySide(ivfCorpus(s, d), coarse, fine, s.sessionState.conf.ansiEnabled)
+    Seq(coarse, fine, ivfpqCandidates(codesC, luts.keys))
   }
 
   /** DuckDB twin of the full IVFADC pipeline — shared verbatim by the
@@ -616,10 +779,8 @@ object VectorQueries2 {
       * shared build IS the training run, hash-gated here against an
       * oracle that retrains from scratch). */
     QueryDef("sim_ann_ivfpq", Some(ivfpqOracle)) { (s, d) =>
-      val v = ivfCorpus(s, d)
-      val coarse = sharedCoarse(s, d)
-      ivfpqServe(v, coarse, ivfProbes(v, coarse, 2),
-        sharedIvfpqFine(s, d), sharedIvfpqCodes(s, d))
+      ivfpqServe(ivfCorpus(s, d), sharedCoarse(s, d), sharedIvfpqFine(s, d),
+        sharedIvfpqCodes(s, d))
     },
 
     /** IVFADC nprobe RECALL DIAL — the measured cost/recall trade-off
@@ -687,11 +848,12 @@ object VectorQueries2 {
       * codebook (128 rows) → encode → WRITE all four artifacts to
       * parquet, the code table partitionBy(cluster) (the inverted-file
       * layout on disk) → serve purely from the re-read artifacts. The
-      * probe equi-join dynamic-partition-prunes the code-table scan to
-      * the probed clusters' directories (PlanShapeSpec asserts the
-      * dynamicpruning filter), so serving I/O is nprobe/k of the
-      * index — the FAISS `IVF8,PQ8` lifecycle expressed as Spark
-      * artifacts. Shares the in-lineage oracle verbatim. */
+      * probed cluster ids are known on the driver before the code-table
+      * scan is planned, so they prune it statically to the probed
+      * clusters' directories (PlanShapeSpec asserts the partition
+      * filter), and serving I/O is nprobe/k of the index — the FAISS
+      * `IVF8,PQ8` lifecycle expressed as Spark artifacts. Shares the
+      * in-lineage oracle verbatim. */
     QueryDef("sim_ann_ivfpq_persisted", Some(ivfpqOracle)) { (s, d) =>
       val v = ivfCorpus(s, d)
       val root = graft.Staging.dir("ivfpqidx", d)
@@ -701,16 +863,12 @@ object VectorQueries2 {
       // semantics of THIS query are the artifact lifecycle: write →
       // re-read → serve purely from disk
       sharedCoarse(s, d).write.mode("overwrite").parquet(s"$root/coarse")
-      val coarse = s.read.parquet(s"$root/coarse")
       sharedAsg(s, d).write.mode("overwrite").parquet(s"$root/assign")
       sharedIvfpqFine(s, d).write.mode("overwrite").parquet(s"$root/fine")
-      val fine = s.read.parquet(s"$root/fine")
       sharedIvfpqCodes(s, d)
         .write.mode("overwrite").partitionBy("cluster").parquet(s"$root/codes")
-      // partition-column read-back infers int; restore the long key
-      val codesC = s.read.parquet(s"$root/codes")
-        .withColumn("cluster", col("cluster").cast("long"))
-      ivfpqServe(v, coarse, ivfProbes(v, coarse, 2), fine, codesC)
+      val (coarse, fine, codesC) = ivfpqStored(s, root)
+      ivfpqServe(v, coarse, fine, codesC)
     },
 
     /** INCREMENTAL IVFADC maintenance — the flagship index's daily
@@ -753,7 +911,7 @@ object VectorQueries2 {
       // serve from the appended table (old + new)
       val codesC = s.read.parquet(s"$root/codes")
         .withColumn("cluster", col("cluster").cast("long"))
-      ivfpqServe(v, coarse, ivfProbes(v, coarse, 2), fine, codesC)
+      ivfpqServe(v, coarse, fine, codesC)
     },
 
     /** ONLINE IVFADC append (round 18) — `sim_ann_ivfpq_incremental`'s
@@ -799,7 +957,7 @@ object VectorQueries2 {
         .select(col("vec_id"), col("s"), col("code"), col("cluster"))
         .unionByName(OnlineFold.readLogs(s, s"$root/log/b*",
           "vec_id LONG, s INT, code LONG, cluster LONG"))
-      ivfpqServe(v, coarse, ivfProbes(v, coarse, 2), fine, codesC)
+      ivfpqServe(v, coarse, fine, codesC)
     },
 
     /** IVFADC index DELETION (round 16) — the flagship index's
@@ -829,28 +987,8 @@ object VectorQueries2 {
       * filtered lists and the re-rank fetches only shortlist ids. */
     QueryDef("sim_ann_ivfpq_delete",
         Some(ivfpqOracleCodes("WHERE k.vec_id % 10 <> 7"))) { (s, d) =>
-      val v = ivfCorpus(s, d)
-      // persist the standing artifacts ONCE per JVM (round-19, guide
-      // §1.2): the delete roll never rewrites the artifact — tombstones
-      // leave via the serve-time anti-join below — so all three parquet
-      // dirs are READ-ONLY here and share across bench samples exactly
-      // like stream_ann_serve's index (same bytes the persisted twin
-      // judges; that twin keeps its own per-sample write lifecycle)
-      val idxDir = graft.Staging.onceDir(s, "ivfpq_ro_idx", d) { p =>
-        sharedCoarse(s, d).write.mode("overwrite").parquet(s"$p/coarse")
-        sharedIvfpqFine(s, d).write.mode("overwrite").parquet(s"$p/fine")
-        sharedIvfpqCodes(s, d)
-          .write.mode("overwrite").partitionBy("cluster").parquet(s"$p/codes")
-      }
-      val coarse = s.read.parquet(s"$idxDir/coarse")
-      val fine = s.read.parquet(s"$idxDir/fine")
-      val tomb = Tables.embeddings(s, d)
-        .filter(pmod(col("vec_id"), lit(10L)) === 7)
-        .select(col("vec_id"))
-      val codesC = s.read.parquet(s"$idxDir/codes")
-        .withColumn("cluster", col("cluster").cast("long"))
-        .join(broadcast(tomb), Seq("vec_id"), "left_anti")
-      ivfpqServe(v, coarse, ivfProbes(v, coarse, 2), fine, codesC)
+      val (coarse, fine, codesC) = ivfpqDeleteIndex(s, d)
+      ivfpqServe(ivfCorpus(s, d), coarse, fine, codesC)
     },
 
     /** STREAMING ANN serving — the vector twin of `stream_dedup_index`:

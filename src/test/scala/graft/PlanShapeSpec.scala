@@ -335,14 +335,21 @@ class PlanShapeSpec extends AnyFunSuite {
     // tombstone set from a persisted index costs one broadcast
     // anti-join on the index scan — the index side must never
     // shuffle-exchange on the tombstone key
+    // sim_ann_ivfpq_delete serves a driver-built local relation, so its
+    // anti-join is read off the code-table scan its serve folds
+    def ivfpqDeleteScan = graft.queries.VectorQueries2
+      .ivfpqServeScans(spark, sf, "sim_ann_ivfpq_delete").last
+      .queryExecution.executedPlan.toString
     for (name <- Seq("dedup_minhash_index_delete", "sim_ann_ivfpq_delete",
         "dedup_containment_index_delete", "retrieval_bm25_index_delete",
         "dedup_simhash_index_delete")) {
-      val p = plan(name)
+      val p = if (name == "sim_ann_ivfpq_delete") ivfpqDeleteScan else plan(name)
       assert(p.contains("BroadcastHashJoin") && p.contains("LeftAnti"),
         s"$name: tombstone anti-join is not a broadcast hash join: " + p.take(2000))
       assert(!p.contains("SortMergeJoin LeftAnti"),
         s"$name: tombstone anti-join shuffled the index side")
+      if (name == "sim_ann_ivfpq_delete")
+        assert(!p.contains("SortMergeJoin"), s"$name: the code-table scan shuffle-joins: " + p.take(2000))
       assert(!p.contains("CartesianProduct"))
     }
   }
@@ -552,21 +559,26 @@ class PlanShapeSpec extends AnyFunSuite {
       "probe join must DPP the cluster-partitioned assignment scan: " + p.take(3000))
   }
 
-  test("sim_ann_ivfpq_persisted: serve reads the artifacts, DPP-prunes the code table") {
+  test("sim_ann_ivfpq_persisted: serve reads the artifacts, partition-prunes the code table") {
     // the composed IVFADC lifecycle: serving must scan the persisted
     // coarse codebook, fine (residual) codebook, and cluster-partitioned
     // code table — and must NOT re-run either trainer or the corpus
-    // residual encode. The only Generate allowed in the serving lineage
-    // is the query-side residual sub-split (10 probe rows → 80 subs);
-    // any corpus-side training/encode would add its own posexplode
-    // chains, caught by the count bound.
-    val p = plan("sim_ann_ivfpq_persisted")
+    // residual encode. The serve returns a driver-built local relation,
+    // so the guard reads the frames it scans (coarse, fine, and the code
+    // table cut to the probed clusters); any corpus-side training/encode
+    // would add its own posexplode chains, caught by the Generate bound.
+    SparkEntry.queries("sim_ann_ivfpq_persisted")(spark, sf)
+    val p = graft.queries.VectorQueries2.ivfpqServeScans(spark, sf, "sim_ann_ivfpq_persisted")
+      .map(_.queryExecution.executedPlan.toString).mkString("\n")
     assert(p.contains("ivfpqidx"),
       "serve must read the persisted ivfpq artifacts: " + p.take(2000))
     assert(p.contains("coarse") && p.contains("fine") && p.contains("codes"),
       "serve must scan the coarse/fine/codes artifacts: " + p.take(2000))
-    assert(p.contains("dynamicpruning"),
-      "probe join must DPP the cluster-partitioned code-table scan: " + p.take(3000))
+    // the probed cluster ids are known before the scan is planned, so
+    // the cut is a static partition filter: only the probed clusters'
+    // directories are listed and read
+    assert("PartitionFilters: \\[[^\\]]*cluster[^\\]]* IN \\(".r.findFirstIn(p).nonEmpty,
+      "the probed clusters must prune the cluster-partitioned code-table scan: " + p.take(3000))
     assert(!p.contains("CartesianProduct"))
     assert("Generate".r.findAllIn(p).size <= 1,
       "corpus training/encode leaked into the serving lineage")

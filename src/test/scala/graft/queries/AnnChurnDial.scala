@@ -22,53 +22,12 @@ import graft.functions.VectorFunctions._
   * top-5; recall@5 against the brute-force exact top-5 over S.
   * Deterministic (Lloyd from fixed seeds, integer arithmetic).
   *
-  * The probe, serve and exact helpers take the query set as a
+  * The serve ([[IvfpqTwin]]) and exact helpers take the query set as a
   * parameter: the engine's versions pin vec_id < 5, and 20 queries give
   * the dial 100 neighbor slots. */
 object AnnChurnDial {
 
   private val NQueries = 20
-
-  private def probesOf(queries: DataFrame, cents: DataFrame, nprobe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_id"))
-    queries.crossJoin(broadcast(cents))
-      .withColumn("csim", cosineFromQ(qdot(col("q"), col("cq")), col("n2"), col("cn2")))
-      .withColumn("rn", row_number().over(w)).filter(col("rn") <= nprobe)
-      .select(col("vec_id").as("q_id"), col("c_id").as("cluster"))
-  }
-
-  /** IVFADC serve (the VectorQueries2.ivfpqServe shape): per-(query,
-    * probed-cell) residual LUT, ADC sum, top-50 shortlist, exact
-    * re-rank, top-5 ids per query. */
-  private def serve(vS: DataFrame, queries: DataFrame, coarse: DataFrame,
-      fine: DataFrame, codes: DataFrame, nprobe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val probes = probesOf(queries, coarse, nprobe)
-    val qres = probes
-      .join(queries.select(col("vec_id").as("q_id"), col("q")), Seq("q_id"))
-      .join(broadcast(coarse.select(col("c_id").as("cluster"), col("cq"))), Seq("cluster"))
-      .select(col("q_id"), col("cluster"),
-        qsub(col("q"), col("cq")).as("r"))
-    val qsubs = qres.select(col("q_id"), col("cluster"), posexplode(array(
-        (0 until 8).map(t => slice(col("r"), t * 8 + 1, 8)): _*)).as(Seq("s", "sub")))
-      .withColumn("sn2", qdot(col("sub"), col("sub")))
-    val lut = qsubs.join(broadcast(fine), Seq("s"))
-      .withColumn("d2", col("sn2") + col("cn2") - lit(2L) * qdot(col("sub"), col("csub")))
-      .select(col("q_id"), col("cluster"), col("s"), col("c_id").as("code"), col("d2"))
-    val cand = probes.join(codes, Seq("cluster")).filter(col("vec_id") =!= col("q_id"))
-    val adc = cand.join(broadcast(lut), Seq("q_id", "cluster", "s", "code"))
-      .groupBy(col("q_id"), col("vec_id")).agg(sum(col("d2")).as("adc"))
-    val wS = Window.partitionBy(col("q_id")).orderBy(col("adc"), col("vec_id"))
-    val short = adc.withColumn("srn", row_number().over(wS)).filter(col("srn") <= 50)
-      .select(col("q_id"), col("vec_id"))
-    val qa = queries.select(col("vec_id").as("q_id"), col("q").as("qq"), col("n2").as("qn2"))
-    val scored = short.join(broadcast(qa), Seq("q_id")).join(vS, Seq("vec_id"))
-      .withColumn("cosine", cosineFromQ(qdot(col("qq"), col("q")), col("qn2"), col("n2")))
-    val wR = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(wR)).filter(col("rnk") <= 5)
-      .select(col("q_id"), col("vec_id"))
-  }
 
   /** Brute-force exact top-5 over the standing corpus. */
   private def exact(vS: DataFrame, queries: DataFrame): DataFrame = {
@@ -112,7 +71,8 @@ object AnnChurnDial {
       val codes = VectorQueries.pqEncode(
           VectorQueries2.ivfpqResiduals(vS, coarse, asgS), fine)
         .join(asgS, Seq("vec_id")).localCheckpoint()
-      recallAt5(serve(vS, queries, coarse, fine, codes, nprobe = 2), ex)
+      recallAt5(IvfpqTwin.serve(vS, queries, coarse, fine, codes, nprobe = 2)
+        .select(col("q_id"), col("vec_id")), ex)
     }
 
     (buildAndServe(vB), buildAndServe(vS), vS.count())

@@ -8,8 +8,9 @@ SURVEY said 163 while the judged surface was 164).
 
 The code-size counts cover the Scala sources under src/main: lines
 (as `wc -l` counts them), `SparkSession.builder` sites, `def main(`
-entry points, and lines citing "round N" history (case-insensitive
-`round 12` / `round-12`).
+entry points, lines citing "round N" history (case-insensitive
+`round 12` / `round-12`), and the `row_number().over` window sites in
+the query modules.
 
 Usage: python3 tools/counts.py [verify_outDir]
        python3 tools/counts.py --stamp
@@ -49,6 +50,10 @@ print(f"SparkSession.builder sites: "
       f"{sum('SparkSession.builder' in l for l in main_lines)}")
 print(f"def main( objects: {sum('def main(' in l for l in main_lines)}")
 print(f'"round N" history lines: {sum(bool(history.search(l)) for l in main_lines)}')
+# window top-k sites in the query modules (Column API, not oracle SQL)
+print("row_number().over sites under src/main/.../queries: " + str(sum(
+    open(f).read().count("row_number().over")
+    for f in glob.glob("src/main/scala/graft/queries/*.scala"))))
 
 if "--stamp" in sys.argv:
     rounds = [int(m.group(1)) for p in glob.glob("CORRECTNESS_r*.json")
