@@ -559,7 +559,7 @@ class PlanShapeSpec extends AnyFunSuite {
       "probe join must DPP the cluster-partitioned assignment scan: " + p.take(3000))
   }
 
-  test("sim_ann_ivfpq_persisted: serve reads the artifacts, partition-prunes the code table") {
+  test("sim_ann_ivfpq_persisted: serve reads the artifacts, DPP-prunes the code table") {
     // the composed IVFADC lifecycle: serving must scan the persisted
     // coarse codebook, fine (residual) codebook, and cluster-partitioned
     // code table — and must NOT re-run either trainer or the corpus
@@ -575,8 +575,8 @@ class PlanShapeSpec extends AnyFunSuite {
     assert(p.contains("coarse") && p.contains("fine") && p.contains("codes"),
       "serve must scan the coarse/fine/codes artifacts: " + p.take(2000))
     // the probed cluster ids are known before the scan is planned, so
-    // the cut is a static partition filter: only the probed clusters'
-    // directories are listed and read
+    // the partition pruning is static, not a runtime dynamicpruning
+    // subquery: only the probed clusters' directories are listed and read
     assert("PartitionFilters: \\[[^\\]]*cluster[^\\]]* IN \\(".r.findFirstIn(p).nonEmpty,
       "the probed clusters must prune the cluster-partitioned code-table scan: " + p.take(3000))
     assert(!p.contains("CartesianProduct"))
