@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   * production at larger N drops the ppm scale a decade per 10× N
   * (the ranking only needs the RATIO precision, not the magnitude).
   *
-  * `retrieval_hybrid_rrf` (round 14) adds the fusion every production
+  * `retrieval_hybrid_rrf` adds the fusion every production
   * retrieval stack runs on top: reciprocal-rank fusion (Cormack et al.,
   * SIGIR'09) of the sparse BM25 ranking with a dense exact-cosine
   * ranking for the same probe ids.
@@ -96,8 +96,8 @@ object RetrievalQueries {
     // query terms BEFORE the aggregate instead.
     // tf checkpoints because FOUR consumers (dfq, posting, dl, stats)
     // would otherwise each re-run the tokenize+count subtree — the
-    // plan carried 4 identical (doc_id, term) exchanges (round 19); at
-    // any corpus size that is 4 corpus passes where 1 suffices.
+    // plan would carry 4 identical (doc_id, term) exchanges; at any
+    // corpus size that is 4 corpus passes where 1 suffices.
     val (tf, dl, _, stats) = indexComponents(
       Tables.documents(s, d), checkpoint = true)
     val q = bmQueries.toDF("query_id", "term")
@@ -225,8 +225,8 @@ object RetrievalQueries {
         .write.mode("overwrite").parquet(s"$p/tf")
       // dl/df/stats derive from the postings JUST WRITTEN (exact
       // counts off tf — identical values): one tokenize pass per
-      // build instead of four (round 19; the plan re-ran the
-      // explode+count subtree per derived component)
+      // build instead of four (one explode+count subtree per derived
+      // component)
       val (dl, df, stats) = componentsFromTf(docs.sparkSession.read.parquet(s"$p/tf"))
       dl.write.mode("overwrite").parquet(s"$p/dl")
       df.write.mode("overwrite").parquet(s"$p/df")
@@ -445,19 +445,14 @@ object RetrievalQueries {
       FROM fr WHERE rnk <= 10 ORDER BY query_id, rnk""")) { (s, d) =>
       val sr = bm25TopK(s, d).select(col("query_id"), col("doc_id"),
         col("rnk").as("sparse_rnk"))
-      val v = Tables.embeddings(s, d)
-        .select(col("vec_id"), quantize(col("embedding")).as("q"))
-        .withColumn("n2", qdot(col("q"), col("q")))
+      val v = VectorQueries.ivfCorpus(s, d)
       val dqv = v.filter(col("vec_id") < 3)
         .select(col("vec_id").as("query_id"), col("q").as("qq"), col("n2").as("qn2"))
-      val wD = Window.partitionBy(col("query_id"))
-        .orderBy(col("cosine").desc, col("doc_id"))
-      val dr = v.crossJoin(broadcast(dqv))
-        .select(col("query_id"), col("vec_id").as("doc_id"),
-          cosineFromQ(qdot(col("q"), col("qq")), col("n2"), col("qn2")).as("cosine"))
-        .withColumn("dense_rnk", row_number().over(wD).cast("long"))
-        .filter(col("dense_rnk") <= 10)
-        .select(col("query_id"), col("doc_id"), col("dense_rnk"))
+      val dr = VectorQueries.cosineTopK(v.crossJoin(broadcast(dqv))
+          .select(col("query_id"), col("vec_id").as("doc_id"),
+            cosineFromQ(qdot(col("q"), col("qq")), col("n2"), col("qn2")).as("cosine")),
+          "query_id", "doc_id", 10)
+        .select(col("query_id"), col("doc_id"), col("rnk").as("dense_rnk"))
       val wF = Window.partitionBy(col("query_id"))
         .orderBy(col("rrf_ppm").desc, col("doc_id"))
       sr.join(dr, Seq("query_id", "doc_id"), "full")

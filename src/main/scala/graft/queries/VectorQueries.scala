@@ -2,6 +2,8 @@ package graft.queries
 
 import graft.Tables
 import graft.functions.VectorFunctions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Embedding similarity search over the `embeddings` fixture.
@@ -11,6 +13,12 @@ import org.apache.spark.sql.functions._
   * streams; the query side stays broadcast — no shuffle). `sim_ann_lsh`
   * is the scale path: random-hyperplane buckets turn the cross join
   * into an equi-join on the bucket key.
+  *
+  * Shared helpers: every query reads the quantized corpus through
+  * [[ivfCorpus]]; every exact re-rank, probe list and candidate pool
+  * ranks through [[cosineTopK]] (the IVFADC serve ranks on the driver
+  * with the bounded top-k kernel, see [[VectorQueries2.ivfpqServe]]);
+  * and the three ANN recall dials share one tail, [[recallAt5]].
   *
   * Parity: int64-quantized components (see VectorFunctions) make dot
   * products exact integers in both engines; cosine then divides
@@ -54,8 +62,6 @@ object VectorQueries {
       s"SELECT vec_id, $t AS t, $bexpr AS b FROM n"
     }.mkString(" UNION ALL ")
 
-  import org.apache.spark.sql.{DataFrame, SparkSession}
-
   /** DuckDB twin of the full LSH ANN query — shared between
     * `sim_ann_lsh` and the `sim_ann_recall` quality dial. */
   private def oracleAnnLsh: String = s"""
@@ -84,10 +90,7 @@ object VectorQueries {
   /** The LSH ANN pipeline (the `sim_ann_lsh` body) — shared with
     * `sim_ann_recall`. */
   private def annLsh(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val v = Tables.embeddings(s, d)
-      .select(col("vec_id"), quantize(col("embedding")).as("q"))
-      .withColumn("n2", qdot(col("q"), col("q")))
+    val v = ivfCorpus(s, d)
     val banded = graft.operators.ScaleOps.capBuckets(
       v.select(col("vec_id"), col("q"), col("n2"), explode(array(
         (0 until lshTables).map(t => struct(lit(t).as("t"),
@@ -97,55 +100,88 @@ object VectorQueries {
       Seq("t", "b"), "vec_id", cap = 1000)
     val queries = banded.filter(col("vec_id") < 5)
       .select(col("t"), col("b"), col("vec_id").as("q_id"), col("q").as("qq"), col("n2").as("qn2"))
-    // score BEFORE the cross-table dedup (round 19, session 4): the
-    // previous dropDuplicates carried q/qq arrays through first()
-    // aggregates — array buffers fail the hash-aggregate buffer check
-    // (the ArgMaxBy lesson), so the dedup planned as TWO SortAggregates
-    // sorting every candidate WITH its payload. Cosine is a pure
-    // function of the (q_id, vec_id) pair, identical across its ≤12
-    // table duplicates, so scoring first is value-identical while the
-    // dedup shuffles three narrow columns through a map-side-combined
-    // HashAggregate (guide §2.3: shuffle keys and metadata, not
-    // payloads — the candidate stream is the cost center of LSH ANN
-    // serving at scale).
-    val pairs = banded.join(queries, Seq("t", "b"))
+    // score BEFORE the cross-table dedup: a dedup first carries the q/qq
+    // arrays through first() aggregates — array buffers fail the
+    // hash-aggregate buffer check (the ArgMaxBy lesson), so it plans as
+    // TWO SortAggregates sorting every candidate WITH its payload.
+    // Cosine is a pure function of the (q_id, vec_id) pair, identical
+    // across its ≤12 table duplicates, so scoring first is
+    // value-identical while the dedup shuffles three narrow columns
+    // through a map-side-combined HashAggregate (guide §2.3: shuffle
+    // keys and metadata, not payloads — the candidate stream is the
+    // cost center of LSH ANN serving at scale).
+    served(banded.join(queries, Seq("t", "b"))
       .filter(col("vec_id") =!= col("q_id"))
       .withColumn("cosine",
         cosineFromQ(qdot(col("q"), col("qq")), col("n2"), col("qn2")))
       .select(col("q_id"), col("vec_id"), col("cosine"))
-      .dropDuplicates("q_id", "vec_id")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    pairs.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 5)
+      .dropDuplicates("q_id", "vec_id"))
+  }
+
+  /** The vector family's cosine top-k: per `group`, rank by `cosine`
+    * descending as Spark orders doubles (NaN largest, nulls last), ties
+    * to the lowest `id`, keep `k` and number them `rnk` as a long — the
+    * oracles' `row_number() OVER (PARTITION BY group ORDER BY cosine
+    * DESC, id)`. */
+  private[queries] def cosineTopK(scored: DataFrame, group: String, id: String,
+      k: Int): DataFrame = {
+    val w = Window.partitionBy(col(group)).orderBy(col("cosine").desc, col(id))
+    scored.withColumn("rnk", row_number().over(w).cast("long")).filter(col("rnk") <= k)
+  }
+
+  /** The judged top-5 `(q_id, vec_id, rnk, round(cosine, 6))` of scored
+    * `(q_id, vec_id, cosine)` candidates, ordered by (q_id, rnk). */
+  private def served(scored: DataFrame): DataFrame =
+    cosineTopK(scored, "q_id", "vec_id", 5)
       .select(col("q_id"), col("vec_id"), col("rnk"), round(col("cosine"), 6).as("cosine"))
       .orderBy(col("q_id"), col("rnk"))
+
+  /** Every vector of `v(vec_id, q, n2)` scored by `cosine` against each
+    * query vector (vec_id < 5, under `q_id`) other than itself. */
+  private[queries] def queryPairs(v: DataFrame): DataFrame = {
+    val queries = v.filter(col("vec_id") < 5)
+      .select(col("vec_id").as("q_id"), col("q").as("qq"), col("n2").as("qn2"))
+    v.join(broadcast(queries), col("vec_id") =!= col("q_id"))
+      .withColumn("cosine",
+        cosineFromQ(qdot(col("q"), col("qq")), col("n2"), col("qn2")))
   }
 
   /** Exact brute-force top-5 (the `sim_cosine_topk` body) — shared so
-    * `sim_ann_recall` measures recall against the SAME baseline the
+    * the recall dials measure recall against the SAME baseline the
     * judged exact query emits. */
-  private[queries] def exactTopk(s: SparkSession, d: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val v = Tables.embeddings(s, d)
-      .select(col("vec_id"), quantize(col("embedding")).as("q"))
-      .withColumn("n2", qdot(col("q"), col("q")))
-    val queries = v.filter(col("vec_id") < 5)
-      .select(col("vec_id").as("q_id"), col("q").as("qq"), col("n2").as("qn2"))
-    val pairs = v.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-      .withColumn("cosine",
-        cosineFromQ(qdot(col("q"), col("qq")), col("n2"), col("qn2")))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    pairs.withColumn("rnk", row_number().over(w).cast("long"))
-      .filter(col("rnk") <= 5)
-      .select(col("q_id"), col("vec_id"), col("rnk"), round(col("cosine"), 6).as("cosine"))
-      .orderBy(col("q_id"), col("rnk"))
+  private[queries] def exactTopk(s: SparkSession, d: String): DataFrame =
+    served(queryPairs(ivfCorpus(s, d)))
+
+  /** The nprobe depths the IVF and IVFADC recall dials evaluate. */
+  private[queries] val dialProbes = Seq(1, 2, 4)
+
+  /** The recall tail of the three ANN dials: recall@5 of the ANN hits
+    * `ann(q_id, vec_id)` against [[exactTopk]]. Each exact neighbour
+    * left-joins to the hits and each query counts its hits. With
+    * `nprobes`, `ann` also carries the `nprobe` it was served at, and
+    * each depth is counted against the same exact set, per
+    * (nprobe, q_id). */
+  private[queries] def recallAt5(s: SparkSession, d: String, ann: DataFrame,
+      nprobes: Seq[Int] = Nil): DataFrame = {
+    import s.implicits._
+    val keys = (if (nprobes.isEmpty) Nil else Seq("nprobe")) :+ "q_id"
+    val ex = exactTopk(s, d).select(col("q_id"), col("vec_id"))
+    val exact =
+      if (nprobes.isEmpty) ex else broadcast(nprobes.map(_.toLong).toDF("nprobe")).crossJoin(ex)
+    val hit = keys :+ "vec_id"
+    exact.join(ann.select(hit.map(c => col(c).as(s"a_$c")): _*),
+        hit.map(c => col(s"a_$c") === col(c)).reduce(_ && _), "left")
+      .groupBy(keys.map(col): _*).agg(count(col("a_vec_id")).as("n_hits"))
+      .select(keys.map(col) ++ Seq(col("n_hits"),
+        round(col("n_hits").cast("double") / 5, 6).as("recall_at_5")): _*)
+      .orderBy(keys.map(col): _*)
   }
 
   /** Embedding near-dup candidate pairs `(id_a, id_b, cosine)` (id_a <
     * id_b, deduped across bands, NO similarity threshold — callers
     * filter) over any `(vec_id, q)` quantized input. Blocking is 4
     * banded 4-bit axis-sign tables over disjoint dim slices: the
-    * round-7 dial measured 0.45 recall for the single dims-0-3 table
+    * planted-pair dial measured 0.45 recall for the single dims-0-3 table
     * on planted cosine-0.89 near-dups (one near-zero component flips
     * its sign and the pair never meets) vs 0.9 banded. Shared by
     * `dedup_embedding_cosine` and `dedup_embedding_recall`. */
@@ -363,7 +399,9 @@ object VectorQueries {
     s"$init,$rounds,\n      c AS (SELECT * FROM kc$kmeansIters)"
   }
 
-  /** Quantized corpus `(vec_id, q, n2)` — the shared IVF input frame. */
+  /** Quantized corpus `(vec_id, q, n2)` — the one corpus frame of the
+    * vector family: the exact, LSH, IVF, PQ and IVFADC queries, MMR and
+    * the dense retrieval leg all read it. */
   private[queries] def ivfCorpus(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d)
       .select(col("vec_id"), quantize(col("embedding")).as("q"))
@@ -372,8 +410,8 @@ object VectorQueries {
   /** The FULL-corpus coarse codebook (k=8, Lloyd-refined), trained
     * ONCE per JVM and shared by every consumer of the standing index —
     * ivf_recall, the persisted/streaming serve twins, semantic dedup,
-    * and the whole IVFADC family (round-11 verdict item 1: seven
-    * queries each retrained the identical codebook). Pure function of
+    * and the whole IVFADC family (otherwise seven queries each retrain
+    * the identical codebook). Pure function of
     * sfDir — exactly Staging.frame's contract; `sim_ann_ivf` remains
     * the one deliberately UNshared query, so every run still witnesses
     * the full in-lineage training chain end-to-end, and every shared
@@ -402,9 +440,8 @@ object VectorQueries {
     }
 
   /** The DAY-1 (base-slice, vec_id % 10 != 9) plain-PQ codebook,
-    * trained once per JVM for `sim_ann_pq_incremental` — round-19
-    * optimization: the query previously re-ran the full day-1 Lloyd
-    * train per bench rep. Pure function of (corpus slice, seeds) —
+    * trained once per JVM for `sim_ann_pq_incremental`, so the query
+    * does not re-run the full day-1 Lloyd train per bench rep. Pure function of (corpus slice, seeds) —
     * Staging.frame's contract — and the consumer's oracle retrains
     * from scratch, so the memoized artifact stays fully hash-gated. */
   private[queries] def sharedPqBaseFine(s: SparkSession, d: String): DataFrame =
@@ -425,19 +462,14 @@ object VectorQueries {
       .select(col("vec_id"),
         nearestCentroid(col("q"), col("n2"), col("cb"), l2 = false).as("cluster"))
 
-  /** Probe list `(q_id, cluster, probe_rank)`: top-`maxProbe` centroids
-    * per query vector (vec_id < 5) by cosine — only the tiny query side
-    * meets the codebook, so probing cost is independent of corpus size.
-    * `probe_rank` is retained so the nprobe recall dial can evaluate
-    * several probe depths off ONE frame. */
-  private[queries] def ivfProbes(v: DataFrame, cents: DataFrame, maxProbe: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val wAsg = Window.partitionBy(col("vec_id")).orderBy(col("csim").desc, col("c_id"))
-    v.filter(col("vec_id") < 5).crossJoin(broadcast(cents))
-      .withColumn("csim", cosineFromQ(qdot(col("q"), col("cq")), col("n2"), col("cn2")))
-      .withColumn("rn", row_number().over(wAsg)).filter(col("rn") <= maxProbe)
-      .select(col("vec_id").as("q_id"), col("c_id").as("cluster"), col("rn").as("probe_rank"))
-  }
+  /** Probe list `(q_id, cluster)`: the top-`nprobe` centroids per query
+    * vector (vec_id < 5) by cosine — only the tiny query side meets the
+    * codebook, so probing cost is independent of corpus size. */
+  private[queries] def ivfProbes(v: DataFrame, cents: DataFrame, nprobe: Int): DataFrame =
+    cosineTopK(v.filter(col("vec_id") < 5).crossJoin(broadcast(cents))
+        .withColumn("cosine", cosineFromQ(qdot(col("q"), col("cq")), col("n2"), col("cn2"))),
+      "vec_id", "c_id", nprobe)
+      .select(col("vec_id").as("q_id"), col("c_id").as("cluster"))
 
   /** IVF online serve: candidates = union of the probed clusters'
     * members (equi-join on cluster id — searches touch ONLY probed
@@ -445,20 +477,14 @@ object VectorQueries {
     * broadcasts; the corpus side is driven by the (possibly
     * disk-resident) assignment table. */
   private[queries] def ivfServe(v: DataFrame, probes: DataFrame, asg: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val cand = probes.select(col("q_id"), col("cluster")).join(asg, Seq("cluster"))
+    val cand = probes.join(asg, Seq("cluster"))
       .filter(col("vec_id") =!= col("q_id"))
       .select(col("q_id"), col("vec_id"))
     val qa = v.select(col("vec_id").as("q_id"), col("q").as("qq"), col("n2").as("qn2"))
-    val scored = cand
+    served(cand
       .join(broadcast(qa), Seq("q_id"))
       .join(v, Seq("vec_id"))
-      .withColumn("cosine", cosineFromQ(qdot(col("qq"), col("q")), col("qn2"), col("n2")))
-    val wR = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(wR).cast("long"))
-      .filter(col("rnk") <= 5)
-      .select(col("q_id"), col("vec_id"), col("rnk"), round(col("cosine"), 6).as("cosine"))
-      .orderBy(col("q_id"), col("rnk"))
+      .withColumn("cosine", cosineFromQ(qdot(col("qq"), col("q")), col("qn2"), col("n2"))))
   }
 
   /** DuckDB twin of the full IVF pipeline — shared verbatim by
@@ -603,9 +629,7 @@ object VectorQueries {
   /** Quantized corpus `v(vec_id, q, n2)` + sub-vector frame
     * `subs(vec_id, s, sub, sn2)`. */
   private def pqCorpus(s: SparkSession, d: String): (DataFrame, DataFrame) = {
-    val v = Tables.embeddings(s, d)
-      .select(col("vec_id"), quantize(col("embedding")).as("q"))
-      .withColumn("n2", qdot(col("q"), col("q")))
+    val v = ivfCorpus(s, d)
     val subs = v.select(col("vec_id"), posexplode(array(
         (0 until 8).map(t => slice(col("q"), t * 8 + 1, 8)): _*)).as(Seq("s", "sub")))
       .withColumn("sn2", qdot(col("sub"), col("sub")))
@@ -646,7 +670,6 @@ object VectorQueries {
     * fetched by id. The corpus side touches ONLY the code table. */
   private def pqServe(s: SparkSession, v: DataFrame, codes: DataFrame,
       lut: DataFrame): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val adc = codes.join(broadcast(lut), Seq("s", "code"))
       .filter(col("vec_id") =!= col("q_id"))
       .groupBy(col("q_id"), col("vec_id")).agg(sum(col("d2")).as("adc"))
@@ -655,13 +678,8 @@ object VectorQueries {
       .select(col("q_id"), col("vec_id"))
     val qa = v.filter(col("vec_id") < 5)
       .select(col("vec_id").as("q_id"), col("q").as("qq"), col("n2").as("qn2"))
-    val scored = short.join(broadcast(qa), Seq("q_id")).join(v, Seq("vec_id"))
-      .withColumn("cosine", cosineFromQ(qdot(col("qq"), col("q")), col("qn2"), col("n2")))
-    val wR = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-    scored.withColumn("rnk", row_number().over(wR).cast("long"))
-      .filter(col("rnk") <= 5)
-      .select(col("q_id"), col("vec_id"), col("rnk"), round(col("cosine"), 6).as("cosine"))
-      .orderBy(col("q_id"), col("rnk"))
+    served(short.join(broadcast(qa), Seq("q_id")).join(v, Seq("vec_id"))
+      .withColumn("cosine", cosineFromQ(qdot(col("qq"), col("q")), col("qn2"), col("n2"))))
   }
 
 
@@ -697,7 +715,7 @@ object VectorQueries {
       * real embedding corpora cluster, making buckets far more
       * selective), and QueriesSpec MEASURES recall@5 vs the
       * brute-force baseline and asserts the >= 0.8 floor (12 x 4-bit
-      * measures 0.88; 2 x 4-bit measured only 0.28, the round-5 gap). */
+      * measures 0.88; 2 x 4-bit measured only 0.28). */
     QueryDef("sim_ann_lsh", Some(oracleAnnLsh))(annLsh),
 
     /** The ANN quality dial UNDER THE ORACLE GATE: recall@5 of the LSH
@@ -717,19 +735,13 @@ object VectorQueries {
       SELECT q_id, CAST(n_hits AS BIGINT) AS n_hits,
              round(CAST(n_hits AS DOUBLE) / 5, 6) AS recall_at_5
       FROM j ORDER BY q_id""")) { (s, d) =>
-      val e = exactTopk(s, d).select(col("q_id"), col("vec_id"))
-      val a = annLsh(s, d).select(col("q_id").as("a_q"), col("vec_id").as("a_v"))
-      e.join(a, col("a_q") === col("q_id") && col("a_v") === col("vec_id"), "left")
-        .groupBy(col("q_id")).agg(count(col("a_v")).as("n_hits"))
-        .select(col("q_id"), col("n_hits"),
-          round(col("n_hits").cast("double") / 5, 6).as("recall_at_5"))
-        .orderBy(col("q_id"))
+      recallAt5(s, d, annLsh(s, d))
     },
 
     /** IVF (inverted-file) ANN: coarse quantizer = k-means codebook
       * seeded from vec_id < 8 and refined by [[kmeansIters]] Lloyd
-      * rounds (see [[lloydCentroids]] — integer-exact, oracle-mirrored;
-      * the pre-round-8 stand-in used the raw seeds). The partition
+      * rounds (see [[lloydCentroids]] — integer-exact, oracle-mirrored).
+      * The partition
       * assignment machinery is what matters at scale: one shuffle on
       * cluster id, searches touch only probed clusters. Deterministic
       * integer scoring makes even this ANN variant oracle-checkable.
@@ -741,9 +753,8 @@ object VectorQueries {
     },
 
     /** PERSISTED IVF serving — the index-lifecycle completion of
-      * `sim_ann_ivf` (the round-8 verdict's one design weakness: Lloyd
-      * training ran inside the serving query on every execution, the
-      * scale-killer at 100 TB). Here the expensive build runs once
+      * `sim_ann_ivf`, where Lloyd training runs inside the serving query
+      * on every execution (the scale-killer at 100 TB). Here the expensive build runs once
       * offline: train the coarse quantizer, WRITE the centroids (k tiny
       * rows) and the full partition-assignment table to parquet, then
       * serve probes purely from the re-read artifacts — the plan scans
@@ -758,10 +769,10 @@ object VectorQueries {
       val v = ivfCorpus(s, d)
       val root = graft.Staging.dir("ivfidx", d)
       // offline build: the once-per-JVM shared training artifacts
-      // ([[sharedCoarse]]/[[sharedAsg]] — round-11 memoization; the
-      // assignment is a pure function of the codebook, so writing the
-      // memoized frame is value-identical to re-assigning off the
-      // persisted one) are persisted here; trainer and indexer may be
+      // ([[sharedCoarse]]/[[sharedAsg]]; the assignment is a pure
+      // function of the codebook, so writing the memoized frame is
+      // value-identical to re-assigning off the persisted one) are
+      // persisted here; trainer and indexer may be
       // different jobs on different days. The assignment table is
       // PARTITIONED BY cluster on disk — the inverted-file layout
       // itself: a probe's equi-join against the tiny probe list
@@ -784,8 +795,8 @@ object VectorQueries {
     /** The IVF recall/cost dial UNDER THE ORACLE GATE — the nprobe twin
       * of `sim_ann_recall` (which judges the LSH index): recall@5 of
       * IVF serving vs the brute-force baseline at nprobe ∈ {1, 2, 4},
-      * all three depths evaluated off ONE probe frame (probe_rank ≤
-      * nprobe). Candidates at a deeper probe are a superset, and any
+      * each depth served by [[ivfServe]] itself, the serve the judged
+      * IVF queries run. Candidates at a deeper probe are a superset, and any
       * exact-top-5 member present among candidates necessarily survives
       * the exact-cosine re-rank, so measured recall is monotone in
       * nprobe by construction — QueriesSpec asserts the monotonicity
@@ -835,32 +846,9 @@ object VectorQueries {
       SELECT nprobe, q_id, CAST(n_hits AS BIGINT) AS n_hits,
              round(CAST(n_hits AS DOUBLE) / 5, 6) AS recall_at_5
       FROM j ORDER BY nprobe, q_id""")) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      import s.implicits._
-      val v = ivfCorpus(s, d)
-      val cents = sharedCoarse(s, d)
-      val asg = sharedAsg(s, d)
-      val pr = ivfProbes(v, cents, 4)
-      val np = broadcast(Seq(1L, 2L, 4L).toDF("nprobe"))
-      val cand = np.crossJoin(pr).filter(col("probe_rank") <= col("nprobe"))
-        .join(asg, Seq("cluster"))
-        .filter(col("vec_id") =!= col("q_id"))
-        .select(col("nprobe"), col("q_id"), col("vec_id"))
-      val qa = v.select(col("vec_id").as("q_id"), col("q").as("qq"), col("n2").as("qn2"))
-      val scored = cand.join(broadcast(qa), Seq("q_id")).join(v, Seq("vec_id"))
-        .withColumn("cosine", cosineFromQ(qdot(col("qq"), col("q")), col("qn2"), col("n2")))
-      val wR = Window.partitionBy(col("nprobe"), col("q_id"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-      val ann = scored.withColumn("rnk", row_number().over(wR)).filter(col("rnk") <= 5)
-        .select(col("nprobe").as("a_np"), col("q_id").as("a_q"), col("vec_id").as("a_v"))
-      val ex = exactTopk(s, d).select(col("q_id"), col("vec_id"))
-      np.crossJoin(ex)
-        .join(ann, col("a_np") === col("nprobe") && col("a_q") === col("q_id") &&
-          col("a_v") === col("vec_id"), "left")
-        .groupBy(col("nprobe"), col("q_id")).agg(count(col("a_v")).as("n_hits"))
-        .select(col("nprobe"), col("q_id"), col("n_hits"),
-          round(col("n_hits").cast("double") / 5, 6).as("recall_at_5"))
-        .orderBy(col("nprobe"), col("q_id"))
+      val (v, cents, asg) = (ivfCorpus(s, d), sharedCoarse(s, d), sharedAsg(s, d))
+      recallAt5(s, d, dialProbes.map(np => ivfServe(v, ivfProbes(v, cents, np), asg)
+        .withColumn("nprobe", lit(np.toLong))).reduce(_ union _), dialProbes)
     },
 
     /** Product-quantization ANN (Jégou et al., "Product Quantization
@@ -871,9 +859,8 @@ object VectorQueries {
       * the code table plus a per-query lookup table, never the raw
       * vectors. Pipeline: 8 subspaces x 8 dims, k=16 centroids per
       * subspace, TRAINED by per-subspace Lloyd iterations seeded from
-      * the vec_id < 16 sub-vectors ([[lloydSubCentroids]] — round-8
-      * upgrade from the seed stand-in, integer-exact and
-      * oracle-mirrored); encode = nearest centroid per (vector,
+      * the vec_id < 16 sub-vectors ([[lloydSubCentroids]] —
+      * integer-exact and oracle-mirrored); encode = nearest centroid per (vector,
       * subspace) by squared-L2; query-time ADC = per-query distance LUT summed over
       * the 8 codes; ADC shortlist of 50 is then re-ranked by EXACT
       * cosine — the standard ADC+re-rank production shape.
@@ -926,8 +913,7 @@ object VectorQueries {
     },
 
     /** INCREMENTAL PQ index maintenance — the vector twin of
-      * `dedup_minhash_incremental` and the round-8 verdict's item 2:
-      * day-1 trains the codebook on the base corpus (vec_id % 10 != 9)
+      * `dedup_minhash_incremental`: day-1 trains the codebook on the base corpus (vec_id % 10 != 9)
       * and persists codebook + base code table; day-2's new vectors are
       * encoded OFF THE PERSISTED (frozen) CODEBOOK — one narrow pass
       * over the batch only, O(batch), never a corpus retrain or code
@@ -943,8 +929,8 @@ object VectorQueries {
       val (v, subsAll) = pqCorpus(s, d)
       val batch = subsAll.filter(pmod(col("vec_id"), lit(10L)) === 9)
       val root = graft.Staging.dir("pqincr", d)
-      // day-1 offline build, persisted ONCE per JVM (round-19, guide
-      // §1.2): codebook + base code table written from the shared
+      // day-1 offline build, persisted ONCE per JVM (guide §1.2):
+      // codebook + base code table written from the shared
       // training frames into a read-only template; per sample the
       // frozen codebook reads in place and the code table — the one
       // artifact the append MUTATES — file-copies into this query's
@@ -1004,8 +990,8 @@ object VectorQueries {
       SELECT lang, CAST(pos AS BIGINT) AS pos,
              round(CAST(sum(qi) AS DOUBLE) / count(*) / 1000000.0, 6) AS centroid
       FROM e GROUP BY lang, pos ORDER BY lang, pos""")) { (s, d) =>
-      // explode RAW, quantize the scalar element (round 19, session 4 —
-      // same reorder as vec_pca_project): generate-over-transform made
+      // explode RAW, quantize the scalar element (the same reorder as
+      // vec_pca_project): generate-over-transform makes
       // the inferred isnotnull/size guard re-evaluate the 64-element
       // quantize lambda per row; the scalar form is element-identical
       // and lambda-free.
@@ -1025,8 +1011,8 @@ object VectorQueries {
       * an AXIS-SIGN LSH bucket (sign pattern of the first 4 quantized
       * components — hyperplanes = coordinate axes): deterministic and
       * SQL-expressible, so unlike the random-hyperplane variant this
-      * near-dup path is fully oracle-checked (round-1 verdict asked for
-      * a non-vacuous judged entry). Join shape is the scalable one —
+      * near-dup path is fully oracle-checked (a non-vacuous judged
+      * entry). Join shape is the scalable one —
       * bucket equi-join, never all-pairs; at corpus scale the plane
       * count dials bucket size (more planes = smaller buckets), and
       * oversized buckets get the ScaleOps cap treatment. Threshold 0.4
@@ -1040,8 +1026,8 @@ object VectorQueries {
       ${cosinePairsSql("v")}
       SELECT id_a, id_b, round(cosine, 6) AS cosine
       FROM p WHERE cosine > 0.4 ORDER BY id_a, id_b""")) { (s, d) =>
-      // 4 banded 4-bit axis-sign tables (see cosinePairs — the round-7
-      // recall dial retired the single dims-0-3 bucket), capBuckets
+      // 4 banded 4-bit axis-sign tables (see cosinePairs — the recall
+      // dial retired the single dims-0-3 bucket), capBuckets
       // hot-bucket guard mirrored by the oracle's QUALIFY, exact
       // int64-quantized cosine confirmation.
       cosinePairs(Tables.embeddings(s, d)
@@ -1052,8 +1038,8 @@ object VectorQueries {
     },
 
     /** SemDeDup over the SAME Lloyd-refined coarse quantizer
-      * sim_ann_ivf uses ([[lloydCentroids]], round-8 upgrade from the
-      * seed stand-in) — cluster-scoped pairs, never all-pairs. */
+      * sim_ann_ivf uses ([[lloydCentroids]]) — cluster-scoped pairs,
+      * never all-pairs. */
     QueryDef("dedup_semantic", Some(s"""
       WITH v AS (SELECT vec_id,
                    list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(round(x * 1000000) AS BIGINT)) AS q
@@ -1077,7 +1063,6 @@ object VectorQueries {
       SELECT m.vec_id, m.cluster, p.dup_of, p.dup_of IS NOT NULL AS removed
       FROM m LEFT JOIN p ON p.id_b = m.vec_id
       ORDER BY m.vec_id""")) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
       // the assignment IS sharedAsg's (identical corpus, codebook and
       // tie order — max cosine, lowest c_id, as the oracle's row_number
       // window; see ivfAssign); riding the JVM-shared frame removes the
@@ -1103,8 +1088,8 @@ object VectorQueries {
         .orderBy(col("vec_id"))
     },
 
-    /** Embedding-dedup recall dial — third of the round-7 planted
-      * dials, and the third real blocking defect found: every 25th
+    /** Embedding-dedup recall dial — third of the planted dials, and
+      * the third real blocking defect found: every 25th
       * vector gets a planted near-duplicate (deterministic integer
       * perturbation in quantized space, cosine ≈ 0.89 — well above
       * the judged 0.4 threshold), and each pair reports whether the

@@ -51,15 +51,15 @@ object VectorQueries2 {
 
   import VectorQueries.{ivfCorpus, lloydCentroids, ivfAssign, ivfProbes,
     ivfServe, ivfOracle, lloydSubCentroids, pqEncode, lloydSql, lloydSubSql,
-    sharedCoarse, sharedAsg}
+    sharedCoarse, sharedAsg, cosineTopK, queryPairs, recallAt5, dialProbes}
 
   /** The FULL-corpus IVFADC fine residual codebook (8 subspaces × k=16
     * over r = q − coarse-centroid), trained ONCE per JVM off
-    * [[VectorQueries.sharedCoarse]]/[[VectorQueries.sharedAsg]]
-    * (round-11 verdict item 1: sim_ann_ivfpq, its recall dial, and the
-    * persisted twin each retrained the identical codebooks). Every
-    * consumer's oracle recomputes the training from scratch, so the
-    * memoized artifact stays fully hash-gated. */
+    * [[VectorQueries.sharedCoarse]]/[[VectorQueries.sharedAsg]], so
+    * sim_ann_ivfpq, its recall dial and the persisted twin do not each
+    * retrain the identical codebooks. Every consumer's oracle
+    * recomputes the training from scratch, so the memoized artifact
+    * stays fully hash-gated. */
   private def sharedIvfpqFine(s: SparkSession, d: String): DataFrame =
     graft.Staging.frame(s, "ivfpq_fine", d) {
       lloydSubCentroids(
@@ -94,8 +94,8 @@ object VectorQueries2 {
     val s = b.sparkSession
     val root = graft.Staging.dir("ivfpqsapp", d)
     // frozen day-1 codebooks: read from the shared persisted template
-    // (round-19 — the query stages them via [[ivfpqBaseIdxDir]] before
-    // the stream starts; the log writes below stay under this run's root)
+    // (the query stages them via [[ivfpqBaseIdxDir]] before the stream
+    // starts; the log writes below stay under this run's root)
     val tmpl = graft.Staging.dir("ivfpq_b_idx", d)
     val coarse = s.read.parquet(s"$tmpl/coarse")
     val fine = s.read.parquet(s"$tmpl/fine")
@@ -127,9 +127,8 @@ object VectorQueries2 {
 
   /** The DAY-1 (base-slice, vec_id % 10 != 9) IVFADC artifacts, trained
     * ONCE per JVM and shared by `sim_ann_ivfpq_incremental` and
-    * `stream_ann_ivfpq_append` — round-19 optimization: each consumer
-    * previously paid the full day-1 Lloyd train per bench rep (the r18
-    * verdict's top-row cost attribution for both queries). Sharing is
+    * `stream_ann_ivfpq_append`, so neither consumer pays the full day-1
+    * Lloyd train per bench rep (the top cost of both queries). Sharing is
     * safe where sharing the WRITTEN artifacts was not: each consumer
     * still writes its OWN parquet copy into its own root (the
     * incremental twin appends into its copy; the streaming twin's
@@ -170,9 +169,9 @@ object VectorQueries2 {
         .localCheckpoint()
     }
 
-  /** The day-1 IVFADC artifacts PERSISTED once per JVM (round-19,
-    * guide §1.2): coarse/fine codebooks plus the cluster-partitioned
-    * base code table, written from the shared training frames into one
+  /** The day-1 IVFADC artifacts PERSISTED once per JVM (guide §1.2):
+    * coarse/fine codebooks plus the cluster-partitioned base code
+    * table, written from the shared training frames into one
     * read-only template dir. The incremental twin file-copies the code
     * table into its own root before appending (mutation isolation —
     * same copyTree discipline as the merge-family July layouts); the
@@ -197,17 +196,20 @@ object VectorQueries2 {
       .withColumn("sn2", qdot(col("sub"), col("sub")))
   }
 
-  /** Probed coarse cells per query, ADC shortlist length and served
-    * neighbours per query of the IVFADC serve. */
+  /** Probed coarse cells per query of the judged IVFADC serves, ADC
+    * shortlist length and served neighbours per query. */
   private val IvfpqProbes = 2
   private val IvfpqShortlist = 50
   private val IvfpqTop = 5
 
   /** IVFADC online serve of the query vectors (vec_id < 5) over
     * `codesC`, the cluster-keyed code table `(cluster, vec_id, s, code)`
-    * — the inverted-list layout. Three Spark jobs whatever the corpus
-    * size, one per step:
-    *  1. Collect the query rows. Each picks its [[IvfpqProbes]] nearest
+    * — the inverted-list layout, probing `nprobe` coarse cells per query
+    * (the judged serves probe [[IvfpqProbes]]; the recall dial
+    * `sim_ann_ivfpq_recall` serves each of its depths through here). It
+    * reads the corpus `v` as [[VectorQueries.ivfCorpus]] builds it. Three
+    * Spark jobs whatever the corpus size, one per step:
+    *  1. Collect the query rows. Each picks its `nprobe` nearest
     *     coarse cells with the bounded top-k kernel that assigns the
     *     corpus, and gets per probed cell a residual LUT of
     *     8 × |fine codebook| exact int64 `d2` values against its
@@ -223,7 +225,8 @@ object VectorQueries2 {
     *     not prune: a vector's 8 code rows may sit in different ones.
     *  3. Fetch the shortlisted raw vectors by id; the exact cosine
     *     re-rank keeps the top [[IvfpqTop]] per query by
-    *     (cosine desc, vec_id).
+    *     (cosine desc, vec_id) — [[VectorQueries.cosineTopK]]'s rule,
+    *     run by the same kernel on the driver.
     * The rows come back as a local relation under Spark's own `round`
     * and sort. The arithmetic is the relational form's (kept in the
     * tests as the twin): wrapping dot products and residuals, `d2` and
@@ -234,13 +237,13 @@ object VectorQueries2 {
     * zero-norm vector scores no cosine and is skipped (the relational
     * form would rank its null last). */
   private[graft] def ivfpqServe(v: DataFrame, coarse: DataFrame, fine: DataFrame,
-      codesC: DataFrame): DataFrame = {
+      codesC: DataFrame, nprobe: Int): DataFrame = {
     import graft.expressions.{LongDotKernel, TopK}
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types._
     val s = v.sparkSession
     val ansi = s.sessionState.conf.ansiEnabled
-    val (queries, luts) = ivfpqQuerySide(v, coarse, fine, ansi)
+    val (queries, luts) = ivfpqQuerySide(v, coarse, fine, nprobe, ansi)
     // step 2: partial ADC sums per partition, merged on the driver
     val adc = scala.collection.mutable.HashMap[(Long, Long), Long]()
     if (luts.nonEmpty) {
@@ -300,11 +303,11 @@ object VectorQueries2 {
   private type Lut = Map[(Int, Long), Long]
 
   /** Step 1 of [[ivfpqServe]], on the driver: the query rows
-    * `(q_id, q, n2)` and, per probed cluster, each probing query's LUT
-    * `(s, code) → d2` (duplicate codebook keys add up, as their joined
-    * rows would). */
-  private def ivfpqQuerySide(v: DataFrame, coarse: DataFrame, fine: DataFrame, ansi: Boolean)
-      : (Array[(Long, ArrayData, Long)], Map[Long, Seq[(Long, Lut)]]) = {
+    * `(q_id, q, n2)` and, per cluster among a query's `nprobe` probes,
+    * each probing query's LUT `(s, code) → d2` (duplicate codebook keys
+    * add up, as their joined rows would). */
+  private def ivfpqQuerySide(v: DataFrame, coarse: DataFrame, fine: DataFrame, nprobe: Int,
+      ansi: Boolean): (Array[(Long, ArrayData, Long)], Map[Long, Seq[(Long, Lut)]]) = {
     import graft.expressions.{LongDotKernel, LongVecSubKernel, NearestCentroidKernel, TopK}
     import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
     val queries = v.filter(col("vec_id") < 5).select(col("vec_id"), col("q"), col("n2")).collect()
@@ -322,7 +325,7 @@ object VectorQueries2 {
       }
     val probes = for {
       (qId, q, n2) <- queries.toSeq
-      top = NearestCentroidKernel.topK(q, n2, cb, l2 = false, ansi, IvfpqProbes)
+      top = NearestCentroidKernel.topK(q, n2, cb, l2 = false, ansi, nprobe)
       i <- 0 until top.size
     } yield {
       val r = LongVecSubKernel.sub(q, arrayOf(cells(top.slot(i)), 1))
@@ -394,7 +397,8 @@ object VectorQueries2 {
       case "sim_ann_ivfpq_persisted" => ivfpqStored(s, graft.Staging.dir("ivfpqidx", d))
       case "sim_ann_ivfpq_delete" => ivfpqDeleteIndex(s, d)
     }
-    val (_, luts) = ivfpqQuerySide(ivfCorpus(s, d), coarse, fine, s.sessionState.conf.ansiEnabled)
+    val (_, luts) = ivfpqQuerySide(ivfCorpus(s, d), coarse, fine, IvfpqProbes,
+      s.sessionState.conf.ansiEnabled)
     Seq(coarse, fine, ivfpqCandidates(codesC, luts.keys))
   }
 
@@ -410,7 +414,7 @@ object VectorQueries2 {
   /** [[ivfpqOracle]] with an optional predicate on the inverted-list
     * content (`k` = the per-vector code rows) — the delete twin
     * filters tombstoned vectors out of `codesc`, mirroring the
-    * artifact-side anti-join exactly (round 16). */
+    * artifact-side anti-join exactly. */
   private def ivfpqOracleCodes(codesWhere: String): String = s"""
       WITH v AS (SELECT vec_id,
                    list_transform(CAST(embedding AS DOUBLE[]), x -> CAST(round(x * 1000000) AS BIGINT)) AS q
@@ -701,29 +705,18 @@ object VectorQueries2 {
       * from the ANN index (sim_ann_ivfpq_persisted's serve path) and
       * this re-rank costs O(k²) per query on broadcast-size frames;
       * the corpus is touched only by the candidate window. The greedy
-      * chain itself runs as ONE typed mapGroups task per query
-      * (round-10 verdict item 4): a per-query bounded frame is exactly
-      * the data-dependent control flow Catalyst can't improve on, and
-      * the former four relational rounds cost 4× job-scheduling
-      * latency for ≤100-row frames. Pair cosines, penalties, and
-      * argmax replicate the oracle's arithmetic op-for-op (exact int64
+      * chain itself runs as ONE typed mapGroups task per query: a
+      * per-query bounded frame is exactly the data-dependent control
+      * flow Catalyst can't improve on, and four relational rounds
+      * cost 4× job-scheduling latency for ≤100-row frames. Pair
+      * cosines, penalties, and argmax replicate the oracle's
+      * arithmetic op-for-op (exact int64
       * dots, the identical IEEE divide/multiply order, ties to the
       * lowest vec_id), so the oracle is UNCHANGED — the hash gates
       * that the in-task chain and the relational CTE chain agree. */
     QueryDef("sim_mmr_rerank", Some(mmrOracle)) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
       import s.implicits._
-      val v = Tables.embeddings(s, d)
-        .select(col("vec_id"), quantize(col("embedding")).as("q"))
-        .withColumn("n2", qdot(col("q"), col("q")))
-      val queries = v.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("q").as("qq"), col("n2").as("qn2"))
-      val pairs = v.join(broadcast(queries), col("vec_id") =!= col("q_id"))
-        .withColumn("cosine",
-          cosineFromQ(qdot(col("q"), col("qq")), col("n2"), col("qn2")))
-      val wTop = Window.partitionBy(col("q_id")).orderBy(col("cosine").desc, col("vec_id"))
-      val c10 = pairs.withColumn("rnk", row_number().over(wTop))
-        .filter(col("rnk") <= 10)
+      val c10 = cosineTopK(queryPairs(ivfCorpus(s, d)), "q_id", "vec_id", 10)
         .select(col("q_id"), col("vec_id"), col("cosine"), col("q"), col("n2"))
       c10.as[MmrCandRow].groupByKey(_.q_id).flatMapGroups { (qid, it) =>
         // candidates in (cosine DESC, vec_id ASC) order — the oracle's
@@ -755,9 +748,9 @@ object VectorQueries2 {
               best = c; bestScore = score
             }
           }
-          // pool smaller than MmrK (round-11 advice): the oracle and the
-          // relational predecessor both emit fewer rows when candidates
-          // run out — stop selecting instead of dereferencing null
+          // pool smaller than MmrK: the oracle and the relational
+          // predecessor both emit fewer rows when candidates run out —
+          // stop selecting instead of dereferencing null
           if (best == null) exhausted = true
           else {
             selected += best
@@ -773,74 +766,37 @@ object VectorQueries2 {
     },
 
     /** IVFADC serve off the once-per-JVM shared training artifacts
-      * (round-11 memoization: this, the recall dial, and the persisted
-      * twin each retrained identical codebooks — at 100 TB the index is
-      * trained once and served many times, and the first consumer's
-      * shared build IS the training run, hash-gated here against an
-      * oracle that retrains from scratch). */
+      * (shared with the recall dial and the persisted twin — at 100 TB
+      * the index is trained once and served many times, and the first
+      * consumer's shared build IS the training run, hash-gated here
+      * against an oracle that retrains from scratch). */
     QueryDef("sim_ann_ivfpq", Some(ivfpqOracle)) { (s, d) =>
       ivfpqServe(ivfCorpus(s, d), sharedCoarse(s, d), sharedIvfpqFine(s, d),
-        sharedIvfpqCodes(s, d))
+        sharedIvfpqCodes(s, d), IvfpqProbes)
     },
 
     /** IVFADC nprobe RECALL DIAL — the measured cost/recall trade-off
       * for the flagship composed index (the IVF dial's twin,
-      * `sim_ann_ivf_recall`): ADC scores are computed ONCE over a
-      * probe frame deepened to rank ≤ 4 (a candidate lives in exactly
-      * one inverted list, so its ADC sum is nprobe-invariant), then
-      * shortlist → exact re-rank → recall@5 vs the brute-force
-      * baseline evaluates per nprobe ∈ {1,2,4} by filtering
-      * probe_rank — one serve pass prices the whole dial. Deeper
-      * probes are candidate supersets and exact re-rank preserves any
-      * present neighbor, so recall is monotone in nprobe by
-      * construction (QueriesSpec asserts monotonicity + the nprobe=4
-      * floor). Fully oracle-gated per (nprobe, query). */
+      * `sim_ann_ivf_recall`): [[ivfpqServe]], the serve the judged
+      * IVFADC queries run, serves the shared index once at each
+      * nprobe ∈ {1,2,4}, and recall@5 vs the brute-force baseline is
+      * counted per (nprobe, query). The oracle instead computes ADC
+      * ONCE over probes deepened to rank ≤ 4 and filters by probe
+      * rank; the two agree because a candidate lives in exactly one
+      * inverted list, so its ADC sum does not depend on nprobe, and
+      * the shortlist and re-rank rules are the same. The one known
+      * divergence is [[ivfpqServe]]'s, only with ANSI off: a zero-norm
+      * query or shortlisted vector scores no cosine and is skipped,
+      * where the oracle's window would rank its null last. Deeper
+      * probes are candidate supersets, but the lossy ADC shortlist can
+      * displace a neighbour, so QueriesSpec asserts the MEAN curve
+      * monotone + the nprobe=4 floor. Fully oracle-gated per
+      * (nprobe, query). */
     QueryDef("sim_ann_ivfpq_recall", Some(ivfpqRecallOracle)) { (s, d) =>
-      import org.apache.spark.sql.expressions.Window
-      import s.implicits._
-      val v = ivfCorpus(s, d)
-      val coarse = sharedCoarse(s, d)
-      val fine = sharedIvfpqFine(s, d)
-      val codesC = sharedIvfpqCodes(s, d)
-      val probes = ivfProbes(v, coarse, 4)
-      val qv = v.filter(col("vec_id") < 5).select(col("vec_id").as("q_id"), col("q"))
-      val qres = probes.select(col("q_id"), col("cluster"))
-        .join(qv, Seq("q_id"))
-        .join(broadcast(coarse.select(col("c_id").as("cluster"), col("cq"))), Seq("cluster"))
-        .select(col("q_id"), col("cluster"),
-          qsub(col("q"), col("cq")).as("r"))
-      val qsubs = qres.select(col("q_id"), col("cluster"), posexplode(array(
-          (0 until 8).map(t => slice(col("r"), t * 8 + 1, 8)): _*)).as(Seq("s", "sub")))
-        .withColumn("sn2", qdot(col("sub"), col("sub")))
-      val lut = qsubs.join(broadcast(fine), Seq("s"))
-        .withColumn("d2", col("sn2") + col("cn2") - lit(2L) * qdot(col("sub"), col("csub")))
-        .select(col("q_id"), col("cluster"), col("s"), col("c_id").as("code"), col("d2"))
-      val cand = probes.join(codesC, Seq("cluster")).filter(col("vec_id") =!= col("q_id"))
-      val adc = cand.join(broadcast(lut), Seq("q_id", "cluster", "s", "code"))
-        .groupBy(col("q_id"), col("vec_id"))
-        .agg(min(col("probe_rank")).as("probe_rank"), sum(col("d2")).as("adc"))
-      val np = broadcast(Seq(1L, 2L, 4L).toDF("nprobe"))
-      val wShort = Window.partitionBy(col("nprobe"), col("q_id"))
-        .orderBy(col("adc"), col("vec_id"))
-      val short = np.join(adc, col("probe_rank") <= col("nprobe"))
-        .withColumn("srn", row_number().over(wShort)).filter(col("srn") <= 50)
-        .select(col("nprobe"), col("q_id"), col("vec_id"))
-      val qa = v.filter(col("vec_id") < 5)
-        .select(col("vec_id").as("q_id"), col("q").as("qq"), col("n2").as("qn2"))
-      val scored = short.join(broadcast(qa), Seq("q_id")).join(v, Seq("vec_id"))
-        .withColumn("cosine", cosineFromQ(qdot(col("qq"), col("q")), col("qn2"), col("n2")))
-      val wR = Window.partitionBy(col("nprobe"), col("q_id"))
-        .orderBy(col("cosine").desc, col("vec_id"))
-      val ann = scored.withColumn("rnk", row_number().over(wR)).filter(col("rnk") <= 5)
-        .select(col("nprobe").as("a_np"), col("q_id").as("a_q"), col("vec_id").as("a_v"))
-      val ex = VectorQueries.exactTopk(s, d).select(col("q_id"), col("vec_id"))
-      np.crossJoin(ex)
-        .join(ann, col("a_np") === col("nprobe") && col("a_q") === col("q_id") &&
-          col("a_v") === col("vec_id"), "left")
-        .groupBy(col("nprobe"), col("q_id")).agg(count(col("a_v")).as("n_hits"))
-        .select(col("nprobe"), col("q_id"), col("n_hits"),
-          round(col("n_hits").cast("double") / 5, 6).as("recall_at_5"))
-        .orderBy(col("nprobe"), col("q_id"))
+      val (v, coarse) = (ivfCorpus(s, d), sharedCoarse(s, d))
+      val (fine, codesC) = (sharedIvfpqFine(s, d), sharedIvfpqCodes(s, d))
+      recallAt5(s, d, dialProbes.map(np => ivfpqServe(v, coarse, fine, codesC, np)
+        .withColumn("nprobe", lit(np.toLong))).reduce(_ union _), dialProbes)
     },
 
     /** PERSISTED IVFADC — the full production lifecycle in one judged
@@ -868,7 +824,7 @@ object VectorQueries2 {
       sharedIvfpqCodes(s, d)
         .write.mode("overwrite").partitionBy("cluster").parquet(s"$root/codes")
       val (coarse, fine, codesC) = ivfpqStored(s, root)
-      ivfpqServe(v, coarse, fine, codesC)
+      ivfpqServe(v, coarse, fine, codesC, IvfpqProbes)
     },
 
     /** INCREMENTAL IVFADC maintenance — the flagship index's daily
@@ -911,10 +867,10 @@ object VectorQueries2 {
       // serve from the appended table (old + new)
       val codesC = s.read.parquet(s"$root/codes")
         .withColumn("cluster", col("cluster").cast("long"))
-      ivfpqServe(v, coarse, fine, codesC)
+      ivfpqServe(v, coarse, fine, codesC, IvfpqProbes)
     },
 
-    /** ONLINE IVFADC append (round 18) — `sim_ann_ivfpq_incremental`'s
+    /** ONLINE IVFADC append — `sim_ann_ivfpq_incremental`'s
       * streaming twin, the flagship vector index's
       * streaming-MAINTENANCE cell (stream_ann_serve streams queries
       * against a frozen index; this streams the INDEX's own growth):
@@ -957,10 +913,10 @@ object VectorQueries2 {
         .select(col("vec_id"), col("s"), col("code"), col("cluster"))
         .unionByName(OnlineFold.readLogs(s, s"$root/log/b*",
           "vec_id LONG, s INT, code LONG, cluster LONG"))
-      ivfpqServe(v, coarse, fine, codesC)
+      ivfpqServe(v, coarse, fine, codesC, IvfpqProbes)
     },
 
-    /** IVFADC index DELETION (round 16) — the flagship index's
+    /** IVFADC index DELETION — the flagship index's
       * right-to-be-forgotten roll, the vector twin of
       * `dedup_minhash_index_delete` with one decisive difference: the
       * inverted lists are UNCAPPED, so tombstone-serve is EXACTLY a
@@ -988,7 +944,7 @@ object VectorQueries2 {
     QueryDef("sim_ann_ivfpq_delete",
         Some(ivfpqOracleCodes("WHERE k.vec_id % 10 <> 7"))) { (s, d) =>
       val (coarse, fine, codesC) = ivfpqDeleteIndex(s, d)
-      ivfpqServe(ivfCorpus(s, d), coarse, fine, codesC)
+      ivfpqServe(ivfCorpus(s, d), coarse, fine, codesC, IvfpqProbes)
     },
 
     /** STREAMING ANN serving — the vector twin of `stream_dedup_index`:

@@ -23,13 +23,10 @@ import org.apache.spark.sql.types._
 object EventStreams {
 
   /** Micro-batch shuffle/state partition count used by every judged
-    * streaming drain (see [[withStreamConf]]): `SPARK_GRAFT_STREAM_PARTITIONS`
-    * overrides for A/B measurement; the default stays the established 8
-    * unless a measured change ships a different derivation. At 100 TB this
-    * is sized to state volume (rows per state partition), not core count —
+    * streaming drain (see [[withStreamConf]]). At 100 TB this is sized
+    * to state volume (rows per state partition), not core count —
     * per-query conf, never plan shape. */
-  private[graft] lazy val defaultStreamPartitions: Int =
-    sys.env.get("SPARK_GRAFT_STREAM_PARTITIONS").map(_.trim.toInt).getOrElse(8)
+  private val StreamPartitions = 8
 
   /** File-source stream over an events directory. The stream schema is
     * DERIVED from a batch read of the same directory rather than
@@ -196,11 +193,11 @@ object EventStreams {
     * [[graft.operators.ConfScope.withConf]], so batch and streaming
     * conf scopes share ONE lock — see ConfScope's scaladoc for the
     * concurrency contract. */
-  def withStreamConf[T](spark: SparkSession, partitions: Int = defaultStreamPartitions,
+  def withStreamConf[T](spark: SparkSession,
       extra: Map[String, String] = Map.empty)(body: => T): T = {
     StreamMetrics.attach(spark)
     graft.operators.ConfScope.withConf(spark,
-      Map("spark.sql.shuffle.partitions" -> partitions.toString,
+      Map("spark.sql.shuffle.partitions" -> StreamPartitions.toString,
         // Changelog checkpointing (takes effect under the RocksDB state
         // store provider, a no-op for the default HDFS-backed one): per
         // commit, upload only the batch's state DELTA instead of a full

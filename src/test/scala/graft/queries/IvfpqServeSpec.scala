@@ -9,8 +9,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The driver-coordinated IVFADC serve (`VectorQueries2.ivfpqServe`)
   * against its relational twin ([[IvfpqTwin]]) on the shapes that can
-  * split them, and the bounded top-k kernel both the serve and the
-  * nearest-centroid expression run. */
+  * split them and at every recall-dial depth, the bounded top-k kernel
+  * both the serve and the nearest-centroid expression run, and the
+  * window rule (`VectorQueries.cosineTopK`) the relational top-k sites
+  * rank by. */
 class IvfpqServeSpec extends AnyFunSuite {
   lazy val spark = graft.TestSpark.spark
   private val sf = graft.TestSpark.sf0001
@@ -32,11 +34,12 @@ class IvfpqServeSpec extends AnyFunSuite {
     (v, coarse, fine, encode(v, coarse, fine))
   }
 
-  /** Serves `codes` both ways and asserts equal rows in equal order. */
+  /** Serves `codes` both ways at `nprobe` and asserts equal rows in
+    * equal order. */
   private def servedAlike(v: DataFrame, coarse: DataFrame, fine: DataFrame,
-      codes: DataFrame): Seq[Row] = {
-    val got = VectorQueries2.ivfpqServe(v, coarse, fine, codes).collect().toSeq
-    val want = IvfpqTwin.serve(v, v.filter(col("vec_id") < 5), coarse, fine, codes, nprobe = 2)
+      codes: DataFrame, nprobe: Int = 2): Seq[Row] = {
+    val got = VectorQueries2.ivfpqServe(v, coarse, fine, codes, nprobe).collect().toSeq
+    val want = IvfpqTwin.serve(v, v.filter(col("vec_id") < 5), coarse, fine, codes, nprobe)
       .collect().toSeq
     assert(got.size === 25)
     assert(got === want)
@@ -47,6 +50,13 @@ class IvfpqServeSpec extends AnyFunSuite {
     val (v, coarse, fine, codes) = index
     val got = servedAlike(v, coarse, fine, codes)
     assert(graft.SparkEntry.queries("sim_ann_ivfpq")(spark, sf).collect().toSeq === got)
+  }
+
+  for (depth <- Seq(1, 4)) test(s"ivfpqServe == twin at nprobe $depth, the recall dial's depth") {
+    val (v, coarse, fine, codes) = index
+    val got = servedAlike(v, coarse, fine, codes, nprobe = depth)
+    assert(got !== VectorQueries2.ivfpqServe(v, coarse, fine, codes, 2).collect().toSeq,
+      s"nprobe $depth must serve other rows than nprobe 2 on the fixture")
   }
 
   test("ivfpqServe == twin when one vector's code rows span partitions") {
@@ -82,6 +92,22 @@ class IvfpqServeSpec extends AnyFunSuite {
     val emptied = codes.filter(col("cluster") =!= probed)
     assert(emptied.count() < codes.count())
     servedAlike(v, coarse, fine, emptied)
+  }
+
+  test("cosineTopK: equal cosines keep the lower id, and the cut falls at k") {
+    import spark.implicits._
+    // group 0: NaN ranks largest, the 0.9 pair ties, and the cut at k = 4
+    // falls inside the three-way 0.5 tie; group 1 has fewer than k rows.
+    // RDD-backed, so no local-relation folding runs before the window.
+    val scored = spark.sparkContext.parallelize(Seq((0L, 5L, 0.5), (0L, 8L, 0.9), (0L, 1L, 0.2),
+      (0L, 4L, 0.5), (0L, 3L, 0.9), (0L, 6L, Double.NaN), (0L, 2L, 0.5),
+      (1L, 11L, 0.1), (1L, 10L, 0.1)), 3).toDF("g", "id", "cosine")
+    val top = VectorQueries.cosineTopK(scored, "g", "id", 4)
+    assert(top.schema("rnk").dataType === org.apache.spark.sql.types.LongType)
+    val got = top.orderBy(col("g"), col("rnk")).select(col("g"), col("id"), col("rnk"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(got === Seq((0L, 6L, 1L), (0L, 3L, 2L), (0L, 8L, 3L), (0L, 2L, 4L),
+      (1L, 10L, 1L), (1L, 11L, 2L)))
   }
 
   // ---- the bounded top-k kernel ----
