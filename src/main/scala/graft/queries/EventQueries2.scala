@@ -177,9 +177,7 @@ object EventQueries2 {
       import org.apache.spark.sql.streaming.Trigger
       val base = EventStreams.prepareRestartBase(s, d, "rs")
       val sink = s"$base/merged"
-      def drain(label: String): Unit = EventStreams.withStreamConf(s, extra = Map(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
+      def drain(label: String): Unit = EventStreams.withStreamConf(s, extra = EventStreams.RocksDbState) {
         val agg = EventStreams.readEvents(s, s"$base/in")
           .groupBy(window(col("ts"), "1 hour"), col("event_type"))
           .agg(count(lit(1)).as("n"), sum(money(col("value"))).as("tv"))
@@ -499,9 +497,7 @@ object EventQueries2 {
         .select(col("user_id"), col("event_id"), col("value"))
         .as[TransformStateOps.EvIn](
           org.apache.spark.sql.Encoders.product[TransformStateOps.EvIn])
-      val updates = EventStreams.withStreamConf(s, extra = Map(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
+      val updates = EventStreams.withStreamConf(s, extra = EventStreams.RocksDbState) {
         EventStreams.runToBatch(s,
           TransformStateOps.runningTotals(in).toDF(),
           s"graft_q_tws_${graft.Staging.suffix(d)}")
@@ -529,9 +525,7 @@ object EventQueries2 {
         .select(col("user_id"), col("event_type"))
         .as[TransformStateOps.EvTyped](
           org.apache.spark.sql.Encoders.product[TransformStateOps.EvTyped])
-      val updates = EventStreams.withStreamConf(s, extra = Map(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
+      val updates = EventStreams.withStreamConf(s, extra = EventStreams.RocksDbState) {
         EventStreams.runToBatch(s,
           TransformStateOps.distinctTypes(in).toDF(),
           s"graft_q_twm_${graft.Staging.suffix(d)}")
@@ -668,9 +662,7 @@ object EventQueries2 {
         .withWatermark("ts", "1 hour")
         .as[TransformStateOps.SessEv](
           org.apache.spark.sql.Encoders.product[TransformStateOps.SessEv])
-      EventStreams.withStreamConf(s, extra = Map(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
+      EventStreams.withStreamConf(s, extra = EventStreams.RocksDbState) {
         EventStreams.runToBatch(s,
           TransformStateOps.sessionsByTimers(in).toDF(),
           s"graft_q_twstimer_${graft.Staging.suffix(d)}", outputMode = "append")

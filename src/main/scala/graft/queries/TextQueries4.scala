@@ -487,9 +487,7 @@ object TextQueries4 {
         .select(explode(tokens(col("text"))).as("token"))
         .select(pmod(xxhash64(col("token")), lit(8L)).as("shard"), col("token"))
         .as[TransformStateOps.TokIn]
-      val snapshots = EventStreams.withStreamConf(s, extra = Map(
-        "spark.sql.streaming.stateStore.providerClass" ->
-          "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
+      val snapshots = EventStreams.withStreamConf(s, extra = EventStreams.RocksDbState) {
         EventStreams.runToBatch(s,
           TransformStateOps.shardSketch(in, 30).toDF(),
           s"graft_q_shh_${graft.Staging.suffix(d)}")

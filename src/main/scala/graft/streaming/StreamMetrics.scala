@@ -29,9 +29,15 @@ object StreamMetrics {
     * fitted ~linear in state residency at exponent 0.75 once eviction
     * lags: PLANS.md round 17, "Fourth curve, follow-up: the retention
     * axis re-staged"), so it is recorded per batch and spec-gated
-    * against the watermark-implied bound (round-18 verdict task 6). */
+    * against the watermark-implied bound (round-18 verdict task 6).
+    * `stateCommitMs` sums the state operators' commit time (−1 when
+    * stateless) and `stateLoadMs` the RocksDB provider's
+    * `rocksdbLoadLatencyMs` (−1 when no operator reports it, as on the
+    * default store): on RocksDB the per-partition native open, not
+    * trigger work, can dominate a small drain's wall. */
   final case class BatchMetric(query: String, batchId: Long, inputRows: Long,
-      triggerMs: Long, rowsPerSec: Double, stateRows: Long)
+      triggerMs: Long, rowsPerSec: Double, stateRows: Long,
+      stateCommitMs: Long, stateLoadMs: Long)
 
   private val log = org.slf4j.LoggerFactory.getLogger("graft.streaming.metrics")
   private val ring = new java.util.concurrent.ConcurrentLinkedQueue[BatchMetric]()
@@ -59,16 +65,20 @@ object StreamMetrics {
 
     override def onQueryProgress(e: QueryProgressEvent): Unit = {
       val p = e.progress
+      val ops = p.stateOperators.toSeq
+      val loads = ops.flatMap(o => Option(o.customMetrics.get("rocksdbLoadLatencyMs")))
       val m = BatchMetric(
         Option(p.name).getOrElse(p.id.toString), p.batchId, p.numInputRows,
         Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(-1L),
         p.processedRowsPerSecond,
-        if (p.stateOperators.isEmpty) -1L else p.stateOperators.map(_.numRowsTotal).sum)
+        if (ops.isEmpty) -1L else ops.map(_.numRowsTotal).sum,
+        if (ops.isEmpty) -1L else ops.map(_.commitTimeMs).sum,
+        if (loads.isEmpty) -1L else loads.map(_.longValue).sum)
       ring.add(m)
       while (ring.size > RingCap) ring.poll()
       trigCount.incrementAndGet()
       trigMs.addAndGet(math.max(m.triggerMs, 0L))
-      log.info(s"""{"stream":"${m.query}","event":"progress","batch":${m.batchId},"input_rows":${m.inputRows},"trigger_ms":${m.triggerMs},"rows_per_sec":${m.rowsPerSec},"state_rows":${m.stateRows}}""")
+      log.info(s"""{"stream":"${m.query}","event":"progress","batch":${m.batchId},"input_rows":${m.inputRows},"trigger_ms":${m.triggerMs},"rows_per_sec":${m.rowsPerSec},"state_rows":${m.stateRows},"state_commit_ms":${m.stateCommitMs},"state_load_ms":${m.stateLoadMs}}""")
     }
 
     override def onQueryTerminated(e: QueryTerminatedEvent): Unit =

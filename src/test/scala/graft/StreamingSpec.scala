@@ -193,9 +193,7 @@ class StreamingSpec extends AnyFunSuite {
       .option("maxFilesPerTrigger", 1).parquet(s"$base/in")
       .withWatermark("ts", "1 hour")
       .as[TransformStateOps.SessEv]
-    val out = EventStreams.withStreamConf(spark, extra = Map(
-      "spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")) {
+    val out = EventStreams.withStreamConf(spark, extra = EventStreams.RocksDbState) {
       EventStreams.runToBatch(spark,
         TransformStateOps.sessionsByTimers(in).toDF(),
         "tws_timer_merge_test", outputMode = "append")
@@ -252,8 +250,7 @@ class StreamingSpec extends AnyFunSuite {
       .as[TransformStateOps.SessEv]
     assertStateDrops("statedrop_tws",
       TransformStateOps.sessionsByTimers(in).toDF(),
-      extra = Map("spark.sql.streaming.stateStore.providerClass" ->
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"))
+      extra = EventStreams.RocksDbState)
   }
 
   test("stream-stream joins: final buffered state obeys the watermark-implied bound (residency gate)") {
