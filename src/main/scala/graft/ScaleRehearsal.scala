@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.TextFunctions.saltWords
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -195,8 +196,19 @@ object ScaleRehearsal {
   private val RelFamilies: Set[String] =
     Set("join_interval_overlap", "join_range_band", "join_skew_salted")
 
-  /** Build the 10× derived dir (documents + embeddings only — these
-    * families read nothing else). Idempotent per JVM via onceDir. */
+  /** Build the ×factor derived dir (documents + embeddings only — these
+    * families read nothing else). Idempotent per JVM via onceDir.
+    *
+    * Copy k ≥ 1 of a document salts every word with the native
+    * [[graft.functions.TextFunctions.saltWords]] kernel: a `transform`
+    * lambda would run interpreted, one word at a time, inside the single
+    * task a one-file fixture scan gives. The kernel, not fan-out, is the
+    * lever: repartitioning the source before the explode would deal rows
+    * differently across the 32 output files, while the round-robin
+    * `repartition` below sorts its rows first, so each part file holds
+    * the same rows whatever computes them. The two derivations are
+    * independent, so their writes run at once and the build returns only
+    * after both have finished (the first failure is rethrown). */
   def stageScaled(spark: SparkSession, sfDir: String, factor: Int): String =
     Staging.onceDir(spark, s"scaled_x$factor", sfDir) { base =>
       val docs = spark.read.parquet(s"$sfDir/documents.parquet")
@@ -206,9 +218,7 @@ object ScaleRehearsal {
         .withColumn("k", explode(array(copies: _*)))
         .withColumn("doc_id", col("doc_id") + col("k") * 10000000L)
         .withColumn("text",
-          when(col("k") === 0, col("text")).otherwise(
-            array_join(transform(split(col("text"), " "),
-              w => concat(w, substring(md5(concat(w, col("k"))), 1, 2))), " ")))
+          when(col("k") === 0, col("text")).otherwise(saltWords(col("text"), col("k"))))
         .withColumn("n_chars", length(col("text")).cast("long"))
         .drop("k")
       val dim = 64
@@ -227,8 +237,10 @@ object ScaleRehearsal {
           when(col("k") >= dim, transform(col("embedding"), x => -x))
             .otherwise(col("embedding")))
         .drop("k", "r")
-      docsX.repartition(32).write.mode("overwrite").parquet(s"$base/documents.parquet")
-      embsX.repartition(8).write.mode("overwrite").parquet(s"$base/embeddings.parquet")
+      graft.operators.ParallelOps.runIsolated(Seq(
+        () => docsX.repartition(32).write.mode("overwrite").parquet(s"$base/documents.parquet"),
+        () => embsX.repartition(8).write.mode("overwrite").parquet(s"$base/embeddings.parquet")),
+        spark = Some(spark)).foreach(_.get)
     }
 
   /** The relational twin of [[stageScaled]] (round 13): a ×factor

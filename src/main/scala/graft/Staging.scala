@@ -194,14 +194,16 @@ object Staging {
   private val schemaMemo =
     new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
 
-  /** Memoized parquet schema of a ONCE-PER-JVM template directory
-    * (round 19): template content is immutable after its onceDir
-    * build, so the footer read (a driver-side job per call) runs once
-    * per (application, path) instead of once per bench sample. Do NOT
-    * use for per-sample/mutable dirs. */
-  def schemaOf(s: org.apache.spark.sql.SparkSession, path: String): org.apache.spark.sql.types.StructType =
-    schemaMemo.computeIfAbsent(s"${s.sparkContext.applicationId}|$path",
-      _ => s.read.parquet(path).schema)
+  /** Memoized schema of a READ-ONLY parquet input: a fixture table or a
+    * once-per-JVM template directory, whose content never changes after
+    * it is written. Schema inference (a Spark job per call) then runs
+    * once per (application, path) instead of once per read. `infer` is
+    * the inference to memoize, a plain footer read by default; a failed
+    * inference is not memoized. Do NOT use for per-sample/mutable dirs. */
+  def schemaOf(s: org.apache.spark.sql.SparkSession, path: String,
+      infer: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.types.StructType =
+        (s, p) => s.read.parquet(p).schema): org.apache.spark.sql.types.StructType =
+    schemaMemo.computeIfAbsent(s"${s.sparkContext.applicationId}|$path", _ => infer(s, path))
 
   /** Short collision-resistant suffix for `raw` (sanitized + md5-8). */
   def suffix(raw: String): String =

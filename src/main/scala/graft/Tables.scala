@@ -20,10 +20,16 @@ import org.apache.spark.sql.types._
   * to one canonical session-UTC TimestampType (µs). All event
   * consumers — batch, stream-schema derivation, staging — go through
   * [[normalizeEventTs]]; no call site assumes an encoding.
+  *
+  * Fixture files are read-only inputs, so [[table]] and [[events]] read
+  * with a schema memoized per (application, path) (`Staging.schemaOf`)
+  * instead of inferring it again, one Spark job, on every read.
   */
 object Tables {
-  def table(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  def table(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    spark.read.schema(Staging.schemaOf(spark, path)).parquet(path)
+  }
 
   def region(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "region")
   def nation(spark: SparkSession, dir: String): DataFrame   = table(spark, dir, "nation")
@@ -41,8 +47,10 @@ object Tables {
     * resolves a schema (as LongType ns) instead of failing analysis;
     * for MICROS/NTZ encodings the conf is a no-op. The conf is scoped
     * (set/restore via ConfScope), never left pinned on the session —
-    * no query's behavior depends on which query ran before it. */
-  def readRawEvents(spark: SparkSession, path: String): DataFrame =
+    * no query's behavior depends on which query ran before it.
+    * With `schema` given, the read skips inference and uses it. */
+  def readRawEvents(spark: SparkSession, path: String,
+      schema: Option[StructType] = None): DataFrame =
     graft.operators.ConfScope.withConf(spark,
       Map("spark.sql.legacy.parquet.nanosAsLong" -> "true")) {
       // schema inference happens eagerly here, inside the scope; the
@@ -56,7 +64,8 @@ object Tables {
       // encoding's int64 raw and silently produces 1970-era
       // timestamps — the exact round-7 silent-corruption class
       // (EventTsSpec proves both directions).
-      spark.read.option("mergeSchema", "true").parquet(path)
+      val reader = spark.read.option("mergeSchema", "true")
+      schema.fold(reader)(s => reader.schema(s)).parquet(path)
     }
 
   /** Normalize an events DataFrame's `ts` column to canonical
@@ -82,7 +91,11 @@ object Tables {
   }
 
   /** events with `ts` normalized to canonical TimestampType — see
-    * [[normalizeEventTs]] for the encoding matrix. */
-  def events(spark: SparkSession, dir: String): DataFrame =
-    normalizeEventTs(readRawEvents(spark, s"$dir/events.parquet"))
+    * [[normalizeEventTs]] for the encoding matrix. The memoized schema
+    * is [[readRawEvents]]' own inference (every footer, `nanosAsLong`). */
+  def events(spark: SparkSession, dir: String): DataFrame = {
+    val path = s"$dir/events.parquet"
+    val schema = Staging.schemaOf(spark, path, (s, p) => readRawEvents(s, p).schema)
+    normalizeEventTs(readRawEvents(spark, path, Some(schema)))
+  }
 }

@@ -23,6 +23,14 @@ object TextFunctions {
       sequence(lit(1), greatest(length(text) - (n - 1), lit(1))),
       i => text.substr(i, lit(n))))
 
+  /** Every space-separated word of `text` suffixed with two hex
+    * characters of md5(word ++ k) — native kernel (see
+    * [[graft.expressions.SaltWords]]). */
+  def saltWords(text: Column, k: Column): Column =
+    org.apache.spark.sql.GraftBridge.column(graft.expressions.SaltWords(
+      org.apache.spark.sql.GraftBridge.expression(text),
+      org.apache.spark.sql.GraftBridge.expression(k)))
+
   /** DEFLATE-compressed byte length of a string — the information-
     * density curation signal (see [[graft.expressions.DeflatedLength]]). */
   def deflatedLen(text: Column): Column =

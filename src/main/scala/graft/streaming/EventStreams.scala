@@ -202,7 +202,15 @@ object EventStreams {
     * PLANS.md records the full matrix. Delegates to
     * [[graft.operators.ConfScope.withConf]], so batch and streaming
     * conf scopes share ONE lock — see ConfScope's scaladoc for the
-    * concurrency contract. */
+    * concurrency contract.
+    *
+    * Each stream runs in a cloned session, and with artifact isolation
+    * on, each clone gets its own classloader. Spark caches generated
+    * code by (context classloader, source), so every drain would
+    * recompile the same classes (13 for `stream_stateful_counts`, 37–49
+    * ms of Janino per call, and fresh classes the JIT never warms). The
+    * engine adds no artifacts, so the scope turns isolation off and
+    * the drains share one code cache. */
   def withStreamConf[T](spark: SparkSession,
       extra: Map[String, String] = Map.empty)(body: => T): T = {
     StreamMetrics.attach(spark)
@@ -216,7 +224,8 @@ object EventStreams {
         // happen asynchronously in the background. Restart replays
         // changelogs on top of the last snapshot, which
         // stream_restart_stateful exercises end-to-end.
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true")
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled" -> "true",
+        "spark.sql.artifact.isolation.enabled" -> "false")
         ++ extra)(body)
   }
 

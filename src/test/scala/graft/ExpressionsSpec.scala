@@ -334,6 +334,31 @@ class ExpressionsSpec extends AnyFunSuite {
     }
   }
 
+  test("salt_words native == split/transform/md5 twin: edge spacing, tabs, multi-byte, k >= 10, nulls (codegen on/off)") {
+    import graft.functions.TextFunctions.saltWords
+    val texts = Seq(null, "", " ", "  ", "word", " lead", "trail ", "two  spaces", " both ends ",
+      "tab\tis\tnot a separator", "\t", "naïve café", "日本語 テキスト", "emoji 😀 x", "a b c d e f")
+    val ks = (1 to 9) ++ Seq(10, 11, 99, 100, 123456)
+    val schema = StructType(Seq(StructField("text", StringType), StructField("k", IntegerType)))
+    val df = rddFrame(schema, (for (t <- texts; k <- ks) yield Row(t, k)) :+ Row("null k", null): _*)
+    val fixture = Tables.documents(spark, TestSpark.sf0001)
+      .select(col("text"), explode(array(lit(1), lit(2), lit(12))).as("k"))
+    inBothCodegenModes { mode =>
+      for (in <- Seq(df, fixture)) {
+        val got = in.select(saltWords(col("text"), col("k")).as("a"),
+          ScaledTwin.saltHof(col("text"), col("k")).as("b"))
+        assert(got.filter(not(col("a") <=> col("b"))).count() === 0, s"$mode: salt_words != twin")
+      }
+      val rows = df.filter(col("text").isNull || col("k").isNull)
+        .select(saltWords(col("text"), col("k"))).collect().map(r => Option(r.getString(0)))
+      assert(rows.count(_.isEmpty) === ks.size && rows.contains(Some("")),
+        s"$mode: null text gives null, null k the empty string")
+    }
+    val plan = df.select(saltWords(col("text"), col("k")).as("s")).queryExecution.executedPlan.toString
+    val line = plan.linesIterator.find(_.contains("salt_words")).get
+    assert(line.trim.startsWith("*") && !plan.contains("lambda"), s"salt_words not codegen'd:\n$plan")
+  }
+
   test("IntersectCount == size(array_intersect) on distinct-left sets: null elements and null arrays (codegen on/off)") {
     import graft.expressions.IntersectCount
     import org.apache.spark.sql.GraftBridge

@@ -9,8 +9,13 @@ SURVEY said 163 while the judged surface was 164).
 The code-size counts cover the Scala sources under src/main: lines
 (as `wc -l` counts them), `SparkSession.builder` sites, `def main(`
 entry points, lines citing "round N" history (case-insensitive
-`round 12` / `round-12`), and the `row_number().over` window sites in
-the query modules.
+`round 12` / `round-12`), the `row_number().over` window sites in
+the query modules, the `read.parquet(` sites outside `Tables` that
+pass no schema (a read whose result is only asked for `.schema` is
+the inference itself and is not counted), and the lambda
+`transform(` / `aggregate(` / `zip_with(` sites (interpreted
+higher-order functions) in `ScaleRehearsal` and the query modules,
+comment lines excluded.
 
 Usage: python3 tools/counts.py [verify_outDir]
        python3 tools/counts.py --stamp
@@ -54,6 +59,19 @@ print(f'"round N" history lines: {sum(bool(history.search(l)) for l in main_line
 print("row_number().over sites under src/main/.../queries: " + str(sum(
     open(f).read().count("row_number().over")
     for f in glob.glob("src/main/scala/graft/queries/*.scala"))))
+# schema-less fixture/artifact reads: each infers its schema, one Spark
+# job per call
+print("read.parquet( sites without a schema, outside Tables: " + str(sum(
+    len(re.findall(r"read\.parquet\((?![^\n]*\)\.schema\b)", open(f).read()))
+    for f in glob.glob("src/main/**/*.scala", recursive=True)
+    if not f.endswith("/Tables.scala"))))
+hof = re.compile(r"\b(?:transform|aggregate|zip_with)\(")
+print("lambda transform(/aggregate(/zip_with( sites in ScaleRehearsal + queries: " + str(sum(
+    len(hof.findall(line))
+    for f in ["src/main/scala/graft/ScaleRehearsal.scala"]
+    + glob.glob("src/main/scala/graft/queries/*.scala")
+    for line in open(f)
+    if not line.lstrip().startswith(("//", "*", "/*")))))
 
 if "--stamp" in sys.argv:
     rounds = [int(m.group(1)) for p in glob.glob("CORRECTNESS_r*.json")
