@@ -4,9 +4,9 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Scale-path join utilities: bucketed co-located joins (shuffle
-  * elimination for repeated fact⋈fact joins) and key salting (skew
-  * mitigation beyond what AQE's skew-join split covers, e.g. a single
-  * hot key joined against a dimension).
+  * elimination for repeated fact⋈fact joins), the hot-bucket cap for
+  * LSH candidate self-joins, and an interval-overlap join without a
+  * nested loop.
   */
 object ScaleOps {
 
@@ -36,40 +36,6 @@ object ScaleOps {
       .sortBy(keys.head, keys.tail: _*)
       .format("parquet")
       .saveAsTable(table)
-  }
-
-  /** Salted equi-join for skewed left keys: the left side gets a random
-    * salt in [0, salt), the (small, broadcast-unfriendly but
-    * replicable) right side is exploded `salt` times, and the join key
-    * becomes (key, salt) — hot keys spread over `salt` reducers.
-    * Correct for inner/left/semi/anti joins on unique right keys
-    * (each left row carries ONE salt, so it meets at most its own
-    * replica); right/full/cross would emit the replicated right side
-    * `salt` times, so those fail loudly instead. Spark's join-type
-    * aliases ("leftouter", "left_semi", ...) are accepted.
-    *
-    * LAST RESORT, measured (PLANS.md round 14, "Task 4:
-    * join_skew_salted vs stock AQE at ×100"): on a ×100 workload
-    * with a realistic (non-pathological) key distribution, the plain
-    * equi-join under stock AQE ran 5×
-    * FASTER than this salt — the `salt`-fold right-side replication
-    * and wider shuffle are paid UNCONDITIONALLY, while AQE's skew
-    * split costs nothing until a partition actually exceeds the skew
-    * threshold, then fixes it adaptively. Salt joins only when
-    * measurement shows AQE's split cannot help (e.g. one hot key so
-    * dominant that even split partitions stall, with a right side too
-    * big to broadcast). */
-  def saltedJoin(left: DataFrame, right: DataFrame, key: String, salt: Int,
-      joinType: String = "inner"): DataFrame = {
-    val normalized = joinType.toLowerCase.replace("_", "")
-    require(Set("inner", "left", "leftouter", "leftsemi", "semi", "leftanti", "anti")(normalized),
-      s"saltedJoin supports inner/left/left_semi/left_anti only " +
-        s"(right side is replicated $salt x); got '$joinType'")
-    val saltedLeft = left.withColumn("__salt",
-      (rand(seed = 42) * salt).cast("int"))
-    val saltedRight = right.withColumn("__salt",
-      explode(sequence(lit(0), lit(salt - 1))))
-    saltedLeft.join(saltedRight, Seq(key, "__salt"), joinType).drop("__salt")
   }
 
   /** Hot-bucket guard for LSH-style candidate self-joins (minhash

@@ -117,18 +117,13 @@ object PhashQueries {
         expr("3 * 65536 + ((hi >> 16) & 65535)"))).as("band"))
 
   /** The PERSISTED standing phash index — all base images decoded,
-    * hashed, banded, bucket-capped (the capBuckets discipline: a
-    * production corpus's degenerate buckets — millions of identical
-    * black frames — are bounded at O(cap) members by the deterministic
-    * lowest-ids rule the oracle mirrors via QUALIFY), written ONCE per
-    * JVM and re-read by every lifecycle query (build once, serve
-    * many). Returns the artifact path. */
+    * hashed, banded and bucket-capped (a production corpus's degenerate
+    * buckets — millions of identical black frames — stay bounded at
+    * the cap), written ONCE per JVM and re-read by every lifecycle
+    * query (build once, serve many). Returns the artifact path. */
   private[queries] def sharedPhashIndex(s: SparkSession, d: String): String =
-    graft.Staging.onceDir(s, "phidx_shared", d) { p =>
-      graft.operators.ScaleOps.capBuckets(
-          bandsOfHash(Multimodal.phashBases(baseIds(s, d))),
-          Seq("band"), "img_id", cap = 200)
-        .write.mode("overwrite").parquet(p)
+    BandIndex.persist(s, "phidx_shared", d) {
+      BandIndex.Phash.capped(bandsOfHash(Multimodal.phashBases(baseIds(s, d))))
     }
 
   /** Score a banded probe frame against an index frame: the banded
@@ -147,80 +142,50 @@ object PhashQueries {
       .agg(count(lit(1)).as("n_index_dups"), min(col("idx_id")).as("first_dup"))
   }
 
-  /** Roster-preserving serve: rollup right-joined to the probe roster
-    * (images with zero index hits must still appear, is_dup = false). */
-  private def serveRoster(scored: DataFrame, roster: DataFrame): DataFrame =
-    scored.join(roster, Seq("img_id"), "right")
-      .select(col("img_id"),
-        coalesce(col("n_index_dups"), lit(0L)).as("n_index_dups"),
-        col("first_dup"), col("n_index_dups").isNotNull.as("is_dup"))
-      .orderBy(col("img_id"))
-
-  /** The nightly roll's FOLD, shared by the batch and stream twins
-    * (`multimodal_phash_index_roll` / `stream_phash_index_roll`):
-    * persisted standing index ∖ tombstoned base ids (broadcast
-    * anti-join — O(index ∩ tombstones), the index never shuffles on
-    * the tombstone key) ∪ the arrival hashes' band rows, re-capped
-    * over the union. The cap's lowest-ids rule is
-    * composition-independent, so the fold equals the from-scratch
-    * rebuild the shared oracle encodes — and since anti-join and
-    * union are pure functions of the delta SETS, micro-batched deltas
-    * fold to the same artifact as staged frames (stream == batch,
-    * gated at frame level in PhashSpec). */
+  /** The pHash roll fold ([[BandIndex.roll]]) over the persisted
+    * standing index: arrivals come as hashes `(img_id, lo, hi)` and
+    * join as their band rows. Shared by the batch and stream rolls and
+    * PlanShapeSpec's guard. */
   private[graft] def phashRollFold(s: SparkSession, d: String,
       tombIds: DataFrame, arrivalHashes: DataFrame): DataFrame =
-    graft.operators.ScaleOps.capBuckets(
-      s.read.parquet(sharedPhashIndex(s, d))
-        .join(broadcast(tombIds.select(col("img_id"))), Seq("img_id"), "left_anti")
-        .unionByName(bandsOfHash(arrivalHashes)),
-      Seq("band"), "img_id", cap = 200)
+    BandIndex.Phash.roll(BandIndex.read(s, sharedPhashIndex(s, d)),
+      tombIds, bandsOfHash(arrivalHashes))
 
-  /** `stream_phash_index_roll`'s per-trigger logging body — named so
-    * FoldReplaySpec can re-execute it with a committed batch id and
-    * assert the logs unchanged (the foreachBatch replay contract):
-    * tombstone ids log as-is; arrival payloads decode through the
-    * real codec (per-image pure) — both into batch-id-keyed dirs in
-    * OVERWRITE mode. */
-  private[graft] def phashRollLogBatch(d: String, b: DataFrame, id: Long): Unit = {
-    val root = graft.Staging.dir("phsroll", d)
-    b.filter(col("kind") === "tomb").select(col("img_id"))
-      .write.mode("overwrite").parquet(s"$root/log/t$id")
-    Multimodal.dHashFrame(
-        b.filter(col("kind") === "arrival")
-          .select(col("img_id"), col("payload")))
-      .write.mode("overwrite").parquet(s"$root/log/a$id")
-    ()
-  }
+  /** `stream_phash_index_roll`'s per-trigger body
+    * ([[BandIndex.logBatch]]): arrival payloads decode through the real
+    * codec (per-image pure) and log as hashes. */
+  private[graft] def phashRollLogBatch(d: String, b: DataFrame, id: Long): Unit =
+    BandIndex.Phash.logBatch(graft.Staging.dir("phsroll", d), b, id)(a =>
+      Multimodal.dHashFrame(a.select(col("img_id"), col("payload"))))
 
   /** Roll fixture slices: tombstones = base ids % 40 == 10 (half the
     * day-3 probe twins' bases — the delete must be VISIBLE in the
     * judged serve); arrivals = twins of id % 20 == 0 (the retwin
     * probes' only possible matches — the append must be visible too);
-    * day-3 probes = twins of id % 20 == 10 ∪ all retwins. */
-  private def rollProbeRoster(s: SparkSession, d: String): DataFrame = {
+    * day-3 probes = twins of id % 20 == 10 ∪ all retwins, served here
+    * against the rolled index `idx`. */
+  private def rollServe(s: SparkSession, d: String, idx: DataFrame): DataFrame = {
+    val ids = baseIds(s, d)
+    val probes = Multimodal.phashTwins(ids.filter((l: java.lang.Long) => l % 20 == 10))
+      .unionByName(Multimodal.phashRetwins(ids))
     val docs = Tables.documents(s, d).select(col("doc_id").cast("long").as("id"))
-    docs.filter(pmod(col("id"), lit(20L)) === 10)
+    val roster = docs.filter(pmod(col("id"), lit(20L)) === 10)
       .select((col("id") + 1000000000L).as("img_id"))
       .unionByName(docs.filter(pmod(col("id"), lit(20L)) === 0)
         .select((col("id") + 2000000000L).as("img_id")))
-  }
-
-  private def rollProbes(s: SparkSession, d: String): DataFrame = {
-    val ids = baseIds(s, d)
-    Multimodal.phashTwins(ids.filter((l: java.lang.Long) => l % 20 == 10))
-      .unionByName(Multimodal.phashRetwins(ids))
+    BandIndex.Phash.serve(scoreAgainstPhashIndex(bandsOfHash(probes), idx), roster)
   }
 
   /** The rolled artifact's path (batch twin) — built once per JVM;
     * PhashSpec reads it for the stream==batch frame gate. */
   private[graft] def rolledPhashIndex(s: SparkSession, d: String): String =
-    graft.Staging.onceDir(s, "phidx_rolled", d) { p =>
+    BandIndex.persist(s, "phidx_rolled", d) {
       val ids = baseIds(s, d)
       val tomb = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(40L)) === 10)
         .select(col("doc_id").cast("long").as("img_id"))
       val arrivals = Multimodal.phashTwins(ids.filter((l: java.lang.Long) => l % 20 == 0))
-      phashRollFold(s, d, tomb, arrivals).write.mode("overwrite").parquet(p)
+      phashRollFold(s, d, tomb, arrivals)
     }
 
   /** Shared oracle of the batch roll and its streaming twin: the
@@ -254,7 +219,7 @@ object PhashQueries {
       WITH $phashCtes,
       $indexCtes
       SELECT id AS img_id, lo, hi, band FROM pidx ORDER BY img_id, band""")) { (s, d) =>
-      s.read.parquet(sharedPhashIndex(s, d))
+      BandIndex.read(s, sharedPhashIndex(s, d))
         .select(col("img_id"), col("lo"), col("hi"), col("band"))
         .orderBy(col("img_id"), col("band"))
     },
@@ -279,13 +244,13 @@ object PhashQueries {
       val ids = baseIds(s, d)
       val day2 = Multimodal.phashTwins(ids)
         .unionByName(Multimodal.phashRetwins(ids))
-      val idx = s.read.parquet(sharedPhashIndex(s, d))
+      val idx = BandIndex.read(s, sharedPhashIndex(s, d))
       val docs = Tables.documents(s, d).select(col("doc_id").cast("long").as("id"))
       val roster = docs.filter(pmod(col("id"), lit(10L)) === 0)
           .select((col("id") + 1000000000L).as("img_id"))
         .unionByName(docs.filter(pmod(col("id"), lit(20L)) === 0)
           .select((col("id") + 2000000000L).as("img_id")))
-      serveRoster(scoreAgainstPhashIndex(bandsOfHash(day2), idx), roster)
+      BandIndex.Phash.serve(scoreAgainstPhashIndex(bandsOfHash(day2), idx), roster)
     },
 
     /** Combined nightly ROLL of the phash index — the maintenance
@@ -304,10 +269,7 @@ object PhashQueries {
       * match. Cost: O(index + tombstones + arrivals) — never the
       * payload corpus; no decode of standing images ever re-runs. */
     QueryDef("multimodal_phash_index_roll", Some(phashRollOracle)) { (s, d) =>
-      val rolled = rolledPhashIndex(s, d)
-      serveRoster(
-        scoreAgainstPhashIndex(bandsOfHash(rollProbes(s, d)), s.read.parquet(rolled)),
-        rollProbeRoster(s, d))
+      rollServe(s, d, BandIndex.read(s, rolledPhashIndex(s, d)))
     },
 
     /** ONLINE nightly roll — `multimodal_phash_index_roll`'s streaming
@@ -355,14 +317,8 @@ object PhashQueries {
       }
       OnlineFold.drain(s, root, inTmpl)(phashRollLogBatch(d, _, _))
       // the one roll: fold every logged delta into the persisted index
-      val tomb = OnlineFold.readLogs(s, s"$root/log/t*", "img_id LONG")
-      val arrivals = OnlineFold.readLogs(s, s"$root/log/a*", "img_id LONG, lo LONG, hi LONG")
-      phashRollFold(s, d, tomb, arrivals)
-        .write.mode("overwrite").parquet(s"$root/rolled")
-      serveRoster(
-        scoreAgainstPhashIndex(bandsOfHash(rollProbes(s, d)),
-          s.read.parquet(s"$root/rolled")),
-        rollProbeRoster(s, d))
+      rollServe(s, d, BandIndex.Phash.rollLogs(s, root,
+        "img_id LONG, lo LONG, hi LONG")(phashRollFold(s, d, _, _)))
     }
   )
 }

@@ -81,26 +81,20 @@ object Relational4 {
 
     /** The JOIN skew-guard DECISION query — complement of `agg_salted`
       * (aggregation skew, where manual salting remains the right
-      * tool). Through round 13 this judged ScaleOps.saltedJoin (salt 8
-      * on the fact side, dimension exploded 8×); its ×10→×100 marginal
-      * exponent of 0.91 — the roster's closest to linear — prompted a
-      * round-14 A/B on the identical ×100 workload
-      * (PLANS.md round 14, "Task 4: join_skew_salted vs stock AQE at
-      * ×100"): stock AQE's plain equi-join ran **5× FASTER** than the
-      * manual salt (medians
+      * tool). A manual salt (fact side salted 8 ways, dimension
+      * exploded 8×) was measured against stock AQE on the identical
+      * ×100 workload (PLANS.md, "Task 4: join_skew_salted vs stock AQE
+      * at ×100"): AQE's plain equi-join ran **5× FASTER** (medians
       * 2.0 s vs 10.3 s; even with broadcast disabled the plain
       * SortMergeJoin won at 2.3 s, with ZERO AQE skew-splits firing —
       * the fixture's realistic key distribution never stalls a
       * reducer, while the salt's 8× dimension replication and wider
       * (key, salt) shuffle are a tax paid unconditionally). The judged
-      * plan is therefore the PLAIN equi-join under AQE — identical
-      * rows by construction (salting only reroutes), same oracle —
-      * and `ScaleOps.saltedJoin` stays the documented, ScaleOpsSpec-
-      * judged last resort for hot-key-vs-dimension skew that AQE's
-      * split demonstrably cannot fix. The 100 TB guidance this query
-      * now records: reach for AQE first; salt joins only on measured
-      * evidence, because the remedy has a standing cost the disease
-      * may never incur. */
+      * plan is therefore the PLAIN equi-join under AQE — the rows a
+      * salt would produce by construction (salting only reroutes),
+      * same oracle. The guidance this query records: reach for AQE
+      * first; salt joins only on measured evidence, because the remedy
+      * has a standing cost the disease may never incur. */
     QueryDef("join_skew_salted", Some("""
       SELECT c_mktsegment, count(*) AS n_orders,
              CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) AS DOUBLE) AS total

@@ -130,8 +130,7 @@ object TextQueries {
     * joins (`dedup_minhash_incremental`, `stream_dedup_index`) build
     * on. */
   private[queries] def minhashBanded(docs: DataFrame): DataFrame =
-    graft.operators.ScaleOps.capBuckets(minhashBandedRaw(docs),
-      Seq("band", "bk1", "bk2"), "doc_id", cap = 200)
+    BandIndex.MinHash.capped(minhashBandedRaw(docs))
 
   /** The fixture corpus's signature frame, checkpointed ONCE per JVM
     * (round-11): dedup_minhash_lsh, the incremental index build, and
@@ -148,11 +147,9 @@ object TextQueries {
     * the same parquet artifact — exactly the production lifecycle
     * (one index build, many probe paths). Returns the index path. */
   private[queries] def sharedMinhashIndex(s: SparkSession, d: String): String =
-    graft.Staging.onceDir(s, "mhidx_shared", d) { p =>
-      graft.operators.ScaleOps.capBuckets(
-          bandsOf(fixtureSigs(s, d)).filter(pmod(col("doc_id"), lit(5L)) =!= 0),
-          Seq("band", "bk1", "bk2"), "doc_id", cap = 200)
-        .write.mode("overwrite").parquet(p)
+    BandIndex.persist(s, "mhidx_shared", d) {
+      BandIndex.MinHash.capped(
+        bandsOf(fixtureSigs(s, d)).filter(pmod(col("doc_id"), lit(5L)) =!= 0))
     }
 
   /** Rebuild-from-scratch twin of `dedup_minhash_index_append`'s
@@ -160,11 +157,10 @@ object TextQueries {
     * append+recap == rebuild invariant at FRAME level, complementing
     * the query's probe-path hash gate). */
   private[graft] def rebuildAppendedIndex(s: SparkSession, d: String): DataFrame =
-    graft.operators.ScaleOps.capBuckets(
+    BandIndex.MinHash.capped(
       bandsOf(fixtureSigs(s, d))
         .filter(pmod(col("doc_id"), lit(5L)) =!= 0 ||
-          pmod(col("doc_id"), lit(10L)) === 0),
-      Seq("band", "bk1", "bk2"), "doc_id", cap = 200)
+          pmod(col("doc_id"), lit(10L)) === 0))
 
   private[queries] def minhashPairs(docs: DataFrame): DataFrame = {
     // The self-join's aliased subtrees defeat ReuseExchange, so the
@@ -181,8 +177,7 @@ object TextQueries {
     // and re-attached to the deduped pairs via two broadcast joins —
     // measured 1.4 s SLOWER than carrying the sigs: the extra join
     // stages cost more than the wider shuffles saved)
-    val banded = graft.operators.ScaleOps.capBuckets(bandsOf(sigs),
-      Seq("band", "bk1", "bk2"), "doc_id", cap = 200)
+    val banded = BandIndex.MinHash.capped(bandsOf(sigs))
     val a = banded.select(col("band"), col("bk1"), col("bk2"),
       col("doc_id").as("id_a"), col("sig").as("sig_a"))
     val b = banded.select(col("band"), col("bk1"), col("bk2"),
@@ -283,71 +278,32 @@ object TextQueries {
       LEFT JOIN agg ON agg.doc_id = d.doc_id
       ORDER BY d.doc_id"""
 
-  /** `stream_minhash_index_roll`'s per-trigger logging body, named so
-    * FoldReplaySpec can re-execute it with a COMMITTED batch id and
-    * assert the logs are unchanged (the replay-idempotency contract
-    * foreachBatch retries rely on): tombstone ids and arrival bands
-    * write to batch-id-keyed dirs in OVERWRITE mode — a replayed batch
-    * converges, never duplicates. */
   /** `stream_dedup_index`'s per-trigger body — signatures computed
     * from the batch's own text, scored against the persisted index,
-    * written batch-id-keyed (overwrite). See [[minhashRollLogBatch]]
-    * for the replay contract. */
+    * written batch-id-keyed in OVERWRITE mode, so a replayed batch
+    * converges and never duplicates (FoldReplaySpec re-executes it with
+    * committed batch ids). */
   private[graft] def dedupIndexLogBatch(s: SparkSession, d: String,
       b: DataFrame, id: Long): Unit = {
     val root = graft.Staging.dir("sdix", d)
-    scoreAgainstIndex(s, minhashBandedRaw(b), sharedMinhashIndex(s, d))
+    scoreAgainstIndex(minhashBandedRaw(b), BandIndex.read(s, sharedMinhashIndex(s, d)))
       .write.mode("overwrite").parquet(s"$root/hits/b$id")
-    ()
   }
 
-  /** `stream_simhash_index_roll`'s per-trigger logging body — see
-    * [[minhashRollLogBatch]] for the replay contract. */
-  private[graft] def simhashRollLogBatch(d: String,
-      b: org.apache.spark.sql.DataFrame, id: Long): Unit = {
-    val root = graft.Staging.dir("shsroll", d)
-    b.filter(col("kind") === "tomb").select(col("doc_id"))
-      .write.mode("overwrite").parquet(s"$root/log/t$id")
-    simhashBandedRawFromToks(
-        b.filter(col("kind") === "arrival")
-          .select(col("doc_id"),
-            explode(graft.functions.TextFunctions.tokens(col("text"))).as("tok")))
-      .write.mode("overwrite").parquet(s"$root/log/a$id")
-    ()
-  }
+  /** `stream_minhash_index_roll`'s per-trigger body
+    * ([[BandIndex.logBatch]]): arrivals are signed and banded off their
+    * own text. */
+  private[graft] def minhashRollLogBatch(d: String, b: DataFrame, id: Long): Unit =
+    BandIndex.MinHash.logBatch(graft.Staging.dir("mhsroll", d), b, id)(a =>
+      minhashBandedRaw(a.select(col("doc_id"), col("text"))))
 
-  private[graft] def minhashRollLogBatch(d: String,
-      b: org.apache.spark.sql.DataFrame, id: Long): Unit = {
-    val root = graft.Staging.dir("mhsroll", d)
-    b.filter(col("kind") === "tomb").select(col("doc_id"))
-      .write.mode("overwrite").parquet(s"$root/log/t$id")
-    minhashBandedRaw(
-        b.filter(col("kind") === "arrival")
-          .select(col("doc_id"), col("text")))
-      .write.mode("overwrite").parquet(s"$root/log/a$id")
-    ()
-  }
-
-  /** The nightly roll's FOLD, shared by the batch and stream twins
-    * (`dedup_minhash_index_roll` / `stream_minhash_index_roll`):
-    * persisted standing index ∖ tombstone ids (broadcast anti-join —
-    * O(tombstones), the delete roll's guarded shape; the index side
-    * must never shuffle on the tombstone key) ∪ arrival bands,
-    * re-capped over the union. PlanShapeSpec asserts this frame's
-    * physical plan directly, so the guard covers both judged rolls'
-    * fold regardless of where their deltas came from. */
+  /** The MinHash roll fold ([[BandIndex.roll]]) over the persisted
+    * standing index — the frame both the batch and the stream roll
+    * persist, and the one PlanShapeSpec guards. */
   private[graft] def minhashRollFold(s: SparkSession,
       d: String, tomb: DataFrame, arrivals: DataFrame): DataFrame =
-    graft.operators.ScaleOps.capBuckets(
-      s.read.parquet(sharedMinhashIndex(s, d))
-        .join(broadcast(tomb.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-        .unionByName(arrivals),
-      Seq("band", "bk1", "bk2"), "doc_id", cap = 200)
+    BandIndex.MinHash.roll(BandIndex.read(s, sharedMinhashIndex(s, d)), tomb, arrivals)
 
-  /** Score a banded batch side against the persisted index at
-    * `indexPath`: band-key equi-join, est-Jaccard confirm at 0.5,
-    * per-doc rollup `(doc_id, n_index_dups, first_dup)` — docs with
-    * at least one index hit only (callers outer-join the roster). */
   private val bucketMaxMemo =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
 
@@ -364,15 +320,11 @@ object TextQueries {
         .agg(count(lit(1)).as("n"))
         .agg(max(col("n"))).head.getLong(0))
 
-  private[queries] def scoreAgainstIndex(s: SparkSession, bandedBatch: DataFrame,
-      indexPath: String): DataFrame =
-    scoreAgainstIndexFrame(bandedBatch, s.read.parquet(indexPath))
-
-  /** [[scoreAgainstIndex]] over an in-plan index frame — the
-    * tombstone-delete serve path filters the persisted index before
-    * scoring (round 16). */
-  private[queries] def scoreAgainstIndexFrame(bandedBatch: DataFrame,
-      idxRaw: DataFrame): DataFrame = {
+  /** Score a banded batch side against a MinHash band index: band-key
+    * equi-join, est-Jaccard confirm at 0.5, per-doc rollup `(doc_id,
+    * n_index_dups, first_dup)` — docs with at least one index hit only
+    * ([[BandIndex.serve]] adds the roster). */
+  private def scoreAgainstIndex(bandedBatch: DataFrame, idxRaw: DataFrame): DataFrame = {
     val idx = idxRaw
       .select(col("band"), col("bk1"), col("bk2"),
         col("doc_id").as("idx_id"), col("sig").as("idx_sig"))
@@ -383,6 +335,19 @@ object TextQueries {
       .dropDuplicates("doc_id", "idx_id")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_index_dups"), min(col("idx_id")).as("first_dup"))
+  }
+
+  /** Probe the fixture slice `doc_id % mod = res` against a MinHash
+    * band index and serve that slice's roster — [[simhashServe]]'s
+    * shape on the MinHash family (the incremental, delete and recap
+    * serves probe %5=0; append and the roll twins probe the day-3
+    * %10=5 slice). */
+  private def minhashServe(s: SparkSession, d: String, idx: DataFrame,
+      mod: Long = 5L, res: Long = 0L): DataFrame = {
+    val slice = pmod(col("doc_id"), lit(mod)) === res
+    BandIndex.MinHash.serve(
+      scoreAgainstIndex(bandsOf(fixtureSigs(s, d)).filter(slice), idx),
+      Tables.documents(s, d).filter(slice).select(col("doc_id")))
   }
 
 
@@ -406,8 +371,7 @@ object TextQueries {
     * ReuseExchange reason documented in [[simhashBandedOf]]. */
   private def fixtureSimhashBanded(s: SparkSession, d: String): DataFrame =
     graft.Staging.frame(s, "sh_banded", d) {
-      graft.operators.ScaleOps.capBuckets(fixtureSimhashBandedRaw(s, d),
-        Seq("band", "bkey"), "doc_id", cap = 200).localCheckpoint()
+      BandIndex.SimHash.capped(fixtureSimhashBandedRaw(s, d)).localCheckpoint()
     }
 
   /** The fixture corpus's UNcapped banded SimHash frame, memoized once
@@ -435,8 +399,7 @@ object TextQueries {
   /** [[simhashBandedOf]] from an already-exploded `(doc_id, tok)`
     * stream — the shared-prefix entry point. */
   private def simhashBandedFromToks(toksIn: DataFrame): DataFrame =
-    graft.operators.ScaleOps.capBuckets(simhashBandedRawFromToks(toksIn),
-      Seq("band", "bkey"), "doc_id", cap = 200)
+    BandIndex.SimHash.capped(simhashBandedRawFromToks(toksIn))
 
   /** The UNcapped banded frame from exploded tokens — callers cap
     * over the slice that is semantically theirs. */
@@ -518,7 +481,7 @@ object TextQueries {
     * (capping the full corpus and then filtering would keep the wrong
     * 200 — the reason the raw banded frame is the shared prefix). */
   private[queries] def sharedSimhashIndex(s: SparkSession, d: String, which: String): String =
-    graft.Staging.onceDir(s, s"shidx_$which", d) { p =>
+    BandIndex.persist(s, s"shidx_$which", d) {
       val slice = which match {
         case "shared" => fixtureSimhashBandedRaw(s, d)
           .filter(pmod(col("doc_id"), lit(5L)) =!= 0)
@@ -527,8 +490,7 @@ object TextQueries {
             pmod(col("doc_id"), lit(2L)) === 0)
         case other => throw new IllegalArgumentException(s"unknown simhash index slice $other")
       }
-      graft.operators.ScaleOps.capBuckets(slice, Seq("band", "bkey"), "doc_id", cap = 200)
-        .write.mode("overwrite").parquet(p)
+      BandIndex.SimHash.capped(slice)
     }
 
   /** Batch probe against a simhash band index: band equi-join, Hamming
@@ -549,29 +511,26 @@ object TextQueries {
       .dropDuplicates("doc_id", "idx_id")
       .groupBy(col("doc_id"))
       .agg(count(lit(1)).as("n_index_dups"), min(col("idx_id")).as("first_dup"))
-    Tables.documents(s, d).filter(pmod(col("doc_id"), lit(mod)) === res)
-      .select(col("doc_id"))
-      .join(scored, Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        coalesce(col("n_index_dups"), lit(0L)).as("n_index_dups"),
-        col("first_dup"),
-        col("n_index_dups").isNotNull.as("is_dup"))
-      .orderBy(col("doc_id"))
+    BandIndex.SimHash.serve(scored,
+      Tables.documents(s, d).filter(pmod(col("doc_id"), lit(mod)) === res)
+        .select(col("doc_id")))
   }
 
-  /** The simhash nightly roll's FOLD, shared by the batch and stream
-    * twins (`dedup_simhash_index_roll` / `stream_simhash_index_roll`)
-    * and PlanShapeSpec's guard — [[minhashRollFold]]'s shape on the
-    * bit-signature family: persisted standing band index ∖ tombstone
-    * ids (broadcast anti-join, O(tombstones)) ∪ arrival bands,
-    * re-capped over the union. */
+  /** `stream_simhash_index_roll`'s per-trigger body
+    * ([[BandIndex.logBatch]]): arrivals are signed and banded off their
+    * own tokens. */
+  private[graft] def simhashRollLogBatch(d: String, b: DataFrame, id: Long): Unit =
+    BandIndex.SimHash.logBatch(graft.Staging.dir("shsroll", d), b, id)(a =>
+      simhashBandedRawFromToks(
+        a.select(col("doc_id"), explode(tokens(col("text"))).as("tok"))))
+
+  /** The SimHash roll fold ([[BandIndex.roll]]) over the persisted
+    * standing index, shared by the batch and stream rolls and
+    * PlanShapeSpec's guard. */
   private[graft] def simhashRollFold(s: SparkSession,
       d: String, tomb: DataFrame, arrivals: DataFrame): DataFrame =
-    graft.operators.ScaleOps.capBuckets(
-      s.read.parquet(sharedSimhashIndex(s, d, "shared"))
-        .join(broadcast(tomb.select(col("doc_id"))), Seq("doc_id"), "left_anti")
-        .unionByName(arrivals),
-      Seq("band", "bkey"), "doc_id", cap = 200)
+    BandIndex.SimHash.roll(
+      BandIndex.read(s, sharedSimhashIndex(s, d, "shared")), tomb, arrivals)
 
   /** Shared oracle of the simhash combined roll and its streaming twin
     * — [[minhashRollOracle]]'s algebra on the bit-signature family:
@@ -623,6 +582,35 @@ object TextQueries {
       LEFT JOIN agg ON agg.doc_id = d.doc_id
       ORDER BY d.doc_id"""
 
+
+  /** The READ-ONLY staged solid-color PNG per document under
+    * `<root>/img` — dims and color pure functions of doc_id, encoded
+    * once per JVM and shared by `multimodal_image_meta` and
+    * `multimodal_image_resize`. Returns the root. */
+  private def stagedPngs(s: SparkSession, d: String): String =
+    graft.Staging.onceDir(s, "png", d) { pp =>
+      import s.implicits._
+      Tables.documents(s, d).select(col("doc_id")).as[Long]
+        .mapPartitions(_.map { id =>
+          val w = 1 + (id % 16).toInt
+          val h = 1 + ((id / 16) % 16).toInt
+          val rgb = ((id * 2654435761L) % 16777216L).toInt
+          (id, graft.operators.Multimodal.ImageCodec.encodePng(w, h, rgb))
+        }).toDF("doc_id", "payload")
+        .write.mode("overwrite").parquet(s"$pp/img")
+    }
+
+  /** The READ-ONLY staged WAV per document under `<root>/wav`, encoded
+    * once per JVM and shared by `multimodal_audio_meta` and
+    * `multimodal_audio_resample`. Returns the root. */
+  private def stagedWavs(s: SparkSession, d: String): String =
+    graft.Staging.onceDir(s, "wav", d) { pp =>
+      import s.implicits._
+      Tables.documents(s, d).select(col("doc_id")).as[Long]
+        .mapPartitions(_.map(id => (id, graft.operators.Multimodal.AudioCodec.encodeWav(id))))
+        .toDF("doc_id", "payload")
+        .write.mode("overwrite").parquet(s"$pp/wav")
+    }
 
   /** Near-dup graph recursive-reachability CTE prefix, shared verbatim
     * by the `dedup_components` and `dedup_survivorship` oracles so the
@@ -996,15 +984,7 @@ object TextQueries {
       // micro-batch, scores identically. Band-key layout on disk — at
       // scale this is bucketed by (band, bk1, bk2) so the daily join
       // co-locates.
-      val idx = sharedMinhashIndex(s, d)
-      val bat = bandsOf(fixtureSigs(s, d)).filter(pmod(col("doc_id"), lit(5L)) === 0)
-      scoreAgainstIndex(s, bat, idx)
-        .join(Tables.documents(s, d).filter(pmod(col("doc_id"), lit(5L)) === 0)
-          .select(col("doc_id")), Seq("doc_id"), "right")
-        .select(col("doc_id"),
-          coalesce(col("n_index_dups"), lit(0L)).as("n_index_dups"),
-          col("first_dup"), col("n_index_dups").isNotNull.as("is_dup"))
-        .orderBy(col("doc_id"))
+      minhashServe(s, d, BandIndex.read(s, sharedMinhashIndex(s, d)))
     },
 
     /** STREAMING twin of `dedup_minhash_incremental` — index-aware
@@ -1045,12 +1025,9 @@ object TextQueries {
       // doc_id (each doc arrives exactly once), so the union IS the
       // full aggregate. A batch with zero index hits writes no part
       // files, and the correct answer is then all-is_dup=false
-      OnlineFold.readLogs(s, s"$root/hits/b*", "doc_id LONG, n_index_dups LONG, first_dup LONG")
-        .join(newDocs.select(col("doc_id")), Seq("doc_id"), "right")
-        .select(col("doc_id"),
-          coalesce(col("n_index_dups"), lit(0L)).as("n_index_dups"),
-          col("first_dup"), col("n_index_dups").isNotNull.as("is_dup"))
-        .orderBy(col("doc_id"))
+      BandIndex.MinHash.serve(
+        OnlineFold.readLogs(s, s"$root/hits/b*", "doc_id LONG, n_index_dups LONG, first_dup LONG"),
+        newDocs.select(col("doc_id")))
     },
 
     /** Index MAINTENANCE (round 15) — the MinHash index's missing
@@ -1062,14 +1039,11 @@ object TextQueries {
       * (doc_id % 10 = 5) served from it. The oracle is the
       * REBUILD-from-scratch form (one QUALIFY cap over
       * standing ∪ arrivals), so the hash gates the maintenance
-      * invariant itself: recap(cap(A) ∪ B) = cap(A ∪ B) — exact
-      * because the cap keeps the LOWEST 200 doc_ids per bucket, and
-      * A's lowest-200 always contains every A-row the union's
-      * lowest-200 can need (a deterministic, composition-independent
-      * rule; an LRU or insertion-order cap would NOT survive this
-      * gate). At 100 TB the nightly index roll is O(day's docs +
-      * touched buckets), never O(corpus) — and the append path is
-      * bounded by the same cap that bounds the probe fan-out. */
+      * invariant itself: recap(cap(A) ∪ B) = cap(A ∪ B), exact by the
+      * cap rule's composition independence ([[BandIndex]]). At 100 TB
+      * the nightly index roll is O(day's docs + touched buckets), never
+      * O(corpus) — and the append path is bounded by the same cap that
+      * bounds the probe fan-out. */
     QueryDef("dedup_minhash_index_append", Some(s"""
       WITH ${minhashBandsRawSql("documents")},
       idx AS (SELECT * FROM bands WHERE doc_id % 5 <> 0 OR doc_id % 10 = 0
@@ -1086,23 +1060,13 @@ object TextQueries {
       FROM (SELECT doc_id FROM documents WHERE doc_id % 10 = 5) d
       LEFT JOIN agg ON agg.doc_id = d.doc_id
       ORDER BY d.doc_id""")) { (s, d) =>
-      val appended = graft.Staging.onceDir(s, "mhidx_appended", d) { p =>
-        val idx1 = s.read.parquet(sharedMinhashIndex(s, d))
+      val appended = BandIndex.persist(s, "mhidx_appended", d) {
         val arrivals = bandsOf(fixtureSigs(s, d))
           .filter(pmod(col("doc_id"), lit(10L)) === 0)
-        graft.operators.ScaleOps.capBuckets(idx1.unionByName(arrivals),
-            Seq("band", "bk1", "bk2"), "doc_id", cap = 200)
-          .write.mode("overwrite").parquet(p)
+        BandIndex.MinHash.capped(
+          BandIndex.read(s, sharedMinhashIndex(s, d)).unionByName(arrivals))
       }
-      val probes = bandsOf(fixtureSigs(s, d))
-        .filter(pmod(col("doc_id"), lit(10L)) === 5)
-      scoreAgainstIndex(s, probes, appended)
-        .join(Tables.documents(s, d).filter(pmod(col("doc_id"), lit(10L)) === 5)
-          .select(col("doc_id")), Seq("doc_id"), "right")
-        .select(col("doc_id"),
-          coalesce(col("n_index_dups"), lit(0L)).as("n_index_dups"),
-          col("first_dup"), col("n_index_dups").isNotNull.as("is_dup"))
-        .orderBy(col("doc_id"))
+      minhashServe(s, d, BandIndex.read(s, appended), mod = 10L, res = 5L)
     },
 
     /** Index DELETION (round 16) — the right-to-be-forgotten half of
@@ -1118,20 +1082,12 @@ object TextQueries {
       * itself (a recap sneaking in, a missed or over-matched
       * tombstone, a stale artifact all break it) at any fixture.
       * Deliberately NOT gated: tombstone-serve == full-REBUILD
-      * equivalence, because it cannot hold in general — the cap keeps
-      * the lowest-200 doc_ids per bucket, and in an over-cap bucket a
-      * rebuild resurrects members the cap evicted while the tombstone
-      * path cannot (evictions are physically gone from the artifact).
-      * Both judged fixtures genuinely exercise that regime (largest
-      * standing bucket: 236 at sf0.001, 218 at sf0.01 — over the 200
-      * cap), so the honest claim, demonstrated in MinHashQualitySpec
-      * on a synthetic over-cap bucket, is DIRECTIONAL: tombstone-serve
-      * hits ⊆ rebuild hits, equality exactly when no touched bucket
-      * was capped — under-reporting (missed dups), never phantom
-      * hits, which is why production keeps the tombstone table beside
-      * the artifact and folds it in at the next rebuild/append roll.
-      * Tombstones broadcast: GDPR delete sets are tiny relative to
-      * the corpus at any scale. */
+      * equivalence — the delete is DIRECTIONAL ([[BandIndex]]), and
+      * both judged fixtures exercise the over-cap regime that makes it
+      * so (largest standing bucket: 236 at sf0.001, 218 at sf0.01);
+      * MinHashQualitySpec shows the gap on a synthetic over-cap
+      * bucket. Tombstones broadcast: GDPR delete sets are tiny
+      * relative to the corpus at any scale. */
     QueryDef("dedup_minhash_index_delete", Some(s"""
       WITH ${minhashBandsRawSql("documents")},
       idx0 AS (SELECT * FROM bands WHERE doc_id % 5 <> 0
@@ -1151,17 +1107,8 @@ object TextQueries {
       ORDER BY d.doc_id""")) { (s, d) =>
       val tomb = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(20L)) === 3)
-        .select(col("doc_id"))
-      val served = s.read.parquet(sharedMinhashIndex(s, d))
-        .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-      val bat = bandsOf(fixtureSigs(s, d)).filter(pmod(col("doc_id"), lit(5L)) === 0)
-      scoreAgainstIndexFrame(bat, served)
-        .join(Tables.documents(s, d).filter(pmod(col("doc_id"), lit(5L)) === 0)
-          .select(col("doc_id")), Seq("doc_id"), "right")
-        .select(col("doc_id"),
-          coalesce(col("n_index_dups"), lit(0L)).as("n_index_dups"),
-          col("first_dup"), col("n_index_dups").isNotNull.as("is_dup"))
-        .orderBy(col("doc_id"))
+      minhashServe(s, d,
+        BandIndex.MinHash.delete(BandIndex.read(s, sharedMinhashIndex(s, d)), tomb))
     },
 
     /** Combined nightly ROLL (round 17) — the production operation the
@@ -1184,24 +1131,14 @@ object TextQueries {
       * vacated in full buckets — the composition is more than the
       * sum of its judged parts, which QueriesSpec pins). */
     QueryDef("dedup_minhash_index_roll", Some(minhashRollOracle)) { (s, d) =>
-      val rolled = graft.Staging.onceDir(s, "mhidx_rolled", d) { p =>
+      val rolled = BandIndex.persist(s, "mhidx_rolled", d) {
         val tomb = Tables.documents(s, d)
           .filter(pmod(col("doc_id"), lit(20L)) === 3)
-          .select(col("doc_id"))
         val arrivals = bandsOf(fixtureSigs(s, d))
           .filter(pmod(col("doc_id"), lit(10L)) === 0)
         minhashRollFold(s, d, tomb, arrivals)
-          .write.mode("overwrite").parquet(p)
       }
-      val probes = bandsOf(fixtureSigs(s, d))
-        .filter(pmod(col("doc_id"), lit(10L)) === 5)
-      scoreAgainstIndex(s, probes, rolled)
-        .join(Tables.documents(s, d).filter(pmod(col("doc_id"), lit(10L)) === 5)
-          .select(col("doc_id")), Seq("doc_id"), "right")
-        .select(col("doc_id"),
-          coalesce(col("n_index_dups"), lit(0L)).as("n_index_dups"),
-          col("first_dup"), col("n_index_dups").isNotNull.as("is_dup"))
-        .orderBy(col("doc_id"))
+      minhashServe(s, d, BandIndex.read(s, rolled), mod = 10L, res = 5L)
     },
 
     /** ONLINE nightly roll (round-18 verdict task 1) —
@@ -1254,20 +1191,9 @@ object TextQueries {
       }
       OnlineFold.drain(s, root, inTmpl)(minhashRollLogBatch(d, _, _))
       // the one roll: fold every logged delta into the persisted index
-      val tomb = OnlineFold.readLogs(s, s"$root/log/t*", "doc_id LONG")
-      val arrivals = OnlineFold.readLogs(s, s"$root/log/a*",
-        "doc_id LONG, sig ARRAY<LONG>, band INT, bk1 LONG, bk2 LONG")
-      minhashRollFold(s, d, tomb, arrivals)
-        .write.mode("overwrite").parquet(s"$root/rolled")
-      val probes = bandsOf(fixtureSigs(s, d))
-        .filter(pmod(col("doc_id"), lit(10L)) === 5)
-      scoreAgainstIndex(s, probes, s"$root/rolled")
-        .join(Tables.documents(s, d).filter(pmod(col("doc_id"), lit(10L)) === 5)
-          .select(col("doc_id")), Seq("doc_id"), "right")
-        .select(col("doc_id"),
-          coalesce(col("n_index_dups"), lit(0L)).as("n_index_dups"),
-          col("first_dup"), col("n_index_dups").isNotNull.as("is_dup"))
-        .orderBy(col("doc_id"))
+      val rolled = BandIndex.MinHash.rollLogs(s, root,
+        "doc_id LONG, sig ARRAY<LONG>, band INT, bk1 LONG, bk2 LONG")(minhashRollFold(s, d, _, _))
+      minhashServe(s, d, rolled, mod = 10L, res = 5L)
     },
 
     /** Index RECAP (round 17) — the compaction that closes the
@@ -1309,22 +1235,12 @@ object TextQueries {
       FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 0) d
       LEFT JOIN agg ON agg.doc_id = d.doc_id
       ORDER BY d.doc_id""")) { (s, d) =>
-      val recapped = graft.Staging.onceDir(s, "mhidx_recap", d) { p =>
-        graft.operators.ScaleOps.capBuckets(
-            bandsOf(fixtureSigs(s, d))
-              .filter(pmod(col("doc_id"), lit(5L)) =!= 0 &&
-                pmod(col("doc_id"), lit(20L)) =!= 3),
-            Seq("band", "bk1", "bk2"), "doc_id", cap = 200)
-          .write.mode("overwrite").parquet(p)
+      val recapped = BandIndex.persist(s, "mhidx_recap", d) {
+        BandIndex.MinHash.capped(bandsOf(fixtureSigs(s, d))
+          .filter(pmod(col("doc_id"), lit(5L)) =!= 0 &&
+            pmod(col("doc_id"), lit(20L)) =!= 3))
       }
-      val bat = bandsOf(fixtureSigs(s, d)).filter(pmod(col("doc_id"), lit(5L)) === 0)
-      scoreAgainstIndex(s, bat, recapped)
-        .join(Tables.documents(s, d).filter(pmod(col("doc_id"), lit(5L)) === 0)
-          .select(col("doc_id")), Seq("doc_id"), "right")
-        .select(col("doc_id"),
-          coalesce(col("n_index_dups"), lit(0L)).as("n_index_dups"),
-          col("first_dup"), col("n_index_dups").isNotNull.as("is_dup"))
-        .orderBy(col("doc_id"))
+      minhashServe(s, d, BandIndex.read(s, recapped))
     },
 
     // Edit-distance near-dup — the character-level fuzzy family
@@ -1393,38 +1309,29 @@ object TextQueries {
       * The cap is per-(band, bkey) over the STANDING slice (capping
       * the full corpus then filtering would keep the wrong 200). */
     QueryDef("dedup_simhash_incremental", Some(simhashIncrementalOracle("TRUE"))) { (s, d) =>
-      simhashServe(s, d, s.read.parquet(sharedSimhashIndex(s, d, "shared")))
+      simhashServe(s, d, BandIndex.read(s, sharedSimhashIndex(s, d, "shared")))
     },
 
     /** Simhash index APPEND — exact by the cap rule's composition
-      * independence (the dedup_minhash_index_append argument verbatim:
-      * the cap keeps the LOWEST-200 doc_ids per bucket, and any
-      * member of lowest-200(A ∪ B) from the A side is necessarily in
-      * lowest-200(A), so recap(cap(day1) ∪ day2) == cap(day1 ∪ day2)
-      * identically). Day-2 (odd standing) bands are one O(batch)
+      * independence ([[BandIndex]]): recap(cap(day1) ∪ day2) ==
+      * cap(day1 ∪ day2). Day-2 (odd standing) bands are one O(batch)
       * pass; the roll touches the day's docs + matched buckets, never
       * the standing corpus. Gate: the probe serve shares the
       * incremental oracle VERBATIM — append(index(day1), day2) ==
       * index(standing) end-to-end. */
     QueryDef("dedup_simhash_index_append", Some(simhashIncrementalOracle("TRUE"))) { (s, d) =>
-      val appended = graft.Staging.onceDir(s, "shidx_appended", d) { p =>
+      val appended = BandIndex.persist(s, "shidx_appended", d) {
         val day2 = fixtureSimhashBandedRaw(s, d)
           .filter(pmod(col("doc_id"), lit(5L)) =!= 0 &&
             pmod(col("doc_id"), lit(2L)) === 1)
-        graft.operators.ScaleOps.capBuckets(
-            s.read.parquet(sharedSimhashIndex(s, d, "day1")).unionByName(day2),
-            Seq("band", "bkey"), "doc_id", cap = 200)
-          .write.mode("overwrite").parquet(p)
+        BandIndex.SimHash.capped(
+          BandIndex.read(s, sharedSimhashIndex(s, d, "day1")).unionByName(day2))
       }
-      simhashServe(s, d, s.read.parquet(appended))
+      simhashServe(s, d, BandIndex.read(s, appended))
     },
 
     /** Simhash index DELETE — the family's forget roll, with the
-      * MinHash roll's honest DIRECTIONAL contract (both are capped
-      * band indexes, so in an over-cap bucket a rebuild resurrects
-      * cap-evicted members the tombstone path physically cannot —
-      * tombstone-serve hits ⊆ rebuild hits, never phantom dups): one
-      * broadcast anti-join on the persisted index at serve time,
+      * DIRECTIONAL delete contract of [[BandIndex]]: one broadcast anti-join on the persisted index at serve time,
       * O(tombstones), the artifact never rewritten. The oracle models
       * the artifact-true semantics (cap FIRST over the full standing
       * set, THEN the tombstone filter), so the hash gates the
@@ -1437,10 +1344,8 @@ object TextQueries {
       simhashIncrementalOracle("doc_id % 20 <> 6"))) { (s, d) =>
       val tomb = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(20L)) === 6)
-        .select(col("doc_id"))
-      val served = s.read.parquet(sharedSimhashIndex(s, d, "shared"))
-        .join(broadcast(tomb), Seq("doc_id"), "left_anti")
-      simhashServe(s, d, served)
+      simhashServe(s, d,
+        BandIndex.SimHash.delete(BandIndex.read(s, sharedSimhashIndex(s, d, "shared")), tomb))
     },
 
     /** Simhash index RECAP — `dedup_minhash_index_recap`'s scheduled
@@ -1455,15 +1360,12 @@ object TextQueries {
       * probe). O(survivor bands) per recap window. */
     QueryDef("dedup_simhash_index_recap", Some(
       simhashIncrementalOracle("TRUE", preCapWhere = "doc_id % 20 <> 6"))) { (s, d) =>
-      val recapped = graft.Staging.onceDir(s, "shidx_recap", d) { p =>
-        graft.operators.ScaleOps.capBuckets(
-            fixtureSimhashBandedRaw(s, d)
-              .filter(pmod(col("doc_id"), lit(5L)) =!= 0 &&
-                pmod(col("doc_id"), lit(20L)) =!= 6),
-            Seq("band", "bkey"), "doc_id", cap = 200)
-          .write.mode("overwrite").parquet(p)
+      val recapped = BandIndex.persist(s, "shidx_recap", d) {
+        BandIndex.SimHash.capped(fixtureSimhashBandedRaw(s, d)
+          .filter(pmod(col("doc_id"), lit(5L)) =!= 0 &&
+            pmod(col("doc_id"), lit(20L)) =!= 6))
       }
-      simhashServe(s, d, s.read.parquet(recapped))
+      simhashServe(s, d, BandIndex.read(s, recapped))
     },
 
     /** Simhash combined NIGHTLY roll (round 18) —
@@ -1481,16 +1383,14 @@ object TextQueries {
       * until a recap window; the re-cap lets arrivals fill vacated
       * seats). */
     QueryDef("dedup_simhash_index_roll", Some(simhashRollOracle)) { (s, d) =>
-      val rolled = graft.Staging.onceDir(s, "shidx_rolled", d) { p =>
+      val rolled = BandIndex.persist(s, "shidx_rolled", d) {
         val tomb = Tables.documents(s, d)
           .filter(pmod(col("doc_id"), lit(20L)) === 6)
-          .select(col("doc_id"))
         val arrivals = fixtureSimhashBandedRaw(s, d)
           .filter(pmod(col("doc_id"), lit(10L)) === 0)
         simhashRollFold(s, d, tomb, arrivals)
-          .write.mode("overwrite").parquet(p)
       }
-      simhashServe(s, d, s.read.parquet(rolled), mod = 10L, res = 5L)
+      simhashServe(s, d, BandIndex.read(s, rolled), mod = 10L, res = 5L)
     },
 
     /** ONLINE simhash nightly roll (round 18) —
@@ -1524,12 +1424,9 @@ object TextQueries {
             arrIn.filter(pmod(col("doc_id"), lit(20L)) === 10))
       }
       OnlineFold.drain(s, root, inTmpl)(simhashRollLogBatch(d, _, _))
-      val tomb = OnlineFold.readLogs(s, s"$root/log/t*", "doc_id LONG")
-      val arrivals = OnlineFold.readLogs(s, s"$root/log/a*",
-        "doc_id LONG, sh64 LONG, band INT, bkey INT")
-      simhashRollFold(s, d, tomb, arrivals)
-        .write.mode("overwrite").parquet(s"$root/rolled")
-      simhashServe(s, d, s.read.parquet(s"$root/rolled"), mod = 10L, res = 5L)
+      val rolled = BandIndex.SimHash.rollLogs(s, root,
+        "doc_id LONG, sh64 LONG, band INT, bkey INT")(simhashRollFold(s, d, _, _))
+      simhashServe(s, d, rolled, mod = 10L, res = 5L)
     },
 
     QueryDef("multimodal_decode", Some("""
@@ -1593,20 +1490,8 @@ object TextQueries {
              CAST(1 + (doc_id // 16) % 16 AS BIGINT) AS height,
              CAST((doc_id * 2654435761) % 16777216 AS BIGINT) AS pixel00
       FROM documents ORDER BY doc_id""")) { (s, d) =>
-      import s.implicits._
-      // READ-ONLY staged payloads, a pure function of doc_id — encoded
-      // once per JVM (round-19); the judged operator is the DECODE read
-      val root = graft.Staging.onceDir(s, "png", d) { pp =>
-        Tables.documents(s, d).select(col("doc_id")).as[Long]
-          .mapPartitions(_.map { id =>
-            val w = 1 + (id % 16).toInt
-            val h = 1 + ((id / 16) % 16).toInt
-            val rgb = ((id * 2654435761L) % 16777216L).toInt
-            (id, graft.operators.Multimodal.ImageCodec.encodePng(w, h, rgb))
-          }).toDF("doc_id", "payload")
-          .write.mode("overwrite").parquet(s"$pp/img")
-      }
-      graft.operators.Multimodal.decodeMeta(s.read.parquet(s"$root/img")).toDF()
+      // the judged operator is the DECODE read
+      graft.operators.Multimodal.decodeMeta(s.read.parquet(s"${stagedPngs(s, d)}/img")).toDF()
         .select(col("doc_id"), col("format"),
           col("width").cast("long").as("width"),
           col("height").cast("long").as("height"),
@@ -1679,16 +1564,7 @@ object TextQueries {
       SELECT doc_id, CAST(8000 AS BIGINT) AS sample_rate, CAST(1 AS BIGINT) AS channels,
              CAST(16 AS BIGINT) AS bits, CAST(nf AS BIGINT) AS n_frames, sample_sum
       FROM s ORDER BY doc_id""")) { (s, d) =>
-      import s.implicits._
-      // READ-ONLY staged payloads, encoded once per JVM (round-19)
-      val root = graft.Staging.onceDir(s, "wav", d) { pp =>
-        Tables.documents(s, d).select(col("doc_id")).as[Long]
-          .mapPartitions(_.map { id =>
-            (id, graft.operators.Multimodal.AudioCodec.encodeWav(id))
-          }).toDF("doc_id", "payload")
-          .write.mode("overwrite").parquet(s"$pp/wav")
-      }
-      graft.operators.Multimodal.decodeAudio(s.read.parquet(s"$root/wav")).toDF()
+      graft.operators.Multimodal.decodeAudio(s.read.parquet(s"${stagedWavs(s, d)}/wav")).toDF()
         .orderBy(col("doc_id"))
     },
 
@@ -1707,18 +1583,6 @@ object TextQueries {
       SELECT doc_id, 'png' AS format, CAST(8 AS BIGINT) AS width, CAST(8 AS BIGINT) AS height,
              CAST((doc_id * 2654435761) % 16777216 AS BIGINT) AS pixel00
       FROM documents ORDER BY doc_id""")) { (s, d) =>
-      import s.implicits._
-      // READ-ONLY staged payloads, encoded once per JVM (round-19)
-      val root = graft.Staging.onceDir(s, "pngrs", d) { pp =>
-        Tables.documents(s, d).select(col("doc_id")).as[Long]
-          .mapPartitions(_.map { id =>
-            val w = 1 + (id % 16).toInt
-            val h = 1 + ((id / 16) % 16).toInt
-            val rgb = ((id * 2654435761L) % 16777216L).toInt
-            (id, graft.operators.Multimodal.ImageCodec.encodePng(w, h, rgb))
-          }).toDF("doc_id", "payload")
-          .write.mode("overwrite").parquet(s"$pp/img")
-      }
       // decode ONCE into a localCheckpoint (the decoded metadata frame
       // is tiny — no payloads), then sort the checkpointed frame: the
       // output order is now guaranteed by an actual Sort in the plan
@@ -1728,7 +1592,7 @@ object TextQueries {
       // sampling pass runs over checkpointed rows, not a second
       // decode — the one-pass win stands.
       val resized = graft.operators.Multimodal.resizeImages(
-        s.read.parquet(s"$root/img"), 8, 8)
+        s.read.parquet(s"${stagedPngs(s, d)}/img"), 8, 8)
       graft.operators.Multimodal.decodeMeta(resized).toDF()
         .select(col("doc_id"), col("format"),
           col("width").cast("long").as("width"),
@@ -1755,20 +1619,11 @@ object TextQueries {
       SELECT doc_id, CAST(4000 AS BIGINT) AS sample_rate, CAST(1 AS BIGINT) AS channels,
              CAST(16 AS BIGINT) AS bits, CAST(nf_out AS BIGINT) AS n_frames, sample_sum
       FROM s ORDER BY doc_id""")) { (s, d) =>
-      import s.implicits._
-      // READ-ONLY staged payloads, encoded once per JVM (round-19)
-      val root = graft.Staging.onceDir(s, "wavrs", d) { pp =>
-        Tables.documents(s, d).select(col("doc_id")).as[Long]
-          .mapPartitions(_.map { id =>
-            (id, graft.operators.Multimodal.AudioCodec.encodeWav(id))
-          }).toDF("doc_id", "payload")
-          .write.mode("overwrite").parquet(s"$pp/wav")
-      }
       // decode once into a localCheckpoint, then sort the tiny decoded
       // frame (see multimodal_image_resize): ordering is a real Sort
       // in the plan, decode still runs exactly one pass.
       val decimated = graft.operators.Multimodal.decimateAudio(
-        s.read.parquet(s"$root/wav"))
+        s.read.parquet(s"${stagedWavs(s, d)}/wav"))
       graft.operators.Multimodal.decodeAudio(decimated).toDF()
         .localCheckpoint()
         .orderBy(col("doc_id"))

@@ -511,6 +511,38 @@ class PlanShapeSpec extends AnyFunSuite {
       "simhash roll fold shuffled the index side on the tombstone key")
   }
 
+  test("persisted band-index reads infer no schema: a second read starts no Spark job") {
+    // a lifecycle artifact never changes after its one build, so its
+    // schema is memoized: re-reading it, or re-planning a serve over
+    // it, must not run a schema-inference job per call
+    import java.util.concurrent.atomic.AtomicLong
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val sc = spark.sparkContext
+    val jobs = new AtomicLong
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    def measured(f: => Any): Long = {
+      org.apache.spark.graftbus.ListenerBusDrain.drain(sc)
+      jobs.set(0)
+      f
+      org.apache.spark.graftbus.ListenerBusDrain.drain(sc)
+      jobs.get
+    }
+    val built = Seq("dedup_minhash_index_recap" -> "mhidx_recap",
+      "dedup_simhash_index_recap" -> "shidx_recap",
+      "multimodal_phash_index" -> "phidx_shared")
+    built.foreach { case (q, _) => SparkEntry.queries(q)(spark, sf).collect() }
+    sc.addSparkListener(listener)
+    try built.foreach { case (q, key) =>
+      val path = Staging.dir(key, sf)
+      assert(measured(queries.BandIndex.read(spark, path)) === 0L,
+        s"re-reading $key ran a Spark job")
+      assert(measured(SparkEntry.queries(q)(spark, sf)) === 0L,
+        s"re-planning $q ran a Spark job")
+    } finally sc.removeSparkListener(listener)
+  }
+
   test("dedup_minhash_index_recap: probes broadcast into the recapped artifact scan") {
     // the post-compaction serve keeps the incremental contract: the
     // recapped index streams off its parquet, the batch side

@@ -574,18 +574,6 @@ class QueriesSpec extends AnyFunSuite {
     }
   }
 
-  test("join_skew_salted is value-identical to the plain join") {
-    import graft.operators.ScaleOps
-    import org.apache.spark.sql.functions._
-    val orders = Tables.orders(spark, sf).select(col("o_custkey"), col("o_totalprice"))
-    val cust = Tables.customer(spark, sf)
-      .select(col("c_custkey").as("o_custkey"), col("c_mktsegment"))
-    val salted = ScaleOps.saltedJoin(orders, cust, "o_custkey", salt = 8)
-      .groupBy("c_mktsegment").count()
-    val plain = orders.join(cust, "o_custkey").groupBy("c_mktsegment").count()
-    assert(salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty)
-  }
-
   test("scd2_history intervals chain per user: one current row, no overlap") {
     import org.apache.spark.sql.Row
     val rows = SparkEntry.queries("scd2_history")(spark, sf).collect()

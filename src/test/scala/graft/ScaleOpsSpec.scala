@@ -27,46 +27,6 @@ class ScaleOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("saltedJoin equals plain join (inner, unique right keys)") {
-    val left = Tables.orders(spark, TestSpark.sf0001).select(col("o_custkey"), col("o_totalprice"))
-    val right = Tables.customer(spark, TestSpark.sf0001).select(col("c_custkey").as("o_custkey"), col("c_name"))
-    val plain = left.join(right, "o_custkey")
-    val salted = ScaleOps.saltedJoin(left, right, "o_custkey", salt = 8)
-    assert(salted.count() === plain.count())
-    assert(salted.agg(sum("o_totalprice")).head().getDouble(0) ===
-      plain.agg(sum("o_totalprice")).head().getDouble(0))
-  }
-
-  test("saltedJoin left-join keeps unmatched rows exactly once") {
-    val left = Seq((1L, "a"), (2L, "b"), (99L, "orphan")).toDF("k", "v")
-    val right = Seq((1L, "x"), (2L, "y")).toDF("k", "w")
-    val out = ScaleOps.saltedJoin(left, right, "k", salt = 4, joinType = "left")
-    assert(out.count() === 3)
-    assert(out.filter(col("k") === 99 && col("w").isNull).count() === 1)
-  }
-
-  test("saltedJoin rejects join types that would duplicate the replicated side") {
-    val left = Seq((1L, "a")).toDF("k", "v")
-    val right = Seq((1L, "x")).toDF("k", "w")
-    for (bad <- Seq("right", "full", "cross", "right_outer")) {
-      val e = intercept[IllegalArgumentException] {
-        ScaleOps.saltedJoin(left, right, "k", salt = 4, joinType = bad)
-      }
-      assert(e.getMessage.contains("inner/left"), bad)
-    }
-  }
-
-  test("saltedJoin semi/anti (and left aliases) are salt-safe: one row per left match") {
-    val left = Seq((1L, "a"), (2L, "b"), (99L, "orphan")).toDF("k", "v")
-    val right = Seq((1L, "x"), (2L, "y")).toDF("k", "w")
-    val semi = ScaleOps.saltedJoin(left, right, "k", salt = 4, joinType = "left_semi")
-    assert(semi.count() === 2 && semi.filter(col("k") === 99).count() === 0)
-    val anti = ScaleOps.saltedJoin(left, right, "k", salt = 4, joinType = "left_anti")
-    assert(anti.count() === 1 && anti.head().getLong(0) === 99L)
-    // Spark alias accepted (previously a spurious rejection)
-    assert(ScaleOps.saltedJoin(left, right, "k", salt = 4, joinType = "left_outer").count() === 3)
-  }
-
   test("capBuckets bounds a degenerate corpus's candidate pairs") {
     // 1000 identical docs → every row lands in the SAME bucket; an
     // uncapped self-join would score C(1000,2) = 499,500 pairs.

@@ -12,7 +12,10 @@ entry points, lines citing "round N" history (case-insensitive
 `round 12` / `round-12`), the `row_number().over` window sites in
 the query modules, the `read.parquet(` sites outside `Tables` that
 pass no schema (a read whose result is only asked for `.schema` is
-the inference itself and is not counted), and the lambda
+the inference itself and is not counted), the code lines (non-blank
+lines that do not start with `//`, `*` or `/*`), the
+`ScaleOps.capBuckets(` sites in the query modules, the
+`isNotNull.as("is_dup")` roster tails, and the lambda
 `transform(` / `aggregate(` / `zip_with(` sites (interpreted
 higher-order functions) in `ScaleRehearsal` and the query modules,
 comment lines excluded.
@@ -65,6 +68,16 @@ print("read.parquet( sites without a schema, outside Tables: " + str(sum(
     len(re.findall(r"read\.parquet\((?![^\n]*\)\.schema\b)", open(f).read()))
     for f in glob.glob("src/main/**/*.scala", recursive=True)
     if not f.endswith("/Tables.scala"))))
+# code lines: comment-only lines do not count, so a deletion shows as a
+# code reduction apart from comment churn
+print("src/main code lines (non-blank, not //, * or /* after stripping): " + str(sum(
+    1 for l in main_lines
+    if l.strip() and not l.strip().startswith(("//", "*", "/*")))))
+print("ScaleOps.capBuckets( sites under src/main/.../queries: " + str(sum(
+    open(f).read().count("ScaleOps.capBuckets(")
+    for f in glob.glob("src/main/scala/graft/queries/*.scala"))))
+print('isNotNull.as("is_dup") roster-tail sites under src/main: ' + str(sum(
+    l.count('isNotNull.as("is_dup")') for l in main_lines)))
 hof = re.compile(r"\b(?:transform|aggregate|zip_with)\(")
 print("lambda transform(/aggregate(/zip_with( sites in ScaleRehearsal + queries: " + str(sum(
     len(hof.findall(line))
