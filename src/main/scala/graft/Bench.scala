@@ -9,7 +9,7 @@ object Bench {
     try {
       import org.apache.spark.sql.functions._
       import org.apache.spark.sql.expressions.Window
-      val r = spark.read.parquet(s"$sfDir/region.parquet")
+      val r = Tables.region(spark, sfDir)
       // key-only build side: a full self-join duplicates r_name and the
       // groupBy dies AMBIGUOUS_REFERENCE — which silently killed this
       // whole warmup block (first-use JIT then landed in timed queries)

@@ -211,8 +211,8 @@ object ScaleRehearsal {
     * after both have finished (the first failure is rethrown). */
   def stageScaled(spark: SparkSession, sfDir: String, factor: Int): String =
     Staging.onceDir(spark, s"scaled_x$factor", sfDir) { base =>
-      val docs = spark.read.parquet(s"$sfDir/documents.parquet")
-      val embs = spark.read.parquet(s"$sfDir/embeddings.parquet")
+      val docs = graft.Tables.documents(spark, sfDir)
+      val embs = graft.Tables.embeddings(spark, sfDir)
       val copies = (0 until factor).map(lit(_))
       val docsX = docs
         .withColumn("k", explode(array(copies: _*)))
@@ -274,12 +274,12 @@ object ScaleRehearsal {
         .withColumn("value", col("value") + col("k") * lit(1000.0))
         .drop("k")
         .repartition(32).write.mode("overwrite").parquet(s"$base/events.parquet")
-      fan(spark.read.parquet(s"$sfDir/orders.parquet"))
+      fan(graft.Tables.orders(spark, sfDir))
         .withColumn("o_custkey", col("o_custkey") + col("k") * 1000000000L)
         .withColumn("o_orderkey", col("o_orderkey") + col("k") * 1000000000L)
         .drop("k")
         .repartition(32).write.mode("overwrite").parquet(s"$base/orders.parquet")
-      fan(spark.read.parquet(s"$sfDir/customer.parquet"))
+      fan(graft.Tables.customer(spark, sfDir))
         .withColumn("c_custkey", col("c_custkey") + col("k") * 1000000000L)
         .drop("k")
         .repartition(8).write.mode("overwrite").parquet(s"$base/customer.parquet")

@@ -13,8 +13,8 @@ import org.apache.spark.sql.types._
   * loaders keep that swap local to this object.
   *
   * `events.ts` has shipped under more than one physical encoding
-  * (TIMESTAMP(NANOS) through round 6, TIMESTAMP(MICROS, ntz) since —
-  * the round-7 fixture drift that broke 27 queries). A real engine
+  * (TIMESTAMP(NANOS) in older fixtures, TIMESTAMP(MICROS, ntz) in the
+  * current ones — a fixture drift that once broke 27 queries). A real engine
   * reads the type it finds, so the loader is TYPE-ADAPTIVE: it
   * inspects the observed `ts` dataType and normalizes every encoding
   * to one canonical session-UTC TimestampType (µs). All event
@@ -62,7 +62,7 @@ object Tables {
       // plausible fixture drift) must fail schema-merge LOUDLY at
       // analysis. Without it, single-footer inference reads the other
       // encoding's int64 raw and silently produces 1970-era
-      // timestamps — the exact round-7 silent-corruption class
+      // timestamps — a silent corruption, not a failure
       // (EventTsSpec proves both directions).
       val reader = spark.read.option("mergeSchema", "true")
       schema.fold(reader)(s => reader.schema(s)).parquet(path)
@@ -71,7 +71,7 @@ object Tables {
   /** Normalize an events DataFrame's `ts` column to canonical
     * session-UTC TimestampType (µs), whatever physical encoding the
     * file arrived with:
-    *   - LongType            → int64 epoch-NANOS (the pre-round-7
+    *   - LongType            → int64 epoch-NANOS (the older fixture
     *     encoding read under nanosAsLong, or a plain int64 staged
     *     file): floor-divide ns→µs — the same truncation DuckDB
     *     applies on CAST(ts AS TIMESTAMP), keeping oracle parity.

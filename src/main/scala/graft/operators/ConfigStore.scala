@@ -71,15 +71,17 @@ object ConfigStore {
 
   /** Staged parquet store (built once per JVM per input dir). */
   def storeDir(s: SparkSession, sfDir: String): String =
-    Staging.onceDir(s, "a21cfg", sfDir) { path =>
-      settingsFrame(s, sfDir).coalesce(1).write.mode("overwrite").parquet(path)
-    }
+    Staging.persist(s, "a21cfg", sfDir)(settingsFrame(s, sfDir).coalesce(1))
+
+  /** The staged store's `(user_id, settings)` rows — the one reader of
+    * [[storeDir]], shared by [[getCustomerData]] and `a21_config_lookup`. */
+  def store(s: SparkSession, sfDir: String): DataFrame = Staging.read(s, storeDir(s, sfDir))
 
   /** The reference's strict scalar API: `(vmhubToken, cnpj)` for one
     * tenant, throwing on a missing document or missing/empty field with
     * the reference's message shape (firestore_helper.py:18,24). */
   def getCustomerData(s: SparkSession, sfDir: String, userId: String): (String, String) = {
-    val rows = s.read.parquet(storeDir(s, sfDir))
+    val rows = store(s, sfDir)
       .filter(col("user_id") === userId)
       .select(element_at(col("settings"), "vmhubToken"), element_at(col("settings"), "cnpj"))
       .collect()

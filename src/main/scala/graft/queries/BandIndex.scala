@@ -1,6 +1,5 @@
 package graft.queries
 
-import graft.Staging
 import graft.streaming.OnlineFold
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -9,8 +8,9 @@ import org.apache.spark.sql.functions._
   * SimHash and pHash dedup families: rows `(id, …, bucket columns)`,
   * at most [[BandIndex.Cap]] per bucket. The family owns its signatures,
   * its band explode and its confirm rule; this owns the lifecycle around
-  * them — build, append, delete, recap, nightly roll, stream roll and
-  * the roster serve.
+  * them — cap, delete, nightly roll, stream roll and the roster serve.
+  * Each built artifact is written with `Staging.persist` and read back
+  * with `Staging.read`.
   *
   * The cap keeps the LOWEST `Cap` ids per bucket. That rule is
   * composition-independent: any member of lowest(A ∪ B) drawn from A is
@@ -91,15 +91,4 @@ private[graft] object BandIndex {
   val MinHash = BandIndex("doc_id", Seq("band", "bk1", "bk2"))
   val SimHash = BandIndex("doc_id", Seq("band", "bkey"))
   val Phash = BandIndex("img_id", Seq("band"))
-
-  /** Build a read-only artifact once per (application, `key`, input
-    * dir): `rows` written as given, in OVERWRITE mode. Returns its path. */
-  def persist(s: SparkSession, key: String, d: String)(rows: => DataFrame): String =
-    Staging.onceDir(s, key, d)(p => rows.write.mode("overwrite").parquet(p))
-
-  /** Read a [[persist]]-built artifact. Its content never changes after
-    * the build, so the schema is memoized and a read starts no Spark
-    * job. */
-  def read(s: SparkSession, path: String): DataFrame =
-    s.read.schema(Staging.schemaOf(s, path)).parquet(path)
 }

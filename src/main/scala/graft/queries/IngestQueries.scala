@@ -637,7 +637,7 @@ object IngestQueries {
                THEN 'config document at /config/settings is missing ''vmhubToken'' or ''cnpj'''
              END AS error
       FROM looked ORDER BY user_id""")) { (s, d) =>
-      val store = s.read.parquet(graft.operators.ConfigStore.storeDir(s, d))
+      val store = graft.operators.ConfigStore.store(s, d)
         .select(col("user_id").as("hit"),
           element_at(col("settings"), "vmhubToken").as("tok"),
           element_at(col("settings"), "cnpj").as("cnpj_v"))

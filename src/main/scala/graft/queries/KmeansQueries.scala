@@ -119,9 +119,7 @@ object KmeansQueries {
       import graft.streaming.OnlineFold
       // READ-ONLY persisted codebook, built once per JVM; the stream
       // only reads it
-      graft.Staging.onceDir(s, "kmservein", d) { p =>
-        kmeansArtifact(s, d).write.mode("overwrite").parquet(s"$p/codebook")
-      }
+      kmServeCodebookDir(s, d)
       // the vector stream: even ids then odd ids → two micro-batches
       val inTmpl = OnlineFold.stage(s, "kmservein_in", d) {
         val vecs = Tables.embeddings(s, d)
@@ -255,7 +253,7 @@ object KmeansQueries {
       OnlineFold.drain(s, root, inTmpl)(kmeansUpdateLogBatch(s, d, _, _))
       // the one fold: day-1 stats ∪ logged per-batch stats, floor-mean
       val merged = centroidsFromStats(
-        s.read.parquet(statsDir).unionByName(OnlineFold.readLogs(s,
+        graft.Staging.read(s, statsDir).unionByName(OnlineFold.readLogs(s,
           s"$root/log/b*", "cluster LONG, pos INT, sv LONG, cnt LONG")))
       merged.write.mode("overwrite").parquet(s"$root/codebook")
       VectorQueries.ivfAssign(VectorQueries.ivfCorpus(s, d),
@@ -348,10 +346,16 @@ object KmeansQueries {
     import graft.functions.VectorFunctions.{quantize, qdot}
     val bv = b.select(col("vec_id"), quantize(col("embedding")).as("q"))
       .withColumn("n2", qdot(col("q"), col("q")))
-    VectorQueries.ivfAssign(bv,
-        s.read.parquet(s"${graft.Staging.dir("kmservein", d)}/codebook"))
+    VectorQueries.ivfAssign(bv, graft.Staging.read(s, s"${kmServeCodebookDir(s, d)}/codebook"))
       .write.mode("overwrite").parquet(s"${graft.Staging.dir("kmserve", d)}/out/b$id")
   }
+
+  /** `stream_kmeans_assign`'s persisted codebook, written once per JVM
+    * under `<root>/codebook`. */
+  private def kmServeCodebookDir(s: SparkSession, d: String): String =
+    graft.Staging.onceDir(s, "kmservein", d) { p =>
+      kmeansArtifact(s, d).write.mode("overwrite").parquet(s"$p/codebook")
+    }
 
   /** `stream_kmeans_update`'s per-trigger logging body — named so
     * FoldReplaySpec can re-execute it with a committed batch id and
@@ -374,10 +378,9 @@ object KmeansQueries {
     * artifact the maintenance roll re-reads (the sharedMinhashIndex
     * lifecycle applied to training state). */
   private[graft] def kmeansStatsDir(s: SparkSession, d: String): String =
-    graft.Staging.onceDir(s, "km16_stats", d) { p =>
+    graft.Staging.persist(s, "km16_stats", d) {
       statsOf(VectorQueries.ivfCorpus(s, d)
           .filter(pmod(col("vec_id"), lit(2L)) === 0), kmeansArtifact(s, d))
-        .write.mode("overwrite").parquet(p)
     }
 
   /** The UPDATED codebook: day-2 stats merged into the re-read day-1
@@ -385,7 +388,7 @@ object KmeansQueries {
     * judged serve and KmeansSpec's merge-equals-rebuild gate. */
   private[graft] def updatedKmeansArtifact(s: SparkSession, d: String): DataFrame =
     graft.Staging.frame(s, "km16_upd", d) {
-      val statsA = s.read.parquet(kmeansStatsDir(s, d))
+      val statsA = graft.Staging.read(s, kmeansStatsDir(s, d))
       val statsB = statsOf(VectorQueries.ivfCorpus(s, d)
         .filter(pmod(col("vec_id"), lit(2L)) === 1), kmeansArtifact(s, d))
       centroidsFromStats(statsA.unionByName(statsB))
@@ -396,9 +399,8 @@ object KmeansQueries {
     * production shape: the stats parquet is maintained across rolls;
     * the corpus is never re-read to forget). */
   private[graft] def kmeansStatsFullDir(s: SparkSession, d: String): String =
-    graft.Staging.onceDir(s, "km16_statsf", d) { p =>
+    graft.Staging.persist(s, "km16_statsf", d) {
       statsOf(VectorQueries.ivfCorpus(s, d), kmeansArtifact(s, d))
-        .write.mode("overwrite").parquet(p)
     }
 
   /** The DELETED codebook: tombstone stats (one O(tombstones) pass
@@ -408,7 +410,7 @@ object KmeansQueries {
     * subtract-equals-rebuild gate. */
   private[graft] def deletedKmeansArtifact(s: SparkSession, d: String): DataFrame =
     graft.Staging.frame(s, "km16_del", d) {
-      val full = s.read.parquet(kmeansStatsFullDir(s, d))
+      val full = graft.Staging.read(s, kmeansStatsFullDir(s, d))
       val tomb = statsOf(VectorQueries.ivfCorpus(s, d)
           .filter(pmod(col("vec_id"), lit(10L)) === 7), kmeansArtifact(s, d))
         .select(col("cluster"), col("pos"),

@@ -37,14 +37,14 @@ object LmQueries {
     * truncating division, doc_lm_score's arithmetic verbatim. Returns
     * the artifact path. */
   private[graft] def sharedLmModel(s: SparkSession, d: String): String =
-    graft.Staging.onceDir(s, "lm_model", d) { p =>
+    graft.Staging.persist(s, "lm_model", d) {
       // ONE arithmetic path with the maintenance rolls (lmCounts →
       // modelFromCounts): LmSpec gates updatedLmModel == this model
       // bit-for-bit, so the trained form must be literally the same
       // code (round-16 review; the merge re-aggregation and zero
       // filters are no-ops on fresh counts)
       val (uni, bi) = lmCounts(standing(s, d))
-      modelFromCounts(uni, bi).write.mode("overwrite").parquet(p)
+      modelFromCounts(uni, bi)
     }
 
   /** Mergeable LM sufficient statistics of one corpus slice — unigram
@@ -60,14 +60,11 @@ object LmQueries {
   private[graft] def lmForgetRollBatch(d: String, b: DataFrame, id: Long): Unit = {
     val root = graft.Staging.dir("lmforget", d)
     val ss = b.sparkSession
-    val (uniT, biT) = lmCounts(b.select(col("doc_id"),
-      graft.functions.TextFunctions.tokens(col("text")).as("w")))
-    ss.read.parquet(s"$root/v$id/uni")
-      .unionByName(uniT.select(col("w1"), negate(col("c1")).as("c1")))
+    val (uniT, biT) = negated(lmCounts(b.select(col("doc_id"), tokens(col("text")).as("w"))))
+    ss.read.parquet(s"$root/v$id/uni").unionByName(uniT)
       .groupBy("w1").agg(sum("c1").as("c1")).filter(col("c1") > 0)
       .write.mode("overwrite").parquet(s"$root/v${id + 1}/uni")
-    ss.read.parquet(s"$root/v$id/bi")
-      .unionByName(biT.select(col("w1"), col("w2"), negate(col("c2")).as("c2")))
+    ss.read.parquet(s"$root/v$id/bi").unionByName(biT)
       .groupBy("w1", "w2").agg(sum("c2").as("c2")).filter(col("c2") > 0)
       .write.mode("overwrite").parquet(s"$root/v${id + 1}/bi")
     ()
@@ -78,12 +75,9 @@ object LmQueries {
     * mode (pure log-and-compact; replay idempotent). */
   private[graft] def lmCompactLogBatch(d: String, b: DataFrame, id: Long): Unit = {
     val root = graft.Staging.dir("lmslog", d)
-    val (uniT, biT) = lmCounts(b.select(col("doc_id"),
-      graft.functions.TextFunctions.tokens(col("text")).as("w")))
-    uniT.select(col("w1"), negate(col("c1")).as("c1"))
-      .write.mode("overwrite").parquet(s"$root/log/b$id/uni")
-    biT.select(col("w1"), col("w2"), negate(col("c2")).as("c2"))
-      .write.mode("overwrite").parquet(s"$root/log/b$id/bi")
+    val (uniT, biT) = negated(lmCounts(b.select(col("doc_id"), tokens(col("text")).as("w"))))
+    uniT.write.mode("overwrite").parquet(s"$root/log/b$id/uni")
+    biT.write.mode("overwrite").parquet(s"$root/log/b$id/bi")
     ()
   }
 
@@ -91,7 +85,7 @@ object LmQueries {
     * scored against the frozen persisted model, written to a
     * batch-id-keyed sink (overwrite = replay idempotent). */
   private[graft] def lmScoreServeBatch(d: String, b: DataFrame, id: Long): Unit = {
-    val model = b.sparkSession.read.parquet(sharedLmModel(b.sparkSession, d))
+    val model = graft.Staging.read(b.sparkSession, sharedLmModel(b.sparkSession, d))
     val tok = b.select(col("doc_id"), tokens(col("text")).as("w"))
     score(tok, model)
       .write.mode("overwrite").parquet(s"${graft.Staging.dir("lmserve", d)}/out/b$id")
@@ -100,6 +94,11 @@ object LmQueries {
   private def lmCounts(t: DataFrame): (DataFrame, DataFrame) = (
     t.select(explode(col("w")).as("w1")).groupBy("w1").agg(count(lit(1)).as("c1")),
     bigrams(t).groupBy("w1", "w2").agg(count(lit(1)).as("c2")))
+
+  /** Count statistics `(uni, bi)` negated, so a merge subtracts them. */
+  private def negated(c: (DataFrame, DataFrame)): (DataFrame, DataFrame) =
+    (c._1.select(col("w1"), negate(col("c1")).as("c1")),
+      c._2.select(col("w1"), col("w2"), negate(col("c2")).as("c2")))
 
   /** The standing split's tokenized docs, optionally sub-sliced. */
   private def standing(s: SparkSession, d: String): DataFrame =
@@ -130,16 +129,22 @@ object LmQueries {
       .withColumn("p_ppm", expr("(c2 * 1000000) div c1"))
       .select(col("w1"), col("w2"), col("p_ppm"))
 
+  /** The model of the persisted count statistics ([[sharedLmStats]])
+    * plus the count deltas `uni`/`bi` (negated deltas subtract). */
+  private def modelPlus(s: SparkSession, d: String, day1Only: Boolean,
+      uni: DataFrame, bi: DataFrame): DataFrame = {
+    val root = sharedLmStats(s, d, day1Only)
+    modelFromCounts(graft.Staging.read(s, s"$root/uni").unionByName(uni),
+      graft.Staging.read(s, s"$root/bi").unionByName(bi))
+  }
+
   /** The UPDATED model: day-2 (odd-doc_id standing) counts folded into
     * the re-read day-1 artifact by plain addition — memoized so bench
     * reps serve, not re-merge. */
   private[graft] def updatedLmModel(s: SparkSession, d: String): DataFrame =
     graft.Staging.frame(s, "lm_upd", d) {
-      val root = sharedLmStats(s, d, day1Only = true)
       val (uni2, bi2) = lmCounts(standing(s, d).filter(pmod(col("doc_id"), lit(2L)) === 1))
-      modelFromCounts(
-        s.read.parquet(s"$root/uni").unionByName(uni2),
-        s.read.parquet(s"$root/bi").unionByName(bi2)).localCheckpoint()
+      modelPlus(s, d, day1Only = true, uni2, bi2).localCheckpoint()
     }
 
   /** Tombstone residue of the forget roll: standing docs with
@@ -155,15 +160,9 @@ object LmQueries {
     * doesn't). */
   private[graft] def forgottenLmModel(s: SparkSession, d: String): DataFrame =
     graft.Staging.frame(s, "lm_fgt", d) {
-      val root = sharedLmStats(s, d, day1Only = false)
-      val (uniT, biT) = lmCounts(
-        standing(s, d).filter(pmod(col("doc_id"), lit(ForgetMod)) === ForgetRes))
-      modelFromCounts(
-        s.read.parquet(s"$root/uni")
-          .unionByName(uniT.select(col("w1"), negate(col("c1")).as("c1"))),
-        s.read.parquet(s"$root/bi")
-          .unionByName(biT.select(col("w1"), col("w2"), negate(col("c2")).as("c2"))))
-        .localCheckpoint()
+      val (uniT, biT) = negated(lmCounts(
+        standing(s, d).filter(pmod(col("doc_id"), lit(ForgetMod)) === ForgetRes)))
+      modelPlus(s, d, day1Only = false, uniT, biT).localCheckpoint()
     }
 
   /** The compacted-model artifact of the log-and-compact roll: four
@@ -180,19 +179,15 @@ object LmQueries {
       val fs = new org.apache.hadoop.fs.Path(p)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(p), true)
-      val statsRoot = sharedLmStats(s, d, day1Only = false)
       // four delta batches: doc_id % 10 = 1 partitioned by % 40
       Seq(1L, 11L, 21L, 31L).foreach { res =>
-        val (uniT, biT) = lmCounts(
-          standing(s, d).filter(pmod(col("doc_id"), lit(4L * ForgetMod)) === res))
-        uniT.select(col("w1"), negate(col("c1")).as("c1"))
-          .write.mode("append").parquet(s"$p/log/uni")
-        biT.select(col("w1"), col("w2"), negate(col("c2")).as("c2"))
-          .write.mode("append").parquet(s"$p/log/bi")
+        val (uniT, biT) = negated(lmCounts(
+          standing(s, d).filter(pmod(col("doc_id"), lit(4L * ForgetMod)) === res)))
+        uniT.write.mode("append").parquet(s"$p/log/uni")
+        biT.write.mode("append").parquet(s"$p/log/bi")
       }
-      modelFromCounts(
-        s.read.parquet(s"$statsRoot/uni").unionByName(s.read.parquet(s"$p/log/uni")),
-        s.read.parquet(s"$statsRoot/bi").unionByName(s.read.parquet(s"$p/log/bi")))
+      modelPlus(s, d, day1Only = false,
+        s.read.parquet(s"$p/log/uni"), s.read.parquet(s"$p/log/bi"))
         .write.mode("overwrite").parquet(s"$p/model")
       ()
     } + "/model"
@@ -250,7 +245,7 @@ object LmQueries {
   val defs: Seq[QueryDef] = Seq(
 
     QueryDef("doc_lm_score_persisted", Some(serveOracle)) { (s, d) =>
-      val model = s.read.parquet(sharedLmModel(s, d))
+      val model = graft.Staging.read(s, sharedLmModel(s, d))
       val batch = SharedText.tokenized(s, d)
         .filter(pmod(col("doc_id"), lit(5L)) === 0)
         .select(col("doc_id"), col("w"))
@@ -321,7 +316,7 @@ object LmQueries {
       val batch = SharedText.tokenized(s, d)
         .filter(pmod(col("doc_id"), lit(5L)) === 0)
         .select(col("doc_id"), col("w"))
-      score(batch, s.read.parquet(compactedLmModelPath(s, d))).orderBy(col("doc_id"))
+      score(batch, graft.Staging.read(s, compactedLmModelPath(s, d))).orderBy(col("doc_id"))
     },
 
     /** STREAMING maintenance — the repo's first ONLINE artifact-
@@ -392,7 +387,6 @@ object LmQueries {
     QueryDef("stream_lm_compact", Some(serveOracleTrainedOn(
       s"doc_id % 5 <> 0 AND doc_id % $ForgetMod <> $ForgetRes"))) { (s, d) =>
       import graft.streaming.OnlineFold
-      val statsRoot = sharedLmStats(s, d, day1Only = false)
       val root = OnlineFold.freshRoot(s, "lmslog", d)
       // the four tombstone delta files
       val inTmpl = OnlineFold.stage(s, "lmslog_in", d) {
@@ -404,11 +398,9 @@ object LmQueries {
       }
       OnlineFold.drain(s, root, inTmpl)(lmCompactLogBatch(d, _, _))
       // the one compaction: base ∪ every logged delta, re-aggregated
-      modelFromCounts(
-        s.read.parquet(s"$statsRoot/uni").unionByName(
-          OnlineFold.readLogs(s, s"$root/log/b*/uni", "w1 STRING, c1 LONG")),
-        s.read.parquet(s"$statsRoot/bi").unionByName(
-          OnlineFold.readLogs(s, s"$root/log/b*/bi", "w1 STRING, w2 STRING, c2 LONG")))
+      modelPlus(s, d, day1Only = false,
+        OnlineFold.readLogs(s, s"$root/log/b*/uni", "w1 STRING, c1 LONG"),
+        OnlineFold.readLogs(s, s"$root/log/b*/bi", "w1 STRING, w2 STRING, c2 LONG"))
         .write.mode("overwrite").parquet(s"$root/model")
       val batch = SharedText.tokenized(s, d)
         .filter(pmod(col("doc_id"), lit(5L)) === 0)

@@ -122,7 +122,7 @@ object PhashQueries {
     * the cap), written ONCE per JVM and re-read by every lifecycle
     * query (build once, serve many). Returns the artifact path. */
   private[queries] def sharedPhashIndex(s: SparkSession, d: String): String =
-    BandIndex.persist(s, "phidx_shared", d) {
+    graft.Staging.persist(s, "phidx_shared", d) {
       BandIndex.Phash.capped(bandsOfHash(Multimodal.phashBases(baseIds(s, d))))
     }
 
@@ -148,7 +148,7 @@ object PhashQueries {
     * PlanShapeSpec's guard. */
   private[graft] def phashRollFold(s: SparkSession, d: String,
       tombIds: DataFrame, arrivalHashes: DataFrame): DataFrame =
-    BandIndex.Phash.roll(BandIndex.read(s, sharedPhashIndex(s, d)),
+    BandIndex.Phash.roll(graft.Staging.read(s, sharedPhashIndex(s, d)),
       tombIds, bandsOfHash(arrivalHashes))
 
   /** `stream_phash_index_roll`'s per-trigger body
@@ -179,7 +179,7 @@ object PhashQueries {
   /** The rolled artifact's path (batch twin) — built once per JVM;
     * PhashSpec reads it for the stream==batch frame gate. */
   private[graft] def rolledPhashIndex(s: SparkSession, d: String): String =
-    BandIndex.persist(s, "phidx_rolled", d) {
+    graft.Staging.persist(s, "phidx_rolled", d) {
       val ids = baseIds(s, d)
       val tomb = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(40L)) === 10)
@@ -219,7 +219,7 @@ object PhashQueries {
       WITH $phashCtes,
       $indexCtes
       SELECT id AS img_id, lo, hi, band FROM pidx ORDER BY img_id, band""")) { (s, d) =>
-      BandIndex.read(s, sharedPhashIndex(s, d))
+      graft.Staging.read(s, sharedPhashIndex(s, d))
         .select(col("img_id"), col("lo"), col("hi"), col("band"))
         .orderBy(col("img_id"), col("band"))
     },
@@ -244,7 +244,7 @@ object PhashQueries {
       val ids = baseIds(s, d)
       val day2 = Multimodal.phashTwins(ids)
         .unionByName(Multimodal.phashRetwins(ids))
-      val idx = BandIndex.read(s, sharedPhashIndex(s, d))
+      val idx = graft.Staging.read(s, sharedPhashIndex(s, d))
       val docs = Tables.documents(s, d).select(col("doc_id").cast("long").as("id"))
       val roster = docs.filter(pmod(col("id"), lit(10L)) === 0)
           .select((col("id") + 1000000000L).as("img_id"))
@@ -269,7 +269,7 @@ object PhashQueries {
       * match. Cost: O(index + tombstones + arrivals) — never the
       * payload corpus; no decode of standing images ever re-runs. */
     QueryDef("multimodal_phash_index_roll", Some(phashRollOracle)) { (s, d) =>
-      rollServe(s, d, BandIndex.read(s, rolledPhashIndex(s, d)))
+      rollServe(s, d, graft.Staging.read(s, rolledPhashIndex(s, d)))
     },
 
     /** ONLINE nightly roll — `multimodal_phash_index_roll`'s streaming

@@ -235,8 +235,8 @@ object RetrievalQueries {
 
   /** Read back one artifact root's four components. */
   private def readIndex(s: SparkSession, root: String): (DataFrame, DataFrame, DataFrame, DataFrame) = (
-    s.read.parquet(s"$root/tf"), s.read.parquet(s"$root/dl"),
-    s.read.parquet(s"$root/df"), s.read.parquet(s"$root/stats"))
+    graft.Staging.read(s, s"$root/tf"), graft.Staging.read(s, s"$root/dl"),
+    graft.Staging.read(s, s"$root/df"), graft.Staging.read(s, s"$root/stats"))
 
   /** Serve the probe queries from index components. The probe terms
     * are pushed as an explicit In() predicate on the postings (and the
@@ -348,9 +348,9 @@ object RetrievalQueries {
             arrivals.filter(pmod(col("doc_id"), lit(4L)) === 3))
       }
       OnlineFold.drain(s, root, inTmpl)(bm25AppendLogBatch(d, _, _))
-      val tfAll = s.read.parquet(s"$day1/tf").unionByName(
+      val tfAll = graft.Staging.read(s, s"$day1/tf").unionByName(
         OnlineFold.readLogs(s, s"$root/tf_b*", "doc_id LONG, term STRING, tf LONG"))
-      val dlAll = s.read.parquet(s"$day1/dl").unionByName(
+      val dlAll = graft.Staging.read(s, s"$day1/dl").unionByName(
         OnlineFold.readLogs(s, s"$root/dl_b*", "doc_id LONG, dl LONG"))
       serveFromComponents(s, tfAll, dlAll,
         s.read.parquet(s"$root/v2/df"), s.read.parquet(s"$root/v2/stats"))

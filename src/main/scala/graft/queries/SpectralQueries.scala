@@ -84,10 +84,7 @@ object SpectralQueries {
       // int64 audits are preserved: pcaMomentsDir audits n·max|x|²
       // before persisting, and artifactFromMoments re-audits the
       // centered bound n·(2·max|x|)² before expanding the Gram.
-      val root = pcaMomentsDir(s, d, "full")
-      val s1 = s.read.parquet(s"$root/s1")
-      val s2 = s.read.parquet(s"$root/s2")
-      val n = s.read.parquet(s"$root/cnt").head.getLong(0)
+      val (s1, s2, n) = storedMoments(s, pcaMomentsDir(s, d, "full"))
       artifactFromMoments(s1, s2, n, maxAbsOf(s1))
     }
 
@@ -207,6 +204,11 @@ object SpectralQueries {
       s.range(1).select(lit(n).as("n")).write.mode("overwrite").parquet(s"$p/cnt")
     }
 
+  /** A [[pcaMomentsDir]] artifact read back: s1, s2 and the count n. */
+  private def storedMoments(s: SparkSession, root: String): (DataFrame, DataFrame, Long) =
+    (Staging.read(s, s"$root/s1"), Staging.read(s, s"$root/s2"),
+      Staging.read(s, s"$root/cnt").head.getLong(0))
+
   /** Measured max|x| off a per-dim moment frame (1L floor on empty). */
   private def maxAbsOf(s1: DataFrame): Long = {
     val maRow = s1.agg(max(col("ma"))).head
@@ -242,17 +244,16 @@ object SpectralQueries {
     * gate is vec_pca_power's full-corpus oracle VERBATIM. */
   private[graft] def updatedPcaArtifact(s: SparkSession, d: String): DataFrame =
     Staging.frame(s, "pca_upd", d) {
-      val root = pcaMomentsDir(s, d, "day1")
+      val (s1A, s2A, nA) = storedMoments(s, pcaMomentsDir(s, d, "day1"))
       val q2 = quantized(s, d, pmod(col("vec_id"), lit(2L)) === 1).localCheckpoint()
       val s1B = dimMoments(q2).localCheckpoint()
-      val s1A = s.read.parquet(s"$root/s1")
-      val n = s.read.parquet(s"$root/cnt").head.getLong(0) + q2.count()
+      val n = nA + q2.count()
       val ma = math.max(maxAbsOf(s1A), maxAbsOf(s1B))
       require(n <= Long.MaxValue / ma / ma,
         s"uncentered Gram sums could exceed int64 at merge: $n x max|x|=$ma")
       val s1 = s1A.select(col("i"), col("s1")).unionByName(s1B.select(col("i"), col("s1")))
         .groupBy("i").agg(sum("s1").as("s1"))
-      val s2 = s.read.parquet(s"$root/s2").unionByName(upperMoments(q2))
+      val s2 = s2A.unionByName(upperMoments(q2))
         .groupBy("i", "j").agg(sum("s2").as("s2"))
       artifactFromMoments(s1, s2, n, ma)
     }
@@ -268,17 +269,16 @@ object SpectralQueries {
     * artifact's measured max). */
   private[graft] def deletedPcaArtifact(s: SparkSession, d: String): DataFrame =
     Staging.frame(s, "pca_del", d) {
-      val root = pcaMomentsDir(s, d, "full")
+      val (s1F, s2F, nF) = storedMoments(s, pcaMomentsDir(s, d, "full"))
       val qT = quantized(s, d,
         pmod(col("vec_id"), lit(PcaTombMod)) === PcaTombRes).localCheckpoint()
       val s1T = dimMoments(qT)
-      val s1F = s.read.parquet(s"$root/s1")
-      val n = s.read.parquet(s"$root/cnt").head.getLong(0) - qT.count()
+      val n = nF - qT.count()
       val ma = maxAbsOf(s1F)
       val s1 = s1F.select(col("i"), col("s1"))
         .unionByName(s1T.select(col("i"), negate(col("s1")).as("s1")))
         .groupBy("i").agg(sum("s1").as("s1"))
-      val s2 = s.read.parquet(s"$root/s2")
+      val s2 = s2F
         .unionByName(upperMoments(qT).select(col("i"), col("j"), negate(col("s2")).as("s2")))
         .groupBy("i", "j").agg(sum("s2").as("s2"))
       artifactFromMoments(s1, s2, n, ma)
@@ -399,9 +399,9 @@ v0 AS (SELECT DISTINCT i AS j, CAST($Q AS BIGINT) AS v FROM cf),${(1 to Iters).m
       }
       OnlineFold.drain(s, root, inTmpl)(pcaUpdateLogBatch(d, _, _))
       // the one fold: moment addition + the shared exact finish
-      val s1A = s.read.parquet(s"$day1Root/s1")
+      val (s1A, s2A, nA) = storedMoments(s, day1Root)
       val s1B = OnlineFold.readLogs(s, s"$root/log/s1_b*", "i INT, s1 LONG, ma LONG")
-      val n = s.read.parquet(s"$day1Root/cnt").head.getLong(0) +
+      val n = nA +
         OnlineFold.readLogs(s, s"$root/log/cnt_b*", "n LONG")
           .agg(sum(col("n"))).head.getLong(0)
       val ma = math.max(maxAbsOf(s1A), maxAbsOf(s1B))
@@ -410,8 +410,7 @@ v0 AS (SELECT DISTINCT i AS j, CAST($Q AS BIGINT) AS v FROM cf),${(1 to Iters).m
       val s1 = s1A.select(col("i"), col("s1"))
         .unionByName(s1B.select(col("i"), col("s1")))
         .groupBy("i").agg(sum("s1").as("s1"))
-      val s2 = s.read.parquet(s"$day1Root/s2")
-        .unionByName(OnlineFold.readLogs(s, s"$root/log/s2_b*", "i INT, j INT, s2 LONG"))
+      val s2 = s2A.unionByName(OnlineFold.readLogs(s, s"$root/log/s2_b*", "i INT, j INT, s2 LONG"))
         .groupBy("i", "j").agg(sum("s2").as("s2"))
       artifactFromMoments(s1, s2, n, ma).orderBy(col("dim"))
     },

@@ -147,7 +147,7 @@ object TextQueries {
     * the same parquet artifact — exactly the production lifecycle
     * (one index build, many probe paths). Returns the index path. */
   private[queries] def sharedMinhashIndex(s: SparkSession, d: String): String =
-    BandIndex.persist(s, "mhidx_shared", d) {
+    graft.Staging.persist(s, "mhidx_shared", d) {
       BandIndex.MinHash.capped(
         bandsOf(fixtureSigs(s, d)).filter(pmod(col("doc_id"), lit(5L)) =!= 0))
     }
@@ -286,7 +286,7 @@ object TextQueries {
   private[graft] def dedupIndexLogBatch(s: SparkSession, d: String,
       b: DataFrame, id: Long): Unit = {
     val root = graft.Staging.dir("sdix", d)
-    scoreAgainstIndex(minhashBandedRaw(b), BandIndex.read(s, sharedMinhashIndex(s, d)))
+    scoreAgainstIndex(minhashBandedRaw(b), graft.Staging.read(s, sharedMinhashIndex(s, d)))
       .write.mode("overwrite").parquet(s"$root/hits/b$id")
   }
 
@@ -302,7 +302,7 @@ object TextQueries {
     * persist, and the one PlanShapeSpec guards. */
   private[graft] def minhashRollFold(s: SparkSession,
       d: String, tomb: DataFrame, arrivals: DataFrame): DataFrame =
-    BandIndex.MinHash.roll(BandIndex.read(s, sharedMinhashIndex(s, d)), tomb, arrivals)
+    BandIndex.MinHash.roll(graft.Staging.read(s, sharedMinhashIndex(s, d)), tomb, arrivals)
 
   private val bucketMaxMemo =
     new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()
@@ -481,7 +481,7 @@ object TextQueries {
     * (capping the full corpus and then filtering would keep the wrong
     * 200 — the reason the raw banded frame is the shared prefix). */
   private[queries] def sharedSimhashIndex(s: SparkSession, d: String, which: String): String =
-    BandIndex.persist(s, s"shidx_$which", d) {
+    graft.Staging.persist(s, s"shidx_$which", d) {
       val slice = which match {
         case "shared" => fixtureSimhashBandedRaw(s, d)
           .filter(pmod(col("doc_id"), lit(5L)) =!= 0)
@@ -530,7 +530,7 @@ object TextQueries {
   private[graft] def simhashRollFold(s: SparkSession,
       d: String, tomb: DataFrame, arrivals: DataFrame): DataFrame =
     BandIndex.SimHash.roll(
-      BandIndex.read(s, sharedSimhashIndex(s, d, "shared")), tomb, arrivals)
+      graft.Staging.read(s, sharedSimhashIndex(s, d, "shared")), tomb, arrivals)
 
   /** Shared oracle of the simhash combined roll and its streaming twin
     * — [[minhashRollOracle]]'s algebra on the bit-signature family:
@@ -984,7 +984,7 @@ object TextQueries {
       // micro-batch, scores identically. Band-key layout on disk — at
       // scale this is bucketed by (band, bk1, bk2) so the daily join
       // co-locates.
-      minhashServe(s, d, BandIndex.read(s, sharedMinhashIndex(s, d)))
+      minhashServe(s, d, graft.Staging.read(s, sharedMinhashIndex(s, d)))
     },
 
     /** STREAMING twin of `dedup_minhash_incremental` — index-aware
@@ -1060,13 +1060,13 @@ object TextQueries {
       FROM (SELECT doc_id FROM documents WHERE doc_id % 10 = 5) d
       LEFT JOIN agg ON agg.doc_id = d.doc_id
       ORDER BY d.doc_id""")) { (s, d) =>
-      val appended = BandIndex.persist(s, "mhidx_appended", d) {
+      val appended = graft.Staging.persist(s, "mhidx_appended", d) {
         val arrivals = bandsOf(fixtureSigs(s, d))
           .filter(pmod(col("doc_id"), lit(10L)) === 0)
         BandIndex.MinHash.capped(
-          BandIndex.read(s, sharedMinhashIndex(s, d)).unionByName(arrivals))
+          graft.Staging.read(s, sharedMinhashIndex(s, d)).unionByName(arrivals))
       }
-      minhashServe(s, d, BandIndex.read(s, appended), mod = 10L, res = 5L)
+      minhashServe(s, d, graft.Staging.read(s, appended), mod = 10L, res = 5L)
     },
 
     /** Index DELETION (round 16) — the right-to-be-forgotten half of
@@ -1108,7 +1108,7 @@ object TextQueries {
       val tomb = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(20L)) === 3)
       minhashServe(s, d,
-        BandIndex.MinHash.delete(BandIndex.read(s, sharedMinhashIndex(s, d)), tomb))
+        BandIndex.MinHash.delete(graft.Staging.read(s, sharedMinhashIndex(s, d)), tomb))
     },
 
     /** Combined nightly ROLL (round 17) — the production operation the
@@ -1131,14 +1131,14 @@ object TextQueries {
       * vacated in full buckets — the composition is more than the
       * sum of its judged parts, which QueriesSpec pins). */
     QueryDef("dedup_minhash_index_roll", Some(minhashRollOracle)) { (s, d) =>
-      val rolled = BandIndex.persist(s, "mhidx_rolled", d) {
+      val rolled = graft.Staging.persist(s, "mhidx_rolled", d) {
         val tomb = Tables.documents(s, d)
           .filter(pmod(col("doc_id"), lit(20L)) === 3)
         val arrivals = bandsOf(fixtureSigs(s, d))
           .filter(pmod(col("doc_id"), lit(10L)) === 0)
         minhashRollFold(s, d, tomb, arrivals)
       }
-      minhashServe(s, d, BandIndex.read(s, rolled), mod = 10L, res = 5L)
+      minhashServe(s, d, graft.Staging.read(s, rolled), mod = 10L, res = 5L)
     },
 
     /** ONLINE nightly roll (round-18 verdict task 1) —
@@ -1235,12 +1235,12 @@ object TextQueries {
       FROM (SELECT doc_id FROM documents WHERE doc_id % 5 = 0) d
       LEFT JOIN agg ON agg.doc_id = d.doc_id
       ORDER BY d.doc_id""")) { (s, d) =>
-      val recapped = BandIndex.persist(s, "mhidx_recap", d) {
+      val recapped = graft.Staging.persist(s, "mhidx_recap", d) {
         BandIndex.MinHash.capped(bandsOf(fixtureSigs(s, d))
           .filter(pmod(col("doc_id"), lit(5L)) =!= 0 &&
             pmod(col("doc_id"), lit(20L)) =!= 3))
       }
-      minhashServe(s, d, BandIndex.read(s, recapped))
+      minhashServe(s, d, graft.Staging.read(s, recapped))
     },
 
     // Edit-distance near-dup — the character-level fuzzy family
@@ -1309,7 +1309,7 @@ object TextQueries {
       * The cap is per-(band, bkey) over the STANDING slice (capping
       * the full corpus then filtering would keep the wrong 200). */
     QueryDef("dedup_simhash_incremental", Some(simhashIncrementalOracle("TRUE"))) { (s, d) =>
-      simhashServe(s, d, BandIndex.read(s, sharedSimhashIndex(s, d, "shared")))
+      simhashServe(s, d, graft.Staging.read(s, sharedSimhashIndex(s, d, "shared")))
     },
 
     /** Simhash index APPEND — exact by the cap rule's composition
@@ -1320,14 +1320,14 @@ object TextQueries {
       * incremental oracle VERBATIM — append(index(day1), day2) ==
       * index(standing) end-to-end. */
     QueryDef("dedup_simhash_index_append", Some(simhashIncrementalOracle("TRUE"))) { (s, d) =>
-      val appended = BandIndex.persist(s, "shidx_appended", d) {
+      val appended = graft.Staging.persist(s, "shidx_appended", d) {
         val day2 = fixtureSimhashBandedRaw(s, d)
           .filter(pmod(col("doc_id"), lit(5L)) =!= 0 &&
             pmod(col("doc_id"), lit(2L)) === 1)
         BandIndex.SimHash.capped(
-          BandIndex.read(s, sharedSimhashIndex(s, d, "day1")).unionByName(day2))
+          graft.Staging.read(s, sharedSimhashIndex(s, d, "day1")).unionByName(day2))
       }
-      simhashServe(s, d, BandIndex.read(s, appended))
+      simhashServe(s, d, graft.Staging.read(s, appended))
     },
 
     /** Simhash index DELETE — the family's forget roll, with the
@@ -1345,7 +1345,7 @@ object TextQueries {
       val tomb = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(20L)) === 6)
       simhashServe(s, d,
-        BandIndex.SimHash.delete(BandIndex.read(s, sharedSimhashIndex(s, d, "shared")), tomb))
+        BandIndex.SimHash.delete(graft.Staging.read(s, sharedSimhashIndex(s, d, "shared")), tomb))
     },
 
     /** Simhash index RECAP — `dedup_minhash_index_recap`'s scheduled
@@ -1360,12 +1360,12 @@ object TextQueries {
       * probe). O(survivor bands) per recap window. */
     QueryDef("dedup_simhash_index_recap", Some(
       simhashIncrementalOracle("TRUE", preCapWhere = "doc_id % 20 <> 6"))) { (s, d) =>
-      val recapped = BandIndex.persist(s, "shidx_recap", d) {
+      val recapped = graft.Staging.persist(s, "shidx_recap", d) {
         BandIndex.SimHash.capped(fixtureSimhashBandedRaw(s, d)
           .filter(pmod(col("doc_id"), lit(5L)) =!= 0 &&
             pmod(col("doc_id"), lit(20L)) =!= 6))
       }
-      simhashServe(s, d, BandIndex.read(s, recapped))
+      simhashServe(s, d, graft.Staging.read(s, recapped))
     },
 
     /** Simhash combined NIGHTLY roll (round 18) —
@@ -1383,14 +1383,14 @@ object TextQueries {
       * until a recap window; the re-cap lets arrivals fill vacated
       * seats). */
     QueryDef("dedup_simhash_index_roll", Some(simhashRollOracle)) { (s, d) =>
-      val rolled = BandIndex.persist(s, "shidx_rolled", d) {
+      val rolled = graft.Staging.persist(s, "shidx_rolled", d) {
         val tomb = Tables.documents(s, d)
           .filter(pmod(col("doc_id"), lit(20L)) === 6)
         val arrivals = fixtureSimhashBandedRaw(s, d)
           .filter(pmod(col("doc_id"), lit(10L)) === 0)
         simhashRollFold(s, d, tomb, arrivals)
       }
-      simhashServe(s, d, BandIndex.read(s, rolled), mod = 10L, res = 5L)
+      simhashServe(s, d, graft.Staging.read(s, rolled), mod = 10L, res = 5L)
     },
 
     /** ONLINE simhash nightly roll (round 18) —
@@ -1491,7 +1491,8 @@ object TextQueries {
              CAST((doc_id * 2654435761) % 16777216 AS BIGINT) AS pixel00
       FROM documents ORDER BY doc_id""")) { (s, d) =>
       // the judged operator is the DECODE read
-      graft.operators.Multimodal.decodeMeta(s.read.parquet(s"${stagedPngs(s, d)}/img")).toDF()
+      graft.operators.Multimodal.decodeMeta(
+          graft.Staging.read(s, s"${stagedPngs(s, d)}/img")).toDF()
         .select(col("doc_id"), col("format"),
           col("width").cast("long").as("width"),
           col("height").cast("long").as("height"),
@@ -1564,7 +1565,8 @@ object TextQueries {
       SELECT doc_id, CAST(8000 AS BIGINT) AS sample_rate, CAST(1 AS BIGINT) AS channels,
              CAST(16 AS BIGINT) AS bits, CAST(nf AS BIGINT) AS n_frames, sample_sum
       FROM s ORDER BY doc_id""")) { (s, d) =>
-      graft.operators.Multimodal.decodeAudio(s.read.parquet(s"${stagedWavs(s, d)}/wav")).toDF()
+      graft.operators.Multimodal.decodeAudio(
+          graft.Staging.read(s, s"${stagedWavs(s, d)}/wav")).toDF()
         .orderBy(col("doc_id"))
     },
 
@@ -1592,7 +1594,7 @@ object TextQueries {
       // sampling pass runs over checkpointed rows, not a second
       // decode — the one-pass win stands.
       val resized = graft.operators.Multimodal.resizeImages(
-        s.read.parquet(s"${stagedPngs(s, d)}/img"), 8, 8)
+        graft.Staging.read(s, s"${stagedPngs(s, d)}/img"), 8, 8)
       graft.operators.Multimodal.decodeMeta(resized).toDF()
         .select(col("doc_id"), col("format"),
           col("width").cast("long").as("width"),
@@ -1623,7 +1625,7 @@ object TextQueries {
       // frame (see multimodal_image_resize): ordering is a real Sort
       // in the plan, decode still runs exactly one pass.
       val decimated = graft.operators.Multimodal.decimateAudio(
-        s.read.parquet(s"${stagedWavs(s, d)}/wav"))
+        graft.Staging.read(s, s"${stagedWavs(s, d)}/wav"))
       graft.operators.Multimodal.decodeAudio(decimated).toDF()
         .localCheckpoint()
         .orderBy(col("doc_id"))
@@ -1665,7 +1667,7 @@ object TextQueries {
       // decode once into a localCheckpoint, then sort the tiny frame
       // table (see multimodal_image_resize): ordering is a real Sort
       // in the plan, the decode runs exactly one pass
-      graft.operators.Multimodal.decodeVideoFrames(s.read.parquet(s"$root/gif"))
+      graft.operators.Multimodal.decodeVideoFrames(graft.Staging.read(s, s"$root/gif"))
         .toDF()
         .localCheckpoint()
         .orderBy(col("doc_id"), col("frame_idx"))

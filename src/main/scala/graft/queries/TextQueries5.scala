@@ -20,14 +20,13 @@ object TextQueries5 {
     * discipline). Returns the index path. */
   private def sharedContainmentIndex(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    graft.Staging.onceDir(s, "ctidx_shared", d) { p =>
+    graft.Staging.persist(s, "ctidx_shared", d) {
       val standing = SharedText.shingles3(s, d)
         .filter(pmod(col("doc_id"), lit(5L)) =!= 0)
         .withColumnRenamed("doc_id", "idx_id")
       val kept = standing.groupBy(col("g")).agg(count(lit(1)).as("df"))
         .filter(col("df") <= 10).select(col("g"))
       standing.join(kept, Seq("g"))
-        .write.mode("overwrite").parquet(p)
     }
 
   /** The DAY-1 index of the append roll: pruned postings PLUS the
@@ -63,9 +62,9 @@ object TextQueries5 {
       postingsLog: org.apache.spark.sql.DataFrame,
       dfLog: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     val day1Root = sharedContainmentDay1Index(s, d)
-    val dfM = s.read.parquet(s"$day1Root/df").unionByName(dfLog)
+    val dfM = graft.Staging.read(s, s"$day1Root/df").unionByName(dfLog)
       .groupBy("g").agg(sum("df").as("df"))
-    s.read.parquet(s"$day1Root/postings").unionByName(postingsLog)
+    graft.Staging.read(s, s"$day1Root/postings").unionByName(postingsLog)
       .join(dfM.filter(col("df") <= 10).select(col("g")), Seq("g"))
   }
 
@@ -266,7 +265,7 @@ object TextQueries5 {
       * integer cross-multiplication at the 50% threshold; the roster
       * left-join keeps every batch doc in the output. */
     QueryDef("dedup_containment_incremental", Some(containmentIncrementalOracle)) { (s, d) =>
-      probeContainment(s, d, s.read.parquet(sharedContainmentIndex(s, d)))
+      probeContainment(s, d, graft.Staging.read(s, sharedContainmentIndex(s, d)))
     },
 
     /** Containment-index APPEND (round 16) — the posting index's
@@ -292,10 +291,10 @@ object TextQueries5 {
         .filter(pmod(col("doc_id"), lit(5L)) =!= 0 &&
           pmod(col("doc_id"), lit(2L)) === 1)
         .withColumnRenamed("doc_id", "idx_id")
-      val dfM = s.read.parquet(s"$root/df")
+      val dfM = graft.Staging.read(s, s"$root/df")
         .unionByName(day2.groupBy(col("g")).agg(count(lit(1)).as("df")))
         .groupBy("g").agg(sum("df").as("df"))
-      val idx = s.read.parquet(s"$root/postings").unionByName(day2)
+      val idx = graft.Staging.read(s, s"$root/postings").unionByName(day2)
         .join(dfM.filter(col("df") <= 10).select(col("g")), Seq("g"))
       probeContainment(s, d, idx)
     },
@@ -382,7 +381,7 @@ object TextQueries5 {
       val tomb = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(20L)) === 7)
         .select(col("doc_id").as("idx_id"))
-      val idx = s.read.parquet(sharedContainmentIndex(s, d))
+      val idx = graft.Staging.read(s, sharedContainmentIndex(s, d))
         .join(broadcast(tomb), Seq("idx_id"), "left_anti")
       probeContainment(s, d, idx)
     },
@@ -420,7 +419,7 @@ object TextQueries5 {
       FROM (SELECT DISTINCT doc_id FROM bat) b
       LEFT JOIN sc ON sc.doc_id = b.doc_id
       ORDER BY b.doc_id""")) { (s, d) =>
-      val recapped = graft.Staging.onceDir(s, "ctidx_recap", d) { p =>
+      val recapped = graft.Staging.persist(s, "ctidx_recap", d) {
         val surv = SharedText.shingles3(s, d)
           .filter(pmod(col("doc_id"), lit(5L)) =!= 0 &&
             pmod(col("doc_id"), lit(20L)) =!= 7)
@@ -428,9 +427,8 @@ object TextQueries5 {
         val kept = surv.groupBy(col("g")).agg(count(lit(1)).as("df"))
           .filter(col("df") <= 10).select(col("g"))
         surv.join(kept, Seq("g"))
-          .write.mode("overwrite").parquet(p)
       }
-      probeContainment(s, d, s.read.parquet(recapped))
+      probeContainment(s, d, graft.Staging.read(s, recapped))
     },
 
     /** BUDGET-CONSTRAINED curation — "keep the highest-quality

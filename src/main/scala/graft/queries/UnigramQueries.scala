@@ -267,13 +267,12 @@ v$r AS (SELECT c.piece, CAST(COALESCE(u.usage, 0) AS BIGINT) AS cnt
     * doc_id % 10 ≠ 0) — the sufficient statistic the counts roll
     * folds into. Returns the path. */
   private[graft] def day1Counts(s: SparkSession, d: String): String =
-    Staging.onceDir(s, "ugcnt_day1", d) { p =>
+    Staging.persist(s, "ugcnt_day1", d) {
       SharedText.tokenized(s, d)
         .filter(pmod(col("doc_id"), lit(10L)) =!= 0)
         .select(explode(col("w")).as("word"))
         .filter(col("word") =!= "")
         .groupBy(col("word")).agg(count(lit(1)).as("wc"))
-        .write.mode("overwrite").parquet(p)
     }
 
   /** The rolled-and-retrained vocabulary: day-2 counts folded into the
@@ -288,13 +287,12 @@ v$r AS (SELECT c.piece, CAST(COALESCE(u.usage, 0) AS BIGINT) AS cnt
         .select(explode(col("w")).as("word"))
         .filter(col("word") =!= "")
         .groupBy(col("word")).agg(count(lit(1)).as("wc"))
-      val mergedPath = Staging.onceDir(s, "ugcnt_merged", d) { p =>
-        s.read.parquet(day1Counts(s, d))
+      val mergedPath = Staging.persist(s, "ugcnt_merged", d) {
+        Staging.read(s, day1Counts(s, d))
           .unionByName(day2)
           .groupBy(col("word")).agg(sum(col("wc")).as("wc"))
-          .write.mode("overwrite").parquet(p)
       }
-      val wf = s.read.parquet(mergedPath).localCheckpoint()
+      val wf = Staging.read(s, mergedPath).localCheckpoint()
       trainVocab(wf, occOf(wf).localCheckpoint())
     }
 

@@ -941,7 +941,7 @@ object VectorQueries {
         pqEncode(base, s.read.parquet(s"$p/codebook"))
           .write.mode("overwrite").parquet(s"$p/codes")
       }
-      val cb = s.read.parquet(s"$tmpl/codebook")
+      val cb = graft.Staging.read(s, s"$tmpl/codebook")
       val fsP = new org.apache.hadoop.fs.Path(root)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       fsP.delete(new org.apache.hadoop.fs.Path(s"$root/codes"), true)

@@ -86,19 +86,14 @@ object VectorQueries2 {
     * FoldReplaySpec can re-execute it with a committed batch id and
     * assert the logs unchanged (the foreachBatch replay contract):
     * the batch assigns + PQ-encodes against the FROZEN day-1
-    * codebooks (re-read from the run's own staging — two cheap
-    * parquet reads) and writes to a batch-id-keyed dir in OVERWRITE
-    * mode. */
+    * codebooks (the shared persisted template the query stages before
+    * the stream starts) and writes to a batch-id-keyed dir in
+    * OVERWRITE mode. */
   private[graft] def ivfpqAppendLogBatch(d: String,
       b: org.apache.spark.sql.DataFrame, id: Long): Unit = {
     val s = b.sparkSession
     val root = graft.Staging.dir("ivfpqsapp", d)
-    // frozen day-1 codebooks: read from the shared persisted template
-    // (the query stages them via [[ivfpqBaseIdxDir]] before the stream
-    // starts; the log writes below stay under this run's root)
-    val tmpl = graft.Staging.dir("ivfpq_b_idx", d)
-    val coarse = s.read.parquet(s"$tmpl/coarse")
-    val fine = s.read.parquet(s"$tmpl/fine")
+    val (coarse, fine) = frozenBaseCodebooks(s, d)
     val bv = b.select(col("vec_id"),
         graft.functions.VectorFunctions.quantize(col("embedding")).as("q"))
       .withColumn("n2", graft.functions.VectorFunctions.qdot(col("q"), col("q")))
@@ -116,14 +111,25 @@ object VectorQueries2 {
     * (overwrite = replay idempotent). */
   private[graft] def annServeBatch(s: SparkSession, d: String,
       b: DataFrame, id: Long): Unit = {
-    val idxDir = graft.Staging.dir("annserve_idx", d)
-    val asg = s.read.parquet(s"$idxDir/assign")
+    val idxDir = annServeIdxDir(s, d)
+    val asg = graft.Staging.read(s, s"$idxDir/assign")
       .withColumn("cluster", col("cluster").cast("long"))
     val qv = b.select(col("vec_id"), quantize(col("embedding")).as("q"))
       .withColumn("n2", qdot(col("q"), col("q")))
-    ivfServe(ivfCorpus(s, d), ivfProbes(qv, s.read.parquet(s"$idxDir/centroids"), 2), asg)
+    ivfServe(ivfCorpus(s, d), ivfProbes(qv, graft.Staging.read(s, s"$idxDir/centroids"), 2), asg)
       .write.mode("overwrite").parquet(s"${graft.Staging.dir("annserve", d)}/out/b$id")
   }
+
+  /** `stream_ann_serve`'s persisted IVF index, written once per JVM
+    * from the shared training frames (the same artifacts as
+    * `sim_ann_ivf_persisted`): the codebook and the cluster-partitioned
+    * assignment. */
+  private def annServeIdxDir(s: SparkSession, d: String): String =
+    graft.Staging.onceDir(s, "annserve_idx", d) { p =>
+      sharedCoarse(s, d).write.mode("overwrite").parquet(s"$p/centroids")
+      sharedAsg(s, d).write.mode("overwrite")
+        .partitionBy("cluster").parquet(s"$p/assign")
+    }
 
   /** The DAY-1 (base-slice, vec_id % 10 != 9) IVFADC artifacts, trained
     * ONCE per JVM and shared by `sim_ann_ivfpq_incremental` and
@@ -186,6 +192,12 @@ object VectorQueries2 {
       sharedBaseCodes(s, d)
         .write.mode("overwrite").partitionBy("cluster").parquet(s"$p/codes")
     }
+
+  /** The frozen day-1 coarse and fine codebooks of [[ivfpqBaseIdxDir]]. */
+  private[graft] def frozenBaseCodebooks(s: SparkSession, d: String): (DataFrame, DataFrame) = {
+    val tmpl = ivfpqBaseIdxDir(s, d)
+    (graft.Staging.read(s, s"$tmpl/coarse"), graft.Staging.read(s, s"$tmpl/fine"))
+  }
 
   private[queries] def ivfpqResiduals(v: DataFrame, coarse: DataFrame, asg: DataFrame): DataFrame = {
     val resid = v.join(asg, Seq("vec_id"))
@@ -360,12 +372,14 @@ object VectorQueries2 {
   private def arrayOf(r: org.apache.spark.sql.Row, i: Int): ArrayData =
     new GenericArrayData(r.getSeq[Any](i).toArray)
 
-  /** A stored IVFADC index under `dir` as the serve reads it: the coarse
-    * and fine codebooks, and the cluster-partitioned code table with its
-    * key restored to long (partition read-back infers int). */
-  private def ivfpqStored(s: SparkSession, dir: String): (DataFrame, DataFrame, DataFrame) =
-    (s.read.parquet(s"$dir/coarse"), s.read.parquet(s"$dir/fine"),
-      s.read.parquet(s"$dir/codes").withColumn("cluster", col("cluster").cast("long")))
+  /** A stored IVFADC index under `dir` as the serve reads it through
+    * `read`: the coarse and fine codebooks, and the cluster-partitioned
+    * code table with its key restored to long (partition read-back
+    * infers int). */
+  private def ivfpqStored(read: String => DataFrame,
+      dir: String): (DataFrame, DataFrame, DataFrame) =
+    (read(s"$dir/coarse"), read(s"$dir/fine"),
+      read(s"$dir/codes").withColumn("cluster", col("cluster").cast("long")))
 
   /** `sim_ann_ivfpq_delete`'s index: the shared read-only artifacts
     * (persisted once per JVM — the roll never rewrites them), with the
@@ -378,7 +392,7 @@ object VectorQueries2 {
       sharedIvfpqCodes(s, d)
         .write.mode("overwrite").partitionBy("cluster").parquet(s"$p/codes")
     }
-    val (coarse, fine, codes) = ivfpqStored(s, idxDir)
+    val (coarse, fine, codes) = ivfpqStored(graft.Staging.read(s, _), idxDir)
     val tomb = Tables.embeddings(s, d)
       .filter(pmod(col("vec_id"), lit(10L)) === 7)
       .select(col("vec_id"))
@@ -394,7 +408,8 @@ object VectorQueries2 {
     * have run first: it writes the index this reads. */
   private[graft] def ivfpqServeScans(s: SparkSession, d: String, name: String): Seq[DataFrame] = {
     val (coarse, fine, codesC) = name match {
-      case "sim_ann_ivfpq_persisted" => ivfpqStored(s, graft.Staging.dir("ivfpqidx", d))
+      case "sim_ann_ivfpq_persisted" =>
+        ivfpqStored(s.read.parquet(_), graft.Staging.dir("ivfpqidx", d))
       case "sim_ann_ivfpq_delete" => ivfpqDeleteIndex(s, d)
     }
     val (_, luts) = ivfpqQuerySide(ivfCorpus(s, d), coarse, fine, IvfpqProbes,
@@ -823,7 +838,7 @@ object VectorQueries2 {
       sharedIvfpqFine(s, d).write.mode("overwrite").parquet(s"$root/fine")
       sharedIvfpqCodes(s, d)
         .write.mode("overwrite").partitionBy("cluster").parquet(s"$root/codes")
-      val (coarse, fine, codesC) = ivfpqStored(s, root)
+      val (coarse, fine, codesC) = ivfpqStored(s.read.parquet(_), root)
       ivfpqServe(v, coarse, fine, codesC, IvfpqProbes)
     },
 
@@ -852,8 +867,7 @@ object VectorQueries2 {
       // append below MUTATES — is file-copied into this query's own
       // root first (identical bytes, mutation isolated per sample)
       val tmpl = ivfpqBaseIdxDir(s, d)
-      val coarse = s.read.parquet(s"$tmpl/coarse")
-      val fine = s.read.parquet(s"$tmpl/fine")
+      val (coarse, fine) = frozenBaseCodebooks(s, d)
       val fs = new org.apache.hadoop.fs.Path(root)
         .getFileSystem(s.sparkContext.hadoopConfiguration)
       fs.delete(new org.apache.hadoop.fs.Path(s"$root/codes"), true)
@@ -897,8 +911,7 @@ object VectorQueries2 {
       // persisted template shares across samples (the foreachBatch
       // body reads the frozen codebooks from the same template path)
       val tmpl = ivfpqBaseIdxDir(s, d)
-      val coarse = s.read.parquet(s"$tmpl/coarse")
-      val fine = s.read.parquet(s"$tmpl/fine")
+      val (coarse, fine) = frozenBaseCodebooks(s, d)
       // the arrival stream: raw day-2 embeddings, two micro-batches
       val inTmpl = OnlineFold.stage(s, "ivfpqsapp_in", d) {
         val arr = Tables.embeddings(s, d)
@@ -908,7 +921,7 @@ object VectorQueries2 {
       }
       OnlineFold.drain(s, root, inTmpl)(ivfpqAppendLogBatch(d, _, _))
       // serve from base ∪ logged appends (old + new inverted lists)
-      val codesC = s.read.parquet(s"$tmpl/codes")
+      val codesC = graft.Staging.read(s, s"$tmpl/codes")
         .withColumn("cluster", col("cluster").cast("long"))
         .select(col("vec_id"), col("s"), col("code"), col("cluster"))
         .unionByName(OnlineFold.readLogs(s, s"$root/log/b*",
@@ -966,15 +979,10 @@ object VectorQueries2 {
     QueryDef("stream_ann_serve", Some(ivfOracle)) { (s, d) =>
       import graft.streaming.OnlineFold
       val root = OnlineFold.freshRoot(s, "annserve", d)
-      // offline: persist the index ONCE per JVM from the shared
-      // training frames (same artifacts as sim_ann_ivf_persisted:
-      // tiny codebook + partitioned assignment) — the stream only
-      // READS them, so the persisted copy shares across samples
-      graft.Staging.onceDir(s, "annserve_idx", d) { p =>
-        sharedCoarse(s, d).write.mode("overwrite").parquet(s"$p/centroids")
-        sharedAsg(s, d).write.mode("overwrite")
-          .partitionBy("cluster").parquet(s"$p/assign")
-      }
+      // offline: persist the index ONCE per JVM before the stream
+      // starts — the stream only READS it, so the persisted copy
+      // shares across samples
+      annServeIdxDir(s, d)
       // the query stream: ids {0,1} then {2,3,4} → two micro-batches
       val inTmpl = OnlineFold.stage(s, "annserve_in", d) {
         val qdocs = Tables.embeddings(s, d).filter(col("vec_id") < 5)

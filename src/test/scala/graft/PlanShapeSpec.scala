@@ -529,18 +529,46 @@ class PlanShapeSpec extends AnyFunSuite {
       org.apache.spark.graftbus.ListenerBusDrain.drain(sc)
       jobs.get
     }
+    // (query that builds the artifact, artifact path: staging key plus
+    // sub-dir, consumer re-planned over it — the query itself unless
+    // its call writes per call, as the IVFADC append does)
+    def rerun(q: String): () => Any = () => SparkEntry.queries(q)(spark, sf)
     val built = Seq("dedup_minhash_index_recap" -> "mhidx_recap",
       "dedup_simhash_index_recap" -> "shidx_recap",
-      "multimodal_phash_index" -> "phidx_shared")
-    built.foreach { case (q, _) => SparkEntry.queries(q)(spark, sf).collect() }
+      "multimodal_phash_index" -> "phidx_shared",
+      "dedup_containment_incremental" -> "ctidx_shared",
+      "dedup_containment_index_recap" -> "ctidx_recap",
+      "doc_lm_score_persisted" -> "lm_model",
+      "doc_lm_compact" -> "lm_compact/model",
+      "multimodal_image_meta" -> "png/img",
+      "multimodal_audio_meta" -> "wav/wav",
+      "retrieval_bm25_persisted" -> "bm25idx_full/tf",
+      "retrieval_bm25_persisted" -> "bm25idx_full/stats",
+      "vec_kmeans_update" -> "km16_stats").map { case (q, key) => (q, key, rerun(q)) } ++
+      Seq("coarse", "fine").map(part => ("sim_ann_ivfpq_incremental", s"ivfpq_b_idx/$part",
+        () => queries.VectorQueries2.frozenBaseCodebooks(spark, sf)))
+    built.map(_._1).distinct.foreach(q => SparkEntry.queries(q)(spark, sf).collect())
     sc.addSparkListener(listener)
-    try built.foreach { case (q, key) =>
-      val path = Staging.dir(key, sf)
-      assert(measured(queries.BandIndex.read(spark, path)) === 0L,
+    try built.foreach { case (q, key, consumer) =>
+      val (root, sub) = key.span(_ != '/')
+      val path = Staging.dir(root, sf) + sub
+      assert(measured(Staging.read(spark, path)) === 0L,
         s"re-reading $key ran a Spark job")
-      assert(measured(SparkEntry.queries(q)(spark, sf)) === 0L,
-        s"re-planning $q ran a Spark job")
+      assert(measured(consumer()) === 0L, s"re-planning the $q consumer of $key ran a Spark job")
     } finally sc.removeSparkListener(listener)
+  }
+
+  test("Staging.read refuses a path under no finished onceDir root") {
+    // a per-call dir is rewritten by its query, so a memoized schema of
+    // it could go stale: the read-only reader must refuse it loudly
+    SparkEntry.queries("sim_ann_ivfpq_persisted")(spark, sf).collect()
+    val perCall = s"${Staging.dir("ivfpqidx", sf)}/coarse"
+    assert(new java.io.File(perCall).isDirectory)
+    val e = intercept[IllegalArgumentException](Staging.read(spark, perCall))
+    assert(e.getMessage.contains("no finished onceDir root"), e.getMessage)
+    // a sibling whose name merely extends a finished root's is no child of it
+    SparkEntry.queries("doc_lm_score_persisted")(spark, sf).collect()
+    intercept[IllegalArgumentException](Staging.read(spark, Staging.dir("lm_model", sf) + "x"))
   }
 
   test("dedup_minhash_index_recap: probes broadcast into the recapped artifact scan") {

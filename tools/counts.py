@@ -12,8 +12,10 @@ entry points, lines citing "round N" history (case-insensitive
 `round 12` / `round-12`), the `row_number().over` window sites in
 the query modules, the `read.parquet(` sites outside `Tables` that
 pass no schema (a read whose result is only asked for `.schema` is
-the inference itself and is not counted), the code lines (non-blank
-lines that do not start with `//`, `*` or `/*`), the
+the inference itself and is not counted), the `Staging.read(` and
+`Staging.persist(` sites (the staged-artifact reader and one-frame
+writer), the code lines (non-blank lines that do not start with
+`//`, `*` or `/*`), the
 `ScaleOps.capBuckets(` sites in the query modules, the
 `isNotNull.as("is_dup")` roster tails, and the lambda
 `transform(` / `aggregate(` / `zip_with(` sites (interpreted
@@ -68,6 +70,11 @@ print("read.parquet( sites without a schema, outside Tables: " + str(sum(
     len(re.findall(r"read\.parquet\((?![^\n]*\)\.schema\b)", open(f).read()))
     for f in glob.glob("src/main/**/*.scala", recursive=True)
     if not f.endswith("/Tables.scala"))))
+# the one reader and the one-frame writer of read-only staged artifacts
+for fn in ("Staging.read(", "Staging.persist("):
+    print(f"{fn} sites under src/main: " + str(sum(
+        open(f).read().count(fn)
+        for f in glob.glob("src/main/**/*.scala", recursive=True))))
 # code lines: comment-only lines do not count, so a deletion shows as a
 # code reduction apart from comment churn
 print("src/main code lines (non-blank, not //, * or /* after stripping): " + str(sum(
